@@ -206,27 +206,28 @@ def _cell_local_topk(disks: DataFrame, tgt: DataFrame, k: int,
     """Per-cell numpy top-k via cogroup; emits <= k candidates per
     (query, cell) with exact integer dist2 and (dist2, key) ordering."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     out_schema = (f"{query_key} long, {target_key} long, dist2 long")
 
-    def local(qpdf: pd.DataFrame, tpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(qpdf) or not len(tpdf):
-            return pd.DataFrame(
-                {query_key: [], target_key: [], "dist2": []})
-        q, t, d = _local_topk_arrays(
-            qpdf[query_key].to_numpy(dtype=np.int64),
-            qpdf[qx].to_numpy(dtype=np.int64),
-            qpdf[qy].to_numpy(dtype=np.int64),
-            tpdf[target_key].to_numpy(dtype=np.int64),
-            tpdf[tx].to_numpy(dtype=np.int64),
-            tpdf[ty].to_numpy(dtype=np.int64),
-            k, exclude_self, budget=8 << 20)
-        return pd.DataFrame({query_key: q, target_key: t, "dist2": d})
+    def ints(tbl, c):
+        # zero-copy refuses nulls: a null key/coordinate fails loudly
+        return (tbl.column(c).combine_chunks()
+                .to_numpy(zero_copy_only=True).astype(np.int64, copy=False))
+
+    def local(qt, tt):
+        if not qt.num_rows or not tt.num_rows:
+            q = t = d = np.zeros(0, dtype=np.int64)
+        else:
+            q, t, d = _local_topk_arrays(
+                ints(qt, query_key), ints(qt, qx), ints(qt, qy),
+                ints(tt, target_key), ints(tt, tx), ints(tt, ty),
+                k, exclude_self, budget=8 << 20)
+        return pa.table({query_key: q, target_key: t, "dist2": d})
 
     return (disks.groupBy("cell")
             .cogroup(tgt.groupBy("cell"))
-            .applyInPandas(local, out_schema))
+            .applyInArrow(local, out_schema))
 
 
 def knn_join_broadcast(queries: DataFrame, targets: DataFrame, k: int,

@@ -2,33 +2,37 @@
 
 The kernel encoder (kernel/mvt.py) walks tuples per coordinate; at
 millions of small features the per-feature Python dominates the tile
-sink. This fast path keeps the EXACT protobuf layout (same layer/
+sink. ``encode_tile_cols`` keeps the EXACT protobuf layout (same layer/
 feature framing, same command stream, same validity skips) but:
 
+- reads each geometry lane of the tile as one Arrow array, so the
+  coordinates of every feature arrive as ONE flat values buffer plus
+  its list offsets (no per-feature gather),
 - transforms every coordinate of a tile in ONE numpy pass
   (kernel.tiles.mvt_transform_np — mvt_writer.rs:157-173 semantics
   including the saturating Y flip), and
 - varint-encodes the concatenated command stream of the whole tile in
   one batched numpy pass, slicing per-feature byte spans afterwards.
 
-Only flat 2D structs (Point/LineString/Polygon/Multi*) take this path;
-anything else falls back to the kernel encoder per feature, so the
-output bytes never differ (tested feature-for-feature against the
-kernel in tests/test_mvt_fast.py).
+Only flat 2D features (Point/LineString/Polygon/Multi*) take this path;
+a tile holding anything else (3D/measured, curved, raw WKB) returns
+None and the caller encodes the whole tile with the kernel encoder, so
+the output bytes never differ (the kernel encoder is the oracle in
+tests/test_mvt_fast.py).
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 from ..kernel import mvt as kmvt
 from ..kernel import tiles as ktiles
 from ..kernel.model import (LINESTRING, MULTILINESTRING, MULTIPOINT,
                             MULTIPOLYGON, POINT, POLYGON)
 
-_FLAT_2D = {POINT, LINESTRING, POLYGON, MULTIPOINT, MULTILINESTRING,
-            MULTIPOLYGON}
-
+_FLAT_2D = (POINT, LINESTRING, POLYGON, MULTIPOINT, MULTILINESTRING,
+            MULTIPOLYGON)
 
 def varints_np(vals: np.ndarray) -> tuple[bytes, np.ndarray]:
     """Batch-encode uint64 varints; returns (bytes, per-value byte
@@ -55,233 +59,11 @@ def varints_np(vals: np.ndarray) -> tuple[bytes, np.ndarray]:
     return out.tobytes(), nbytes
 
 
-def _zigzag_np(d: np.ndarray) -> np.ndarray:
-    return ((d << 1) ^ (d >> 63)).astype(np.uint64)
-
-
-def _shoelace2_np(ring: np.ndarray) -> int:
-    x, y = ring[:, 0], ring[:, 1]
-    x2, y2 = np.roll(x, -1), np.roll(y, -1)
-    return int(np.sum(x * y2 - x2 * y))
-
-
-def _feature_cmds(kind: int, seqs: list[np.ndarray]) -> np.ndarray:
-    """Command-stream ints for one feature from integer tile-space
-    coordinate runs (same layout as kernel.mvt._encode_commands)."""
-    parts: list[np.ndarray] = []
-    cx = cy = 0
-
-    def run(pts: np.ndarray, cmd: int):
-        nonlocal cx, cy
-        head = np.array([(cmd & 0x7) | (len(pts) << 3)], dtype=np.int64)
-        prev = np.empty_like(pts)
-        prev[0] = (cx, cy)
-        prev[1:] = pts[:-1]
-        d = pts - prev
-        zz = np.empty(2 * len(pts), dtype=np.int64)
-        zz[0::2] = d[:, 0]
-        zz[1::2] = d[:, 1]
-        zz = _zigzag_np(zz).astype(np.int64)
-        parts.append(head)
-        parts.append(zz)
-        cx, cy = int(pts[-1, 0]), int(pts[-1, 1])
-
-    if kind in (POINT, MULTIPOINT):
-        run(seqs[0], 1)
-    elif kind in (LINESTRING, MULTILINESTRING):
-        for line in seqs:
-            if len(line) < 2:
-                raise kmvt.MvtError(
-                    "LineString with fewer than 2 coordinates")
-            run(line[:1], 1)
-            run(line[1:], 2)
-    elif kind in (POLYGON, MULTIPOLYGON):
-        # seqs: flat ring list; ring index 0 within each polygon must be
-        # CCW-positive in tile space, holes negative (kernel parity);
-        # caller passes (ring, is_outer) pairs via _polygon_cmds instead
-        raise AssertionError("use _polygon_cmds for polygonal kinds")
-    return np.concatenate(parts) if parts else np.zeros(0, dtype=np.int64)
-
-
-def _polygon_cmds(polys: list[list[np.ndarray]]) -> np.ndarray:
-    parts: list[np.ndarray] = []
-    cx = cy = 0
-
-    def run(pts: np.ndarray, cmd: int):
-        nonlocal cx, cy
-        head = np.array([(cmd & 0x7) | (len(pts) << 3)], dtype=np.int64)
-        prev = np.empty_like(pts)
-        prev[0] = (cx, cy)
-        prev[1:] = pts[:-1]
-        d = pts - prev
-        zz = np.empty(2 * len(pts), dtype=np.int64)
-        zz[0::2] = d[:, 0]
-        zz[1::2] = d[:, 1]
-        parts.append(head)
-        parts.append(_zigzag_np(zz).astype(np.int64))
-        cx, cy = int(pts[-1, 0]), int(pts[-1, 1])
-
-    close = np.array([(7 & 0x7) | (1 << 3)], dtype=np.int64)
-    for rings in polys:
-        for ri, ring in enumerate(rings):
-            pts = ring
-            if len(pts) >= 2 and (pts[0] == pts[-1]).all():
-                pts = pts[:-1]
-            if len(pts) < 3:
-                raise kmvt.MvtError(
-                    "ring with fewer than 3 distinct coords")
-            area2 = _shoelace2_np(np.vstack([pts, pts[:1]]))
-            want_positive = ri == 0
-            if (area2 > 0) != want_positive:
-                pts = pts[::-1]
-            run(pts[:1], 1)
-            run(pts[1:], 2)
-            parts.append(close)
-    return np.concatenate(parts)
-
-
-def _distinct_len(ring: np.ndarray) -> int:
-    if len(ring) >= 2 and (ring[0] == ring[-1]).all():
-        return len(ring) - 1
-    return len(ring)
-
-
-def encode_layer_fast(name: str, extent: int, feats: list) -> bytes:
-    """feats: list of (fid, props_dict, kind, seqs) where seqs is the
-    transformed integer tile-space structure:
-    - POINT/MULTIPOINT: [ (n,2) ]
-    - LINESTRING/MULTILINESTRING: [ per-line (n,2) ]
-    - POLYGON/MULTIPOLYGON: list of polygons, each list of rings
-    Returns layer bytes identical to kernel.mvt._encode_layer."""
-    keys: list[str] = []
-    key_idx: dict[str, int] = {}
-    values: list[bytes] = []
-    value_idx: dict[bytes, int] = {}
-
-    out = bytearray()
-    kmvt._tag(out, 15, 0)
-    kmvt._write_varint(out, 2)
-    kmvt._write_bytes(out, 1, name.encode("utf-8"))
-
-    # batch-encode all features' command streams at once
-    cmd_arrays = []
-    metas = []
-    for fid, props, kind, seqs in feats:
-        if kind in (POLYGON, MULTIPOLYGON):
-            cmds = _polygon_cmds(seqs)
-            gtype = kmvt.GEOM_POLYGON
-        elif kind in (LINESTRING, MULTILINESTRING):
-            cmds = _feature_cmds(kind, seqs)
-            gtype = kmvt.GEOM_LINESTRING
-        else:
-            cmds = _feature_cmds(kind, seqs)
-            gtype = kmvt.GEOM_POINT
-        cmd_arrays.append(cmds)
-        metas.append((fid, props, gtype, len(cmds)))
-    all_cmds = (np.concatenate(cmd_arrays) if cmd_arrays
-                else np.zeros(0, dtype=np.int64))
-    blob, nbytes = varints_np(all_cmds)
-    byte_off = np.zeros(len(nbytes) + 1, dtype=np.int64)
-    np.cumsum(nbytes, out=byte_off[1:])
-
-    ci = 0
-    for fid, props, gtype, ncmds in metas:
-        fb = bytearray()
-        if fid is not None:
-            kmvt._tag(fb, 1, 0)
-            kmvt._write_varint(fb, fid)
-        tags: list[int] = []
-        for k, v in props.items():
-            if k not in key_idx:
-                key_idx[k] = len(keys)
-                keys.append(k)
-            ev = kmvt._encode_value(v)
-            if ev not in value_idx:
-                value_idx[ev] = len(values)
-                values.append(ev)
-            tags.append(key_idx[k])
-            tags.append(value_idx[ev])
-        if tags:
-            packed = bytearray()
-            for t in tags:
-                kmvt._write_varint(packed, t)
-            kmvt._write_bytes(fb, 2, bytes(packed))
-        kmvt._tag(fb, 3, 0)
-        kmvt._write_varint(fb, gtype)
-        span = blob[byte_off[ci]:byte_off[ci + ncmds]]
-        kmvt._write_bytes(fb, 4, span)
-        ci += ncmds
-        kmvt._write_bytes(out, 2, bytes(fb))
-
-    for k in keys:
-        kmvt._write_bytes(out, 3, k.encode("utf-8"))
-    for v in values:
-        kmvt._write_bytes(out, 4, v)
-    kmvt._tag(out, 5, 0)
-    kmvt._write_varint(out, extent)
-    return bytes(out)
-
-
-def struct_to_tile_seqs(rec: dict, extent: int, left: float,
-                        bottom: float, right: float, top: float):
-    """Flat 2D geometry struct dict -> (kind, transformed seqs) in tile
-    space, enforcing the kernel's validity rules (MvtError on failure).
-    Returns None if the struct is not fast-path eligible."""
-    kind = rec.get("kind")
-    if kind is None or int(kind) not in _FLAT_2D:
-        return None
-    if rec.get("wkb") is not None or rec.get("has_z") or rec.get("has_m"):
-        return None
-    coords = rec.get("coords")
-    if coords is None:
-        return None
-    arr = np.asarray(coords, dtype=np.float64)
-    if arr.size == 0:
-        raise kmvt.MvtError("empty geometry")
-    arr = arr.reshape(-1, 2)
-    tx, ty = ktiles.mvt_transform_np(arr[:, 0], arr[:, 1], extent,
-                                     left, bottom, right, top)
-    pts = np.stack([tx.astype(np.int64), ty.astype(np.int64)], axis=1)
-    kind = int(kind)
-    if kind in (POINT, MULTIPOINT):
-        return kind, [pts]
-    offs1 = rec.get("offs1")
-    if kind == LINESTRING:
-        seqs = [pts]
-    else:
-        o1 = np.asarray(offs1, dtype=np.int64)
-        seqs = [pts[o1[i]:o1[i + 1]] for i in range(len(o1) - 1)]
-    if kind in (LINESTRING, MULTILINESTRING):
-        if any(len(s) < 2 for s in seqs):
-            raise kmvt.MvtError("LineString with fewer than 2 coordinates")
-        return kind, seqs
-    # polygonal: regroup rings into polygons via offs2
-    if kind == POLYGON:
-        polys = [seqs]
-    else:
-        o2 = rec.get("offs2")
-        o2 = np.asarray(o2, dtype=np.int64)
-        polys = [seqs[o2[i]:o2[i + 1]] for i in range(len(o2) - 1)]
-    for rings in polys:
-        if not rings or any(_distinct_len(r) < 3 for r in rings):
-            raise kmvt.MvtError("ring with fewer than 3 distinct coords")
-    return kind, polys
-
-
-# ---------------------------------------------------------------------------
-# batched per-tile path: one transform for ALL features, python command
-# building for the (dominant) tiny-geometry case
-# ---------------------------------------------------------------------------
-#
-# Profiling the per-feature pipeline above on the bench tiles showed
-# ~36us/feature in struct_to_tile_seqs (a fresh asarray + transform per
-# feature) and ~58us/feature in the numpy command builders — all
-# numpy-call overhead on 3-5 point geometries. Batching the transform
-# per TILE (0.11ms vs 5.1ms per 142-feature tile) and building command
-# ints in plain python (2us vs 58us per small feature) keeps the bytes
-# identical while removing the per-feature numpy fixed costs. varint
-# encoding stays vectorized over the tile's concatenated command
-# stream.
+# Command ints are built in plain python for small tiles and for
+# multi-part features (2us vs 58us per small feature for numpy command
+# builders: numpy-call overhead dominates 3-5 point geometries), and
+# columnar for large tiles. varint encoding stays vectorized over the
+# tile's concatenated command stream either way.
 
 
 def _zz(v: int) -> int:
@@ -301,20 +83,10 @@ def _run_py(cmds: list, cmd: int, xs, ys, s: int, e: int, cx: int,
     return cx, cy
 
 
-def _eligible(rec) -> bool:
-    if rec is None:
-        return True  # handled as skip
-    kind = rec.get("kind")
-    if kind is None or int(kind) not in _FLAT_2D:
-        return False
-    if (rec.get("wkb") is not None or rec.get("has_z")
-            or rec.get("has_m")):
-        return False
-    return rec.get("coords") is not None
-
-
 # below this many features the per-feature python loop beats the
-# fixed cost of ~40 whole-tile numpy passes (measured crossover ~50)
+# fixed cost of ~40 whole-tile numpy passes (on lines and single-ring
+# polygons the columnar branch measured ~4x slower at 1 feature, ~1.5x
+# at 32, break-even at 64-96 and ~3x faster at 512)
 _VECTOR_MIN = 64
 
 
@@ -332,15 +104,43 @@ def _zz_i64(v: np.ndarray) -> np.ndarray:
     return (v << 1) ^ (v >> 63)
 
 
-def encode_tile_fast(layer_name: str, extent: int, items: list,
+# kind code -> flat 2D (fast-path eligible)
+_IS_FLAT_2D = np.zeros(256, dtype=bool)
+_IS_FLAT_2D[list(_FLAT_2D)] = True
+
+
+def _lane(a):
+    """One Arrow array from an Array or ChunkedArray lane."""
+    if isinstance(a, pa.ChunkedArray):
+        return a.chunk(0) if a.num_chunks == 1 else a.combine_chunks()
+    return a
+
+
+def _list_lane(arr) -> tuple[np.ndarray, np.ndarray]:
+    """A list lane as (flat values, per-row start offsets of length
+    n + 1), read straight from its Arrow buffers; a null row owns an
+    empty segment, as Spark and pyarrow write it."""
+    offs = arr.offsets.to_numpy().astype(np.int64)
+    return (arr.values.to_numpy(zero_copy_only=False)[offs[0]:offs[-1]],
+            offs - offs[0])
+
+
+def encode_tile_cols(layer_name: str, extent: int, keys: list,
+                     kind, has_z, has_m, coords, offs1, offs2, wkb,
                      left: float, bottom: float, right: float,
                      top: float, props_list: list | None = None):
-    """items: [(feature_key, rec_dict_or_None)] in final feature order.
-    ``props_list``: optional parallel list of per-feature property
-    dicts (typed MVT values); None keeps the default {"id": str(key)}.
-    Returns (tile_bytes, n_features, n_skipped) or None if any feature
-    is not fast-eligible (caller falls back to the kernel encoder for
-    the whole tile). Bytes identical to the kernel path.
+    """Encode one tile from its geometry lanes, features in final
+    order. ``kind``/``has_z``/``has_m``/``coords``/``offs1``/``offs2``/
+    ``wkb`` are the Arrow arrays of the geometry struct's fields (one
+    row per feature; a null ``kind`` is an absent feature, counted as
+    skipped). ``keys`` gives each feature's id tag; ``props_list`` is
+    an optional parallel list of typed property dicts replacing the
+    default {"id": str(key)}.
+
+    Returns (tile_bytes, n_features, n_skipped), or None when a row
+    carries raw WKB, Z or M, or a present feature is not a flat 2D
+    kind with coordinates (the caller then encodes the whole tile with
+    the kernel encoder). Bytes identical to the kernel path.
 
     Large tiles build the command stream COLUMNAR: features are
     partitioned into point / linestring / single-ring-polygon classes
@@ -350,113 +150,56 @@ def encode_tile_fast(layer_name: str, extent: int, items: list,
     written into their slots). Small tiles keep the plain-python
     per-feature loop — the numpy fixed costs only pay off past ~64
     features."""
-    # eligibility scan first: the fallback must re-encode everything
-    for _, rec in items:
-        if rec is not None and not _eligible(rec):
-            return None
-    n_items = len(items)
-    # gather: kinds / coord counts / ring counts + one transform for
-    # all coordinates in the tile
-    kinds = np.full(n_items, -1, dtype=np.int64)
-    lens = np.zeros(n_items, dtype=np.int64)
-    nrings = np.ones(n_items, dtype=np.int64)
-    coord_arrays = []
-    for idx, (_, rec) in enumerate(items):
-        if rec is None:
-            continue
-        kinds[idx] = int(rec["kind"])
-        c = np.asarray(rec["coords"], dtype=np.float64)
-        coord_arrays.append(c)
-        lens[idx] = len(c) >> 1
-        o1 = rec.get("offs1")
-        if o1 is not None and len(o1) > 1:
-            nrings[idx] = len(o1) - 1
-    return _encode_gathered(
-        layer_name, extent, n_items, kinds, lens, nrings, coord_arrays,
-        lambda i: items[i][1], lambda i: items[i][0],
-        left, bottom, right, top,
-        props_for=(None if props_list is None
-                   else lambda i: props_list[i]))
-
-
-def encode_tile_cols(layer_name: str, extent: int, keys: list,
-                     kind_l: list, has_z_l: list, has_m_l: list,
-                     coords_l: list, offs1_l: list, offs2_l: list,
-                     wkb_l: list, left: float, bottom: float,
-                     right: float, top: float,
-                     props_list: list | None = None):
-    """Column-wise twin of encode_tile_fast: parallel per-feature
-    sequences instead of struct dicts, so the Arrow struct -> python
-    dict materialization (~several us/row) never happens. An absent
-    feature is kind_l[i] is None. Returns the same
-    (bytes, n_features, n_skipped), or None for whole-tile kernel
-    fallback. Byte-identical to the dict path on equivalent input.
-    ``props_list``: optional parallel per-feature property dicts."""
+    kind, has_z, has_m, coords, offs1, offs2, wkb = map(
+        _lane, (kind, has_z, has_m, coords, offs1, offs2, wkb))
     n_items = len(keys)
-    kinds = np.full(n_items, -1, dtype=np.int64)
-    lens = np.zeros(n_items, dtype=np.int64)
-    nrings = np.ones(n_items, dtype=np.int64)
-    coord_arrays = []
-    for idx in range(n_items):
-        k = kind_l[idx]
-        if k is None:
-            continue
-        k = int(k)
-        if (k not in _FLAT_2D or wkb_l[idx] is not None
-                or has_z_l[idx] or has_m_l[idx]
-                or coords_l[idx] is None):
-            return None
-        kinds[idx] = k
-        c = np.asarray(coords_l[idx], dtype=np.float64)
-        coord_arrays.append(c)
-        lens[idx] = len(c) >> 1
-        o1 = offs1_l[idx]
-        if o1 is not None and len(o1) > 1:
-            nrings[idx] = len(o1) - 1
-
-    def rec_for(i):
-        if kind_l[i] is None:
-            return None
-        return {"kind": kind_l[i], "has_z": has_z_l[i],
-                "has_m": has_m_l[i], "coords": coords_l[i],
-                "offs1": offs1_l[i], "offs2": offs2_l[i],
-                "wkb": wkb_l[i]}
-
-    return _encode_gathered(
-        layer_name, extent, n_items, kinds, lens, nrings, coord_arrays,
-        rec_for, lambda i: keys[i], left, bottom, right, top,
-        props_for=(None if props_list is None
-                   else lambda i: props_list[i]))
-
-
-def _encode_gathered(layer_name, extent, n_items, kinds, lens, nrings,
-                     coord_arrays, rec_for, key_for,
-                     left, bottom, right, top, props_for=None):
-    if coord_arrays:
-        arr = np.concatenate(coord_arrays).reshape(-1, 2)
-        tx, ty = ktiles.mvt_transform_np(arr[:, 0], arr[:, 1], extent,
-                                         left, bottom, right, top)
-        xs = tx.astype(np.int64)
-        ys = ty.astype(np.int64)
-    else:
-        xs = ys = np.zeros(0, dtype=np.int64)
-    base = np.zeros(n_items, dtype=np.int64)
-    np.cumsum(lens[:-1], out=base[1:])
+    # absent rows carry no WKB, Z or M: counts suffice
+    if wkb.null_count < n_items or has_z.true_count or has_m.true_count:
+        return None
+    if kind.null_count:
+        kind = kind.fill_null(-1)
+    kinds = kind.to_numpy().astype(np.int64)
+    present = kinds >= 0
+    if not _IS_FLAT_2D[kinds[present]].all():
+        return None
+    if coords.null_count and (
+            present & coords.is_null().to_numpy(zero_copy_only=False)
+    ).any():
+        return None
+    # every row's coordinates in one buffer: a row's pairs start at
+    # base[i] (absent rows hold no coords, or ones nothing reads)
+    flat, cstart = _list_lane(coords)
+    base = cstart[:-1] >> 1
+    lens = np.diff(cstart) >> 1
+    o1_vals, o1_start = _list_lane(offs1)
+    o2_vals, o2_start = _list_lane(offs2)
+    n1 = np.diff(o1_start)
+    nrings = np.where(n1 > 1, n1 - 1, 1)
+    arr = flat.reshape(-1, 2)
+    tx, ty = ktiles.mvt_transform_np(arr[:, 0], arr[:, 1], extent,
+                                     left, bottom, right, top)
+    xs = tx.astype(np.int64)
+    ys = ty.astype(np.int64)
 
     if n_items < _VECTOR_MIN:
+        # plain python lists, converted once per tile
         xl, yl = xs.tolist(), ys.tolist()
+        o1l, o2l = o1_vals.tolist(), o2_vals.tolist()
+        s1, s2 = o1_start.tolist(), o2_start.tolist()
+        kl, bl, nl = kinds.tolist(), base.tolist(), lens.tolist()
         feats = []  # (fid, props, gtype, cmd_list)
         skipped = 0
         for idx in range(n_items):
-            rec = rec_for(idx)
-            if rec is None:
+            if kl[idx] < 0:
                 skipped += 1
                 continue
             try:
                 feats.append(_feature_cmds_py(
-                    rec, idx, key_for(idx), xl, yl, int(base[idx]),
-                    int(lens[idx]),
-                    props=props_for(idx) if props_for else None))
+                    kl[idx], o1l[s1[idx]:s1[idx + 1]],
+                    o2l[s2[idx]:s2[idx + 1]], idx, keys[idx], xl, yl,
+                    bl[idx], nl[idx],
+                    props=(None if props_list is None
+                           else props_list[idx])))
             except kmvt.MvtError:
                 skipped += 1
         all_cmds = np.array([c for f in feats for c in f[3]],
@@ -468,7 +211,6 @@ def _encode_gathered(layer_name, extent, n_items, kinds, lens, nrings,
         kmvt._write_bytes(out, 3, layer)
         return bytes(out), len(metas), skipped
 
-    present = kinds >= 0
     skipped = int(n_items - present.sum())
     empty = present & (lens == 0)
     skipped += int(empty.sum())
@@ -514,10 +256,12 @@ def _encode_gathered(layer_name, extent, n_items, kinds, lens, nrings,
     py_feats: dict[int, tuple] = {}
     for idx in np.nonzero(is_py)[0]:
         try:
-            py_feats[int(idx)] = _feature_cmds_py(
-                rec_for(int(idx)), int(idx), key_for(int(idx)),
-                xs, ys, int(base[idx]), int(lens[idx]),
-                props=props_for(int(idx)) if props_for else None)
+            i = int(idx)
+            py_feats[i] = _feature_cmds_py(
+                kinds[i], o1_vals[o1_start[i]:o1_start[i + 1]],
+                o2_vals[o2_start[i]:o2_start[i + 1]], i, keys[i],
+                xs, ys, int(base[i]), int(lens[i]),
+                props=None if props_list is None else props_list[i])
         except kmvt.MvtError:
             skipped += 1
             is_py[idx] = False
@@ -591,11 +335,11 @@ def _encode_gathered(layer_name, extent, n_items, kinds, lens, nrings,
         np.isin(kk, (POINT, MULTIPOINT)), kmvt.GEOM_POINT,
         np.where(np.isin(kk, (LINESTRING, MULTILINESTRING)),
                  kmvt.GEOM_LINESTRING, kmvt.GEOM_POLYGON))
-    if props_for is None:
+    if props_list is None:
         # every kept feature (python-built ones included) carries
         # exactly {"id": str(key)} and fid = item index, so the
         # single-key columnar framer applies
-        key_strs = [str(key_for(int(i))) for i in kept_idx]
+        key_strs = [str(keys[i]) for i in kept_idx.tolist()]
         layer = _frame_layer_cols(layer_name, extent,
                                   kept_idx.astype(np.int64), key_strs,
                                   gtypes, ncmds[kept_idx], cmds_all)
@@ -604,7 +348,7 @@ def _encode_gathered(layer_name, extent, n_items, kinds, lens, nrings,
         # framing goes through the general key/value-dedup framer
         # (byte-identical to the kernel encoder's tag assembly,
         # mvt_writer.rs:357-401 semantics)
-        metas = [(int(i), props_for(int(i)), int(g), int(ncmds[i]))
+        metas = [(int(i), props_list[i], int(g), int(ncmds[i]))
                  for i, g in zip(kept_idx, gtypes)]
         layer = _frame_layer(layer_name, extent, metas, cmds_all)
     out = bytearray()
@@ -612,8 +356,12 @@ def _encode_gathered(layer_name, extent, n_items, kinds, lens, nrings,
     return bytes(out), len(kept_idx), skipped
 
 
-def _feature_cmds_py(rec, fid, key, xs, ys, base, n, props=None):
-    kind = int(rec["kind"])
+def _feature_cmds_py(kind, o1, o2, fid, key, xs, ys, base, n,
+                     props=None):
+    """One feature's command ints; ``o1``/``o2`` are its ring and
+    polygon offsets (offs1/offs2), ``base``/``n`` its coordinate span
+    in the tile's ``xs``/``ys``."""
+    kind = int(kind)
     if n == 0:
         raise kmvt.MvtError("empty geometry")
     if props is None:
@@ -622,7 +370,6 @@ def _feature_cmds_py(rec, fid, key, xs, ys, base, n, props=None):
         cmds: list[int] = []
         _run_py(cmds, 1, xs, ys, base, base + n, 0, 0)
         return fid, props, kmvt.GEOM_POINT, cmds
-    o1 = rec.get("offs1")
     if kind == LINESTRING:
         lines = [(base, base + n)]
     elif kind == MULTILINESTRING:
@@ -645,7 +392,6 @@ def _feature_cmds_py(rec, fid, key, xs, ys, base, n, props=None):
     if kind == POLYGON:
         polys = [rings]
     else:
-        o2 = rec["offs2"]
         polys = [rings[int(o2[i]):int(o2[i + 1])]
                  for i in range(len(o2) - 1)]
     # validate + normalize first (a later bad ring skips the feature
@@ -789,7 +535,7 @@ def _frame_layer(name: str, extent: int, metas: list,
                  all_cmds: np.ndarray) -> bytes:
     """metas: (fid, props, gtype, ncmds) per kept feature in order;
     all_cmds: the tile's whole command stream. Returns layer bytes
-    identical to kernel _encode_layer / encode_layer_fast framing."""
+    identical to kernel _encode_layer framing."""
     keys: list[str] = []
     key_idx: dict[str, int] = {}
     values: list[bytes] = []
@@ -840,3 +586,4 @@ def _frame_layer(name: str, extent: int, metas: list,
     kmvt._tag(out, 5, 0)
     kmvt._write_varint(out, extent)
     return bytes(out)
+

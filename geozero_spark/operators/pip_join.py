@@ -35,6 +35,7 @@ import weakref
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import cols
@@ -312,14 +313,16 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 6,
     # cogrouped exact refine: candidates and polygons meet on
     # (zone, salt); each group's geometry struct crosses the wire
     # ONCE and the whole point slice is ray-cast vectorized. A group
-    # materializes as one pandas frame, so its size must be bounded:
+    # materializes as one Arrow table, so its size must be bounded:
     # the salt lane spreads a zone's candidates over `salt` groups
     # (zone_candidates / salt rows each; the polygon row is duplicated
     # salt times — the dimension side is cheap). When the caller
     # didn't salt the JOIN, a refine-only salt is derived here so an
     # unsalted big-big call still can't concentrate a whole hot zone
     # in one task; size `salt` to the hottest zone / a comfortable
-    # pandas frame (AQE cannot split UDF groups).
+    # table (AQE cannot split UDF groups).
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from ..kernel import pip as kpip
     from ..kernel import structrepr as sr
 
@@ -340,24 +343,31 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 6,
     out_proto = cand.drop("cell", "_salt")
     out_cols = out_proto.columns
     out_schema = out_proto.schema
+    # the JVM labels timestamps with the session time zone, the result
+    # must carry Spark's UTC Arrow types: cast (metadata only) on return
+    out_arrow = to_arrow_schema(out_schema)
 
-    def refine(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if not len(left) or not len(right):
-            return left.iloc[0:0][out_cols]
-        if unique_polys and len(right) > 1:
-            raise ValueError(
-                f"pip_join: poly_key {right['_pk'].iloc[0]!r} has "
-                f"{len(right)} polygon rows; pass unique_polys=False "
-                f"for multi-row zone (in-ANY-polygon) semantics")
-        pxv = left[lon].to_numpy(dtype=np.float64)
-        pyv = left[lat].to_numpy(dtype=np.float64)
-        mask = kpip.points_in_polygon_np(
-            pxv, pyv, sr.from_struct(right["_pg"].iloc[0]))
-        for i in range(1, len(right)):  # multi-row zone: in ANY
-            mask |= kpip.points_in_polygon_np(
-                pxv, pyv, sr.from_struct(right["_pg"].iloc[i]))
-        return left.loc[mask, out_cols]
+    def refine(left, right):
+        left = left.select(out_cols)
+        if left.num_rows and right.num_rows:
+            if unique_polys and right.num_rows > 1:
+                raise ValueError(
+                    f"pip_join: poly_key "
+                    f"{right.column('_pk')[0].as_py()!r} has "
+                    f"{right.num_rows} polygon rows; pass "
+                    f"unique_polys=False for multi-row zone "
+                    f"(in-ANY-polygon) semantics")
+            pxv = left.column(lon).to_numpy()
+            pyv = left.column(lat).to_numpy()
+            mask = None
+            for g in right.column("_pg").to_pylist():  # in ANY row
+                m = kpip.points_in_polygon_np(pxv, pyv, sr.from_struct(g))
+                mask = m if mask is None else mask | m
+            left = left.filter(pa.array(mask))
+        else:
+            left = left.slice(0, 0)
+        return left.cast(out_arrow)
 
     return (cand.groupBy(*gkeys)
             .cogroup(pright.groupBy(*rkeys))
-            .applyInPandas(refine, out_schema))
+            .applyInArrow(refine, out_schema))

@@ -12,13 +12,13 @@ geozero/src/tessellator/mod.rs) — here the distributed shape is:
   is byte-reproducible in SQL.
 
 The binary raster payload (row-major uint32 grid per tile) is built with
-applyInPandas + numpy bincount — one Arrow batch per tile.
+applyInArrow + numpy bincount — one Arrow table per tile.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import sqlgen as sg
@@ -52,6 +52,9 @@ def rasterize_counts(df: DataFrame, lon: str = "lon", lat: str = "lat",
 
 
 RASTER_SCHEMA = "z int, x bigint, y bigint, grid int, raster binary"
+_RASTER_ARROW = pa.schema([("z", pa.int32()), ("x", pa.int64()),
+                           ("y", pa.int64()), ("grid", pa.int32()),
+                           ("raster", pa.binary())])
 
 
 def rasterize_tiles(df: DataFrame, lon: str = "lon", lat: str = "lat",
@@ -59,18 +62,17 @@ def rasterize_tiles(df: DataFrame, lon: str = "lon", lat: str = "lat",
     """One row-major uint32 (big-endian) grid blob per tile."""
     px = pixel_cols(df.select(lon, lat), lon, lat, z, grid)
 
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        zz = int(pdf["z"].iloc[0])
-        xx = int(pdf["x"].iloc[0])
-        yy = int(pdf["y"].iloc[0])
-        idx = (pdf["py"].to_numpy(dtype=np.int64) * grid
-               + pdf["px"].to_numpy(dtype=np.int64))
+    def encode(tile_key, tbl):
+        zz, xx, yy = (v.as_py() for v in tile_key)
+        idx = (tbl.column("py").to_numpy().astype(np.int64) * grid
+               + tbl.column("px").to_numpy().astype(np.int64))
         counts = np.bincount(idx, minlength=grid * grid)
         blob = counts.astype(">u4").tobytes()
-        return pd.DataFrame([{"z": zz, "x": xx, "y": yy, "grid": grid,
-                              "raster": blob}])
+        return pa.Table.from_pylist(
+            [{"z": zz, "x": xx, "y": yy, "grid": grid, "raster": blob}],
+            schema=_RASTER_ARROW)
 
-    return px.groupBy("z", "x", "y").applyInPandas(encode, RASTER_SCHEMA)
+    return px.groupBy("z", "x", "y").applyInArrow(encode, RASTER_SCHEMA)
 
 
 def vectorize_pixels(counts: DataFrame, threshold: int = 1,

@@ -6,7 +6,7 @@ the affine map->tile transform with Y flip (:157-173), validity rules
 
     geoms -> explode tiles covering bbox (JVM-side)    # cover
           -> groupBy(z, x, y)                          # shuffle on tile key
-          -> applyInPandas(encode MVT layer per tile)  # one Arrow batch/tile
+          -> applyInArrow(encode MVT layer per tile)   # one Arrow table/tile
 
 The shuffle key is the tile id, so tile hot spots (dense cities at low
 zoom) are the skew surface: AQE skew-join/partition splitting plus an
@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import sqlgen as sg
@@ -29,6 +29,9 @@ from ..kernel import tiles as ktiles
 
 TILE_SCHEMA = ("z int, x bigint, y bigint, n_features int, "
                "n_skipped int, mvt binary")
+_TILE_ARROW = pa.schema([("z", pa.int32()), ("x", pa.int64()),
+                         ("y", pa.int64()), ("n_features", pa.int32()),
+                         ("n_skipped", pa.int32()), ("mvt", pa.binary())])
 
 
 def with_tile_eq(df: DataFrame, lon: str, lat: str, z: int,
@@ -99,8 +102,8 @@ def mvt_tiles(df: DataFrame, z: int, key: str = "url",
     integral columns become MVT int values, floating-point columns
     double values, booleans bool values, everything else strings
     (mvt_writer.rs:380-401 value mapping; keys/values are deduped into
-    the layer tables per :357-374). NULLs (and NaN stand-ins Arrow
-    uses for nulls in numeric columns) drop that tag on that feature.
+    the layer tables per :357-374). A NULL drops that tag on that
+    feature.
     The prop columns ride the (z,x,y) exchange as flat columns like
     the geometry lanes — no struct/dict materialization per row."""
     from pyspark.sql import types as T
@@ -127,10 +130,9 @@ def mvt_tiles(df: DataFrame, z: int, key: str = "url",
     # the bbox did its job in the cover explode; shuffle only the
     # fields the encoder reads (bbox/srid/t-lanes are ~35% of the
     # struct's bytes and pure dead weight through the (z,x,y)
-    # exchange) — and ship them FLAT: the same bytes cross the
-    # exchange, but Arrow -> pandas then yields numpy/object columns
-    # instead of materializing a python dict per row (~several us/row
-    # inside the encode stage, measured)
+    # exchange) — and ship them FLAT: each lane reaches the encoder
+    # as one Arrow array (coordinates as one flat values buffer plus
+    # list offsets), never as a python dict per row
     cover = cover.select(
         key, "z", "x", "y",
         F.col(f"{geom}.kind").alias("_kind"),
@@ -150,54 +152,35 @@ def mvt_tiles(df: DataFrame, z: int, key: str = "url",
     _GCOLS = ("_kind", "_has_z", "_has_m", "_coords", "_offs1",
               "_offs2", "_wkb")
 
-    def _col_lists(pdf):
-        keys_l = pdf[key].tolist()
-        cols_l = [pdf[c].tolist() for c in _GCOLS]
-        # kind can arrive as float (nullable int -> NaN) from Arrow
-        cols_l[0] = [None if v is None or v != v else int(v)
-                     for v in cols_l[0]]
-        return keys_l, cols_l
-
-    def _props_list(pdf, keys_l):
+    def _props_list(tbl, keys_l):
         """Per-feature typed property dicts in sorted-row order, or
         None for the default {"id": str(key)}-only tagging. Coercion
-        follows the DRIVER-captured Spark column type, not the pandas
-        dtype — Arrow turns a nullable int column into float64+NaN,
-        which must come back as MVT int values, not doubles."""
+        follows the DRIVER-captured Spark column type; Arrow keeps a
+        nullable int column as int, so only NULL drops a tag."""
         if not props:
             return None
-        cols_v = [pdf[f"_p{i}"].tolist() for i in range(len(props))]
+        cast = {"int": int, "float": float, "bool": bool, "str": str}
+        cols_v = [tbl.column(f"_p{i}").to_pylist()
+                  for i in range(len(props))]
         out = []
         for j, k in enumerate(keys_l):
             d = {"id": str(k)}
             for nm, kd, col in zip(props, prop_kinds, cols_v):
-                v = col[j]
-                if v is None or (isinstance(v, float) and v != v):
-                    continue
-                if kd == "int":
-                    d[nm] = int(v)
-                elif kd == "float":
-                    d[nm] = float(v)
-                elif kd == "bool":
-                    d[nm] = bool(v)
-                else:
-                    d[nm] = str(v)
+                if col[j] is not None:
+                    d[nm] = cast[kd](col[j])
             out.append(d)
         return out
 
-    def _encode_kernel(keys_l, cols_l, left, bottom, right, top,
+    def _encode_kernel(keys_l, tbl, left, bottom, right, top,
                        props_l=None):
         feats = []
         skipped = 0
-        for i, k in enumerate(keys_l):
-            if cols_l[0][i] is None:
+        for i, (k, rec) in enumerate(
+                zip(keys_l, tbl.select(list(_GCOLS)).to_pylist())):
+            if rec["_kind"] is None:
                 skipped += 1
                 continue
-            g = sr.from_struct({
-                "kind": cols_l[0][i], "has_z": cols_l[1][i],
-                "has_m": cols_l[2][i], "coords": cols_l[3][i],
-                "offs1": cols_l[4][i], "offs2": cols_l[5][i],
-                "wkb": cols_l[6][i]})
+            g = sr.from_struct({c[1:]: v for c, v in rec.items()})
             try:
                 tg = ktiles.transform_geom_to_tile(
                     g, extent, left, bottom, right, top)
@@ -213,24 +196,23 @@ def mvt_tiles(df: DataFrame, z: int, key: str = "url",
                                   features=feats)]))
         return blob, len(feats), skipped
 
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
+    def encode(tile_key, tbl):
         from . import mvt_fast
-        zz = int(pdf["z"].iloc[0])
-        xx = int(pdf["x"].iloc[0])
-        yy = int(pdf["y"].iloc[0])
+        zz, xx, yy = (v.as_py() for v in tile_key)
         left, bottom, right, top = ktiles.tile_bounds_eq(zz, xx, yy)
-        pdf = pdf.sort_values(key, kind="mergesort")
-        keys_l, cols_l = _col_lists(pdf)
-        props_l = _props_list(pdf, keys_l)
+        # stable: ties keep arrival order, null keys sort last
+        tbl = tbl.sort_by([(key, "ascending")])
+        keys_l = tbl.column(key).to_pylist()
+        props_l = _props_list(tbl, keys_l)
         res = mvt_fast.encode_tile_cols(
-            layer, extent, keys_l, *cols_l, left, bottom, right, top,
-            props_list=props_l)
+            layer, extent, keys_l, *(tbl.column(c) for c in _GCOLS),
+            left, bottom, right, top, props_list=props_l)
         if res is None:
-            res = _encode_kernel(keys_l, cols_l, left, bottom, right,
-                                 top, props_l=props_l)
+            res = _encode_kernel(keys_l, tbl, left, bottom, right, top,
+                                 props_l=props_l)
         blob, n_feats, skipped = res
-        return pd.DataFrame([{"z": zz, "x": xx, "y": yy,
-                              "n_features": n_feats,
-                              "n_skipped": skipped, "mvt": blob}])
+        return pa.Table.from_pylist(
+            [{"z": zz, "x": xx, "y": yy, "n_features": n_feats,
+              "n_skipped": skipped, "mvt": blob}], schema=_TILE_ARROW)
 
-    return cover.groupBy("z", "x", "y").applyInPandas(encode, TILE_SCHEMA)
+    return cover.groupBy("z", "x", "y").applyInArrow(encode, TILE_SCHEMA)

@@ -18,18 +18,34 @@ from __future__ import annotations
 
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+# the two ways a path holds no output: never written, or written by a
+# job with no rows (a directory without data files)
+_NO_OUTPUT = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
 
 def meta_path(base: str, stage: str) -> str:
     return f"{base}/_meta/{stage}"
 
 
+def _read_output(spark: SparkSession, path: str) -> DataFrame | None:
+    """``path`` as parquet, or None when it holds no output. Every
+    other read error raises: resume accounting must not turn an I/O
+    failure into 'nothing written'."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() in _NO_OUTPUT:
+            return None
+        raise
+
+
 def completed_buckets(spark: SparkSession, base: str, stage: str,
                       fingerprint: str) -> set[int]:
-    try:
-        m = spark.read.parquet(meta_path(base, stage))
-    except Exception:
+    m = _read_output(spark, meta_path(base, stage))
+    if m is None:
         return set()
     return {r.bucket for r in
             m.where(F.col("fingerprint") == fingerprint)
@@ -79,23 +95,25 @@ def run_stage(spark: SparkSession, df: DataFrame, base: str, stage: str,
         .where(F.col("bucket").isin(todo)))
     # fanout keeps the write as wide as the cluster when n_buckets is
     # small: n_buckets * fanout partitions, each holding one (bucket,
-    # sub-file) slice -> one output file per task
+    # sub-file) slot -> one output file per task. The sub-key hash is
+    # seeded apart from the bucket's (unseeded, it is a function of
+    # the bucket whenever fanout and n_buckets share a factor), and
+    # each slot is routed through a key that hashes to its own
+    # partition (hashing the (bucket, sub) pair directly lets two
+    # slots collide in one task while another idles)
     par = spark.sparkContext.defaultParallelism
     fanout = max(1, -(-par // n_buckets))
-    out = bdf.repartition(
-        n_buckets * fanout, F.col("bucket"),
-        F.pmod(F.xxhash64(F.col(bucket_col)), F.lit(fanout)))
+    n_slots = n_buckets * fanout
+    slot = (F.col("bucket") * fanout
+            + F.pmod(F.xxhash64(F.col(bucket_col), F.lit(1)),
+                     F.lit(fanout))).cast("int")
+    route = F.element_at(
+        F.array(*[F.lit(k) for k in _slot_keys(n_slots)]), slot + 1)
+    out = bdf.repartition(n_slots, route)
     (out.write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy("bucket").parquet(f"{base}/{stage}"))
-    try:
-        counts = {r.bucket: r.cnt for r in
-                  spark.read.parquet(f"{base}/{stage}")
-                  .where(F.col("bucket").isin(todo))
-                  .groupBy("bucket").agg(F.count("*").alias("cnt"))
-                  .collect()}
-    except Exception:
-        counts = {}  # nothing written (all pending buckets empty)
+    counts = bucket_counts(spark, f"{base}/{stage}", todo)
     wall = round(time.perf_counter() - t0, 3)
     now = time.time()
     rec = spark.createDataFrame(
@@ -105,6 +123,46 @@ def run_stage(spark: SparkSession, df: DataFrame, base: str, stage: str,
         "fingerprint string, ts double")
     rec.write.mode("append").parquet(meta_path(base, stage))
     return [(b, counts.get(b, 0), wall) for b in todo]
+
+
+def bucket_counts(spark: SparkSession, path: str, buckets: list) -> dict:
+    """{bucket: rows} written under ``path`` for ``buckets``, from the
+    parquet footers; {} when nothing was written there."""
+    out = _read_output(spark, path)
+    if out is None:
+        return {}
+    return {r.bucket: r.cnt for r in
+            out.where(F.col("bucket").isin(buckets))
+            .groupBy("bucket").agg(F.count("*").alias("cnt")).collect()}
+
+
+def _murmur3_int(v: int, seed: int = 42) -> int:
+    """Spark's Murmur3Hash of one int value: the hash that hash
+    partitioning takes modulo the partition count."""
+    m = 0xFFFFFFFF
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & m
+
+    k = rotl((v * 0xCC9E2D51) & m, 15) * 0x1B873593 & m
+    h = (rotl(seed ^ k, 13) * 5 + 0xE6546B64) & m
+    h ^= 4
+    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & m
+    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+def _slot_keys(n: int) -> list[int]:
+    """keys[p] is an int that hash partitioning into ``n`` partitions
+    sends to partition p, so repartitioning on keys[slot] puts each
+    slot in its own task."""
+    keys: dict[int, int] = {}
+    v = 0
+    while len(keys) < n:
+        keys.setdefault(_murmur3_int(v) % n, v)
+        v += 1
+    return [keys[p] for p in range(n)]
 
 
 def stage_metrics(spark: SparkSession, base: str, stage: str) -> DataFrame:

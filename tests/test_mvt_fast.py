@@ -1,6 +1,10 @@
-"""mvt_fast must produce BYTE-IDENTICAL layers to the kernel encoder."""
+"""mvt_fast.encode_tile_cols must produce BYTE-IDENTICAL tiles to the
+kernel encoder (the oracle), on both of its branches: the per-feature
+python loop below ``_VECTOR_MIN`` features and the columnar command
+builder at or above it."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from geozero_spark.kernel import mvt as kmvt
@@ -25,36 +29,68 @@ GEOMS = [
     "(4.5 4.5,5 4.5,5 5,4.5 5,4.5 4.5)))",
 ]
 
-
-def _kernel_layer(geoms_wkt):
-    feats = []
-    for i, w in enumerate(geoms_wkt):
-        g = wkt.decode(w)
-        tg = ktiles.transform_geom_to_tile(g, EXTENT, *BOUNDS)
-        feats.append(kmvt.feature_from_geom(
-            tg, properties={"id": str(i)}, fid=i))
-    return kmvt._encode_layer(
-        kmvt.MvtLayer(name="layer", extent=EXTENT, features=feats))
+# the geometry struct fields encode_tile_cols reads, with their Arrow
+# types as Spark ships them (structrepr.GEOMETRY_DDL)
+_LANES = (("kind", pa.int8()), ("has_z", pa.bool_()),
+          ("has_m", pa.bool_()), ("coords", pa.list_(pa.float64())),
+          ("offs1", pa.list_(pa.int32())), ("offs2", pa.list_(pa.int32())),
+          ("wkb", pa.binary()))
 
 
-def _fast_layer(geoms_wkt):
-    feats = []
-    for i, w in enumerate(geoms_wkt):
-        rec = sr.to_struct(wkt.decode(w))
-        r = mvt_fast.struct_to_tile_seqs(rec, EXTENT, *BOUNDS)
-        assert r is not None, w
-        kind, seqs = r
-        feats.append((i, {"id": str(i)}, kind, seqs))
-    return mvt_fast.encode_layer_fast("layer", EXTENT, feats)
+def _items(geoms_wkt):
+    return [(str(i), sr.to_struct(wkt.decode(w)))
+            for i, w in enumerate(geoms_wkt)]
 
 
-def test_layer_bytes_identical():
-    assert _fast_layer(GEOMS) == _kernel_layer(GEOMS)
+def _cols(items, props=None):
+    """encode_tile_cols over [(key, struct_dict_or_None)]: one Arrow
+    array per geometry lane, as the tile sink's shuffle delivers."""
+    lanes = [pa.array([None if r is None else r.get(f) for _, r in items],
+                      t) for f, t in _LANES]
+    return mvt_fast.encode_tile_cols(
+        "layer", EXTENT, [k for k, _ in items], *lanes, *BOUNDS,
+        props_list=props)
+
+
+def _kernel(items, props=None):
+    """The oracle: kernel encoder over the same features, with the tile
+    sink's skip rules (None rows and MVT-invalid features are counted
+    as skipped; fid is the feature's row index)."""
+    feats, skipped = [], 0
+    for i, (k, rec) in enumerate(items):
+        if rec is None:
+            skipped += 1
+            continue
+        try:
+            tg = ktiles.transform_geom_to_tile(
+                sr.from_struct(rec), EXTENT, *BOUNDS)
+            feats.append(kmvt.feature_from_geom(
+                tg, properties=props[i] if props else {"id": str(k)},
+                fid=i))
+        except (ktiles.MvtValidityError, kmvt.MvtError):
+            skipped += 1
+    blob = kmvt.encode_tile(kmvt.MvtTile(layers=[kmvt.MvtLayer(
+        name="layer", extent=EXTENT, features=feats)]))
+    return blob, len(feats), skipped
+
+
+@pytest.fixture
+def columnar(monkeypatch):
+    """Force the columnar branch whatever the tile size."""
+    monkeypatch.setattr(mvt_fast, "_VECTOR_MIN", 0)
+
+
+def test_layer_bytes_identical(columnar):
+    items = _items(GEOMS)
+    want = _kernel(items)
+    assert want[1:] == (len(GEOMS), 0)
+    assert _cols(items) == want
 
 
 def test_each_geom_individually():
     for w in GEOMS:
-        assert _fast_layer([w]) == _kernel_layer([w]), w
+        items = _items([w])
+        assert _cols(items) == _kernel(items), w
 
 
 def test_varints_np_matches_kernel():
@@ -71,84 +107,57 @@ def test_varints_np_matches_kernel():
     assert int(lens.sum()) == len(blob)
 
 
-def test_validity_skips_match():
-    # degenerate ring collapses identically on both paths
-    w = "POLYGON((0 0,0.0001 0,0 0.0001,0 0))"
-    g = wkt.decode(w)
-    rec = sr.to_struct(g)
-    kerr = ferr = False
-    try:
-        ktiles.transform_geom_to_tile(g, EXTENT, *BOUNDS)
-    except ktiles.MvtValidityError:
-        kerr = True
-    try:
-        mvt_fast.struct_to_tile_seqs(rec, EXTENT, *BOUNDS)
-    except kmvt.MvtError:
-        ferr = True
-    assert kerr == ferr
+def test_validity_skips_match(monkeypatch):
+    # a ring that collapses onto one tile pixel is emitted, and a ring
+    # with < 3 distinct coords is skipped, on both branches exactly as
+    # the kernel does
+    items = _items(["POINT(1 1)", "POLYGON((0 0,0.0001 0,0 0.0001,0 0))",
+                    "POLYGON((0 0,1 1,0 0))", "POINT(2 2)"])
+    want = _kernel(items)
+    assert want[1:] == (3, 1)
+    for vector_min in (0, 10 ** 9):  # columnar, then python branch
+        monkeypatch.setattr(mvt_fast, "_VECTOR_MIN", vector_min)
+        assert _cols(items) == want
 
 
 def test_fallback_for_exotic():
-    rec = sr.to_struct(wkt.decode("CIRCULARSTRING(0 0,1 1,2 0)"))
-    assert mvt_fast.struct_to_tile_seqs(rec, EXTENT, *BOUNDS) is None
-    rec = sr.to_struct(wkt.decode("POINT(1 2 3)"))
-    assert mvt_fast.struct_to_tile_seqs(rec, EXTENT, *BOUNDS) is None
-
-
-def _tile_fast_batched(geoms_wkt):
-    items = [(str(i), sr.to_struct(wkt.decode(w)))
-             for i, w in enumerate(geoms_wkt)]
-    r = mvt_fast.encode_tile_fast("layer", EXTENT, items, *BOUNDS)
-    assert r is not None
-    blob, n, skipped = r
-    return blob, n, skipped
-
-
-def _tile_kernel(geoms_wkt):
-    layer = _kernel_layer(geoms_wkt)
-    out = bytearray()
-    kmvt._write_bytes(out, 3, layer)
-    return bytes(out)
+    # curved and 3D features send the WHOLE tile to the kernel encoder
+    for exotic in ("CIRCULARSTRING(0 0,1 1,2 0)", "POINT(1 2 3)"):
+        items = _items(["POINT(0 0)", exotic])
+        assert _cols(items) is None, exotic
+        assert _cols(items[1:]) is None, exotic
 
 
 def test_batched_tile_bytes_identical():
-    blob, n, skipped = _tile_fast_batched(GEOMS)
+    items = _items(GEOMS)
+    blob, n, skipped = _cols(items)
     assert skipped == 0 and n == len(GEOMS)
-    assert blob == _tile_kernel(GEOMS)
+    assert blob == _kernel(items)[0]
 
 
-def test_batched_each_geom_individually():
+def test_batched_each_geom_individually(columnar):
     for w in GEOMS:
-        blob, _, _ = _tile_fast_batched([w])
-        assert blob == _tile_kernel([w]), w
+        items = _items([w])
+        assert _cols(items) == _kernel(items), w
 
 
 def test_batched_validity_skip_and_fallback():
-    # degenerate line -> skipped, not fatal
-    items = [("0", sr.to_struct(wkt.decode("POINT(0 0)"))),
-             ("1", sr.to_struct(wkt.decode("LINESTRING(1 1,1 1)")))]
-    # same-coord linestring transforms to <2 distinct... still 2 coords
-    # in tile space -> encoder emits it; use a 1-point struct instead
+    # a one-coordinate linestring is skipped, not fatal
     bad = sr.to_struct(wkt.decode("LINESTRING(1 1,2 2)"))
     bad["coords"] = bad["coords"][:2]  # truncate to one coordinate
-    items[1] = ("1", bad)
-    r = mvt_fast.encode_tile_fast("layer", EXTENT, items, *BOUNDS)
-    blob, n, skipped = r
-    assert n == 1 and skipped == 1
-    # exotic kind -> whole-tile fallback (None)
+    items = [("0", sr.to_struct(wkt.decode("POINT(0 0)"))), ("1", bad)]
+    got = _cols(items)
+    assert got[1:] == (1, 1)
+    assert got == _kernel(items)
+    # an exotic kind sends the whole tile to the kernel (None)
     exo = sr.to_struct(wkt.decode("CIRCULARSTRING(0 0,1 1,2 0)"))
-    r = mvt_fast.encode_tile_fast(
-        "layer", EXTENT, [("0", exo)], *BOUNDS)
-    assert r is None
+    assert _cols([("0", exo)]) is None
 
 
-def test_vectorized_big_tile_bytes_identical():
-    """>= _VECTOR_MIN features exercises the columnar command builder;
-    bytes must equal both the kernel path and the per-feature python
-    branch (forced via _VECTOR_MIN monkeypatch)."""
-    rng = np.random.default_rng(7)
+def _random_simple(n, seed):
+    rng = np.random.default_rng(seed)
     geoms = []
-    for i in range(40):
+    for _ in range(n):
         x = float(rng.uniform(-9, 9))
         y = float(rng.uniform(-4, 4))
         geoms += [
@@ -164,19 +173,26 @@ def test_vectorized_big_tile_bytes_identical():
             f"{x + 0.4:.4f} {y + 0.4:.4f},{x + 0.4:.4f} {y:.4f},"
             f"{x:.4f} {y:.4f}))",
         ]
-    geoms += GEOMS  # multipoint/multiline/holes hit the python scatter
+    return geoms
+
+
+def test_vectorized_big_tile_bytes_identical():
+    """>= _VECTOR_MIN features takes the columnar command builder;
+    multipoint/multiline/holes among them take its python slots."""
+    geoms = _random_simple(40, 7) + GEOMS
     assert len(geoms) >= mvt_fast._VECTOR_MIN
-    blob, n, skipped = _tile_fast_batched(geoms)
+    items = _items(geoms)
+    blob, n, skipped = _cols(items)
     assert skipped == 0 and n == len(geoms)
-    assert blob == _tile_kernel(geoms)
+    assert blob == _kernel(items)[0]
 
 
-def test_vectorized_matches_python_branch_with_skips(monkeypatch):
-    """None rows, invalid linestrings and degenerate rings must skip
-    identically in both branches (same n/skipped AND same bytes)."""
-    rng = np.random.default_rng(11)
+def _skip_mix(n, seed):
+    """None rows, one-coordinate linestrings and degenerate rings
+    between valid points."""
+    rng = np.random.default_rng(seed)
     items = []
-    for i in range(90):
+    for i in range(n):
         x = float(rng.uniform(-9, 9))
         y = float(rng.uniform(-4, 4))
         mod = i % 6
@@ -195,47 +211,38 @@ def test_vectorized_matches_python_branch_with_skips(monkeypatch):
         else:
             items.append((str(i), sr.to_struct(wkt.decode(
                 f"POINT({x:.4f} {y:.4f})"))))
-    r_vec = mvt_fast.encode_tile_fast("layer", EXTENT, items, *BOUNDS)
+    return items
+
+
+def test_vectorized_matches_python_branch_with_skips(monkeypatch):
+    """None rows, invalid linestrings and degenerate rings skip
+    identically in both branches and in the kernel (same n/skipped
+    AND same bytes)."""
+    items = _skip_mix(90, 11)
+    want = _kernel(items)
+    assert want[2] > 0  # some features actually skipped
+    assert _cols(items) == want
     monkeypatch.setattr(mvt_fast, "_VECTOR_MIN", 10 ** 9)
-    r_py = mvt_fast.encode_tile_fast("layer", EXTENT, items, *BOUNDS)
-    assert r_vec == r_py
-    assert r_vec[2] > 0  # some features actually skipped
+    assert _cols(items) == want
 
 
-def test_columnar_framing_dedups_duplicate_keys(monkeypatch):
-    # repeated feature keys must share one values-table slot in the
-    # columnar framer exactly like the dict-based framer
-    items = [("dup" if i % 3 == 0 else str(i),
-              sr.to_struct(wkt.decode(f"POINT({i % 9 - 4} {i % 4 - 2})")))
-             for i in range(100)]
-    r_vec = mvt_fast.encode_tile_fast("layer", EXTENT, items, *BOUNDS)
-    monkeypatch.setattr(mvt_fast, "_VECTOR_MIN", 10 ** 9)
-    r_py = mvt_fast.encode_tile_fast("layer", EXTENT, items, *BOUNDS)
-    assert r_vec == r_py
+def test_columnar_framing_dedups_duplicate_keys():
+    # repeated feature keys share one values-table slot, on both sides
+    # of _VECTOR_MIN, exactly like the kernel's tag assembly
+    for n_feats in (10, 100):
+        items = [("dup" if i % 3 == 0 else str(i), sr.to_struct(
+            wkt.decode(f"POINT({i % 9 - 4} {i % 4 - 2})")))
+            for i in range(n_feats)]
+        assert _cols(items) == _kernel(items), n_feats
 
 
-def _cols_from_items(items):
-    """Flatten [(key, rec_or_None)] into encode_tile_cols' parallel
-    column lists (what tiling's flat-column shuffle delivers)."""
-    keys = [k for k, _ in items]
-    cols = {f: [] for f in ("kind", "has_z", "has_m", "coords",
-                            "offs1", "offs2", "wkb")}
-    for _, rec in items:
-        for f in cols:
-            cols[f].append(None if rec is None else rec.get(f))
-    return keys, cols
-
-
-@pytest.mark.parametrize("force_python", [False, True])
-def test_cols_branch_bytes_identical(monkeypatch, force_python):
-    """encode_tile_cols is the THIRD parity-pinned branch: same
-    (bytes, n, skipped) as encode_tile_fast on the same features —
-    including None rows, duplicate keys, multi-ring/multi-part
-    fallback features and skip-inducing degenerates — both above and
-    below the columnar threshold."""
-    rng = np.random.default_rng(23)
+def _mixed(n, seed):
+    """None rows, duplicate keys, multi-part and multi-ring features
+    (python slots of the columnar branch) and skip-inducing
+    degenerates."""
+    rng = np.random.default_rng(seed)
     items = []
-    for i in range(120):
+    for i in range(n):
         x = float(rng.uniform(-9, 9))
         y = float(rng.uniform(-4, 4))
         mod = i % 7
@@ -245,7 +252,7 @@ def test_cols_branch_bytes_identical(monkeypatch, force_python):
         elif mod == 1:
             items.append((key, sr.to_struct(wkt.decode(
                 f"MULTILINESTRING(({x:.3f} {y:.3f},0 0),"
-                f"(1 1,2 2,3 1))"))))          # multi-part python slot
+                f"(1 1,2 2,3 1))"))))
         elif mod == 2:
             w = (f"POLYGON(({x:.5f} {y:.5f},{x + 1e-05:.5f} {y:.5f},"
                  f"{x:.5f} {y + 1e-05:.5f},{x:.5f} {y:.5f}))")
@@ -260,47 +267,30 @@ def test_cols_branch_bytes_identical(monkeypatch, force_python):
         else:
             items.append((key, sr.to_struct(wkt.decode(
                 f"POINT({x:.4f} {y:.4f})"))))
+    return items
+
+
+@pytest.mark.parametrize("force_python", [False, True])
+def test_cols_branch_bytes_identical(monkeypatch, force_python):
+    """None rows, duplicate keys, multi-ring/multi-part features and
+    degenerates match the kernel below and above the columnar
+    threshold (and with the python branch forced for every size)."""
+    items = _mixed(120, 23)
     if force_python:
         monkeypatch.setattr(mvt_fast, "_VECTOR_MIN", 10 ** 9)
     for n_take in (3, len(items)):  # below/above _VECTOR_MIN
         sub = items[:n_take]
-        r_fast = mvt_fast.encode_tile_fast(
-            "layer", EXTENT, sub, *BOUNDS)
-        keys, c = _cols_from_items(sub)
-        r_cols = mvt_fast.encode_tile_cols(
-            "layer", EXTENT, keys, c["kind"], c["has_z"], c["has_m"],
-            c["coords"], c["offs1"], c["offs2"], c["wkb"], *BOUNDS)
-        assert r_cols == r_fast
-        assert r_fast is not None and r_fast[2] > 0
+        got = _cols(sub)
+        assert got == _kernel(sub)
+        assert got[2] > 0
 
 
 def test_cols_branch_fallback_agreement():
-    """An ineligible feature (raw-WKB exotic) makes BOTH branches
-    return None (whole-tile kernel fallback)."""
+    """A raw-WKB feature makes the whole tile fall back (None)."""
     good = sr.to_struct(wkt.decode("POINT(1 1)"))
     exotic = dict(good)
     exotic["wkb"] = b"\x01\x08\x00\x00\x00"  # circularstring marker
-    items = [("a", good), ("b", exotic)]
-    assert mvt_fast.encode_tile_fast("layer", EXTENT, items,
-                                     *BOUNDS) is None
-    keys, c = _cols_from_items(items)
-    assert mvt_fast.encode_tile_cols(
-        "layer", EXTENT, keys, c["kind"], c["has_z"], c["has_m"],
-        c["coords"], c["offs1"], c["offs2"], c["wkb"], *BOUNDS) is None
-
-
-def _kernel_tile_props(geoms_wkt, props_list):
-    feats = []
-    for i, w in enumerate(geoms_wkt):
-        g = wkt.decode(w)
-        tg = ktiles.transform_geom_to_tile(g, EXTENT, *BOUNDS)
-        feats.append(kmvt.feature_from_geom(
-            tg, properties=props_list[i], fid=i))
-    layer = kmvt._encode_layer(
-        kmvt.MvtLayer(name="layer", extent=EXTENT, features=feats))
-    out = bytearray()
-    kmvt._write_bytes(out, 3, layer)
-    return bytes(out)
+    assert _cols([("a", good), ("b", exotic)]) is None
 
 
 def _props_for(i):
@@ -316,58 +306,36 @@ def _props_for(i):
 
 @pytest.mark.parametrize("n_feats", [5, 120])
 def test_typed_props_three_branches_byte_identical(n_feats):
-    """Typed feature properties through the sink keep all THREE
-    branches byte-identical to the kernel encoder (mvt_writer.rs:
-    380-401 value mapping, :357-374 tag/key/value dedup): the
-    per-feature python branch (< _VECTOR_MIN), the columnar command
-    branch (>= _VECTOR_MIN, frames via the general key/value-dedup
-    framer), and encode_tile_cols' flat-column twin."""
-    geoms = [GEOMS[i % len(GEOMS)] for i in range(n_feats)]
+    """Typed feature properties keep the python branch (< _VECTOR_MIN)
+    and the columnar branch (>= _VECTOR_MIN, framed through the
+    general key/value-dedup framer) byte-identical to the kernel
+    encoder (mvt_writer.rs:380-401 value mapping, :357-374 tag/key/
+    value dedup), also with None rows and duplicate keys."""
+    items = _items([GEOMS[i % len(GEOMS)] for i in range(n_feats)])
     props = [_props_for(i) for i in range(n_feats)]
-
-    want = _kernel_tile_props(geoms, props)
-
-    items = [(str(i), sr.to_struct(wkt.decode(w)))
-             for i, w in enumerate(geoms)]
-    r = mvt_fast.encode_tile_fast("layer", EXTENT, items, *BOUNDS,
-                                  props_list=props)
-    assert r is not None
-    blob, n, skipped = r
-    assert (n, skipped) == (n_feats, 0)
-    assert blob == want
-
-    keys, cols = _cols_from_items(items)
-    r2 = mvt_fast.encode_tile_cols(
-        "layer", EXTENT, keys, cols["kind"], cols["has_z"],
-        cols["has_m"], cols["coords"], cols["offs1"], cols["offs2"],
-        cols["wkb"], *BOUNDS, props_list=props)
-    assert r2 is not None
-    assert r2[0] == want
+    got = _cols(items, props)
+    assert got[1:] == (n_feats, 0)
+    assert got == _kernel(items, props)
+    # None rows, duplicate keys and skipped features among them
+    items = _mixed(n_feats, 31)
+    assert _cols(items, props) == _kernel(items, props)
 
 
 def test_typed_props_default_unchanged():
-    """props_list=None keeps the original {"id": str(key)} bytes —
-    the pinned pre-props behavior (and the single-key columnar
-    framer) is untouched."""
-    geoms = [GEOMS[i % len(GEOMS)] for i in range(120)]
+    """props_list=None keeps the {"id": str(key)} bytes of the
+    single-key columnar framer."""
+    items = _items([GEOMS[i % len(GEOMS)] for i in range(120)])
     id_props = [{"id": str(i)} for i in range(120)]
-    items = [(str(i), sr.to_struct(wkt.decode(w)))
-             for i, w in enumerate(geoms)]
-    r_default = mvt_fast.encode_tile_fast("layer", EXTENT, items,
-                                          *BOUNDS)
-    r_explicit = mvt_fast.encode_tile_fast("layer", EXTENT, items,
-                                           *BOUNDS,
-                                           props_list=id_props)
-    assert r_default is not None and r_explicit is not None
-    assert r_default[0] == r_explicit[0] == _kernel_tile_props(
-        geoms, id_props)
+    r_default = _cols(items)
+    assert r_default is not None
+    assert r_default == _cols(items, id_props) == _kernel(items)
 
 
 def test_typed_props_random_parity():
-    """Property-based three-branch parity: random typed prop dicts
-    (value collisions for dedup, absent keys, all four MVT value
-    types, empty dicts) against the kernel encoder, above and below
-    the columnar threshold."""
+    """Property-based parity: random typed prop dicts (value collisions
+    for dedup, absent keys, all four MVT value types, empty dicts)
+    against the kernel encoder, above and below the columnar
+    threshold."""
     from hypothesis import given, settings, strategies as st
 
     vals = st.one_of(
@@ -388,19 +356,77 @@ def test_typed_props_random_parity():
             reps = (mvt_fast._VECTOR_MIN // n) + 1
             prop_dicts = prop_dicts * reps
             n = len(prop_dicts)
-        geoms = [GEOMS[i % len(GEOMS)] for i in range(n)]
-        want = _kernel_tile_props(geoms, prop_dicts)
-        items = [(str(i), sr.to_struct(wkt.decode(w)))
-                 for i, w in enumerate(geoms)]
-        r = mvt_fast.encode_tile_fast("layer", EXTENT, items, *BOUNDS,
-                                      props_list=prop_dicts)
-        assert r is not None and r[0] == want
-        keys, cols = _cols_from_items(items)
-        r2 = mvt_fast.encode_tile_cols(
-            "layer", EXTENT, keys, cols["kind"], cols["has_z"],
-            cols["has_m"], cols["coords"], cols["offs1"],
-            cols["offs2"], cols["wkb"], *BOUNDS,
-            props_list=prop_dicts)
-        assert r2 is not None and r2[0] == want
+        items = _items([GEOMS[i % len(GEOMS)] for i in range(n)])
+        got = _cols(items, prop_dicts)
+        assert got is not None and got == _kernel(items, prop_dicts)
 
     run()
+
+
+def test_mvt_tiles_arrow_boundary_matches_kernel(spark):
+    """End to end through the Spark sink: flat 2D features, a null
+    geometry, a 3D point (its tile falls back to the kernel encoder),
+    tied and null feature keys, and a nullable int prop column. Every
+    blob equals the kernel encoder over the tile's features in stable
+    key order (nulls last)."""
+    from geozero_spark.operators import tiling
+
+    rows = [
+        ("b", "POINT(10 10)", 5),
+        ("a", "LINESTRING(80 10,100 12)", None),   # spans two tiles
+        ("c", "POLYGON((20 20,30 20,30 30,20 30,20 20))", 7),
+        ("a", "POINT(12 11)", 1),                  # tie with row 1
+        (None, "POINT(15 15)", 2),                 # null key
+        ("d", None, 3),                            # null geometry
+        ("e", "POINT(-100 -40)", None),
+        ("f", "POINT(-120 -30 7)", 4),           # 3D: kernel tile
+        ("g", "MULTIPOINT(-110 -35,-105 -37)", 9),
+    ]
+    structs = [(k, sr.to_struct(wkt.decode(w)) if w else None, n)
+               for k, w, n in rows]
+    df = spark.createDataFrame(
+        structs, f"url string, geom struct<{sr.GEOMETRY_DDL}>, "
+                 f"n int").coalesce(1)
+    z = 1
+    got = {(r.z, r.x, r.y): (r.n_features, r.n_skipped, bytes(r.mvt))
+           for r in tiling.mvt_tiles(df, z, key="url",
+                                     props=["n"]).collect()}
+
+    nx, ny = 2 << z, 1 << z
+
+    def span(lo, hi, n, f):
+        return range(max(0, min(n - 1, f(lo))), max(0, min(n - 1, f(hi)))
+                     + 1)
+
+    def tx(v):
+        return int((v + 180.0) / 360.0 * nx)
+
+    def ty(v):
+        return int((90.0 - v) / 180.0 * ny)
+
+    order = sorted(range(len(rows)),
+                   key=lambda i: (rows[i][0] is None, rows[i][0] or ""))
+    want: dict = {}
+    for i in order:
+        k, w, n = rows[i]
+        if w is None:
+            continue
+        bb = structs[i][1]["bbox"]
+        for x in span(bb[0], bb[2], nx, tx):
+            for y in span(bb[3], bb[1], ny, ty):
+                want.setdefault((z, x, y), []).append((k, i, n))
+    assert set(got) == set(want)
+    for (zz, x, y), feats in want.items():
+        bounds = ktiles.tile_bounds_eq(zz, x, y)
+        mfeats = []
+        for fid, (k, i, n) in enumerate(feats):
+            props = {"id": str(k)}
+            if n is not None:
+                props["n"] = n
+            tg = ktiles.transform_geom_to_tile(
+                sr.from_struct(structs[i][1]), 4096, *bounds)
+            mfeats.append(kmvt.feature_from_geom(tg, properties=props,
+                                                 fid=fid))
+        blob = kmvt.encode_tile(kmvt.MvtTile(layers=[kmvt.MvtLayer(
+            name="layer", extent=4096, features=mfeats)]))
+        assert got[(zz, x, y)] == (len(mfeats), 0, blob), (x, y)

@@ -212,6 +212,62 @@ def test_run_stage_partial_resume(spark, tmpdir_path):
     assert out.select("bucket").distinct().count() == 4
 
 
+def test_run_stage_no_output_reads(spark, tmpdir_path):
+    """The two no-output cases read as empty: a path never written, and
+    a write of zero rows (a directory without data files)."""
+    base = os.path.join(tmpdir_path, "stages_none")
+    assert meta.completed_buckets(spark, base, "s1", "v1") == set()
+    assert meta.bucket_counts(spark, os.path.join(base, "s1"),
+                              [0, 1]) == {}
+    empty = spark.range(0).withColumn("k", F.col("id").cast("string"))
+    got = meta.run_stage(spark, empty, base, "s1", bucket_col="k",
+                         n_buckets=2, fingerprint="v1")
+    assert [(b, r) for b, r, _ in got] == [(0, 0), (1, 0)]
+    assert meta.completed_buckets(spark, base, "s1", "v1") == {0, 1}
+
+
+def test_run_stage_read_errors_raise(spark, tmpdir_path):
+    """Any other read failure raises: it must not record pending
+    buckets as written with 0 rows, nor rewrite every bucket."""
+    base = os.path.join(tmpdir_path, "stages_bad")
+    for d in (meta.meta_path(base, "s1"),
+              os.path.join(base, "s1", "bucket=0")):
+        os.makedirs(d)
+        with open(os.path.join(d, "part-0.parquet"), "wb") as f:
+            f.write(b"not a parquet file" * 8)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        meta.completed_buckets(spark, base, "s1", "v1")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        meta.bucket_counts(spark, os.path.join(base, "s1"), [0])
+
+
+def test_run_stage_slot_keys_match_spark_hash(spark):
+    vals = list(range(-50, 200))
+    rows = spark.createDataFrame([(v,) for v in vals], "v int").select(
+        "v", F.hash("v").alias("h")).collect()
+    assert {r.v: r.h for r in rows} == {v: meta._murmur3_int(v)
+                                        for v in vals}
+
+
+def test_run_stage_fanout_fills_every_slot(spark, tmpdir_path):
+    """n_buckets sharing a factor with the parallelism: every bucket
+    still spreads over ``fanout`` tasks, one non-empty file each."""
+    par = spark.sparkContext.defaultParallelism
+    n_buckets = next(f for f in range(2, par + 1) if par % f == 0)
+    fanout = -(-par // n_buckets)
+    assert fanout > 1
+    base = os.path.join(tmpdir_path, "stages_fan")
+    df = spark.range(4000).withColumn("k", F.col("id").cast("string"))
+    meta.run_stage(spark, df, base, "s1", bucket_col="k",
+                   n_buckets=n_buckets, fingerprint="v1")
+    for b in range(n_buckets):
+        d = os.path.join(base, "s1", f"bucket={b}")
+        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        assert len(files) == fanout, (b, files)
+        assert all(os.path.getsize(os.path.join(d, f)) > 0
+                   for f in files)
+
+
 def test_read_gpx_scan(spark, tmpdir_path):
     gpx = ('<gpx><wpt lat="10" lon="20"></wpt>'
            '<trk><trkseg><trkpt lat="1" lon="2"></trkpt>'
@@ -581,6 +637,37 @@ def test_pip_paths_identical_rows(spark):
         got = {(r.url, r.zone_id) for r in
                pj.pip_join(pts, polys, res=Q.PIP_RES, **kw).collect()}
         assert got == base, kw
+
+
+def test_pip_shuffle_passes_point_columns_through(spark):
+    """The shuffle path's Arrow refine returns the point columns with
+    their Spark types: a nullable int stays int, and a timestamp read
+    in a non-UTC session time zone keeps its instant."""
+    import datetime
+
+    from geozero_spark.kernel import structrepr as sr
+    from geozero_spark.kernel import wkt as kwkt
+    from geozero_spark.operators import pip_join as pj
+
+    polys = spark.createDataFrame(
+        [(7, sr.to_struct(kwkt.decode("POLYGON((0 0,4 0,4 4,0 4,0 0))")))],
+        f"zone_id long, poly struct<{sr.GEOMETRY_DDL}>")
+    ts = datetime.datetime(2024, 5, 1, 12, 30)
+    pts = spark.createDataFrame(
+        [("a", 1.0, 1.0, None, ts), ("b", 2.0, 3.0, 5, ts),
+         ("c", 9.0, 9.0, 6, ts)],
+        "url string, lon double, lat double, n int, ts timestamp")
+    want = sorted((r.url, r.n, r.ts) for r in pts.collect()
+                  if r.url != "c")
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        rows = pj.pip_join(pts, polys, res=4,
+                           broadcast_polys=False).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+    assert sorted((r.url, r.n, r.ts) for r in rows) == want
+    assert {r.zone_id for r in rows} == {7}
 
 
 def test_media_meta_malformed_rows_null_not_fail(spark):
