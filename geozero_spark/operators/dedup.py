@@ -16,7 +16,7 @@ length bucket so the pair join never goes quadratic globally.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from ..functions import sqlgen as sg
 from ..functions import texthash as th
@@ -269,72 +269,71 @@ def ngram_jaccard_pairs(df: DataFrame, key: str = "doc_id",
     return pairs
 
 
+def _star_round(e: DataFrame) -> DataFrame:
+    """One large-star + small-star round over canonical (u > v) edges:
+    each star is a window min PARTITION BY u over the rows it already
+    has, so a round is three exchanges (sym by u, small-star by u, the
+    distinct) and no join."""
+    u, v = "u", "v"
+    w = Window.partitionBy(u)
+    # large-star: every neighbor v > u links to m(u) = min(N(u), u).
+    # No distinct: the small-star min ignores multiplicity and the
+    # round's final distinct restores set semantics
+    sym = e.union(e.select(F.col(v).alias(u), F.col(u).alias(v)))
+    e = (sym.withColumn("_m", F.least(F.col(u), F.min(v).over(w)))
+         .where(F.col(v) > F.col(u))
+         .select(F.col(v).alias(u), F.col("_m").alias(v)))
+    # small-star: for canonical (h > l) edges, every l (and h) links to
+    # m(h) = min over h's low neighbors
+    withm = e.withColumn("_m", F.min(v).over(w))
+    return (withm.select(F.col(u), F.col("_m").alias(v))
+            .union(withm.where(F.col(v) != F.col("_m"))
+                   .select(F.col(v).alias(u), F.col("_m").alias(v)))
+            .distinct())
+
+
 def connected_components(pairs: DataFrame, a_col: str, b_col: str,
                          max_rounds: int = 25) -> DataFrame:
     """Connected components over undirected pairs via alternating
     large-star / small-star (Kiveris et al., "Connected Components in
     MapReduce and Beyond") — the pairs->clusters step of a dedup
     pipeline. Returns (node, comp) for every node that appears in a
-    pair, comp = MIN node id of its component.
+    non-loop pair, comp = MIN node id of its component; duplicate and
+    reversed pairs are fine. Raises RuntimeError if not converged
+    within ``max_rounds``.
 
-    Scale shape: each half-round is one groupBy-min + one equi-join —
-    the adjacency is never materialized as a list (collect_set on a hot
-    node would put a whole component in one row), and a hot node costs
-    a map-side-combinable min-agg. Rounds are O(log n); the driver loop
-    is over ROUNDS (bounded by ``max_rounds``), never over rows — the
-    only driver-side values are the per-round convergence fingerprints
-    (count + hash-sum, one tiny agg job).
+    Scale shape: each star is one window min (``_star_round``). The
+    adjacency is never a list (collect_set on a hot node would put a
+    whole component in one row), but a hot node's neighbourhood is one
+    window partition (no skew split; scripts/cc_scaling.py --graph hub).
+    Rounds are O(log n); the driver loop is over ROUNDS, never rows —
+    the only driver-side values are the per-round fingerprints.
     """
     u, v = "u", "v"
+    # no distinct: the star mins ignore multiplicity
     e = (pairs.select(F.col(a_col).cast("long").alias(u),
                       F.col(b_col).cast("long").alias(v))
          .where(F.col(u) != F.col(v))
-         .select(F.greatest(u, v).alias(u), F.least(u, v).alias(v))
-         .distinct())
+         .select(F.greatest(u, v).alias(u), F.least(u, v).alias(v)))
     prev_fp = None
     for _ in range(max_rounds):
-        # large-star: every neighbor v > u links to m(u) = min(N(u), u).
-        # NO distinct here (one fewer full-edge exchange per round):
-        # duplicate (v, m) rows are harmless through the small-star —
-        # its groupBy-min ignores multiplicity and the round's final
-        # distinct restores set semantics — and the duplication factor
-        # is bounded by the join output that already exists (a dup
-        # needs several u-neighbors of one v sharing m(u); star-shaped
-        # rounds emit distinct children per root, so it stays small).
-        sym = e.union(e.select(F.col(v).alias(u), F.col(u).alias(v)))
-        mins = sym.groupBy(u).agg(F.min(v).alias("_mn"))
-        mins = mins.withColumn("_m", F.least(F.col(u), F.col("_mn")))
-        e = (sym.join(mins.select(u, "_m"), on=u)
-             .where(F.col(v) > F.col(u))
-             .select(F.col(v).alias(u), F.col("_m").alias(v)))
-        # small-star: for canonical (h > l) edges, every l (and h)
-        # links to m(h) = min over h's low neighbors
-        mins = e.groupBy(u).agg(F.min(v).alias("_m"))
-        withm = e.join(mins, on=u)
-        e = (withm.select(F.col(u), F.col("_m").alias(v))
-             .union(withm.where(F.col(v) != F.col("_m"))
-                    .select(F.col(v).alias(u), F.col("_m").alias(v)))
-             .distinct())
-        # truncate lineage EVERY round: sym references e twice, so the
-        # logical plan otherwise doubles per round — analysis alone
-        # goes exponential by round ~10 (measured: plan treeString
-        # blow-up long before any data size problem). The convergence
-        # fingerprint rides the SAME materialization via observe()
-        # instead of a separate agg job per round (the star rounds are
-        # barrier-dominated at small edge counts — one job per round,
-        # not two).
-        from pyspark.sql import Observation
+        # truncate lineage EVERY round: a round reads e twice (sym), so
+        # the logical plan otherwise doubles per round (analysis goes
+        # exponential by round ~10). The convergence fingerprint rides
+        # the same materialization via observe(): no extra job.
         obs = Observation()
-        e = e.observe(obs,
-                      F.count(F.lit(1)).alias("n"),
-                      F.coalesce(F.expr(f"bit_xor(xxhash64({u}, {v}))"),
-                                 F.lit(0)).alias("h"))
+        e = _star_round(e).observe(
+            obs, F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.expr(f"bit_xor(xxhash64({u}, {v}))"),
+                       F.lit(0)).alias("h"))
         e = e.localCheckpoint(eager=True)
-        got = obs.get
-        fp = (got["n"], got["h"])
+        fp = (obs.get["n"], obs.get["h"])
         if fp == prev_fp:
             break
         prev_fp = fp
+    else:
+        raise RuntimeError("connected_components did not converge "
+                           f"within max_rounds={max_rounds}")
     # converged state is a forest of stars: (h -> root) edges plus the
     # roots themselves
     return (e.select(F.col(u).alias("node"), F.col(v).alias("comp"))

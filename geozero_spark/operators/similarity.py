@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
@@ -35,11 +36,25 @@ def norm2_expr(a: str) -> str:
     return _NORM2.format(a=a)
 
 
-def _fold_mat(vecs) -> np.ndarray:
-    """(n, dim) float64 matrix from a pandas Series / list of float32
-    arrays — the float->double widening is exact, so every element
-    equals the SQL ``CAST(x AS DOUBLE)``."""
-    return np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
+def _vec_matrix(col: pa.ListArray, name: str,
+                dim: int | None = None) -> np.ndarray:
+    """(n, dim) float64 matrix from an Arrow list column — the
+    float->double widening is exact, so every element equals the SQL
+    ``CAST(x AS DOUBLE)``. A NULL vector, or one whose length differs
+    from the batch's (or from ``dim``), raises ValueError naming the
+    column: ``flatten()`` drops null slots, so the reshape would fail
+    or silently misalign rows."""
+    n = len(col)
+    if col.null_count:
+        raise ValueError(f"vector column {name!r} has {col.null_count} "
+                         f"NULL vector(s) in a batch of {n}")
+    lens = np.diff(np.asarray(col.offsets))
+    if n and dim is None:
+        dim = int(lens[0])
+    if (lens != dim).any():
+        raise ValueError(f"vector column {name!r} is ragged: lengths "
+                         f"{lens.min()}..{lens.max()}, expected {dim}")
+    return np.asarray(col.flatten(), dtype=np.float64).reshape(n, dim or 0)
 
 
 def _fold_norm2(mat: np.ndarray) -> np.ndarray:
@@ -97,7 +112,8 @@ def cosine_topk(queries: DataFrame, targets: DataFrame, k: int,
             [], f"{query_key} long, {target_key} long, cosine double, "
                 f"rank int")
     qid = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = _fold_mat([r[1] for r in qrows])
+    qmat = _vec_matrix(pa.array([r[1] for r in qrows],
+                                pa.list_(pa.float64())), qvec)
     sqq = np.sqrt(_fold_norm2(qmat))
     bc = spark.sparkContext.broadcast((qid, qmat, sqq))
 
@@ -107,12 +123,13 @@ def cosine_topk(queries: DataFrame, targets: DataFrame, k: int,
     def local_topk(it):
         qid, qmat, sqq = bc.value
         nq, dim = qmat.shape
-        pdfs = [pdf for pdf in it if len(pdf)]
-        if not pdfs:
+        bs = [b for b in it if b.num_rows]
+        if not bs:
             return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        tid = pdf[target_key].to_numpy(dtype=np.int64)
-        tmat = _fold_mat(pdf[tvec])
+        tid = np.concatenate([np.asarray(b.column(0), dtype=np.int64)
+                              for b in bs])
+        tmat = np.concatenate([_vec_matrix(b.column(1), tvec, dim)
+                               for b in bs])
         # pre-sort targets by key: a STABLE selection then yields
         # (cosine DESC, target_key ASC) order fully vectorized
         ts = np.argsort(tid, kind="stable")
@@ -154,14 +171,15 @@ def cosine_topk(queries: DataFrame, targets: DataFrame, k: int,
             out_q.append(np.repeat(qid[s:e], kk)[keep])
             out_t.append(tid[sel.ravel()[keep]])
             out_c.append(cosv)
-        yield pd.DataFrame({
-            query_key: np.concatenate(out_q),
-            target_key: np.concatenate(out_t),
-            "cosine": np.concatenate(out_c)})
+        yield pa.record_batch(
+            [pa.array(np.concatenate(out_q), pa.int64()),
+             pa.array(np.concatenate(out_t), pa.int64()),
+             pa.array(np.concatenate(out_c), pa.float64())],
+            names=[query_key, target_key, "cosine"])
 
     from ..functions import ensure_width
     partials = ensure_width(targets.select(target_key, tvec)) \
-        .mapInPandas(local_topk, out_schema)
+        .mapInArrow(local_topk, out_schema)
     w = Window.partitionBy(query_key).orderBy(
         F.col("cosine").desc(), F.col(target_key))
     return (partials.withColumn("rank", F.row_number().over(w))
@@ -186,22 +204,14 @@ def _pair_cosine_fn(qkey: str, tkey: str, qvec: str, tvec: str,
     the union of task-local top-ks and the window's result is
     unchanged, while its input shrinks from |candidates| to
     |tasks| * |Q| * k rows."""
-    import pyarrow as pa
-
     def f(it):
         acc_q, acc_t, acc_c = [], [], []
         for b in it:
             n = b.num_rows
             if not n:
                 continue
-
-            def flat(name):
-                col = b.column(b.schema.get_field_index(name))
-                v = np.asarray(col.flatten(), dtype=np.float64)
-                return v.reshape(n, -1)
-
-            am = flat(qvec)
-            bm = flat(tvec)
+            am = _vec_matrix(b.column(qvec), qvec)
+            bm = _vec_matrix(b.column(tvec), tvec, am.shape[1])
             dim = am.shape[1]
             dot = np.zeros(n, np.float64)
             qn = np.zeros(n, np.float64)
@@ -480,8 +490,6 @@ def _assign(vectors: DataFrame, centroids: DataFrame, key: str,
     DIVIDE_BY_ZERO on the 0/0, so zero-norm vectors crashed the
     query; here they deterministically take the lowest cid). Pinned
     against the SQL form in tests/test_similarity.py."""
-    import pyarrow as pa
-
     crows = sorted((r["cid"], list(r["cvec"]))
                    for r in centroids.select("cid", "cvec").collect())
     cids = np.array([c for c, _ in crows], dtype=np.int64)
@@ -499,9 +507,7 @@ def _assign(vectors: DataFrame, centroids: DataFrame, key: str,
             n = b.num_rows
             if not n:
                 continue
-            col = b.column(b.schema.get_field_index(vec))
-            x = np.asarray(col.flatten(),
-                           dtype=np.float64).reshape(n, -1)
+            x = _vec_matrix(b.column(vec), vec, cmat.shape[1])
             dim = x.shape[1]
             qn = np.zeros(n, np.float64)
             for j in range(dim):

@@ -2,6 +2,8 @@
 
 import random
 
+import pytest
+
 from geozero_spark.operators import dedup
 
 
@@ -56,6 +58,71 @@ def test_cc_two_cliques_with_bridge(spark):
     clique2 = [(a, b) for a in range(10, 15) for b in range(a + 1, 15)]
     _check(spark, clique1 + clique2)
     _check(spark, clique1 + clique2 + [(5, 10)])
+
+
+def test_cc_duplicated_and_reversed_pairs(spark):
+    # no up-front distinct: duplicates and both orientations of a pair
+    # must give the same components as the set of pairs
+    chain = [(i, i + 1) for i in range(1, 12)]
+    _check(spark, chain * 3)
+    _check(spark, chain + [(b, a) for a, b in chain])
+    _check(spark, [(7, 3), (3, 7), (3, 7), (9, 7), (7, 9)])
+
+
+def test_cc_self_loops(spark):
+    # a self-loop adds no edge: a node seen only in loops has no pair
+    df = spark.createDataFrame([(1, 2), (2, 2), (5, 5), (3, 2), (3, 3)],
+                               "doc_id_a long, doc_id_b long")
+    got = {r["node"]: r["comp"]
+           for r in dedup.connected_components(
+               df, "doc_id_a", "doc_id_b").collect()}
+    assert got == _uf_components([(1, 2), (3, 2)])
+
+
+def test_cc_hub_with_chain_tail(spark):
+    # one window partition holds the hub's whole neighbourhood; the
+    # tail needs further rounds after the hub star collapses
+    hub = [(1000, leaf) for leaf in range(2000, 2200)]
+    tail = [(2199, 3000)] + [(i, i + 1) for i in range(3000, 3030)]
+    _check(spark, hub + tail)
+
+
+def _plan_nodes(jdf):
+    """Class names of the executed (AQE final) plan; reused exchanges
+    are not descended into, so each shuffle is counted once."""
+    todo, out = [jdf.queryExecution().executedPlan()], []
+    while todo:
+        node = todo.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.finalPhysicalPlan())
+            continue
+        out.append(cls)
+        if cls.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_star_round_plan_shape(spark):
+    # a round is three exchanges (sym by u, small-star by u, distinct)
+    # and no join: both stars are window mins over rows already there
+    e = spark.createDataFrame([(i + 1, i) for i in range(1, 30)],
+                              "u long, v long")
+    r = dedup._star_round(e)
+    r.collect()
+    nodes = _plan_nodes(r._jdf)
+    assert not [n for n in nodes if "Join" in n], nodes
+    assert nodes.count("ShuffleExchangeExec") <= 3, nodes
+
+
+def test_cc_not_converged_raises(spark):
+    df = spark.createDataFrame([(i, i + 1) for i in range(1, 41)],
+                               "doc_id_a long, doc_id_b long")
+    with pytest.raises(RuntimeError, match="max_rounds=1"):
+        dedup.connected_components(df, "doc_id_a", "doc_id_b",
+                                   max_rounds=1)
 
 
 def test_dup_clusters_keep_policy(spark):

@@ -1,6 +1,9 @@
 """ANN quality: recall floor of the banded-LSH path vs exact cosine,
 plus parity of the numpy fast signature path with the portable one."""
 
+import pyarrow as pa
+import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
@@ -175,3 +178,60 @@ def test_ivf_fast_plan_has_no_collect_list(spark):
     slow_plan = S._centroid_means(a, t, "t_id", "tvec", False) \
         ._jdf.queryExecution().optimizedPlan().toString()
     assert "collect_list" in slow_plan
+
+
+_BAD_VECS = {"null": None, "short": [1.0]}
+
+
+def _vecs_df(spark, key, vec, bad=None):
+    rows = [(i, [float(i + 1), 1.0, 0.5]) for i in range(6)]
+    if bad:
+        rows[3] = (3, _BAD_VECS[bad])
+    return spark.createDataFrame(rows, f"{key} long, {vec} array<float>")
+
+
+def _assert_vector_error(exc, col):
+    # a ValueError naming the column (re-raised on the driver as a
+    # PythonException when an executor hits it), not a reshape error
+    msg = str(exc)
+    assert isinstance(exc, ValueError) or "ValueError" in msg, msg
+    assert f"vector column '{col}'" in msg, msg
+    assert "reshape" not in msg, msg
+
+
+@pytest.mark.parametrize("bad", sorted(_BAD_VECS))
+def test_assign_rejects_null_or_ragged_vectors(spark, bad):
+    t = _vecs_df(spark, "t_id", "tvec", bad)
+    c = spark.createDataFrame([(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])],
+                              "cid long, cvec array<double>")
+    with pytest.raises(PythonException) as ei:
+        S._assign(t, c, "t_id", "tvec").collect()
+    _assert_vector_error(ei.value, "tvec")
+
+
+@pytest.mark.parametrize("bad", sorted(_BAD_VECS))
+def test_pair_cosine_rejects_null_or_ragged_vectors(bad):
+    good = [1.0, 2.0, 3.0]
+    batch = pa.record_batch(
+        [pa.array([1, 2], pa.int64()), pa.array([5, 6], pa.int64()),
+         pa.array([good, good], pa.list_(pa.float32())),
+         pa.array([good, _BAD_VECS[bad]], pa.list_(pa.float32()))],
+        names=["q_id", "t_id", "qvec", "tvec"])
+    f = S._pair_cosine_fn("q_id", "t_id", "qvec", "tvec")
+    with pytest.raises(ValueError) as ei:
+        list(f(iter([batch])))
+    _assert_vector_error(ei.value, "tvec")
+
+
+@pytest.mark.parametrize("bad", sorted(_BAD_VECS))
+def test_cosine_topk_rejects_null_or_ragged_vectors(spark, bad):
+    # targets are checked in the Arrow scorer on the executors
+    with pytest.raises(PythonException) as ei:
+        S.cosine_topk(_vecs_df(spark, "q_id", "qvec"),
+                      _vecs_df(spark, "t_id", "tvec", bad), k=2).collect()
+    _assert_vector_error(ei.value, "tvec")
+    # queries are checked on the driver before the broadcast
+    with pytest.raises(ValueError) as ei:
+        S.cosine_topk(_vecs_df(spark, "q_id", "qvec", bad),
+                      _vecs_df(spark, "t_id", "tvec"), k=2)
+    _assert_vector_error(ei.value, "qvec")
