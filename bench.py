@@ -28,7 +28,7 @@ import os
 import sys
 import time
 
-import pandas as pd  # module-level: pandas_udf type hints resolve here
+import pyarrow as pa  # module-level: arrow_udf type hints resolve here
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
@@ -215,18 +215,18 @@ def _warm_session(spark, cpus: int) -> None:
     (b) the first BroadcastExchange + ArrowEvalPython-with-filter
     stage machinery (~3s of classloading/compile, measured: the SAME
     pip_join plan shape at a different res runs 1.3s once any
-    broadcast-join+pandas-filter query has executed) are cluster-
+    broadcast-join+Arrow-UDF-filter query has executed) are cluster-
     startup costs, not query costs."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     side = {1: True}
     bc = spark.sparkContext.broadcast(side)
 
-    @pandas_udf("boolean")
-    def _warm(x: pd.Series) -> pd.Series:
+    @arrow_udf("boolean")
+    def _warm(x: pa.Array) -> pa.Array:
         m = bc.value
-        return x.map(lambda v: m.get(v % 2, False))
+        return pa.array([m.get(v % 2, False) for v in x.to_pylist()])
 
     big = spark.range(0, cpus * 4, 1, cpus * 4)
     dim = spark.createDataFrame([(i, i) for i in range(4)],
@@ -234,21 +234,21 @@ def _warm_session(spark, cpus: int) -> None:
     (big.join(F.broadcast(dim), on="id", how="left")
         .withColumn("_k", _warm("id")).where(F.col("_k")).count())
 
-    # ... and the other Python-stage machineries (MapInPandas,
-    # cogrouped FlatMapCoGroupsInPandas, window) — each stage type
+    # ... and the other Python-stage machineries (MapInArrow,
+    # cogrouped FlatMapCoGroupsInArrow, window) — each stage type
     # classloads/compiles its own runner on first use
     def _ident(it):
-        for pdf in it:
-            yield pdf
+        for b in it:
+            yield b
 
-    big.mapInPandas(_ident, "id long").count()
+    big.mapInArrow(_ident, "id long").count()
 
     def _co(left, right):
         return left
 
     (big.withColumn("g", F.col("id") % 2).groupBy("g")
         .cogroup(dim.withColumn("g", F.col("id") % 2).groupBy("g"))
-        .applyInPandas(_co, "id long, g long").count())
+        .applyInArrow(_co, "id long, g long").count())
     from pyspark.sql import Window as _W
     (dim.withColumn("r", F.row_number().over(
         _W.partitionBy("tag").orderBy("id"))).count())

@@ -20,8 +20,6 @@ import os
 import sys
 import time
 
-import pandas as pd  # noqa: F401  (pandas_udf type hints)
-
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 

@@ -33,13 +33,11 @@ the driver; on a real cluster the destination must be shared storage.
 from __future__ import annotations
 
 import os
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions import udfs
-from .kernel import structrepr as sr
 from .sources import readers
 
 _REMOTE = ("http://", "https://")
@@ -158,43 +156,25 @@ def _expand_props(df: DataFrame, keys: list) -> DataFrame:
 
 
 def _write_single_text(df: DataFrame, path: str, render) -> int:
-    """ONE-task text sink (temp-write + rename): ``render(pdf) ->
-    (text, n_features)`` runs inside the executor over the coalesced
-    rows — the single-container dual of write_fgb."""
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        got = list(batches)
-        pdf = (pd.concat(got, ignore_index=True) if got
-               else pd.DataFrame(columns=["geom", "props"]))
-        text, n = render(pdf)
-        tmp = path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(text)
-        os.replace(tmp, path)
-        yield pd.DataFrame({"n": [n]})
+    """ONE-task text sink: ``render(features) -> (text, n_features)``
+    runs inside the executor over the coalesced rows
+    (readers.write_container, the write_fgb pattern)."""
+    def encode(rows):
+        text, n = render(readers.features_of(rows))
+        return text.encode("utf-8"), n
 
-    return int(df.coalesce(1).mapInPandas(part, "n long")
-               .agg(F.sum("n")).collect()[0][0] or 0)
+    return readers.write_container(df, path, encode)
 
 
-def _features_of(pdf: pd.DataFrame) -> list:
-    feats = []
-    for i in range(len(pdf)):
-        g = pdf["geom"].iat[i]
-        props = pdf["props"].iat[i] if "props" in pdf.columns else None
-        feats.append((None if g is None else sr.from_struct(g),
-                      dict(props) if props else {}))
-    return feats
-
-
-def _render_wkt(pdf):
+def _render_wkt(feats):
     from .kernel import wkt as kwkt
-    lines = [kwkt.encode(g) for g, _ in _features_of(pdf)
+    lines = [kwkt.encode(g) for g, _ in feats
              if g is not None]
     return "\n".join(lines) + ("\n" if lines else ""), len(lines)
 
 
 def _render_csv(keys):
-    def render(pdf):
+    def render(feats):
         import csv
         import io
         out = io.StringIO()
@@ -202,7 +182,7 @@ def _render_csv(keys):
         from .kernel import wkt as kwkt
         w.writerow(["geometry"] + keys)
         n = 0
-        for g, props in _features_of(pdf):
+        for g, props in feats:
             w.writerow([("" if g is None else kwkt.encode(g))]
                        + [props.get(k, "") or "" for k in keys])
             n += 1
@@ -219,26 +199,26 @@ def _feature_json(g, props) -> str:
             + ', "geometry": ' + geom + "}")
 
 
-def _render_geojson_fc(pdf):
-    feats = [_feature_json(g, p) for g, p in _features_of(pdf)]
-    body = ",\n".join(feats)
+def _render_geojson_fc(feats):
+    docs = [_feature_json(g, p) for g, p in feats]
+    body = ",\n".join(docs)
     return ('{\n"type": "FeatureCollection",\n"features": ['
-            + body + "]\n}\n"), len(feats)
+            + body + "]\n}\n"), len(docs)
 
 
-def _render_geojson_lines(pdf):
-    feats = [_feature_json(g, p) for g, p in _features_of(pdf)]
-    return "\n".join(feats) + ("\n" if feats else ""), len(feats)
+def _render_geojson_lines(feats):
+    docs = [_feature_json(g, p) for g, p in feats]
+    return "\n".join(docs) + ("\n" if docs else ""), len(docs)
 
 
 def _render_svg(bounds, width, height):
-    def render(pdf):
+    def render(feats):
         from .kernel import svg as ksvg
-        feats = [ksvg.encode(g, invert_y=True)
-                 for g, _ in _features_of(pdf) if g is not None]
-        doc = ksvg.document(feats, bounds=bounds, invert_y=True,
+        paths = [ksvg.encode(g, invert_y=True)
+                 for g, _ in feats if g is not None]
+        doc = ksvg.document(paths, bounds=bounds, invert_y=True,
                             width=width, height=height)
-        return doc, len(feats)
+        return doc, len(paths)
     return render
 
 

@@ -3,7 +3,7 @@
 - sqlgen: dialect-dual SQL snippets (Spark SQL + DuckDB) for cell ids,
   tiles, quadkeys — the hot-path spatial indexing stays JVM-side (no
   Python workers) and the identical expression doubles as the oracle.
-- udfs: Arrow-batched pandas UDFs wrapping the pure-Python kernel codecs
+- udfs: Arrow-batched UDFs (arrow_udf) wrapping the pure-Python kernel codecs
   (WKB/WKT/GeoJSON <-> geometry struct) — the slow path, used only where
   bit-level format parity is the point.
 """

@@ -166,14 +166,14 @@ def point_struct_from_xy(x: Column, y: Column) -> Column:
 def point_struct_from_wkt_jvm(wkt: Column) -> Column:
     """Pure-JVM parse of simple 2D ``POINT(x y)`` WKT into the geometry
     struct — NULL when the text does not match (callers can coalesce
-    with the kernel pandas decode for mixed inputs).
+    with the kernel Arrow-UDF decode for mixed inputs).
 
     This is the scale path for point-dominated pipelines: the kernel
-    codec (functions/udfs.st_pointfromtext) stays the general/parity
+    codec (functions/udfs.st_geomfromwkt) stays the general/parity
     path, but a point scan at 10^12 rows should never leave
     whole-stage codegen just to split two numbers. CAST(text AS DOUBLE)
     is exact for the integer centi-degree payloads, so downstream
-    arithmetic is bit-identical to the pandas path.
+    arithmetic is bit-identical to the kernel path.
     """
     # strict numerals: [-0-9.]+ would accept 'POINT(1.2.3 4)' and emit
     # a non-NULL struct with NULL coords (CAST -> NULL) instead of
@@ -251,7 +251,7 @@ def simple_geom_from_wkt_jvm(wkt: Column) -> Column:
     Companion to point_struct_from_wkt_jvm: the scale path for scans
     whose payloads are known-simple (the kernel codec stays the general
     parity path). split/cast expressions are exact for integer-valued
-    text, so downstream arithmetic is bit-identical to the pandas
+    text, so downstream arithmetic is bit-identical to the kernel
     decode.
 
     Evaluation shape: the input (often itself a derived

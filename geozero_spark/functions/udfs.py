@@ -1,10 +1,15 @@
-"""Arrow-batched pandas UDFs over the pure-Python geometry kernel.
+"""Arrow-batched UDFs over the pure-Python geometry kernel.
 
 These are the Spark re-expression of geozero's fused reader->writer
 event pipelines (geozero/src/api.rs:17-41): one Arrow batch replaces one
 event stream, one vectorized UDF call replaces one read->process pass.
-Per the north rule, NO per-row Python UDFs — everything here is a
-``pandas_udf`` crossing the JVM boundary once per batch.
+Per the north rule, NO per-row Python UDFs — everything here is an
+``arrow_udf`` crossing the JVM boundary once per batch, taking and
+returning pyarrow arrays. Geometry structs cross natively in both
+directions: encoders read ``pylist(g)`` dicts into
+``structrepr.from_struct``, decoders build ``pa.array(structs,
+type=GEOM_ARROW)``; a NULL input or (under ``strict=False``) a failed
+decode is a NULL struct.
 
 Format parity lives in the kernel (tests replicate geozero's own hex
 fixtures); this module is only the batching shim. Anything expressible
@@ -17,9 +22,9 @@ from __future__ import annotations
 
 from typing import Callable, Optional
 
-import numpy as np
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (ArrayType, BinaryType, BooleanType, ByteType,
                                DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
@@ -46,42 +51,62 @@ GEOMETRY_TYPE = StructType([
     StructField("tvals", ArrayType(DoubleType())),
     StructField("tmvals", ArrayType(LongType())),
 ])
-_FIELDS = [f.name for f in GEOMETRY_TYPE.fields]
+GEOM_ARROW = to_arrow_type(GEOMETRY_TYPE)
 
 
-def _structs_to_pdf(structs: list[Optional[dict]]) -> pd.DataFrame:
-    return pd.DataFrame(
-        {f: [None if s is None else s[f] for s in structs] for f in _FIELDS})
-
-
-def _pdf_to_geoms(pdf: pd.DataFrame) -> list[Optional[Geom]]:
-    kinds = pdf["kind"]
-    out: list[Optional[Geom]] = []
-    for i, rec in enumerate(pdf.to_dict("records")):
-        if kinds.iloc[i] is None or (isinstance(kinds.iloc[i], float)
-                                     and np.isnan(kinds.iloc[i])):
-            out.append(None)
-        else:
-            out.append(sr.from_struct(rec))
+def pylist(arr: pa.Array) -> list:
+    """``arr.to_pylist()``, read column by column: numeric and boolean
+    buffers through numpy ``tolist()``, list rows sliced out of one flat
+    list. pyarrow's to_pylist builds a scalar object per nested element,
+    which on 10k POINT geometry structs measured 200-335 ms against
+    about 22 ms for this reader (47-68 ms for the pandas conversion it
+    replaced), on a shared 4-core VM."""
+    t, n = arr.type, len(arr)
+    if arr.null_count == n:
+        return [None] * n
+    if pa.types.is_struct(t):
+        names = [f.name for f in t]
+        out = [dict(zip(names, vals))
+               for vals in zip(*map(pylist, arr.flatten()))]
+    elif pa.types.is_list(t):
+        off = arr.offsets.to_numpy().tolist()
+        flat = pylist(arr.values)
+        out = [flat[a:b] for a, b in zip(off, off[1:])]
+    elif arr.null_count == 0 and (pa.types.is_integer(t)
+                                  or pa.types.is_floating(t)
+                                  or pa.types.is_boolean(t)):
+        return arr.to_numpy(zero_copy_only=False).tolist()
+    else:
+        return arr.to_pylist()
+    if arr.null_count:
+        valid = arr.is_valid().to_pylist()
+        out = [v if ok else None for v, ok in zip(out, valid)]
     return out
 
 
-def _decode_udf(decode: Callable[..., Geom], caster=lambda v: v,
-                strict: bool = False):
-    @pandas_udf(GEOMETRY_TYPE)
-    def f(s: pd.Series) -> pd.DataFrame:
+def struct_columns(data: dict, t: StructType) -> pa.Array:
+    """Equal-length Python lists keyed by field name -> a struct array
+    of Spark type ``t`` (every row a non-NULL struct)."""
+    at = to_arrow_type(t)
+    return pa.StructArray.from_arrays(
+        [pa.array(data[f.name], f.type) for f in at], fields=list(at))
+
+
+def _decode_udf(decode: Callable[..., Geom], strict: bool = False):
+    @arrow_udf(GEOMETRY_TYPE)
+    def f(s: pa.Array) -> pa.Array:
         structs: list[Optional[dict]] = []
-        for v in s:
-            if v is None or (isinstance(v, float) and np.isnan(v)):
+        for v in s.to_pylist():
+            if v is None:
                 structs.append(None)
                 continue
             try:
-                structs.append(sr.to_struct(decode(caster(v))))
+                structs.append(sr.to_struct(decode(v)))
             except Exception:
                 if strict:
                     raise
                 structs.append(None)
-        return _structs_to_pdf(structs)
+        return pa.array(structs, type=GEOM_ARROW)
 
     return f
 
@@ -89,68 +114,6 @@ def _decode_udf(decode: Callable[..., Geom], caster=lambda v: v,
 def st_geomfromwkt(strict: bool = False):
     """string -> geometry struct (wkt_reader.rs:82-89 semantics)."""
     return _decode_udf(kwkt.decode, strict=strict)
-
-
-def st_pointfromtext():
-    """Vectorized 2D ``POINT(x y)`` decode — the hot scan path.
-
-    Batches parse via pandas C-level str extraction (no per-row Python);
-    anything that is not a plain 2D point falls back to the generic
-    kernel decoder, so semantics match st_geomfromwkt exactly.
-    """
-    _PT = r"^POINT\((-?[0-9.]+) (-?[0-9.]+)\)$"
-
-    @pandas_udf(GEOMETRY_TYPE)
-    def f(s: pd.Series) -> pd.DataFrame:
-        ext = s.str.extract(_PT, expand=True)
-        x = pd.to_numeric(ext[0], errors="coerce")
-        y = pd.to_numeric(ext[1], errors="coerce")
-        ok = x.notna() & y.notna()
-        n = len(s)
-        out = {
-            "kind": np.where(ok, 1, 0).astype("int8"),
-            "srid": [None] * n,
-            "has_z": [False] * n,
-            "has_m": [False] * n,
-            "bbox": [None] * n,
-            "coords": [None] * n,
-            "offs1": [None] * n,
-            "offs2": [None] * n,
-            "wkb": [None] * n,
-            "tvals": [None] * n,
-            "tmvals": [None] * n,
-        }
-        pdf = pd.DataFrame(out)
-        xv = x.to_numpy(dtype=np.float64)
-        yv = y.to_numpy(dtype=np.float64)
-        okv = ok.to_numpy()
-        bboxes = pdf["bbox"].to_numpy(dtype=object)
-        coords = pdf["coords"].to_numpy(dtype=object)
-        kinds = pdf["kind"].to_numpy(dtype=object).copy()
-        for i in np.nonzero(okv)[0]:
-            coords[i] = [xv[i], yv[i]]
-            bboxes[i] = [xv[i], yv[i], xv[i], yv[i]]
-        # fallback rows: generic kernel decode (keeps full semantics)
-        for i in np.nonzero(~okv)[0]:
-            v = s.iloc[i]
-            if v is None or (isinstance(v, float) and np.isnan(v)) \
-                    or v == "":
-                kinds[i] = None
-                continue
-            try:
-                st = sr.to_struct(kwkt.decode(v))
-            except Exception:
-                kinds[i] = None
-                continue
-            for fld in _FIELDS:
-                pdf.at[i, fld] = st[fld]
-            kinds[i] = st["kind"]
-        pdf["kind"] = kinds
-        pdf["bbox"] = bboxes
-        pdf["coords"] = coords
-        return pdf
-
-    return f
 
 
 def st_geomfromgeojson(strict: bool = False):
@@ -162,16 +125,17 @@ def st_geomfromwkb(dialect: str = kwkb.DIALECT_EWKB, strict: bool = False):
     """binary -> struct; dialect in wkb/ewkb/gpkg/spatialite/mysql
     (wkb_reader.rs:115-150)."""
     return _decode_udf(lambda b: kwkb.decode(b, dialect=dialect),
-                       caster=bytes, strict=strict)
+                       strict=strict)
 
 
 def _encode_udf(encode: Callable[[Geom], object], ret):
-    @pandas_udf(ret)
-    def f(g: pd.DataFrame) -> pd.Series:
-        geoms = _pdf_to_geoms(g)
-        return pd.Series(
-            [None if gm is None else encode(gm) for gm in geoms],
-            dtype=object)
+    at = to_arrow_type(ret)
+
+    @arrow_udf(ret)
+    def f(g: pa.Array) -> pa.Array:
+        geoms = [sr.from_struct(d) for d in pylist(g)]
+        return pa.array([None if gm is None else encode(gm)
+                         for gm in geoms], type=at)
 
     return f
 
@@ -198,6 +162,13 @@ def st_aswkb(dialect: str = kwkb.DIALECT_EWKB, srid: Optional[int] = None):
         return kwkb.encode(g, dialect=dialect)
 
     return _encode_udf(enc, BinaryType())
+
+
+def st_assvg():
+    """struct -> SVG path element, y axis inverted (svg/writer.rs)."""
+    from ..kernel import svg as ksvg
+    return _encode_udf(lambda g: ksvg.encode(g, invert_y=True),
+                       StringType())
 
 
 def st_npoints():
@@ -255,12 +226,12 @@ def mvt_tile_stats(int_prop: str | None = None,
             return [c for poly in g for ring in poly for c in ring[:-1]]
         raise kmvt.MvtError(f"unknown geom type {feat.geom_type}")
 
-    @pandas_udf(stats_type)
-    def f(blobs: pd.Series) -> pd.DataFrame:
+    @arrow_udf(stats_type)
+    def f(blobs: pa.Array) -> pa.Array:
         nf, vtx, sx, sy = [], [], [], []
         pis, pfs, pcs = [], [], []
-        for blob in blobs:
-            tile = kmvt.decode_tile(bytes(blob))
+        for blob in blobs.to_pylist():
+            tile = kmvt.decode_tile(blob)
             feats = [ft for layer in tile.layers for ft in layer.features]
             coords = [c for ft in feats for c in _feature_coords(ft)]
             nf.append(len(feats))
@@ -287,7 +258,7 @@ def mvt_tile_stats(int_prop: str | None = None,
             data["prop_float_sum"] = pfs
         if str_prop is not None:
             data["prop_chars"] = pcs
-        return pd.DataFrame(data)
+        return struct_columns(data, stats_type)
 
     return f
 
@@ -309,10 +280,10 @@ def tessellate_stats():
         StructField("area2", LongType()),
     ])
 
-    @pandas_udf(stats_type)
-    def f(g: pd.DataFrame) -> pd.DataFrame:
+    @arrow_udf(stats_type)
+    def f(g: pa.Array) -> pa.Array:
         nv, nt, a2 = [], [], []
-        for geom in _pdf_to_geoms(g):
+        for geom in map(sr.from_struct, pylist(g)):
             if geom is None:
                 nv.append(None), nt.append(None), a2.append(None)
                 continue
@@ -326,8 +297,8 @@ def tessellate_stats():
             nv.append(len(verts) // 3)
             nt.append(len(tris))
             a2.append(int(round(total)))
-        return pd.DataFrame({"n_vertices": nv, "n_triangles": nt,
-                             "area2": a2})
+        return struct_columns({"n_vertices": nv, "n_triangles": nt,
+                               "area2": a2}, stats_type)
 
     return f
 
@@ -336,11 +307,10 @@ def gpx_members():
     """GPX document text -> parallel per-member arrays (kind, n_points,
     first coord x/y), member order = the reference's
     (gpx_reader.rs:26-43: waypoints, per-track MultiLineString, ONE
-    all-routes MultiLineString). Parallel arrays rather than
-    array<struct> because pyspark's Arrow struct-detection path
-    (pandas/types.py metadata probe) crashes on nested struct output;
-    callers arrays_zip + posexplode JVM-side. Whole-document decode to
-    a GeometryCollection struct is st_geomfromgpx()."""
+    all-routes MultiLineString). The parallel-array shape is the one
+    q_gpx_decode's DuckDB oracle pairs with; callers arrays_zip +
+    posexplode JVM-side. Whole-document decode to a GeometryCollection
+    struct is st_geomfromgpx()."""
     from ..kernel import gpx as kgpx
 
     members_type = StructType([
@@ -360,17 +330,17 @@ def gpx_members():
             return 1
         return sum(len(line) for line in m.data)
 
-    @pandas_udf(members_type)
-    def f(s: pd.Series) -> pd.DataFrame:
+    @arrow_udf(members_type)
+    def f(s: pa.Array) -> pa.Array:
         kinds, npts, x0s, y0s = [], [], [], []
-        for txt in s:
+        for txt in s.to_pylist():
             g = kgpx.decode(txt)
             kinds.append([m.kind for m in g.data])
             npts.append([_npoints(m) for m in g.data])
             x0s.append([float(_first_coord(m)[0]) for m in g.data])
             y0s.append([float(_first_coord(m)[1]) for m in g.data])
-        return pd.DataFrame({"kind": kinds, "n_points": npts,
-                             "x0": x0s, "y0": y0s})
+        return struct_columns({"kind": kinds, "n_points": npts,
+                               "x0": x0s, "y0": y0s}, members_type)
 
     return f
 
@@ -379,26 +349,3 @@ def st_geomfromgpx(strict: bool = False):
     """GPX text -> GeometryCollection struct (gpx_reader.rs parity)."""
     from ..kernel import gpx as kgpx
     return _decode_udf(kgpx.decode, strict=strict)
-
-
-def shp_records_wkb():
-    """Whole .shp file bytes -> array of per-record EWKB blobs (NULL
-    array element for NullShape records). Bridges the shapefile kernel
-    (kernel/shp.py, parity geozero/src/shp/shp_reader.rs) to the
-    geometry struct via the proven WKB path — array<binary> avoids
-    pyspark's nested-struct Arrow bug, and st_geomfromwkb restores the
-    struct after a JVM-side posexplode."""
-    from ..kernel import shp as kshp
-
-    @pandas_udf(ArrayType(BinaryType()))
-    def f(s: pd.Series) -> pd.Series:
-        out = []
-        for buf in s:
-            recs = kshp.decode_records(bytes(buf))
-            out.append([
-                None if g is None else
-                kwkb.encode(g, dialect=kwkb.DIALECT_EWKB)
-                for _, g in recs])
-        return pd.Series(out, dtype=object)
-
-    return f

@@ -18,7 +18,7 @@ what Parquet min/max pruning and range partitioning need.
 All functions are integer/float arithmetic only, so the same math runs
 as Spark Column expressions (functions/expr.py) and as DuckDB oracle SQL
 (functions/sqlgen.py); this module is the reference implementation and
-the per-row fallback used inside pandas UDFs.
+the per-row fallback used inside Arrow UDFs.
 """
 
 from __future__ import annotations

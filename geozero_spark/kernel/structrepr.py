@@ -19,10 +19,15 @@ crates (geozero README.md:41-42). Our Spark geometry column is:
     >
 
 Simple types (Point/LineString/Polygon/Multi*) use the flat buffers so
-numpy passes inside pandas UDFs never touch per-row Python; exotic types
+numpy passes over Arrow batches never touch per-row Python; exotic types
 (curves, surfaces, collections — wkb_common.rs:79-121) round-trip via an
 embedded EWKB blob. ``bbox`` is materialized at build time so all bbox
 predicates, cell covers, and tile covers run JVM-side on plain doubles.
+
+The dicts ``to_struct`` builds and ``from_struct`` reads are exactly
+the rows of the Arrow struct array (``pa.array(structs, type=...)`` /
+``functions.udfs.pylist``), so UDFs, ``mapInArrow`` scans and sinks
+cross the Python boundary with no intermediate encoding.
 """
 
 from __future__ import annotations
@@ -121,11 +126,14 @@ def _unflat(coords, offs, width: int):
 
 
 def from_struct(d: Optional[Any]) -> Optional[Geom]:
-    """dict/Row -> Geom (inverse of to_struct)."""
+    """dict/Row -> Geom (inverse of to_struct). NULL, or a struct whose
+    every field is NULL (no wkb, no kind), is no geometry."""
     if d is None:
         return None
     get = d.get if isinstance(d, dict) else (lambda k: getattr(d, k, None))
     wkb_blob = get("wkb")
+    if wkb_blob is None and get("kind") is None:
+        return None
     if wkb_blob is not None:
         g = _wkb.decode(bytes(wkb_blob), dialect=_wkb.DIALECT_EWKB)
         srid = get("srid")

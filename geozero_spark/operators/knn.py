@@ -199,6 +199,15 @@ def _local_topk_arrays(qid, qxv, qyv, tid, txv, tyv, k: int,
             np.concatenate(out_d))
 
 
+def _ints(tbl, c):
+    """int64 numpy view of an Arrow table column; zero-copy refuses
+    nulls, so a null key/coordinate fails loudly."""
+    import numpy as np
+
+    return (tbl.column(c).combine_chunks()
+            .to_numpy(zero_copy_only=True).astype(np.int64, copy=False))
+
+
 def _cell_local_topk(disks: DataFrame, tgt: DataFrame, k: int,
                      query_key: str, target_key: str,
                      qx: str, qy: str, tx: str, ty: str,
@@ -210,18 +219,13 @@ def _cell_local_topk(disks: DataFrame, tgt: DataFrame, k: int,
 
     out_schema = (f"{query_key} long, {target_key} long, dist2 long")
 
-    def ints(tbl, c):
-        # zero-copy refuses nulls: a null key/coordinate fails loudly
-        return (tbl.column(c).combine_chunks()
-                .to_numpy(zero_copy_only=True).astype(np.int64, copy=False))
-
     def local(qt, tt):
         if not qt.num_rows or not tt.num_rows:
             q = t = d = np.zeros(0, dtype=np.int64)
         else:
             q, t, d = _local_topk_arrays(
-                ints(qt, query_key), ints(qt, qx), ints(qt, qy),
-                ints(tt, target_key), ints(tt, tx), ints(tt, ty),
+                _ints(qt, query_key), _ints(qt, qx), _ints(qt, qy),
+                _ints(tt, target_key), _ints(tt, tx), _ints(tt, ty),
                 k, exclude_self, budget=8 << 20)
         return pa.table({query_key: q, target_key: t, "dist2": d})
 
@@ -246,7 +250,7 @@ def knn_join_broadcast(queries: DataFrame, targets: DataFrame, k: int,
     rows. Same (dist2, target_key) tie-breaking as knn_join, so both
     paths return bit-identical results."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     qrows = queries.select(query_key, qx, qy).collect()
     if not qrows:
@@ -266,19 +270,16 @@ def knn_join_broadcast(queries: DataFrame, targets: DataFrame, k: int,
         # batches, and running the per-query selection per batch
         # multiplies the Python row loop by the batch count (measured
         # ~6x slower) and inflates the partial row count
-        pdfs = [pdf for pdf in it if len(pdf)]
-        if pdfs:
-            pdf = pd.concat(pdfs, ignore_index=True)
+        bs = [b for b in it if b.num_rows]
+        if bs:
+            tt = pa.Table.from_batches(bs)
             q, t, d = _local_topk_arrays(
-                qid, qxv, qyv,
-                pdf[target_key].to_numpy(dtype=np.int64),
-                pdf[tx].to_numpy(dtype=np.int64),
-                pdf[ty].to_numpy(dtype=np.int64),
-                k, exclude_self)
-            yield pd.DataFrame({
+                qid, qxv, qyv, _ints(tt, target_key), _ints(tt, tx),
+                _ints(tt, ty), k, exclude_self)
+            yield pa.RecordBatch.from_pydict({
                 query_key: q, target_key: t, "dist2": d})
 
-    partials = targets.select(target_key, tx, ty).mapInPandas(
+    partials = targets.select(target_key, tx, ty).mapInArrow(
         local_topk, out_schema)
     w = Window.partitionBy(query_key).orderBy("dist2", target_key)
     return (partials.withColumn("rank", F.row_number().over(w))
@@ -353,7 +354,7 @@ def knn_join(queries: DataFrame, targets: DataFrame, k: int,
         targets, F.col(tx) / F.lit(100.0), F.col(ty) / F.lit(100.0),
         res, out="cell")
     tgt = tgt.persist()
-    # materialize the query side once: upstream pipelines (pandas-UDF
+    # materialize the query side once: upstream pipelines (Arrow-UDF
     # decode etc.) must not re-run every expansion round
     remaining = queries.persist()
     n_remaining = remaining.count()
@@ -409,13 +410,12 @@ def knn_join(queries: DataFrame, targets: DataFrame, k: int,
     out = settled_parts[0]
     for p in settled_parts[1:]:
         out = out.unionByName(p)
-    # materialize the result before releasing intermediate caches —
-    # including the single-round case: returning a filter over a
-    # still-cached round frame leaked one persisted DataFrame per call
-    # (the caller has no handle to release it); the extra pass is a
-    # cheap cache-served filter
-    out = out.persist()
-    out.count()
+    # materialize the result before releasing intermediate caches, as
+    # a local checkpoint: returning a filter over a still-cached round
+    # frame, or a persisted union, leaked one cached DataFrame per call
+    # (the caller has no handle to release it, and a second identical
+    # call was served from it)
+    out = out.localCheckpoint()
     for df in to_unpersist + keep_cached:
         df.unpersist()
     return out

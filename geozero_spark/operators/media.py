@@ -14,8 +14,8 @@ columns with typed metadata extracted by Arrow-batched passes.
 Full pixel decode (PIL/ffmpeg/...) is not in this container, so that
 step stays STUBBED behind HAVE_REAL_CODECS — but the header typing is
 real-bytes real, and the plumbing is exactly what a full decoder plugs
-into: one ``mapInPandas`` over the binary column, batch-vectorized
-dispatch, per-row work bounded by header size (never payload size).
+into: one ``mapInArrow`` pass over the binary column, dispatch by magic
+bytes, per-row work a header parse.
 Downstream it computes the math a pipeline needs:
 
 - thumbnail resize: fit into ``thumb`` x ``thumb`` preserving aspect,
@@ -32,9 +32,10 @@ binary input.
 
 from __future__ import annotations
 
+import re
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 try:  # real decoders would slot in here; absent in this container
@@ -46,20 +47,8 @@ except ImportError:
 MEDIA_SCHEMA = ("doc_id bigint, kind string, width int, height int, "
                 "n_frames int, thumb_w int, thumb_h int, "
                 "n_sampled int, sample_sum bigint, payload_len int")
-
-
-def _parse_fake(blobs: pd.Series) -> pd.DataFrame:
-    """Vectorized fake-container parse: bytes -> header fields.
-    Malformed / null blobs yield NA fields (never a raise)."""
-    s = blobs.str.decode("utf-8", "replace").astype("string")
-    ext = s.str.extract(r"^(VID1);w=(\d+);h=(\d+);f=(\d+);(p*)$")
-    return pd.DataFrame({
-        "kind": ext[0],
-        "width": pd.to_numeric(ext[1], errors="coerce"),
-        "height": pd.to_numeric(ext[2], errors="coerce"),
-        "n_frames": pd.to_numeric(ext[3], errors="coerce"),
-        "payload_len": ext[4].str.len(),
-    })
+_NAMES = [c.split()[0] for c in MEDIA_SCHEMA.split(", ")]
+_TYPES = [pa.string()] + [pa.int32()] * 6 + [pa.int64(), pa.int32()]
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -107,33 +96,27 @@ def _jpeg_dims(b: bytes):
     return None
 
 
-def _parse_media(blobs: pd.Series) -> pd.DataFrame:
+_FAKE = re.compile(r"^(VID1);w=(\d+);h=(\d+);f=(\d+);(p*)$")
+_NO_HEADER = (None,) * 5
+
+
+def _parse_media(blob: bytes | None) -> tuple:
     """Dispatch by magic bytes: real PNG / JPEG headers (public specs,
     no codec required — stills, n_frames=1, payload_len=blob bytes)
-    or the fake video container. The fake path stays whole-batch
-    vectorized; the still paths cost O(header bytes) per row — the
-    per-row work is marker arithmetic only, independent of payload
-    size. Unknown magic / malformed / null -> NA row."""
-    filled = blobs.where(blobs.notna(), b"")
-    is_png = filled.str[:8] == _PNG_SIG
-    is_jpg = filled.str[:2] == b"\xff\xd8"
-    out = _parse_fake(blobs.where(~(is_png | is_jpg), b""))
-    for mask, parser, kind in ((is_png, _png_dims, "PNG"),
-                               (is_jpg, _jpeg_dims, "JPEG")):
-        if not mask.any():
-            continue
-        dims = [parser(bytes(b)) for b in filled[mask]]
-        idx = out.index[mask]
-        out.loc[idx, "kind"] = [kind if d else None for d in dims]
-        out.loc[idx, "width"] = [
-            float(d[0]) if d else None for d in dims]
-        out.loc[idx, "height"] = [
-            float(d[1]) if d else None for d in dims]
-        out.loc[idx, "n_frames"] = [1.0 if d else None for d in dims]
-        out.loc[idx, "payload_len"] = [
-            float(len(b)) if d else None
-            for b, d in zip(filled[mask], dims)]
-    return out
+    or the fake video container. Returns (kind, width, height,
+    n_frames, payload_len); unknown magic / malformed / null -> all
+    None (never a raise)."""
+    if blob is None:
+        return _NO_HEADER
+    for magic, parser, kind in ((_PNG_SIG, _png_dims, "PNG"),
+                                (b"\xff\xd8", _jpeg_dims, "JPEG")):
+        if blob.startswith(magic):
+            d = parser(blob)
+            return (kind, d[0], d[1], 1, len(blob)) if d else _NO_HEADER
+    m = _FAKE.match(blob.decode("utf-8", "replace"))
+    if m is None:
+        return _NO_HEADER
+    return m[1], int(m[2]), int(m[3]), int(m[4]), len(m[5])
 
 
 def media_meta(df: DataFrame, media_col: str = "media",
@@ -141,34 +124,27 @@ def media_meta(df: DataFrame, media_col: str = "media",
                max_frames: int = 3) -> DataFrame:
     """binary media column -> typed metadata + resize/sample plan."""
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            meta = _parse_media(pdf[media_col])
-            # nullable Int64 end to end: a malformed or null blob
-            # yields a row of NULL metadata, never a task failure
-            w = meta["width"].astype("Int64")
-            h = meta["height"].astype("Int64")
-            f = meta["n_frames"].astype("Int64")
-            m = w.where(w >= h, h)
-            tw = (w * thumb // m).clip(lower=1)
-            th = (h * thumb // m).clip(lower=1)
-            ns = f.clip(upper=max_frames)
-            # sum of the evenly spaced frame indices k*f//ns
-            ssum = f - f  # NA-propagating zero
-            for k in range(max_frames):
-                ssum = ssum + (k * f // ns).where(ns > k, 0)
-            yield pd.DataFrame({
-                "doc_id": pdf[key],
-                "kind": meta["kind"],
-                "width": w.astype("Int32"),
-                "height": h.astype("Int32"),
-                "n_frames": f.astype("Int32"),
-                "thumb_w": tw.astype("Int32"),
-                "thumb_h": th.astype("Int32"),
-                "n_sampled": ns.astype("Int32"),
-                "sample_sum": ssum.astype("Int64"),
-                "payload_len":
-                    meta["payload_len"].astype("Int32"),
-            })
+    def plan(blob):
+        kind, w, h, f, plen = _parse_media(blob)
+        if w is None:
+            return kind, w, h, f, None, None, None, None, plen
+        m = max(w, h)
+        ns = min(f, max_frames)
+        # a 0x0 frame floors to a 1x1 thumbnail
+        return (kind, w, h, f,
+                max(1, w * thumb // m if m else 0),
+                max(1, h * thumb // m if m else 0), ns,
+                # sum of the evenly spaced frame indices k*f//ns
+                sum(k * f // ns for k in range(ns)), plen)
 
-    return df.mapInPandas(run, MEDIA_SCHEMA)
+    def run(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in it:
+            cols = list(zip(*map(plan, b.column(media_col).to_pylist())))
+            if not cols:
+                continue
+            yield pa.RecordBatch.from_arrays(
+                [b.column(key).cast(pa.int64())]
+                + [pa.array(c, t) for c, t in zip(cols, _TYPES)],
+                names=_NAMES)
+
+    return df.mapInArrow(run, MEDIA_SCHEMA)

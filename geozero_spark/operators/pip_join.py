@@ -34,7 +34,6 @@ from __future__ import annotations
 import weakref
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
@@ -235,7 +234,7 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 6,
         # decoded polygons ride a TorrentBroadcast to the Python
         # workers once, instead of one full geometry struct per
         # candidate row through Arrow (measured ~3x refine speedup)
-        from pyspark.sql.functions import pandas_udf
+        from pyspark.sql.functions import arrow_udf
         from pyspark.sql.types import BooleanType
 
         from ..kernel import pip as kpip
@@ -259,23 +258,30 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 6,
                                               F.lit(salt - 1))))
         cand = pts.join(F.broadcast(cover), on=keys, how="inner")
 
-        @pandas_udf(BooleanType())
-        def refine(zone: pd.Series, px: pd.Series,
-                   py: pd.Series) -> pd.Series:
+        @arrow_udf(BooleanType())
+        def refine(zone: pa.Array, px: pa.Array,
+                   py: pa.Array) -> pa.Array:
             out = np.zeros(len(zone), dtype=bool)
             if len(zone):
-                pxv = px.to_numpy(dtype="float64")
-                pyv = py.to_numpy(dtype="float64")
+                pxv = np.asarray(px, dtype=np.float64)
+                pyv = np.asarray(py, dtype=np.float64)
                 pm = bc.value
-                for z, idx in zone.groupby(zone,
-                                           sort=False).indices.items():
+                # group rows by zone: dictionary codes, stable-sorted
+                enc = zone.dictionary_encode()
+                codes = np.asarray(enc.indices)
+                order = np.argsort(codes, kind="stable")
+                ends = np.searchsorted(codes[order],
+                                       np.arange(1, len(enc.dictionary)
+                                                 + 1))
+                for z, idx in zip(enc.dictionary.to_pylist(),
+                                  np.split(order, ends[:-1])):
                     m = kpip.points_in_polygon_np(
                         pxv[idx], pyv[idx], pm[z][0])
                     for g in pm[z][1:]:  # multi-row zone: in ANY
                         m |= kpip.points_in_polygon_np(
                             pxv[idx], pyv[idx], g)
                     out[idx] = m
-            return pd.Series(out)
+            return pa.array(out)
 
         refined = cand.withColumn(
             "_inside", refine(F.col(poly_key), F.col(lon), F.col(lat)))

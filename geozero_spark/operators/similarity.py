@@ -16,10 +16,9 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, LongType
 
 _DOT = ("aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
@@ -335,9 +334,11 @@ def signature_udf(dim: int, bits: int = 32, bands: int = 4,
                   seed: int = 42):
     """Vectorized sign-random-projection band signatures.
 
-    Returns array<long> of length ``bands``: each entry hashes
-    bits/bands sign bits of deterministic hyperplane projections. One
-    matmul per Arrow batch (numpy), no per-row Python.
+    Returns ``sig(vec_col) -> Column``, an array<long> of length
+    ``bands``: each entry hashes bits/bands sign bits of deterministic
+    hyperplane projections. One matmul per Arrow batch (numpy), no
+    per-row Python; vectors are read through ``_vec_matrix``, so a NULL
+    or wrong-length vector raises naming ``vec_col``.
     """
     planes = _planes(dim, bits, seed)
     rows = bits // bands
@@ -347,17 +348,20 @@ def signature_udf(dim: int, bits: int = 32, bands: int = 4,
     w = (1 << np.arange(rows - 1, -1, -1)).astype(np.int64)
     tags = (np.arange(bands, dtype=np.int64) << 58)
 
-    @pandas_udf(ArrayType(LongType()))
-    def f(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype=object)
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        sign = (mat @ planes.T) > 0  # (n, bits)
-        sig = (sign.reshape(len(vecs), bands, rows).astype(np.int64)
-               @ w + tags)
-        return pd.Series(list(sig))
+    def sig(vec_col: str) -> Column:
+        @arrow_udf(ArrayType(LongType()))
+        def f(vecs: pa.Array) -> pa.Array:
+            mat = _vec_matrix(vecs, vec_col, dim)
+            sign = (mat @ planes.T) > 0  # (n, bits)
+            out = (sign.reshape(len(vecs), bands, rows).astype(np.int64)
+                   @ w + tags)
+            return pa.ListArray.from_arrays(
+                np.arange(0, out.size + 1, bands, dtype=np.int32),
+                out.ravel())
 
-    return f
+        return f(F.col(vec_col))
+
+    return sig
 
 
 def ann_topk(queries: DataFrame, targets: DataFrame, k: int, dim: int,
@@ -406,9 +410,9 @@ def ann_topk(queries: DataFrame, targets: DataFrame, k: int, dim: int,
     else:
         sig = signature_udf(dim, bits, bands, seed)
         qb = qk.select(query_key,
-                       F.explode(sig(F.col(qvec))).alias("bucket"))
+                       F.explode(sig(qvec)).alias("bucket"))
         tb = tk.select(target_key,
-                       F.explode(sig(F.col(tvec))).alias("bucket"))
+                       F.explode(sig(tvec)).alias("bucket"))
     if max_bucket is not None:
         wb = Window.partitionBy("bucket")
         tb = (tb.withColumn("_bn", F.count("*").over(wb))

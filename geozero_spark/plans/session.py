@@ -2,7 +2,7 @@
 
 Settings chosen for the 100TB target, applied identically on local[N]:
 AQE on (runtime re-plan + skew-join splitting), partition coalescing,
-Arrow batching for the pandas-UDF codec path, and a shuffle-partition
+Arrow batching for the Arrow-UDF codec path, and a shuffle-partition
 count the caller sizes to the cluster (defaults to cores on local).
 """
 
@@ -27,7 +27,7 @@ def make_session(app: str = "geozero-spark", cpus: int | None = None,
          .config("spark.sql.adaptive.enabled", "true")
          .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
          # keep AQE's parallelism-first coalescing, but drop the 1MB
-         # min-partition floor to 64k: a CPU-bound pandas-UDF stage
+         # min-partition floor to 64k: a CPU-bound Arrow-UDF stage
          # (PIP refine, kNN top-k) downstream of a small-by-bytes
          # shuffle otherwise collapses to a handful of Python workers
          # (measured 3.4x on the pip_join shuffle path). At production

@@ -5,14 +5,14 @@ matching DuckDB oracle lives in geozero_spark/oracles.py with the SAME
 output column names (the driver hash-compares sorted values).
 
 The engine path is deliberately end-to-end: queries go through the
-synthetic pages table -> regexp payload extraction -> pandas-UDF WKT
+synthetic pages table -> regexp payload extraction -> Arrow-UDF WKT
 decode -> JVM cell/tile math / joins — never shortcutting to the
 generator arithmetic the oracle uses.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions import cols, sqlgen as sg, udfs
@@ -249,47 +249,30 @@ def q_zones_encode(spark, sf_dir):
 def q_html_meta(spark, sf_dir):
     """Opaque-binary payload handling (multimodal pattern): decode the
     html bytes per Arrow batch, pull typed metadata."""
-    import pandas as pd
-
     def extract(it):
-        for pdf in it:
-            htmls = pdf["html"]
+        for b in it:
             titles = []
             nbytes = []
-            for b in htmls:
-                raw = bytes(b)
+            for raw in b.column("html").to_pylist():
                 nbytes.append(len(raw))
                 s = raw.decode("utf-8", errors="replace")
                 i = s.find("<title>")
                 j = s.find("</title>")
                 titles.append(s[i + 7:j] if 0 <= i < j else None)
-            yield pd.DataFrame({"url": pdf["url"], "html_bytes": nbytes,
-                                "title": titles})
+            yield pa.RecordBatch.from_pydict({
+                "url": b.column("url"),
+                "html_bytes": pa.array(nbytes, pa.int64()),
+                "title": pa.array(titles, pa.string())})
 
-    return (P.pages_df(spark, sf_dir)
-            .mapInPandas(extract,
-                         "url string, html_bytes long, title string"))
+    return (P.pages_df(spark, sf_dir).select("url", "html")
+            .mapInArrow(extract,
+                        "url string, html_bytes long, title string"))
 
 
 def q_svg_encode(spark, sf_dir):
     """SVG writer parity (svg/writer.rs): one path element per zone."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StringType
-
-    from .kernel import structrepr as sr
-    from .kernel import svg as ksvg
-
-    @pandas_udf(StringType())
-    def enc(g: pd.DataFrame) -> pd.Series:
-        out = []
-        for rec in g.to_dict("records"):
-            gm = sr.from_struct(rec)
-            out.append(None if gm is None else ksvg.encode(
-                gm, invert_y=True))
-        return pd.Series(out, dtype=object)
-
     z = zones_decoded(spark, sf_dir)
-    return z.select("zone_id", enc("poly_c").alias("svg"))
+    return z.select("zone_id", udfs.st_assvg()("poly_c").alias("svg"))
 
 
 def q_rasterize(spark, sf_dir):
@@ -459,38 +442,21 @@ def q_mvt_content(spark, sf_dir):
 SHP_FIXTURE_CAP = 10_000
 
 
-def _write_point_shp_executor(src: DataFrame, path: str) -> None:
-    """Write a Point shapefile from ONE executor task (mapInPandas over
-    a single sorted partition): the row slice never transits the
-    driver. The cap bounds task memory; writes go to a temp file then
-    rename, so a killed task never leaves a half-written fixture."""
-    import os
+def _point_shp_encoder(rows):
+    """Point shapefile of (doc_id, xc, yc) rows in doc_id order."""
+    from .kernel import shp as kshp
+    from .kernel.model import POINT, Geom
 
-    def write_part(batches):
-        import pandas as pd
-
-        from geozero_spark.kernel import shp as kshp
-        from geozero_spark.kernel.model import POINT, Geom
-
-        pdf = pd.concat(list(batches), ignore_index=True)
-        pdf = pdf.sort_values("doc_id")
-        buf = kshp.encode([Geom(POINT, (float(x), float(y)))
-                           for x, y in zip(pdf["xc"], pdf["yc"])])
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(buf)
-        os.replace(tmp, path)
-        yield pd.DataFrame({"n": [len(pdf)]})
-
-    (src.coalesce(1).sortWithinPartitions("doc_id")
-        .mapInPandas(write_part, "n long").count())
+    rows.sort(key=lambda r: r["doc_id"])
+    return kshp.encode([Geom(POINT, (float(r["xc"]), float(r["yc"])))
+                        for r in rows]), len(rows)
 
 
 def q_shp_decode(spark, sf_dir):
     """Shapefile reader through the Spark layer: a Point shapefile is
     materialized deterministically from the synthetic points (kernel
     writer), then scanned via read_shp (binaryFile -> kernel record
-    decode -> EWKB -> struct). Output is (recno, x_c, y_c) with recno
+    decode -> struct). Output is (recno, x_c, y_c) with recno
     the 1-based shapefile record number in doc_id order."""
     import hashlib
     import os
@@ -513,7 +479,7 @@ def q_shp_decode(spark, sf_dir):
         src = spark.sql(
             f"SELECT doc_id, {P.LON_C} AS xc, {P.LAT_C} AS yc "
             f"FROM documents ORDER BY doc_id LIMIT {SHP_FIXTURE_CAP}")
-        _write_point_shp_executor(src, path)
+        readers.write_container(src, path, _point_shp_encoder)
     out = readers.read_shp(spark, d)
     return out.select(
         (F.col("record_idx") + 1).cast("int").alias("recno"),
@@ -901,11 +867,10 @@ def q_streaming_cell_counts(spark, sf_dir):
         os.symlink(os.path.realpath(src), link)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(sdir)
-    dec = udfs.st_pointfromtext()
     pts = (stream
            .selectExpr(f"{P.URL} AS url", f"{P.TEXT} AS text")
-           .withColumn("geom",
-                       dec(F.regexp_extract("text", LOC_RE, 1)))
+           .withColumn("geom", cols.point_struct_from_wkt_jvm(
+               F.regexp_extract("text", LOC_RE, 1)))
            .withColumn("lon", cols.point_x(F.col("geom")) / F.lit(100.0))
            .withColumn("lat", cols.point_y(F.col("geom")) / F.lit(100.0)))
     pts = cols.with_cell_col(pts, "lon", "lat", CELL_RES_COARSE,

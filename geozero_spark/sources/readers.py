@@ -12,19 +12,31 @@
 All return a DataFrame with a decoded ``geom`` struct column plus a
 ``props`` map<string,string> for the schema-less property bags
 (property_processor.rs:53-60: names/types may vary per row).
+
+Container formats (fgb, gpkg, shp) are scanned by ONE ``mapInArrow``
+pass that emits the geometry struct and props map straight from the
+kernel iterator; the container sinks share ``write_container``.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Iterator, Optional
+import os
+from typing import Callable, Iterator, Optional
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (ArrayType, DataType, IntegerType, LongType,
+                               MapType, StringType, StructField,
+                               StructType)
 
 from ..functions import udfs
 from ..kernel import geojson as kgeojson
 from ..kernel import structrepr as sr
+
+_PROPS = MapType(StringType(), StringType())
 
 
 def read_csv_wkt(spark: SparkSession, path: str, geom_col: str,
@@ -41,10 +53,6 @@ def read_csv_wkt(spark: SparkSession, path: str, geom_col: str,
                            for x in (F.lit(c), F.col(c))])
     return df.select(dec(F.col(geom_col)).alias("geom"),
                      props.alias("props"), *others)
-
-
-_GJ_SCHEMA = (f"geom struct<{sr.GEOMETRY_DDL}>, "
-              f"props map<string,string>, feature_idx long")
 
 
 def _props_of(obj: dict) -> dict:
@@ -67,78 +75,57 @@ def _geom_of(obj: dict):
     return sr.to_struct(kgeojson.from_obj(geom_obj)) if geom_obj else None
 
 
-def _feature_udfs():
-    """pandas UDFs parsing one GeoJSON Feature/Geometry text per row.
+def _feature_udf():
+    """Arrow UDF parsing one GeoJSON Feature/Geometry text per row into
+    struct<geom, props>; an unparsable geometry or property bag is
+    NULL on its own."""
+    ret = StructType([StructField("geom", udfs.GEOMETRY_TYPE),
+                      StructField("props", _PROPS)])
 
-    (mapInPandas is avoided: pyspark's pandas/types.py probes Arrow
-    field metadata with ``b"geometry" in field.metadata`` and crashes on
-    None metadata for struct outputs; the pandas_udf serializer path
-    does not.)
-    """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import MapType, StringType
+    def attempt(fn, obj):
+        try:
+            return fn(obj)
+        except Exception:
+            return None
 
-    from ..functions.udfs import GEOMETRY_TYPE, _structs_to_pdf
-
-    @pandas_udf(GEOMETRY_TYPE)
-    def geom_udf(s: pd.Series) -> pd.DataFrame:
-        out = []
-        for line in s:
+    @arrow_udf(ret)
+    def parse(s: pa.Array) -> pa.Array:
+        geoms, props = [], []
+        for line in s.to_pylist():
             line = (line or "").strip().rstrip(",")
-            if not line or line in ("[", "]"):
-                out.append(None)
-                continue
-            try:
-                out.append(_geom_of(json.loads(line)))
-            except Exception:
-                out.append(None)
-        return _structs_to_pdf(out)
+            obj = (None if not line or line in ("[", "]")
+                   else attempt(json.loads, line))
+            geoms.append(None if obj is None else attempt(_geom_of, obj))
+            props.append(None if obj is None else attempt(_props_of, obj))
+        return udfs.struct_columns({"geom": geoms, "props": props}, ret)
 
-    @pandas_udf(MapType(StringType(), StringType()))
-    def props_udf(s: pd.Series) -> pd.Series:
-        out = []
-        for line in s:
-            line = (line or "").strip().rstrip(",")
-            if not line or line in ("[", "]"):
-                out.append(None)
-                continue
-            try:
-                out.append(_props_of(json.loads(line)))
-            except Exception:
-                out.append(None)
-        return pd.Series(out, dtype=object)
+    return parse
 
-    return geom_udf, props_udf
+
+def _features_frame(df: DataFrame) -> DataFrame:
+    f = _feature_udf()(F.col("value"))
+    return (df.withColumn("feature_idx", F.monotonically_increasing_id())
+            .select(f.alias("_f"), "feature_idx")
+            .select("_f.geom", "_f.props", "feature_idx")
+            .where(F.col("geom").isNotNull()))
 
 
 def read_geojson_lines(spark: SparkSession, path: str) -> DataFrame:
     """GeoJSON-Lines scan: one Feature/Geometry per text line
     (geojson_line_reader.rs:12-32 — the natural Spark scan)."""
-    geom_udf, props_udf = _feature_udfs()
-    txt = spark.read.text(path)
-    return (txt
-            .withColumn("feature_idx", F.monotonically_increasing_id())
-            .select(geom_udf("value").alias("geom"),
-                    props_udf("value").alias("props"), "feature_idx")
-            .where(F.col("geom").isNotNull()))
+    return _features_frame(spark.read.text(path))
 
 
 def read_geojson_fc(spark: SparkSession, path: str) -> DataFrame:
     """Whole-file FeatureCollection scan: explode features to lines,
     reuse the per-feature parse (small/medium files; convert huge
     collections to GeoJSON-Lines)."""
-    geom_udf, props_udf = _feature_udfs()
     raw = spark.read.text(path, wholetext=True)
     line = F.explode(F.expr(
         "CASE WHEN get_json_object(value, '$.type') = 'FeatureCollection'"
         " THEN from_json(get_json_object(value, '$.features'),"
         " 'array<string>') ELSE array(value) END")).alias("value")
-    feats = raw.select(line).withColumn(
-        "feature_idx", F.monotonically_increasing_id())
-    return feats.select(geom_udf("value").alias("geom"),
-                        props_udf("value").alias("props"),
-                        "feature_idx").where(F.col("geom").isNotNull())
+    return _features_frame(raw.select(line))
 
 
 def write_geojson_lines(df: DataFrame, path: str,
@@ -171,24 +158,63 @@ def read_gpx(spark: SparkSession, path: str) -> DataFrame:
                       stats("value").alias("members"))
 
 
+def _scan_schema(key: str, key_type: DataType, idx: str,
+                 idx_type: DataType, props: bool = True) -> StructType:
+    """(key, idx, geom[, props]) output schema of a container scan."""
+    fields = [StructField(key, key_type), StructField(idx, idx_type),
+              StructField("geom", udfs.GEOMETRY_TYPE)]
+    if props:
+        fields.append(StructField("props", _PROPS))
+    return StructType(fields)
+
+
+def _scan(df: DataFrame, schema: StructType,
+          rows_of: Callable[[dict], Iterator[tuple]]) -> DataFrame:
+    """One ``mapInArrow`` pass: every input row (a file or a split)
+    expands to the output rows ``rows_of(row)`` yields — tuples in
+    ``schema`` order, geometry already a ``structrepr`` dict. One
+    Arrow batch per input row."""
+    at = to_arrow_schema(schema)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            for row in b.to_pylist():
+                cols = list(zip(*rows_of(row)))
+                if not cols:
+                    continue
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c, f.type) for c, f in zip(cols, at)],
+                    schema=at)
+
+    return df.mapInArrow(run, schema)
+
+
 def read_shp(spark: SparkSession, path: str) -> DataFrame:
     """Shapefile scan (geozero/src/shp/reader.rs iter_geometries): one
-    row per shape record with (path, record_idx, geom struct).
+    row per shape record with (path, record_idx, geom struct); a
+    NullShape record has a NULL geom, and a file with no records keeps
+    one (path, NULL, NULL) row (posexplode_outer semantics).
 
-    binaryFile source -> kernel decode to per-record EWKB (one Arrow
-    batch per file) -> JVM posexplode -> WKB decode to the geometry
-    struct. Directories of .shp files parallelize by file; a single
-    giant shapefile is inherently a sequential container (records are
-    not length-indexed without the .shx sidecar), matching the
-    reference's streaming reader."""
-    u = udfs.shp_records_wkb()
-    dec = udfs.st_geomfromwkb(dialect="ewkb")
-    raw = (spark.read.format("binaryFile")
-           .option("pathGlobFilter", "*.shp").load(path)
-           .select("path", u(F.col("content")).alias("_recs")))
-    return (raw.select(
-        "path", F.posexplode_outer("_recs").alias("record_idx", "_wkb"))
-        .withColumn("geom", dec("_wkb")).drop("_wkb"))
+    binaryFile source -> kernel decode straight to geometry structs
+    (one Arrow batch per file). Directories of .shp files parallelize
+    by file; a single giant shapefile is inherently a sequential
+    container (records are not length-indexed without the .shx
+    sidecar — read_shp_indexed uses it), matching the reference's
+    streaming reader."""
+    from ..kernel import shp as kshp
+
+    def records(row):
+        recs = kshp.decode_records(row["content"])
+        if not recs:
+            yield row["path"], None, None
+        for i, (_, g) in enumerate(recs):
+            yield row["path"], i, sr.to_struct(g)
+
+    files = (spark.read.format("binaryFile")
+             .option("pathGlobFilter", "*.shp").load(path)
+             .select("path", "content"))
+    return _scan(files, _scan_schema("path", StringType(), "record_idx",
+                                     IntegerType(), props=False), records)
 
 
 def read_shp_features(spark: SparkSession, path: str) -> DataFrame:
@@ -201,18 +227,13 @@ def read_shp_features(spark: SparkSession, path: str) -> DataFrame:
         "_base", F.regexp_replace("path", r"\.shp$", ""))
     from ..kernel import dbf as kdbf
 
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import (ArrayType, MapType, StringType)
-
-    @pandas_udf(ArrayType(MapType(StringType(), StringType())))
-    def dbf_rows(content: pd.Series) -> pd.Series:
-        out = []
-        for buf in content:
-            recs = kdbf.decode_records(bytes(buf))
-            out.append([{k: None if v is None else str(v)
-                         for k, v in r.items()} for r in recs])
-        return pd.Series(out, dtype=object)
+    @arrow_udf(ArrayType(_PROPS))
+    def dbf_rows(content: pa.Array) -> pa.Array:
+        return pa.array(
+            [[{k: None if v is None else str(v) for k, v in r.items()}
+              for r in kdbf.decode_records(buf)]
+             for buf in content.to_pylist()],
+            type=pa.list_(pa.map_(pa.string(), pa.string())))
 
     props = (spark.read.format("binaryFile")
              .option("pathGlobFilter", "*.dbf").load(path)
@@ -256,7 +277,6 @@ def read_shp_indexed(spark: SparkSession, shp_path: str,
     import re as _re
 
     from ..kernel import shp as kshp
-    from ..kernel import wkb as kwkb
 
     shx_path = _re.sub(r"\.shp$", ".shx", shp_path)
     idx = kshp.read_shx(_fetch_range(shx_path, 0, None))
@@ -286,99 +306,38 @@ def read_shp_indexed(spark: SparkSession, shp_path: str,
         "path string, start long, nbytes long, first_idx long")
     sdf = sdf.repartition(max(1, len(splits)))
 
-    def scan(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for path, start, nbytes, first in pdf.itertuples(index=False):
-                rows = kshp.decode_record_run(
-                    _fetch_range(path, int(start), int(nbytes)))
-                yield pd.DataFrame({
-                    "path": path,
-                    "record_idx": range(int(first),
-                                        int(first) + len(rows)),
-                    "_wkb": [None if g is None else
-                             kwkb.encode(g, "ewkb") for _, g in rows]})
+    def records(row):
+        recs = kshp.decode_record_run(
+            _fetch_range(row["path"], row["start"], row["nbytes"]))
+        for i, (_, g) in enumerate(recs, row["first_idx"]):
+            yield row["path"], i, sr.to_struct(g)
 
-    out = sdf.mapInPandas(
-        scan, "path string, record_idx long, _wkb binary")
-    dec = udfs.st_geomfromwkb(dialect="ewkb")
-    return out.withColumn("geom", dec("_wkb")).drop("_wkb")
+    return _scan(sdf, _scan_schema("path", StringType(), "record_idx",
+                                   LongType(), props=False), records)
 
 
-def _feature_json_rows(feat_iter) -> list:
-    """(Geom | None, props) stream -> one JSON string per feature,
-    matching the `wkb string, props map<string,string>` from_json
-    schema every feature scan shares (pyspark's Arrow serializer
-    crashes on struct-typed UDF outputs — types.py metadata bug, see
-    PLANS.md — hence the JSON detour)."""
-    from ..kernel import wkb as kwkb
-
-    rows = []
-    for geom, props in feat_iter:
-        blob = (None if geom is None else
-                kwkb.encode(geom, dialect=kwkb.DIALECT_EWKB))
-        rows.append(json.dumps({
-            "wkb": None if blob is None else blob.hex(),
-            "props": {k: None if v is None else str(v)
-                      for k, v in props.items()}}))
-    return rows
-
-
-def _rows_to_features(pdf: pd.DataFrame, geom_col: str,
-                      prop_cols: list) -> list:
-    """pandas rows -> [(Geom | None, props)] for the fgb sinks —
-    column-wise iteration (iterrows is the slow path), numpy scalars
-    unwrapped, None/NaN props dropped (FlatGeobuf has no null
-    property encoding)."""
-    from geozero_spark.kernel import structrepr as ksr
-
-    series = [pdf[c] for c in prop_cols]
-    feats = []
-    for i, g in enumerate(pdf[geom_col]):
-        geom = None if g is None else ksr.from_struct(g)
-        props = {}
-        for c, s in zip(prop_cols, series):
-            v = s.iat[i]
-            if v is None or (isinstance(v, float) and v != v):
-                continue
-            props[c] = v.item() if hasattr(v, "item") else v
-        feats.append((geom, props))
-    return feats
+def _feature_rows(key, feat_iter) -> Iterator[tuple]:
+    """(Geom | None, props) stream -> (key, feature_idx, geom, props)
+    rows, props stringified; a file or split yielding zero features
+    (e.g. a bbox pruning everything, or an empty-but-valid container)
+    contributes ZERO rows, not a phantom all-NULL feature."""
+    for i, (geom, props) in enumerate(feat_iter):
+        yield (key, i, sr.to_struct(geom),
+               {k: None if v is None else str(v) for k, v in props.items()})
 
 
 def _feature_blob_scan(spark: SparkSession, path: str, glob: str,
                        feat_iter) -> DataFrame:
-    """Shared feature-file scan plumbing: binaryFile -> per-file
-    kernel iterator yielding (Geom|None, props dict) -> one JSON
-    string per feature (wkb hex + stringified props; pyspark's Arrow
-    serializer crashes on struct-typed UDF outputs — types.py metadata
-    bug, see PLANS.md) -> JVM posexplode + from_json/unhex -> decoded
-    geometry struct + props map. One row per feature:
+    """Shared feature-file scan: binaryFile -> per-file kernel iterator
+    yielding (Geom|None, props dict) -> one row per feature:
     (path, feature_idx, geom, props)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    @pandas_udf(ArrayType(StringType()))
-    def records(content: pd.Series) -> pd.Series:
-        out = [_feature_json_rows(feat_iter(bytes(buf)))
-               for buf in content]
-        return pd.Series(out, dtype=object)
-
-    dec = udfs.st_geomfromwkb(dialect="ewkb")
-    raw = (spark.read.format("binaryFile")
-           .option("pathGlobFilter", glob).load(path)
-           .select("path", records(F.col("content")).alias("_recs")))
-    # plain posexplode: a file yielding zero features (e.g. a bbox
-    # pruning everything, or an empty-but-valid container) contributes
-    # ZERO rows, not a phantom all-NULL feature
-    return (raw.select(
-        "path", F.posexplode("_recs").alias("feature_idx", "_j"))
-        .withColumn("_r", F.from_json(
-            "_j", "wkb string, props map<string,string>"))
-        .withColumn("geom", F.when(
-            F.col("_r.wkb").isNotNull(),
-            dec(F.unhex(F.col("_r.wkb")))))
-        .withColumn("props", F.col("_r.props"))
-        .drop("_j", "_r"))
+    files = (spark.read.format("binaryFile")
+             .option("pathGlobFilter", glob).load(path)
+             .select("path", "content"))
+    return _scan(files, _scan_schema("path", StringType(), "feature_idx",
+                                     IntegerType()),
+                 lambda row: _feature_rows(row["path"],
+                                           feat_iter(row["content"])))
 
 
 def read_fgb(spark: SparkSession, path: str,
@@ -418,9 +377,7 @@ def read_fgb_ranged(spark: SparkSession, url: str,
     .shx-based split scan). ``url``: http(s):// or a local path.
     Unindexed files degrade to a single sequential task. Output schema
     matches read_fgb: (split_id, feature_idx, geom, props)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
+    from ..kernel import bounds as kbounds
     from ..kernel import fgb as kfgb
     from ..kernel import fgbremote as kr
 
@@ -445,42 +402,94 @@ def read_fgb_ranged(spark: SparkSession, url: str,
                  for i in range(len(bounds_) - 1)]
         mode = "spans"
 
-    @pandas_udf(ArrayType(StringType()))
-    def fetch(payload: pd.Series) -> pd.Series:
-        from ..kernel import bounds as kbounds
+    def fetch(row):
         src = (kr.http_range_source(url) if remote
                else kr.file_range_source(url))
-        out = []
-        for p in payload:
-            spec = json.loads(p)
-            if mode == "hits":
-                # contiguous hit runs fetch as single ranges
-                it = kr.iter_hits(src, info, spec)
-            else:
-                it = kr.iter_span(src, info, spec[0], spec[1])
-                if bbox is not None:  # unindexed file: filter inline
-                    it = ((g, pr) for g, pr in it
-                          if g is not None
-                          and kbounds.intersects_bbox(g, *bbox))
-            out.append(_feature_json_rows(it))
-        return pd.Series(out, dtype=object)
+        spec = json.loads(row["payload"])
+        if mode == "hits":
+            # contiguous hit runs fetch as single ranges
+            it = kr.iter_hits(src, info, spec)
+        else:
+            it = kr.iter_span(src, info, spec[0], spec[1])
+            if bbox is not None:  # unindexed file: filter inline
+                it = ((g, pr) for g, pr in it
+                      if g is not None
+                      and kbounds.intersects_bbox(g, *bbox))
+        return _feature_rows(row["split_id"], it)
 
-    dec = udfs.st_geomfromwkb(dialect="ewkb")
     tdf = spark.createDataFrame(tasks, "split_id int, payload string") \
         .repartition(len(tasks), "split_id")
-    raw = tdf.select("split_id", fetch(F.col("payload")).alias("_recs"))
-    # plain posexplode: an empty split (e.g. a bbox with no hits) must
-    # contribute ZERO rows, not a phantom all-NULL feature
-    return (raw.select(
-        "split_id",
-        F.posexplode("_recs").alias("feature_idx", "_j"))
-        .withColumn("_r", F.from_json(
-            "_j", "wkb string, props map<string,string>"))
-        .withColumn("geom", F.when(
-            F.col("_r.wkb").isNotNull(),
-            dec(F.unhex(F.col("_r.wkb")))))
-        .withColumn("props", F.col("_r.props"))
-        .drop("_j", "_r"))
+    return _scan(tdf, _scan_schema("split_id", IntegerType(),
+                                   "feature_idx", IntegerType()), fetch)
+
+
+def features_of(rows: list, geom_col: str = "geom",
+                prop_cols: Optional[list] = None) -> list:
+    """Arrow rows (``udfs.pylist`` dicts) -> [(Geom | None,
+    props)] for the container sinks. With ``prop_cols`` those columns
+    are the properties and a NULL drops its key (FlatGeobuf and
+    GeoPackage have no null property encoding; ints stay ints). Without
+    it the ``props`` map column is the bag, kept as is."""
+    feats = []
+    for r in rows:
+        if prop_cols is None:
+            props = dict(r.get("props") or ())
+        else:
+            props = {c: r[c] for c in prop_cols if r[c] is not None}
+        feats.append((sr.from_struct(r[geom_col]), props))
+    return feats
+
+
+def write_container(df: DataFrame, path: str,
+                    encode: Callable[[list], tuple],
+                    part_ext: str | None = None) -> int:
+    """Shared sink for single-container formats: ``encode(rows) ->
+    (bytes, n)`` runs inside the executor over the Arrow rows, and the
+    result is written to a temp file then renamed, so a killed task
+    never leaves a half-written file. The rows never transit the
+    driver; on a real cluster ``path`` must be shared storage.
+
+    By default ONE task writes the whole frame to ``path`` (an empty
+    frame still writes a file) and the summed ``n`` is returned. With
+    ``part_ext`` every non-empty partition writes
+    ``path/part-NNNNN.<part_ext>`` and the number of files is
+    returned."""
+    if part_ext:
+        os.makedirs(path, exist_ok=True)
+
+    def write_part(batches: Iterator[pa.RecordBatch]
+                   ) -> Iterator[pa.RecordBatch]:
+        from pyspark import TaskContext
+
+        rows = [r for b in batches
+                for r in udfs.pylist(b.to_struct_array())]
+        out = path
+        if part_ext:
+            if not rows:
+                return
+            pid = TaskContext.get().partitionId()
+            out = os.path.join(path, f"part-{pid:05d}.{part_ext}")
+        buf, n = encode(rows)
+        tmp = out + ".tmp"
+        with open(tmp, "wb") as f:
+            f.write(buf)
+        os.replace(tmp, out)
+        yield pa.RecordBatch.from_pydict({"n": pa.array([n], pa.int64())})
+
+    if part_ext:
+        return df.mapInArrow(write_part, "n long").count()
+    return int(df.coalesce(1).mapInArrow(write_part, "n long")
+               .agg(F.sum("n")).collect()[0][0] or 0)
+
+
+def _fgb_encoder(geom_col, prop_cols, name, srid, index_node_size):
+    def encode(rows):
+        from geozero_spark.kernel import fgbwrite
+
+        feats = features_of(rows, geom_col, prop_cols)
+        return fgbwrite.encode(feats, name=name, srid=srid,
+                               index_node_size=index_node_size), len(feats)
+    return encode
 
 
 def write_fgb(df: DataFrame, path: str, geom_col: str = "geom",
@@ -494,37 +503,13 @@ def write_fgb(df: DataFrame, path: str, geom_col: str = "geom",
 
     A .fgb is a single sequential container (header + packed R-tree +
     features), so like the shapefile writer it is produced by ONE
-    executor task via mapInPandas over a coalesced partition — the
-    rows never transit the driver; on a real cluster ``path`` must be
-    shared storage. Temp-write + rename, so a killed task never leaves
-    a half-written file. For partition-parallel output write a
-    DIRECTORY of .fgb files (one per partition) with this same kernel
-    — read_fgb scans directories."""
-    import os
-
+    executor task over a coalesced partition (write_container). An
+    empty DataFrame writes a valid header-only file. For
+    partition-parallel output write a DIRECTORY of .fgb files (one per
+    partition) with this same kernel — read_fgb scans directories."""
     prop_cols = [c for c in df.columns if c != geom_col]
-
-    def write_part(batches: Iterator[pd.DataFrame]
-                   ) -> Iterator[pd.DataFrame]:
-        from geozero_spark.kernel import fgbwrite
-
-        got = list(batches)
-        # an EMPTY DataFrame is legal input: no Arrow batches arrive,
-        # and pd.concat([]) raises — a header-only .fgb is still a
-        # valid file
-        pdf = (pd.concat(got, ignore_index=True) if got
-               else pd.DataFrame(columns=[geom_col] + prop_cols))
-        feats = _rows_to_features(pdf, geom_col, prop_cols)
-        buf = fgbwrite.encode(feats, name=name, srid=srid,
-                              index_node_size=index_node_size)
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(buf)
-        os.replace(tmp, path)
-        yield pd.DataFrame({"n": [len(feats)]})
-
-    return int(df.coalesce(1).mapInPandas(write_part, "n long")
-               .agg(F.sum("n")).collect()[0][0] or 0)
+    return write_container(df, path, _fgb_encoder(
+        geom_col, prop_cols, name, srid, index_node_size))
 
 
 def write_fgb_dir(df: DataFrame, path: str, geom_col: str = "geom",
@@ -537,34 +522,27 @@ def write_fgb_dir(df: DataFrame, path: str, geom_col: str = "geom",
     consumes. Empty partitions write nothing. Returns the number of
     files written. On a real cluster ``path`` must be shared storage;
     repartition the input first to choose the file count/size."""
-    import os
-
-    os.makedirs(path, exist_ok=True)
     prop_cols = [c for c in df.columns if c != geom_col]
+    return write_container(df, path, _fgb_encoder(
+        geom_col, prop_cols, name, srid, index_node_size),
+        part_ext="fgb")
 
-    def write_part(batches: Iterator[pd.DataFrame]
-                   ) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
 
-        from geozero_spark.kernel import fgbwrite
+def _gpkg_encoder(geom_col, prop_cols, table, srid, max_rows=None):
+    def encode(rows):
+        from geozero_spark.kernel import gpkgwrite
 
-        got = list(batches)
-        if not got:
-            yield pd.DataFrame({"n": pd.Series([], dtype="int64")})
-            return
-        pdf = pd.concat(got, ignore_index=True)
-        feats = _rows_to_features(pdf, geom_col, prop_cols)
-        pid = TaskContext.get().partitionId()
-        out = os.path.join(path, f"part-{pid:05d}.fgb")
-        buf = fgbwrite.encode(feats, name=name, srid=srid,
-                              index_node_size=index_node_size)
-        tmp = out + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(buf)
-        os.replace(tmp, out)
-        yield pd.DataFrame({"n": [len(feats)]})
-
-    return df.mapInPandas(write_part, "n long").count()
+        if max_rows is not None and len(rows) > max_rows:
+            raise ValueError(
+                f"write_gpkg: {len(rows)} rows exceed the single-file "
+                f"bound max_rows={max_rows} (one task buffers the "
+                f"whole container) — use write_gpkg_dir for a "
+                f"partition-parallel directory sink, or raise "
+                f"max_rows knowingly")
+        feats = features_of(rows, geom_col, prop_cols)
+        return gpkgwrite.encode(feats, table=table, geom_col=geom_col,
+                                srid=srid), len(feats)
+    return encode
 
 
 def write_gpkg(df: DataFrame, path: str, geom_col: str = "geom",
@@ -574,9 +552,8 @@ def write_gpkg(df: DataFrame, path: str, geom_col: str = "geom",
     GeoPackage file (kernel/gpkgwrite.py — full GPKG core profile:
     application_id, srs registry, contents, geometry_columns, features
     with gpkg-dialect WKB). Like write_fgb, a .gpkg is a single
-    sequential container, so ONE executor task materializes it via
-    mapInPandas over a coalesced partition (temp-write + rename); on a
-    real cluster ``path`` must be shared storage. Output is valid per
+    sequential container, so ONE executor task materializes it over a
+    coalesced partition (write_container). Output is valid per
     sqlite3's integrity_check and readable by read_gpkg.
 
     The single task holds the whole file's pages in memory, so this is
@@ -586,35 +563,9 @@ def write_gpkg(df: DataFrame, path: str, geom_col: str = "geom",
     silently OOMing the executor. The data-scale path is
     ``write_gpkg_dir`` — one file per partition, bounded per-task
     memory, read back by read_gpkg's directory scan."""
-    import os
-
     prop_cols = [c for c in df.columns if c != geom_col]
-
-    def write_part(batches: Iterator[pd.DataFrame]
-                   ) -> Iterator[pd.DataFrame]:
-        from geozero_spark.kernel import gpkgwrite
-
-        got = list(batches)
-        pdf = (pd.concat(got, ignore_index=True) if got
-               else pd.DataFrame(columns=[geom_col] + prop_cols))
-        if len(pdf) > max_rows:
-            raise ValueError(
-                f"write_gpkg: {len(pdf)} rows exceed the single-file "
-                f"bound max_rows={max_rows} (one task buffers the "
-                f"whole container) — use write_gpkg_dir for a "
-                f"partition-parallel directory sink, or raise "
-                f"max_rows knowingly")
-        feats = _rows_to_features(pdf, geom_col, prop_cols)
-        buf = gpkgwrite.encode(feats, table=table, geom_col=geom_col,
-                               srid=srid)
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(buf)
-        os.replace(tmp, path)
-        yield pd.DataFrame({"n": [len(feats)]})
-
-    return int(df.coalesce(1).mapInPandas(write_part, "n long")
-               .agg(F.sum("n")).collect()[0][0] or 0)
+    return write_container(df, path, _gpkg_encoder(
+        geom_col, prop_cols, table, srid, max_rows))
 
 
 def write_gpkg_dir(df: DataFrame, path: str, geom_col: str = "geom",
@@ -627,34 +578,9 @@ def write_gpkg_dir(df: DataFrame, path: str, geom_col: str = "geom",
     file count/size). Empty partitions write nothing. Returns the
     number of files written. On a real cluster ``path`` must be shared
     storage."""
-    import os
-
-    os.makedirs(path, exist_ok=True)
     prop_cols = [c for c in df.columns if c != geom_col]
-
-    def write_part(batches: Iterator[pd.DataFrame]
-                   ) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        from geozero_spark.kernel import gpkgwrite
-
-        got = list(batches)
-        if not got:
-            yield pd.DataFrame({"n": pd.Series([], dtype="int64")})
-            return
-        pdf = pd.concat(got, ignore_index=True)
-        feats = _rows_to_features(pdf, geom_col, prop_cols)
-        pid = TaskContext.get().partitionId()
-        out = os.path.join(path, f"part-{pid:05d}.gpkg")
-        buf = gpkgwrite.encode(feats, table=table, geom_col=geom_col,
-                               srid=srid)
-        tmp = out + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(buf)
-        os.replace(tmp, out)
-        yield pd.DataFrame({"n": [len(feats)]})
-
-    return df.mapInPandas(write_part, "n long").count()
+    return write_container(df, path, _gpkg_encoder(
+        geom_col, prop_cols, table, srid), part_ext="gpkg")
 
 
 def read_gpkg(spark: SparkSession, path: str,

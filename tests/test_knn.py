@@ -182,3 +182,32 @@ def test_kernel_exclude_self_duplicate_keys_and_small_nt():
     got = _run_kernel(qrows, trows, 3, exclude_self=False)
     assert got == [(100, 4, 500000), (100, 8, 500000),
                    (100, 17, 500000)]
+
+
+def test_knn_join_output_not_left_cached(spark):
+    """knn_join materializes its settled union as a local checkpoint:
+    the caller gets no cached DataFrame it never asked for, the
+    CacheManager holds no new entry, and a second identical call runs
+    its own jobs instead of being served from the first call's cache."""
+    rng = np.random.default_rng(11)
+    trows = [(int(i), int(x), int(y)) for i, (x, y) in enumerate(zip(
+        rng.integers(-18000, 18000, 300), rng.integers(-9000, 9000, 300)))]
+    q = spark.createDataFrame(trows[::10], "q_id long, qx long, qy long")
+    t = spark.createDataFrame(trows, "t_id long, tx long, ty long")
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    sc = spark.sparkContext
+    n_cached = cm.cachedData().size()
+
+    first = knn_join(q, t, k=3, res=4)
+    assert not first.is_cached
+    assert cm.cachedData().size() == n_cached
+
+    sc.setJobGroup("knn_second_call", "second identical knn_join")
+    try:
+        second = knn_join(q, t, k=3, res=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("knn_second_call")
+    plan = second._jdf.queryExecution().withCachedData().toString()
+    assert "InMemoryRelation" not in plan
+    assert sorted(first.collect()) == sorted(second.collect())

@@ -224,6 +224,14 @@ def test_pair_cosine_rejects_null_or_ragged_vectors(bad):
 
 
 @pytest.mark.parametrize("bad", sorted(_BAD_VECS))
+def test_signature_rejects_null_or_ragged_vectors(spark, bad):
+    sig = S.signature_udf(3, bits=4, bands=2)
+    with pytest.raises(PythonException) as ei:
+        _vecs_df(spark, "t_id", "tvec", bad).select(sig("tvec")).collect()
+    _assert_vector_error(ei.value, "tvec")
+
+
+@pytest.mark.parametrize("bad", sorted(_BAD_VECS))
 def test_cosine_topk_rejects_null_or_ragged_vectors(spark, bad):
     # targets are checked in the Arrow scorer on the executors
     with pytest.raises(PythonException) as ei:

@@ -368,13 +368,13 @@ def test_read_shp_scan_mixed(spark):
 
 def test_jvm_point_parse_matches_kernel(spark):
     """cols.point_struct_from_wkt_jvm must produce the same struct
-    values as the kernel pandas codec for simple 2D POINTs, and NULL
-    for anything else."""
+    values as the kernel codec (st_geomfromwkt) for simple 2D POINTs,
+    and NULL for anything else."""
     from geozero_spark.functions import cols, udfs
     texts = ["POINT(1300 6700)", "POINT(-17999 -8999)", "POINT(0 0)",
              "LINESTRING(0 0,1 1)", "", "POINT(1 2 3)"]
     df = spark.createDataFrame([(t,) for t in texts], "wkt string")
-    dec = udfs.st_pointfromtext()
+    dec = udfs.st_geomfromwkt()
     out = df.select(
         "wkt",
         cols.point_struct_from_wkt_jvm(F.col("wkt")).alias("jvm"),
