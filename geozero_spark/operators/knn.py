@@ -80,8 +80,12 @@ def auto_res(n_targets: int, per_cell: int = 2000,
     return max(2, min(12, round(math.log2(cells) / 2)))
 
 
-def _select_topk(d2, kk: int, big: int):
-    """Exact per-row top-k selection by (dist2, target-column-order).
+def _select_topk(d2, kk: int, big):
+    """Exact per-row top-k selection by (key, column order) — the one
+    int64/float64 selector (kNN distances here; the cosine sort keys of
+    similarity.cosine_topk and IVF's _assign). ``big`` is the exclusion
+    filler (int64 max / +inf): filler entries may fill a row's tail in
+    arbitrary column order, so callers drop them by key.
 
     Columns MUST be pre-sorted by target key ascending. Fast path:
     argpartition + stable sort of the kk-subset. argpartition picks an
@@ -94,7 +98,7 @@ def _select_topk(d2, kk: int, big: int):
     narrow-coordinate kernel in _local_topk_arrays therefore uses the
     packed uint64 (dist2, column) selection instead and never calls
     this; this path remains for out-of-envelope int64 coordinates.
-    Returns (sel, d2o): column indices and distances, each (rows, kk)."""
+    Returns (sel, d2o): column indices and keys, each (rows, kk)."""
     import numpy as np
 
     part = np.argpartition(d2, kk - 1, axis=1)[:, :kk]

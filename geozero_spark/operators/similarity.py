@@ -1,16 +1,20 @@
 """Similarity search over embedding columns (array<float>).
 
 - ``cosine_topk``: brute-force exact top-k — the correctness baseline.
-  Dot/norm are LEFT FOLDS over the array (``aggregate``), so the oracle
-  (DuckDB ``list_reduce`` with the same fold order) produces the exact
-  same doubles. Queries are broadcast; targets stream by — no shuffle
-  of the big side until the final per-query top-k window over k*|Q|
-  candidate rows.
-- ``bit_lsh_buckets`` / ``ann_topk``: the scale path — sign-random-
+  Every cosine here is built from ONE numpy fold, ``_fold_dot``: an
+  ascending-index left fold of IEEE-double products from 0.0, the op
+  order of the DuckDB oracle's ``list_reduce``, so both engines produce
+  the exact same doubles. Queries are broadcast; targets stream by —
+  no shuffle of the big side until the final per-query top-k window
+  over k*|Q| candidate rows.
+- ``signature_udf`` / ``ann_topk``: the scale path — sign-random-
   projection bit signatures (deterministic hyperplanes derived from a
   seed), banded into buckets; candidates are verified with the exact
   cosine. Recall is tunable via bits/bands; at 100 TB the bucket join
   replaces the |Q| x |T| candidate blow-up with bucket-local work.
+- ``ivf_fit`` / ``ivf_topk``: IVF-flat — k-means cells as the
+  candidate generator, reranked by the same exact-cosine tail as
+  ``ann_topk`` (``_rerank``).
 """
 
 from __future__ import annotations
@@ -21,18 +25,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, LongType
 
-_DOT = ("aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
-        "CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
-_NORM2 = ("aggregate({a}, CAST(0.0 AS DOUBLE), (acc, v) -> acc + "
-          "CAST(v AS DOUBLE) * CAST(v AS DOUBLE))")
-
-
-def dot_expr(a: str, b: str) -> str:
-    return _DOT.format(a=a, b=b)
-
-
-def norm2_expr(a: str) -> str:
-    return _NORM2.format(a=a)
+from .knn import _select_topk
 
 
 def _vec_matrix(col: pa.ListArray, name: str,
@@ -56,34 +49,44 @@ def _vec_matrix(col: pa.ListArray, name: str,
     return np.asarray(col.flatten(), dtype=np.float64).reshape(n, dim or 0)
 
 
-def _fold_norm2(mat: np.ndarray) -> np.ndarray:
-    """Per-row left fold of squares in ascending index order — the
-    exact IEEE-double op sequence of norm2_expr (acc + v*v per j), so
-    the result is bit-identical to the SQL/DuckDB fold."""
-    acc = np.zeros(len(mat), dtype=np.float64)
-    for j in range(mat.shape[1]):
-        acc += mat[:, j] * mat[:, j]
-    return acc
+def _fold_dot(a: np.ndarray, b: np.ndarray,
+              out: np.ndarray | None = None) -> np.ndarray:
+    """``sum_j a[..., j] * b[..., j]`` over the broadcast leading shapes
+    of ``a`` and ``b`` — the ONE exact-cosine fold (dot products and
+    squared norms alike). Ascending j from 0.0 with separate multiply
+    and add ufuncs (no einsum/dot/matmul: reassociation or FMA breaks
+    bit-parity): the exact IEEE-double op sequence of the SQL left fold
+    ``aggregate(zip_with(a, b, (x, y) -> x * y), 0.0, (acc, v) -> acc +
+    v)`` and of the DuckDB oracle's ``list_reduce``. ``out`` (zeroed
+    here) lets a chunked caller reuse its scratch buffer."""
+    if out is None:
+        out = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    else:
+        out.fill(0.0)
+    for j in range(a.shape[-1]):
+        out += a[..., j] * b[..., j]
+    return out
 
 
-def _select_topk_key(key: np.ndarray, kk: int, big: float):
-    """Exact per-row top-k selection by (key ASC, column-order ASC) for
-    float keys; columns must be pre-sorted by the tie-break order.
-    Entries at ``big`` are exclusion filler (mirrors knn._select_topk).
-    Returns (sel, keyo)."""
-    part = np.argpartition(key, kk - 1, axis=1)[:, :kk]
-    part.sort(axis=1)
-    keys = np.take_along_axis(key, part, axis=1)
-    order = np.argsort(keys, axis=1, kind="stable")
-    sel = np.take_along_axis(part, order, axis=1)
-    keyo = np.take_along_axis(keys, order, axis=1)
-    kth = keyo[:, -1]
-    bad = (kth < big) & ((key <= kth[:, None]).sum(axis=1) > kk)
-    for r in np.nonzero(bad)[0]:
-        full = np.argsort(key[r], kind="stable")[:kk]
-        sel[r] = full
-        keyo[r] = key[r][full]
-    return sel, keyo
+def _cos_key(cos: np.ndarray, out: np.ndarray | None = None) -> np.ndarray:
+    """Ascending sort key of Spark's ``cosine DESC`` (NaN greatest, so
+    first): -cos with NaN -> -inf. cos = +/-inf cannot occur for finite
+    inputs (a zero norm zeroes the dot too, giving NaN), so -inf keys
+    are exactly the NaN rows and +inf is free for exclusion filler."""
+    key = np.negative(cos, out=out)
+    np.copyto(key, -np.inf, where=np.isnan(key))
+    return key
+
+
+def _rank_topk(scored: DataFrame, query_key: str, target_key: str,
+               k: int) -> DataFrame:
+    """The final per-query window of every operator here: rank by
+    (cosine DESC NaN-first, target_key ASC), keep rank <= k."""
+    w = Window.partitionBy(query_key).orderBy(
+        F.col("cosine").desc(), F.col(target_key))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select(query_key, target_key, "cosine", "rank"))
 
 
 def cosine_topk(queries: DataFrame, targets: DataFrame, k: int,
@@ -96,14 +99,12 @@ def cosine_topk(queries: DataFrame, targets: DataFrame, k: int,
     query sets); each target partition computes a numpy partial top-k,
     so the big side is never shuffled and only |partitions| * |Q| * k
     partial rows reach the final per-query window. The per-pair double
-    is BIT-IDENTICAL to the old SQL higher-order-function fold (and
-    hence the DuckDB oracle): products and the ascending-index
-    accumulation run in the same IEEE-double order (``acc += x_j*y_j``
-    per j — numpy issues separate multiply and add ufuncs, no FMA),
-    and sqrt/multiply/divide follow the same op order as
-    ``dot / (sqrt(qn) * sqrt(tn))``. The interpreted fold the SQL form
-    pays (higher-order functions run outside codegen) made the old
-    |Q| x |T| crossJoin the suite's slowest non-kNN query."""
+    is BIT-IDENTICAL to the DuckDB oracle: dot and norms are
+    ``_fold_dot`` (the oracle's fold order), and sqrt/multiply/divide
+    follow the same op order as ``dot / (sqrt(qn) * sqrt(tn))``. The
+    interpreted fold the old SQL form paid (higher-order functions run
+    outside codegen) made its |Q| x |T| crossJoin the suite's slowest
+    non-kNN query."""
     qrows = queries.select(query_key, qvec).collect()
     spark = queries.sparkSession
     if not qrows:
@@ -113,7 +114,7 @@ def cosine_topk(queries: DataFrame, targets: DataFrame, k: int,
     qid = np.array([r[0] for r in qrows], dtype=np.int64)
     qmat = _vec_matrix(pa.array([r[1] for r in qrows],
                                 pa.list_(pa.float64())), qvec)
-    sqq = np.sqrt(_fold_norm2(qmat))
+    sqq = np.sqrt(_fold_dot(qmat, qmat))
     bc = spark.sparkContext.broadcast((qid, qmat, sqq))
 
     out_schema = f"{query_key} long, {target_key} long, cosine double"
@@ -133,9 +134,9 @@ def cosine_topk(queries: DataFrame, targets: DataFrame, k: int,
         # (cosine DESC, target_key ASC) order fully vectorized
         ts = np.argsort(tid, kind="stable")
         tid, tmat = tid[ts], tmat[ts]
-        sqt = np.sqrt(_fold_norm2(tmat))
+        sqt = np.sqrt(_fold_dot(tmat, tmat))
         nt = len(tid)
-        big = np.inf
+        kk = min(kq, nt)
         out_q, out_t, out_c = [], [], []
         chunk = min(nq, max(1, (1 << 20) // max(nt, 1)))
         acc = np.empty((chunk, nt), np.float64)
@@ -143,29 +144,17 @@ def cosine_topk(queries: DataFrame, targets: DataFrame, k: int,
         for s in range(0, nq, chunk):
             e = min(s + chunk, nq)
             m = e - s
-            a = acc[:m]
-            a.fill(0.0)
-            for j in range(dim):
-                # ascending-j accumulation == the SQL left fold,
-                # element by element
-                a += qmat[s:e, j:j + 1] * tmat[:, j][None, :]
-            denom = sqq[s:e, None] * sqt[None, :]
-            cos = np.divide(a, denom, out=a)
-            # ordering key: cosine DESC with NaN FIRST (Spark treats
-            # NaN as greatest). cos = +/-inf cannot occur for finite
-            # inputs (denom == 0 implies an all-zero vector, whose dot
-            # is 0 -> NaN), so -inf keys are exactly the NaN rows and
-            # +inf keys are exclusion filler only.
-            kb = np.negative(cos, out=key[:m])
-            np.copyto(kb, -np.inf, where=np.isnan(kb))
+            a = _fold_dot(qmat[s:e, None], tmat[None], out=acc[:m])
+            with np.errstate(invalid="ignore"):
+                cos = np.divide(a, sqq[s:e, None] * sqt[None, :], out=a)
+            kb = _cos_key(cos, out=key[:m])
             if exclude_self:
                 lo = np.searchsorted(tid, qid[s:e], side="left")
                 hi = np.searchsorted(tid, qid[s:e], side="right")
                 for r in np.nonzero(hi > lo)[0]:
-                    kb[r, lo[r]:hi[r]] = big
-            kk = min(kq, nt)
-            sel, keyo = _select_topk_key(kb, kk, big)
-            keep = (keyo != big).ravel()
+                    kb[r, lo[r]:hi[r]] = np.inf
+            sel, keyo = _select_topk(kb, kk, np.inf)
+            keep = (keyo != np.inf).ravel()
             cosv = np.take_along_axis(cos, sel, axis=1).ravel()[keep]
             out_q.append(np.repeat(qid[s:e], kk)[keep])
             out_t.append(tid[sel.ravel()[keep]])
@@ -179,23 +168,18 @@ def cosine_topk(queries: DataFrame, targets: DataFrame, k: int,
     from ..functions import ensure_width
     partials = ensure_width(targets.select(target_key, tvec)) \
         .mapInArrow(local_topk, out_schema)
-    w = Window.partitionBy(query_key).orderBy(
-        F.col("cosine").desc(), F.col(target_key))
-    return (partials.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(query_key, target_key, "cosine", "rank"))
+    return _rank_topk(partials, query_key, target_key, k)
 
 
 def _pair_cosine_fn(qkey: str, tkey: str, qvec: str, tvec: str,
                     local_k: int | None = None):
     """mapInArrow scorer for candidate pairs: emits (qkey, tkey,
-    cosine) where cosine is BIT-IDENTICAL to the SQL form
-    ``dot / (sqrt(qn) * sqrt(tn))`` with left-fold dot/norms: the
-    ascending-index ``acc += x_j*y_j`` loop runs separate IEEE-double
-    multiply and add ufuncs (no FMA, no reassociation), float->double
-    widening is exact, and numpy sqrt/divide are the same correctly-
-    rounded IEEE ops the JVM uses. Vectors arrive as one contiguous
-    Arrow values buffer (zero row-wise Python).
+    cosine) where cosine is BIT-IDENTICAL to the oracle's
+    ``dot / (sqrt(qn) * sqrt(tn))``: dot and both norms are
+    ``_fold_dot``, float->double widening is exact, and numpy
+    sqrt/divide are the same correctly-rounded IEEE ops the JVM and
+    DuckDB use. Vectors arrive as one contiguous Arrow values buffer
+    (zero row-wise Python).
 
     ``local_k``: emit only each query's local_k best pairs OF THIS
     TASK by (cosine DESC NaN-first, tkey ASC) — the same TOTAL order
@@ -211,18 +195,9 @@ def _pair_cosine_fn(qkey: str, tkey: str, qvec: str, tvec: str,
                 continue
             am = _vec_matrix(b.column(qvec), qvec)
             bm = _vec_matrix(b.column(tvec), tvec, am.shape[1])
-            dim = am.shape[1]
-            dot = np.zeros(n, np.float64)
-            qn = np.zeros(n, np.float64)
-            tn = np.zeros(n, np.float64)
-            for j in range(dim):
-                aj = am[:, j]
-                bj = bm[:, j]
-                dot += aj * bj
-                qn += aj * aj
-                tn += bj * bj
-            denom = np.sqrt(qn) * np.sqrt(tn)
-            cos = dot / denom
+            with np.errstate(invalid="ignore"):
+                cos = _fold_dot(am, bm) / (np.sqrt(_fold_dot(am, am))
+                                           * np.sqrt(_fold_dot(bm, bm)))
             qs = b.column(b.schema.get_field_index(qkey))
             ts = b.column(b.schema.get_field_index(tkey))
             if local_k is None:
@@ -237,12 +212,7 @@ def _pair_cosine_fn(qkey: str, tkey: str, qvec: str, tvec: str,
             qa = np.concatenate(acc_q)
             ta = np.concatenate(acc_t)
             ca = np.concatenate(acc_c)
-            # cos = +/-inf cannot occur for finite inputs (zero norm
-            # implies dot == 0 -> NaN), so mapping NaN below every
-            # finite key reproduces Spark's NaN-greatest DESC order
-            key = np.negative(ca)
-            np.copyto(key, -np.inf, where=np.isnan(key))
-            order = np.lexsort((ta, key, qa))
+            order = np.lexsort((ta, _cos_key(ca), qa))
             qs_sorted = qa[order]
             starts = np.nonzero(np.r_[True, qs_sorted[1:]
                                       != qs_sorted[:-1]])[0]
@@ -421,23 +391,25 @@ def ann_topk(queries: DataFrame, targets: DataFrame, k: int, dim: int,
     if exclude_self:
         cand = cand.where(F.col(query_key) != F.col(target_key))
     cand = cand.dropDuplicates([query_key, target_key])
-    # re-attach payloads once, per side, AFTER the pair set is final;
-    # dot and both norms are numpy exact folds over the pair batch
-    # (bit-identical to the old interpreted SQL folds — same IEEE op
-    # order, see _pair_cosine_fn), computed in the join's own stage so
-    # the vectors never cross another exchange: the window shuffles
-    # only (q, t, cosine)
+    return _rerank(cand, qk, tk, k, query_key, target_key, qvec, tvec)
+
+
+def _rerank(cand: DataFrame, qk: DataFrame, tk: DataFrame, k: int,
+            query_key: str, target_key: str, qvec: str,
+            tvec: str) -> DataFrame:
+    """Exact-cosine top-k over SLIM (query_key, target_key) candidate
+    pairs — the keys-first tail of ann_topk and ivf_topk. The payloads
+    (``qk`` = (query_key, qvec), ``tk`` = (target_key, tvec)) are
+    re-attached once, per side, AFTER the pair set is final, and scored
+    by ``_pair_cosine_fn`` in the join's own stage with local top-k
+    preselection, so the vectors never cross another exchange: the
+    final window shuffles only (q, t, cosine)."""
     joined = (cand.join(tk, on=target_key).join(qk, on=query_key)
               .select(query_key, target_key, qvec, tvec))
     scored = joined.mapInArrow(
-        _pair_cosine_fn(query_key, target_key, qvec, tvec,
-                        local_k=k),
+        _pair_cosine_fn(query_key, target_key, qvec, tvec, local_k=k),
         f"{query_key} long, {target_key} long, cosine double")
-    w = Window.partitionBy(query_key).orderBy(
-        F.col("cosine").desc(), F.col(target_key))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(query_key, target_key, "cosine", "rank"))
+    return _rank_topk(scored, query_key, target_key, k)
 
 
 # ---------------------------------------------------------------------------
@@ -459,16 +431,8 @@ def ann_topk(queries: DataFrame, targets: DataFrame, k: int, dim: int,
 #   ascending target_key order from 0.0 (array_sort(collect_list) +
 #   aggregate here, list(val ORDER BY t_id) + list_reduce there), so
 #   float addition order is bit-identical;
-# - probe/rerank reuse the exact-cosine fold of cosine_topk.
-
-
-def _cos_vs_centroid(vec: str, cvec: str) -> str:
-    dot = (f"aggregate(zip_with({vec}, {cvec}, (x, y) -> "
-           f"CAST(x AS DOUBLE) * y), CAST(0.0 AS DOUBLE), "
-           f"(acc, v) -> acc + v)")
-    cn = (f"aggregate({cvec}, CAST(0.0 AS DOUBLE), "
-          f"(acc, v) -> acc + v * v)")
-    return f"{dot} / (sqrt({norm2_expr(vec)}) * sqrt({cn}))"
+# - assignment, probe and rerank all score with ``_fold_dot``; the
+#   rerank is ann_topk's keys-first tail (``_rerank``).
 
 
 def _assign(vectors: DataFrame, centroids: DataFrame, key: str,
@@ -476,35 +440,22 @@ def _assign(vectors: DataFrame, centroids: DataFrame, key: str,
     """(key, cid) of the `topn` nearest centroids by cosine, ties by
     cid. One map-only Arrow pass: the centroids are driver-bounded (k
     rows — the same bound their broadcast already implied), collected
-    once and closed over, so the old crossJoin's k-fold candidate
-    blowup, the per-pair interpreted higher-order folds (zip_with/
-    aggregate run OUTSIDE codegen), and the row_number window's
-    (key)-exchange all disappear from the plan.
+    once and closed over: no crossJoin, no interpreted higher-order
+    folds, no row_number window.
 
-    The per-(vector, centroid) cosine is BIT-IDENTICAL to the SQL form
-    ``_cos_vs_centroid`` (which the DuckDB oracle mirrors): ascending-
-    index ``acc += x_j*y_j`` folds from 0.0 with separate IEEE-double
-    multiply and add ufuncs (no FMA, no reassociation), float->double
-    widening exact, denom = sqrt(qn)*sqrt(cn) then divide. Selection
-    reproduces Spark's (cos DESC NaN-first, cid ASC) total order via
-    key=-cos with NaN->-inf and a stable argsort over cid-ascending
-    centroid columns (+/-inf cosines are impossible for finite
-    inputs: a zero norm zeroes the dot too, giving NaN — which the
-    old SQL form could not produce at all: ANSI mode raised
-    DIVIDE_BY_ZERO on the 0/0, so zero-norm vectors crashed the
-    query; here they deterministically take the lowest cid). Pinned
-    against the SQL form in tests/test_similarity.py."""
+    The (vector, centroid) cosine matrix is ``_fold_dot(x[:, None],
+    cmat[None])`` over ``sqrt(qn) * sqrt(cn)`` — BIT-IDENTICAL to the
+    Spark SQL fold the DuckDB oracle mirrors (pinned row for row in
+    tests/test_similarity.py). ``knn._select_topk`` over ``_cos_key``
+    and cid-ascending centroid columns reproduces Spark's (cos DESC
+    NaN-first, cid ASC) order, so a zero-norm vector (NaN against
+    every centroid) deterministically takes the lowest cids."""
     crows = sorted((r["cid"], list(r["cvec"]))
                    for r in centroids.select("cid", "cvec").collect())
     cids = np.array([c for c, _ in crows], dtype=np.int64)
     cmat = np.array([v for _, v in crows], dtype=np.float64)  # (k, dim)
-    kc = len(cids)
-    cn = np.zeros(kc, np.float64)
-    for j in range(cmat.shape[1]):
-        cj = cmat[:, j]
-        cn += cj * cj
-    croot = np.sqrt(cn)
-    nsel = min(topn, kc)
+    croot = np.sqrt(_fold_dot(cmat, cmat))
+    nsel = min(topn, len(cids))
 
     def f(it):
         for b in it:
@@ -512,23 +463,10 @@ def _assign(vectors: DataFrame, centroids: DataFrame, key: str,
             if not n:
                 continue
             x = _vec_matrix(b.column(vec), vec, cmat.shape[1])
-            dim = x.shape[1]
-            qn = np.zeros(n, np.float64)
-            for j in range(dim):
-                xj = x[:, j]
-                qn += xj * xj
-            qroot = np.sqrt(qn)
-            cos = np.empty((n, kc), np.float64)
-            for ci in range(kc):
-                dot = np.zeros(n, np.float64)
-                cv = cmat[ci]
-                for j in range(dim):
-                    dot += x[:, j] * cv[j]
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    cos[:, ci] = dot / (qroot * croot[ci])
-            sortkey = np.negative(cos)
-            np.copyto(sortkey, -np.inf, where=np.isnan(sortkey))
-            order = np.argsort(sortkey, axis=1, kind="stable")[:, :nsel]
+            denom = np.sqrt(_fold_dot(x, x))[:, None] * croot[None, :]
+            with np.errstate(invalid="ignore", divide="ignore"):
+                cos = _fold_dot(x[:, None], cmat[None]) / denom
+            order, _ = _select_topk(_cos_key(cos), nsel, np.inf)
             keys = b.column(b.schema.get_field_index(key))
             out_keys = keys.take(
                 pa.array(np.repeat(np.arange(n, dtype=np.int64), nsel)))
@@ -632,9 +570,11 @@ def ivf_topk(queries: DataFrame, targets: DataFrame, k: int,
              exclude_self: bool = True, fast: bool = False) -> DataFrame:
     """IVF-flat approximate top-k: (query_key, target_key, cosine,
     rank). Candidates = vectors whose cluster is among the query's
-    `probe` nearest centroids; rerank is the exact cosine fold.
-    ``fast`` selects ivf_fit's avg()-based centroid recompute (the
-    scale mode — see ivf_fit)."""
+    `probe` nearest centroids, as slim (query_key, target_key) pairs;
+    the rerank is ann_topk's exact-cosine tail (``_rerank``), so a
+    zero-norm vector gets NaN-first rows exactly as in cosine_topk and
+    ann_topk. ``fast`` selects ivf_fit's avg()-based centroid
+    recompute (the scale mode — see ivf_fit)."""
     c = ivf_fit(targets, k_clusters, iters=iters,
                 target_key=target_key, tvec=tvec, fast=fast)
     # materialize the <= k_clusters centroid rows once: c is referenced
@@ -647,13 +587,6 @@ def ivf_topk(queries: DataFrame, targets: DataFrame, k: int,
     cand = q_probe.join(t_assign, on="cid").select(query_key, target_key)
     if exclude_self:
         cand = cand.where(F.col(query_key) != F.col(target_key))
-    qn = queries.withColumn("_qn", F.expr(norm2_expr(qvec)))
-    tn = targets.withColumn("_tn", F.expr(norm2_expr(tvec)))
-    scored = (cand.join(qn, on=query_key).join(tn, on=target_key)
-              .withColumn("cosine", F.expr(
-                  f"{dot_expr(qvec, tvec)} / (sqrt(_qn) * sqrt(_tn))")))
-    w = Window.partitionBy(query_key).orderBy(
-        F.col("cosine").desc(), F.col(target_key))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(query_key, target_key, "cosine", "rank"))
+    return _rerank(cand, queries.select(query_key, qvec),
+                   targets.select(target_key, tvec), k, query_key,
+                   target_key, qvec, tvec)

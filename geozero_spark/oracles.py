@@ -407,8 +407,10 @@ SELECT q_id, t_id, cosine, rank FROM lsh_topk
 """
 
 def _cos_vs_cvec(vside: str, cside: str) -> str:
-    """Mirror of similarity._cos_vs_centroid: dot/norm folds in array
-    order from 0.0, so the doubles are bit-identical."""
+    """Mirror of the Spark SQL fold tests/test_similarity.py
+    ``_cos_vs_centroid`` (the reference similarity._assign is pinned
+    against): dot/norm folds in array order from 0.0, so the doubles
+    are bit-identical."""
     dot = (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
            f"list_transform(range(1, length({vside}.embedding) + 1), "
            f"i -> CAST({vside}.embedding[i] AS DOUBLE) * "

@@ -83,8 +83,10 @@ def test_knn_exclude_self_and_ties(spark):
 def test_knn_boundary_tie_explosion(spark):
     """More than k targets tie EXACTLY at the k-th distance (a ring of
     equidistant points): argpartition alone picks an arbitrary subset,
-    so this pins the _select_topk tie widening — the winners must be
-    the lowest target keys at the tied distance, on BOTH paths."""
+    so the winners must still be the lowest target keys at the tied
+    distance, on BOTH paths. These small coordinates run the packed
+    uint64 (dist2, column) key; _select_topk's stable-sort widening is
+    pinned directly by test_select_topk_matches_stable_argsort."""
     # query at origin; 6 targets all at dist2 = 100^2, keys shuffled
     qrows = [(1, 0, 0)]
     trows = [(37, 100, 0), (12, -100, 0), (99, 0, 100), (5, 0, -100),
@@ -182,6 +184,39 @@ def test_kernel_exclude_self_duplicate_keys_and_small_nt():
     got = _run_kernel(qrows, trows, 3, exclude_self=False)
     assert got == [(100, 4, 500000), (100, 8, 500000),
                    (100, 17, 500000)]
+
+
+@pytest.mark.parametrize("dtype,big", [
+    (np.int64, np.iinfo(np.int64).max), (np.float64, np.inf)],
+    ids=["int64", "float64"])
+def test_select_topk_matches_stable_argsort(dtype, big):
+    """knn._select_topk — the one int64/float64 selector (int64 kNN
+    distances off the packed envelope, the -cos keys of cosine_topk and
+    IVF _assign) — equals a full stable argsort: (key ASC, column ASC).
+    Rows carry more than kk ties at the kk-th key (argpartition's
+    arbitrary subset must be widened) and filler entries at ``big``,
+    whose own column order is unspecified, so callers drop them by key
+    and only the real entries are compared column for column."""
+    from geozero_spark.operators.knn import _select_topk
+
+    rng = np.random.default_rng(5)
+    kk = 4
+    key = rng.integers(-50, 50, size=(6, 12)).astype(dtype)
+    key[0, [2, 5, 7, 9, 11]] = -60  # five ties for four places
+    key[1] = 3  # the whole row ties
+    key[2, [0, 3, 4]] = -70  # three real entries, then ties at 3
+    key[2, [1, 2, 5, 6, 7, 8, 9, 10, 11]] = 3
+    key[3, 1:] = big  # one real entry, the rest filler
+    key[4] = big  # all filler
+    key[5, [4, 6, 8]] = -80  # tie exactly filling the kk places
+    key[5, 10] = -80
+    sel, keyo = _select_topk(key, kk, big)
+    want = np.argsort(key, axis=1, kind="stable")[:, :kk]
+    assert keyo.dtype == key.dtype
+    assert (keyo == np.take_along_axis(key, want, axis=1)).all()
+    real = keyo != big
+    assert (sel[real] == want[real]).all()
+    assert real.sum(axis=1).tolist() == [4, 4, 4, 1, 0, 4]
 
 
 def test_knn_join_output_not_left_cached(spark):

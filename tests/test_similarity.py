@@ -1,6 +1,7 @@
 """ANN quality: recall floor of the banded-LSH path vs exact cosine,
 plus parity of the numpy fast signature path with the portable one."""
 
+import numpy as np
 import pyarrow as pa
 import pytest
 from pyspark.errors import PythonException
@@ -118,8 +119,22 @@ def test_ivf_fast_matches_portable_assignments(spark):
     assert m_p == m_f
 
 
+def _cos_vs_centroid(vec: str, cvec: str) -> str:
+    """Spark SQL reference for _assign's cosine: dot and norms as
+    ``aggregate`` left folds in array order from 0.0 — the form the
+    DuckDB oracle (oracles._cos_vs_cvec) mirrors with list_reduce."""
+    dot = (f"aggregate(zip_with({vec}, {cvec}, (x, y) -> "
+           f"CAST(x AS DOUBLE) * y), CAST(0.0 AS DOUBLE), "
+           f"(acc, v) -> acc + v)")
+    vn = (f"aggregate({vec}, CAST(0.0 AS DOUBLE), (acc, v) -> acc + "
+          f"CAST(v AS DOUBLE) * CAST(v AS DOUBLE))")
+    cn = (f"aggregate({cvec}, CAST(0.0 AS DOUBLE), "
+          f"(acc, v) -> acc + v * v)")
+    return f"{dot} / (sqrt({vn}) * sqrt({cn}))"
+
+
 def test_assign_matches_sql_fold_bitwise(spark):
-    """The numpy _assign must reproduce the old SQL form — crossJoin +
+    """The numpy _assign must reproduce the SQL form — crossJoin +
     _cos_vs_centroid interpreted folds + (cos DESC, cid) row_number —
     EXACTLY, row for row, because the ann_ivf oracle mirrors that SQL.
     Covers topn=1 and topn=3 on the sf corpus. A zero-norm vector is
@@ -143,7 +158,7 @@ def test_assign_matches_sql_fold_bitwise(spark):
         cand = vectors.select("t_id", "tvec").crossJoin(
             F.broadcast(centroids))
         cand = cand.withColumn(
-            "_cos", F.expr(S._cos_vs_centroid("tvec", "cvec")))
+            "_cos", F.expr(_cos_vs_centroid("tvec", "cvec")))
         w = Window.partitionBy("t_id").orderBy(
             F.col("_cos").desc(), "cid")
         return (cand.withColumn("_rk", F.row_number().over(w))
@@ -178,6 +193,96 @@ def test_ivf_fast_plan_has_no_collect_list(spark):
     slow_plan = S._centroid_means(a, t, "t_id", "tvec", False) \
         ._jdf.queryExecution().optimizedPlan().toString()
     assert "collect_list" in slow_plan
+
+
+def _tie_vectors(spark):
+    """40 8-d vectors: keys 10-15 copy key 9 (a query at 9 or 12 ties
+    six ways at the k=5 boundary), key 39 is the zero vector (NaN
+    cosine against everything), spread over 3 partitions."""
+    rng = np.random.default_rng(7)
+    mat = rng.integers(-1000, 1000, size=(40, 8)) / 1000.0
+    mat[10:16] = mat[9]
+    mat[39] = 0.0
+    t = spark.createDataFrame(
+        [(i, [float(v) for v in mat[i]]) for i in range(40)],
+        "t_id long, tvec array<float>").repartition(3)
+    q = (t.where(F.col("t_id").isin(0, 9, 12, 21, 33, 39))
+         .select(F.col("t_id").alias("q_id"), F.col("tvec").alias("qvec")))
+    return q, t
+
+
+@pytest.mark.parametrize("fast", [True, False], ids=["fast", "portable"])
+def test_ivf_full_probe_equals_cosine_topk(spark, fast):
+    """probe == k_clusters makes every vector an IVF candidate, so
+    ivf_topk must return exactly cosine_topk's rows: same pairs, same
+    cosine bits, same ranks — including the zero-norm vector (NaN
+    cosines, ranked first; the old interpreted SQL rerank raised
+    DIVIDE_BY_ZERO under ANSI) and ties at the k-th place broken by
+    t_id."""
+    q, t = _tie_vectors(spark)
+
+    def rows(df):
+        return sorted((r.q_id, r.t_id, r.cosine.hex(), r.rank)
+                      for r in df.collect())
+
+    want = rows(S.cosine_topk(q, t, 5))
+    assert (39, 0, "nan", 1) in want and (9, 39, "nan", 1) in want
+    got = rows(S.ivf_topk(q, t, 5, k_clusters=4, probe=4, fast=fast))
+    assert got == want
+
+
+def _plan_nodes(node):
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+@pytest.mark.parametrize("fast", [True, False], ids=["fast", "portable"])
+def test_ivf_rerank_is_one_arrow_pass_over_pair_join(spark, fast):
+    """ivf_topk reranks through ann_topk's keys-first tail: no
+    interpreted zip_with fold anywhere in its optimized plan, and the
+    cosine comes from ONE MapInArrow whose input is the pair join that
+    re-attaches the vectors."""
+    q, t = _tie_vectors(spark)
+    plan = S.ivf_topk(q, t, 5, k_clusters=4, probe=2, fast=fast) \
+        ._jdf.queryExecution().optimizedPlan()
+    assert "zip_with" not in plan.toString()
+    scorers = [n for n in _plan_nodes(plan)
+               if n.nodeName() == "MapInArrow"
+               and "cosine" in n.output().toString()]
+    assert len(scorers) == 1
+    child = scorers[0].child()
+    while child.nodeName() == "Project":
+        child = child.child()
+    assert child.nodeName() == "Join"
+
+
+def test_fold_dot_is_the_ascending_left_fold():
+    """_fold_dot over every broadcast shape its callers use (pair rows,
+    query x target cross, vector x centroid) equals a Python left fold
+    of double products from 0.0 bit for bit, zero rows included."""
+    rng = np.random.default_rng(3)
+    a = rng.standard_normal((5, 7)).astype(np.float32).astype(np.float64)
+    b = rng.standard_normal((4, 7)).astype(np.float32).astype(np.float64)
+    a[2] = 0.0
+
+    def fold(x, y):
+        acc = 0.0
+        for xj, yj in zip(x.tolist(), y.tolist()):
+            acc = acc + xj * yj
+        return acc
+
+    pair = S._fold_dot(a[:4], b)
+    assert [v.hex() for v in pair.tolist()] == \
+        [fold(x, y).hex() for x, y in zip(a[:4], b)]
+    cross = S._fold_dot(a[:, None], b[None])
+    assert cross.shape == (5, 4)
+    assert [[v.hex() for v in row] for row in cross.tolist()] == \
+        [[fold(x, y).hex() for y in b] for x in a]
+    buf = np.full((5, 4), np.nan)
+    assert S._fold_dot(a[:, None], b[None], out=buf) is buf
+    assert (buf == cross).all()
 
 
 _BAD_VECS = {"null": None, "short": [1.0]}
