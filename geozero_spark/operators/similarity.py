@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, LongType
@@ -186,29 +187,19 @@ def _pair_cosine_fn(qkey: str, tkey: str, qvec: str, tvec: str,
     the downstream window ranks by, so the global top-k is a subset of
     the union of task-local top-ks and the window's result is
     unchanged, while its input shrinks from |candidates| to
-    |tasks| * |Q| * k rows."""
+    |tasks| * |Q| * k rows (None keeps every pair)."""
     def f(it):
         acc_q, acc_t, acc_c = [], [], []
         for b in it:
-            n = b.num_rows
-            if not n:
-                continue
             am = _vec_matrix(b.column(qvec), qvec)
             bm = _vec_matrix(b.column(tvec), tvec, am.shape[1])
             with np.errstate(invalid="ignore"):
                 cos = _fold_dot(am, bm) / (np.sqrt(_fold_dot(am, am))
                                            * np.sqrt(_fold_dot(bm, bm)))
-            qs = b.column(b.schema.get_field_index(qkey))
-            ts = b.column(b.schema.get_field_index(tkey))
-            if local_k is None:
-                yield pa.record_batch(
-                    [qs, ts, pa.array(cos, type=pa.float64())],
-                    names=[qkey, tkey, "cosine"])
-            else:
-                acc_q.append(np.asarray(qs, dtype=np.int64))
-                acc_t.append(np.asarray(ts, dtype=np.int64))
-                acc_c.append(cos)
-        if local_k is not None and acc_q:
+            acc_q.append(np.asarray(b.column(qkey), dtype=np.int64))
+            acc_t.append(np.asarray(b.column(tkey), dtype=np.int64))
+            acc_c.append(cos)
+        if acc_q:
             qa = np.concatenate(acc_q)
             ta = np.concatenate(acc_t)
             ca = np.concatenate(acc_c)
@@ -217,9 +208,8 @@ def _pair_cosine_fn(qkey: str, tkey: str, qvec: str, tvec: str,
             starts = np.nonzero(np.r_[True, qs_sorted[1:]
                                       != qs_sorted[:-1]])[0]
             ends = np.r_[starts[1:], len(qs_sorted)]
-            take = np.concatenate([
-                order[s:min(s + local_k, e)]
-                for s, e in zip(starts, ends)])
+            take = np.concatenate([order[s:e][:local_k]
+                                   for s, e in zip(starts, ends)])
             yield pa.record_batch(
                 [pa.array(qa[take], type=pa.int64()),
                  pa.array(ta[take], type=pa.int64()),
@@ -227,11 +217,6 @@ def _pair_cosine_fn(qkey: str, tkey: str, qvec: str, tvec: str,
                 names=[qkey, tkey, "cosine"])
 
     return f
-
-
-def _planes(dim: int, bits: int, seed: int) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((bits, dim)).astype(np.float64)
 
 
 # --------------------------------------------------------------------------
@@ -310,7 +295,7 @@ def signature_udf(dim: int, bits: int = 32, bands: int = 4,
     per-row Python; vectors are read through ``_vec_matrix``, so a NULL
     or wrong-length vector raises naming ``vec_col``.
     """
-    planes = _planes(dim, bits, seed)
+    planes = np.random.default_rng(seed).standard_normal((bits, dim))
     rows = bits // bands
     # band packing fully vectorized: a (bands, rows) reshape matmul'd
     # with bit weights replaces the per-row Python bit loop (~96 int
@@ -421,11 +406,10 @@ def _rerank(cand: DataFrame, qk: DataFrame, tk: DataFrame, k: int,
 # nearest `probe` centroids and reranks only those clusters' vectors
 # with the exact cosine. At 10^12 rows the cluster assignment is a
 # stored column (partition key), so a probe touches probe/k of the
-# data — the IVF dual of the LSH bucket join.
-#
-# Everything here is DETERMINISTIC and mirrored operation-for-
-# operation by the DuckDB oracle (oracles.py ann_ivf):
-# - centroid init: the vectors with target_key < k_clusters;
+# data — the IVF dual of the LSH bucket join. Everything here is
+# DETERMINISTIC and mirrored op for op by the DuckDB oracle (ann_ivf):
+# - centroid init: the vectors with the k smallest target keys, kept
+#   as a driver-side (cids, cmat) pair every Arrow pass closes over;
 # - Lloyd rounds: assignment = argmax cosine with (cos DESC, cid)
 #   tie-break; recompute = per-dimension mean where the sum FOLDS in
 #   ascending target_key order from 0.0 (array_sort(collect_list) +
@@ -435,43 +419,43 @@ def _rerank(cand: DataFrame, qk: DataFrame, tk: DataFrame, k: int,
 #   rerank is ann_topk's keys-first tail (``_rerank``).
 
 
-def _assign(vectors: DataFrame, centroids: DataFrame, key: str,
-            vec: str, topn: int = 1) -> DataFrame:
-    """(key, cid) of the `topn` nearest centroids by cosine, ties by
-    cid. One map-only Arrow pass: the centroids are driver-bounded (k
-    rows — the same bound their broadcast already implied), collected
-    once and closed over: no crossJoin, no interpreted higher-order
-    folds, no row_number window.
+def _check_bound(what: str, n: int, bound: int) -> None:
+    if n > bound:  # a plan or emitter bug: fail, never truncate
+        raise RuntimeError(f"{what}: driver collected {n} rows, over "
+                           f"its declared bound of {bound}")
 
-    The (vector, centroid) cosine matrix is ``_fold_dot(x[:, None],
-    cmat[None])`` over ``sqrt(qn) * sqrt(cn)`` — BIT-IDENTICAL to the
-    Spark SQL fold the DuckDB oracle mirrors (pinned row for row in
-    tests/test_similarity.py). ``knn._select_topk`` over ``_cos_key``
-    and cid-ascending centroid columns reproduces Spark's (cos DESC
-    NaN-first, cid ASC) order, so a zero-norm vector (NaN against
-    every centroid) deterministically takes the lowest cids."""
-    crows = sorted((r["cid"], list(r["cvec"]))
-                   for r in centroids.select("cid", "cvec").collect())
-    cids = np.array([c for c, _ in crows], dtype=np.int64)
-    cmat = np.array([v for _, v in crows], dtype=np.float64)  # (k, dim)
+
+def _nearest_fn(cmat: np.ndarray, nsel: int):
+    """x (n, dim) -> (n, nsel) indices of the nsel nearest cmat rows
+    (cid-ascending) by cosine ``_fold_dot(x[:, None], cmat[None]) /
+    (sqrt(qn) * sqrt(cn))`` — BIT-IDENTICAL to the Spark SQL fold the
+    DuckDB oracle mirrors (pinned in tests/test_similarity.py).
+    ``knn._select_topk`` over ``_cos_key`` gives Spark's (cos DESC
+    NaN-first, cid ASC) order, so a zero-norm vector (NaN against every
+    centroid) deterministically takes the lowest cids."""
     croot = np.sqrt(_fold_dot(cmat, cmat))
+
+    def nearest(x):
+        denom = np.sqrt(_fold_dot(x, x))[:, None] * croot[None, :]
+        with np.errstate(invalid="ignore", divide="ignore"):
+            cos = _fold_dot(x[:, None], cmat[None]) / denom
+        return _select_topk(_cos_key(cos), nsel, np.inf)[0]
+    return nearest
+
+
+def _assign(vectors: DataFrame, cids: np.ndarray, cmat: np.ndarray,
+            key: str, vec: str, topn: int = 1) -> DataFrame:
+    """(key, cid) of the `topn` nearest centroids (``_nearest_fn``):
+    one map-only Arrow pass closed over the driver-side (cids, cmat)
+    pair — no collect, no crossJoin, no row_number window."""
     nsel = min(topn, len(cids))
+    nearest = _nearest_fn(cmat, nsel)
 
     def f(it):
         for b in it:
-            n = b.num_rows
-            if not n:
-                continue
-            x = _vec_matrix(b.column(vec), vec, cmat.shape[1])
-            denom = np.sqrt(_fold_dot(x, x))[:, None] * croot[None, :]
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cos = _fold_dot(x[:, None], cmat[None]) / denom
-            order, _ = _select_topk(_cos_key(cos), nsel, np.inf)
-            keys = b.column(b.schema.get_field_index(key))
-            out_keys = keys.take(
-                pa.array(np.repeat(np.arange(n, dtype=np.int64), nsel)))
+            order = nearest(_vec_matrix(b.column(vec), vec, cmat.shape[1]))
             yield pa.record_batch(
-                [out_keys,
+                [b.column(key).take(np.repeat(np.arange(b.num_rows), nsel)),
                  pa.array(cids[order].ravel(), type=pa.int64())],
                 names=[key, "cid"])
 
@@ -480,78 +464,38 @@ def _assign(vectors: DataFrame, centroids: DataFrame, key: str,
         f, f"{key} {key_type}, cid long")
 
 
-def ivf_fit(targets: DataFrame, k_clusters: int, iters: int = 2,
-            target_key: str = "t_id", tvec: str = "tvec",
-            fast: bool = False) -> DataFrame:
-    """Deterministic k-means: seed from the k SMALLEST target keys
-    (TakeOrderedAndProject — no full sort, works for offset / sparse /
-    filtered key spaces, unlike a ``key < k`` predicate which silently
-    under-seeds), then `iters` Lloyd rounds. Raises ValueError when
-    fewer than k seed vectors exist. Returns (cid, cvec array<double>);
-    cid = the seed row's key, so on dense 0-based keys the result is
-    identical to the old predicate seeding (oracle unchanged there).
+def _lloyd_partials(targets: DataFrame, cmat: np.ndarray,
+                    tvec: str) -> DataFrame:
+    """A fast Lloyd round as ONE map-only Arrow pass: assign each vector
+    as ``_assign`` does, and emit per non-empty partition k rows (part,
+    ci, n, s) = cmat row, member count, member sum in row order."""
+    k, dim = cmat.shape
+    nearest = _nearest_fn(cmat, 1)
 
-    Centroid recompute has the fast/portable dual every other operator
-    here has:
+    def f(it):
+        cnt, tot = np.zeros(k, dtype=np.int64), np.zeros((k, dim))
+        for b in it:
+            x = _vec_matrix(b.column(0), tvec, dim)
+            ci = nearest(x)[:, 0]
+            cnt += np.bincount(ci, minlength=k)
+            np.add.at(tot, ci, x)
+        if cnt.any():
+            yield pa.record_batch(
+                [pa.array([TaskContext.get().partitionId()] * k, pa.int32()),
+                 pa.array(np.arange(k, dtype=np.int32)), pa.array(cnt),
+                 pa.ListArray.from_arrays(
+                     np.arange(0, k * dim + 1, dim, dtype=np.int32),
+                     tot.ravel())],
+                names=["part", "ci", "n", "s"])
 
-    - ``fast=False`` (oracle mode): per-dimension mean where the sum
-      FOLDS in ascending target_key order from 0.0 — array_sort(
-      collect_list) + aggregate, bit-identical to the DuckDB oracle's
-      list(val ORDER BY t_id) + list_reduce. The collect_list puts one
-      cluster-dimension's every member value in a single aggregation
-      buffer: fine at oracle scale, a memory bomb at 10^9 vectors.
-    - ``fast=True`` (scale mode): plain avg() per (cid, pos) —
-      map-side-combinable partial aggregation, NO collect_list
-      anywhere in the plan; the k*dim mean rows (same driver-size
-      bound as the broadcast centroids themselves) are assembled into
-      centroid arrays driver-side, which also truncates the per-round
-      lineage. Assignments agree with portable mode except where two
-      centroids tie in cosine to machine precision (float-sum
-      reordering); tests pin sf-corpus agreement.
-    """
-    seed = (targets
-            .select(F.col(target_key).cast("long").alias("cid"),
-                    F.expr(f"transform({tvec}, x -> CAST(x AS DOUBLE))")
-                    .alias("cvec"))
-            .orderBy("cid").limit(k_clusters))
-    rows = seed.collect()  # <= k_clusters tiny rows; also truncates the
-    # Lloyd plan chain at its root (c is referenced once per round)
-    if len(rows) < k_clusters:
-        raise ValueError(
-            f"ivf_fit: need >= {k_clusters} target vectors to seed "
-            f"centroids, got {len(rows)}")
-    spark = targets.sparkSession
-    c = spark.createDataFrame(rows, schema=seed.schema)
-    for _ in range(iters):
-        a = _assign(targets, c, target_key, tvec)
-        pm = _centroid_means(a, targets, target_key, tvec, fast)
-        if fast:
-            by_cid: dict = {}
-            for r in pm.collect():  # k_clusters * dim tiny rows
-                by_cid.setdefault(r["cid"], {})[r["pos"]] = r["m"]
-            data = [(cid, [d[p] for p in sorted(d)])
-                    for cid, d in sorted(by_cid.items())]
-            c = spark.createDataFrame(data, schema=seed.schema)
-        else:
-            c = pm.groupBy("cid").agg(F.expr(
-                "transform(array_sort(collect_list(struct(pos, m))), "
-                "s -> s.m)").alias("cvec"))
-    return c
+    return targets.select(tvec).mapInArrow(
+        f, "part int, ci int, n long, s array<double>")
 
 
 def _centroid_means(assign: DataFrame, targets: DataFrame,
-                    target_key: str, tvec: str,
-                    fast: bool) -> DataFrame:
-    """One Lloyd round's per-(cid, pos) means. fast=True is a plain
-    avg() — map-side-combinable partials, no collect_list in the plan
-    (pinned by test_similarity); fast=False is the oracle's sorted
-    fold, which buffers every member value of a (cid, pos) group."""
-    if fast:
-        pe = (assign.join(targets.select(target_key, tvec),
-                          on=target_key)
-              .select("cid", F.posexplode(tvec).alias("pos", "val")))
-        return (pe.groupBy("cid", "pos")
-                .agg(F.avg(F.col("val").cast("double")).alias("m")))
+                    target_key: str, tvec: str) -> DataFrame:
+    """A portable Lloyd round's (cid, pos, m) means: the oracle's sorted
+    fold, which buffers a (cid, pos) group's member values at once."""
     pe = (assign.join(targets.select(target_key, tvec), on=target_key)
           .select("cid", F.col(target_key).alias("_tk"),
                   F.posexplode(tvec).alias("pos", "val")))
@@ -561,6 +505,67 @@ def _centroid_means(assign: DataFrame, targets: DataFrame,
                         "(acc, s) -> acc + s.val)").alias("_s"),
                  F.count("*").alias("_n"))
             .withColumn("m", F.col("_s") / F.col("_n").cast("double")))
+
+
+def _ivf_centroids(targets: DataFrame, k_clusters: int, iters: int,
+                   target_key: str, tvec: str, fast: bool):
+    """ivf_fit as the driver-side (cids, cmat) pair, cid-ascending; a
+    cluster that wins no member is dropped, as a groupBy drops it."""
+    seed = (targets
+            .select(F.col(target_key).cast("long").alias("cid"), tvec)
+            .orderBy("cid").limit(k_clusters).collect())
+    _check_bound("ivf_fit seed", len(seed), k_clusters)
+    if len(seed) < k_clusters:
+        raise ValueError(
+            f"ivf_fit: need >= {k_clusters} target vectors to seed "
+            f"centroids, got {len(seed)}")
+    cids = np.array([r[0] for r in seed], dtype=np.int64)
+    cmat = _vec_matrix(pa.array([r[1] for r in seed],
+                                pa.list_(pa.float64())), tvec)
+    for _ in range(iters):
+        if fast:  # merge the partials in collect (= partition) order
+            rows = _lloyd_partials(targets, cmat, tvec).collect()
+            _check_bound("ivf_fit Lloyd partials", len(rows),
+                         len({r.part for r in rows}) * len(cids))
+            cnt, tot = np.zeros(len(cids)), np.zeros(cmat.shape)
+            for r in rows:
+                cnt[r.ci] += r.n
+                tot[r.ci] += r.s
+            keep = cnt > 0
+            cids, cmat = cids[keep], tot[keep] / cnt[keep, None]
+        else:
+            means = sorted(_centroid_means(
+                _assign(targets, cids, cmat, target_key, tvec), targets,
+                target_key, tvec).collect())
+            _check_bound("ivf_fit portable means", len(means),
+                         cmat.size)
+            cids = np.unique([r.cid for r in means])
+            cmat = np.array([r.m for r in means]).reshape(len(cids), -1)
+    return cids, cmat
+
+
+def ivf_fit(targets: DataFrame, k_clusters: int, iters: int = 2,
+            target_key: str = "t_id", tvec: str = "tvec",
+            fast: bool = False) -> DataFrame:
+    """Deterministic k-means: seed from the k SMALLEST target keys
+    (TakeOrderedAndProject — no full sort, works for offset / sparse /
+    filtered key spaces, unlike a ``key < k`` predicate which silently
+    under-seeds), then `iters` Lloyd rounds. Raises ValueError when
+    fewer than k seed vectors exist. Returns (cid, cvec array<double>),
+    one row per non-empty cluster; cid = the seed row's key.
+
+    Each round recomputes the driver-side centroids. ``fast=False``
+    (oracle mode) collects the k*dim sorted-fold means, whose
+    collect_list buffers a cluster-dimension's every member value.
+    ``fast=True`` (scale mode) merges the per-partition (count, sum)
+    rows of one map-only Arrow pass (``_lloyd_partials``); assignments
+    agree except at cosine ties to machine precision (float-sum
+    reordering; tests pin sf-corpus agreement)."""
+    cids, cmat = _ivf_centroids(targets, k_clusters, iters, target_key,
+                                tvec, fast)
+    return targets.sparkSession.createDataFrame(
+        list(zip(cids.tolist(), cmat.tolist())),
+        "cid long, cvec array<double>")
 
 
 def ivf_topk(queries: DataFrame, targets: DataFrame, k: int,
@@ -573,17 +578,11 @@ def ivf_topk(queries: DataFrame, targets: DataFrame, k: int,
     `probe` nearest centroids, as slim (query_key, target_key) pairs;
     the rerank is ann_topk's exact-cosine tail (``_rerank``), so a
     zero-norm vector gets NaN-first rows exactly as in cosine_topk and
-    ann_topk. ``fast`` selects ivf_fit's avg()-based centroid
-    recompute (the scale mode — see ivf_fit)."""
-    c = ivf_fit(targets, k_clusters, iters=iters,
-                target_key=target_key, tvec=tvec, fast=fast)
-    # materialize the <= k_clusters centroid rows once: c is referenced
-    # twice below and its plan is the whole multi-round Lloyd chain —
-    # without this every reference re-runs the k-means end to end
-    spark = targets.sparkSession
-    c = spark.createDataFrame(c.collect(), schema=c.schema)
-    t_assign = _assign(targets, c, target_key, tvec)
-    q_probe = _assign(queries, c, query_key, qvec, topn=probe)
+    ann_topk. ``fast``: ivf_fit's scale mode."""
+    cids, cmat = _ivf_centroids(targets, k_clusters, iters, target_key,
+                                tvec, fast)
+    t_assign = _assign(targets, cids, cmat, target_key, tvec)
+    q_probe = _assign(queries, cids, cmat, query_key, qvec, topn=probe)
     cand = q_probe.join(t_assign, on="cid").select(query_key, target_key)
     if exclude_self:
         cand = cand.where(F.col(query_key) != F.col(target_key))

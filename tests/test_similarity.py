@@ -93,7 +93,7 @@ def test_ann_degenerate_bucket_capped(spark):
 
 
 def test_ivf_fast_matches_portable_assignments(spark):
-    """fast=True (avg-based means) must assign every sf vector to the
+    """fast=True (Arrow-partial means) must assign every sf vector to the
     same cluster as the portable sorted-fold mode — the float-sum
     reorder only matters at exact cosine ties, which the synthetic
     corpus does not produce."""
@@ -108,15 +108,19 @@ def test_ivf_fast_matches_portable_assignments(spark):
     assert p.keys() == f.keys()
     for cid in p:
         assert max(abs(a - b) for a, b in zip(p[cid], f[cid])) < 1e-9
-    a_p = S._assign(t, spark.createDataFrame(
-        [(k, v) for k, v in sorted(p.items())],
-        "cid long, cvec array<double>"), "t_id", "tvec")
-    a_f = S._assign(t, spark.createDataFrame(
-        [(k, v) for k, v in sorted(f.items())],
-        "cid long, cvec array<double>"), "t_id", "tvec")
+    a_p = S._assign(t, *_centroid_pair(c_p), "t_id", "tvec")
+    a_f = S._assign(t, *_centroid_pair(c_f), "t_id", "tvec")
     m_p = {r.t_id: r.cid for r in a_p.collect()}
     m_f = {r.t_id: r.cid for r in a_f.collect()}
     assert m_p == m_f
+
+
+def _centroid_pair(c):
+    """ivf_fit's (cid, cvec) DataFrame as the driver-side (cids, cmat)
+    pair _assign closes over, cid-ascending."""
+    rows = sorted((r.cid, list(r.cvec)) for r in c.collect())
+    return (np.array([k for k, _ in rows], dtype=np.int64),
+            np.array([v for _, v in rows], dtype=np.float64))
 
 
 def _cos_vs_centroid(vec: str, cvec: str) -> str:
@@ -164,35 +168,99 @@ def test_assign_matches_sql_fold_bitwise(spark):
         return (cand.withColumn("_rk", F.row_number().over(w))
                 .where(F.col("_rk") <= topn).select("t_id", "cid"))
 
+    cids, cmat = _centroid_pair(c)
     for topn in (1, 3):
         got = sorted((r.t_id, r.cid) for r in
-                     S._assign(t, c, "t_id", "tvec", topn=topn)
+                     S._assign(t, cids, cmat, "t_id", "tvec", topn=topn)
                      .collect())
         want = sorted((r.t_id, r.cid) for r in
                       sql_assign(t, c, topn).collect())
         assert got == want, f"topn={topn} mismatch"
     low_cids = sorted(r.cid for r in c.collect())[:1]
     zero_rows = [r.cid for r in
-                 S._assign(zero, c, "t_id", "tvec").collect()]
+                 S._assign(zero, cids, cmat, "t_id", "tvec").collect()]
     assert zero_rows == low_cids
 
 
 def test_ivf_fast_plan_has_no_collect_list(spark):
-    """The scale mode's per-round mean aggregation must be a plain
-    partial-aggregating avg(): no collect_list (the per-cluster memory
-    bomb) anywhere in its optimized plan. The portable mode keeps it —
+    """The scale mode's Lloyd round must be ONE MapInArrow over the
+    scan: no collect_list (the per-cluster memory bomb), no Aggregate
+    and no Exchange anywhere in its plan — the driver merges the
+    per-partition partials. The portable mode keeps collect_list —
     that IS the oracle's sorted fold."""
     e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     t = e.select(F.col("vec_id").alias("t_id"),
                  F.col("embedding").alias("tvec"))
-    c = S.ivf_fit(t, Q.IVF_K, iters=0, fast=True)
-    a = S._assign(t, c, "t_id", "tvec")
-    fast_plan = S._centroid_means(a, t, "t_id", "tvec", True) \
-        ._jdf.queryExecution().optimizedPlan().toString()
-    assert "collect_list" not in fast_plan
-    slow_plan = S._centroid_means(a, t, "t_id", "tvec", False) \
+    cids, cmat = S._ivf_centroids(t, Q.IVF_K, 0, "t_id", "tvec", True)
+    qe = S._lloyd_partials(t, cmat, "tvec")._jdf.queryExecution()
+    opt = qe.optimizedPlan()
+    assert "collect_list" not in opt.toString()
+    names = [n.nodeName() for n in _plan_nodes(opt)]
+    # MapInArrow -> Project* -> the scan: no Aggregate, no second pass
+    assert names[0] == "MapInArrow", names
+    assert names[-1] == "LogicalRelation", names
+    assert set(names[1:-1]) <= {"Project"}, names
+    assert "Exchange" not in qe.executedPlan().toString()
+    a = S._assign(t, cids, cmat, "t_id", "tvec")
+    slow_plan = S._centroid_means(a, t, "t_id", "tvec") \
         ._jdf.queryExecution().optimizedPlan().toString()
     assert "collect_list" in slow_plan
+
+
+def test_ivf_topk_fast_job_budget(spark):
+    """ivf_topk(fast=True) plus one action runs at most 9 Spark jobs:
+    the seed collect, one Arrow pass per Lloyd round (the centroids stay
+    on the driver, so nothing re-collects them), and the rerank tail."""
+    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    q = (e.where(F.col("vec_id") % Q.QUERY_MOD == 0)
+         .select(F.col("vec_id").alias("q_id"),
+                 F.col("embedding").alias("qvec")))
+    t = e.select(F.col("vec_id").alias("t_id"),
+                 F.col("embedding").alias("tvec"))
+    sc = spark.sparkContext
+    group = "test-ivf-topk-fast-job-budget"
+    sc.setJobGroup(group, "ivf_topk fast=True")
+    try:
+        rows = S.ivf_topk(q, t, Q.ANN_K, k_clusters=Q.IVF_K,
+                          probe=Q.IVF_PROBE, iters=Q.IVF_ITERS,
+                          fast=True).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 9, f"{len(jobs)} jobs"
+
+
+def test_ivf_empty_cluster_is_dropped(spark):
+    """Keys 0 and 1 seed identical centroids, so the (cos DESC, cid)
+    tie-break hands every member to cid 0 and cid 1 wins none: ivf_fit
+    drops it (as a groupBy drops an empty group) instead of leaking a
+    0/0 NaN centroid, both modes assign alike, and the probe still
+    fills k rows per query."""
+    rng = np.random.default_rng(11)
+    mat = rng.integers(-1000, 1000, size=(40, 8)) / 1000.0
+    mat[1] = mat[0]
+    t = spark.createDataFrame(
+        [(i, [float(v) for v in mat[i]]) for i in range(40)],
+        "t_id long, tvec array<float>").repartition(3)
+    q = (t.where(F.col("t_id") % 5 == 0)
+         .select(F.col("t_id").alias("q_id"), F.col("tvec").alias("qvec")))
+    fits = {m: S.ivf_fit(t, 4, iters=2, fast=m) for m in (True, False)}
+    for c in fits.values():
+        rows = c.collect()
+        assert sorted(r.cid for r in rows) == [0, 2, 3]
+        assert all(np.isfinite(r.cvec).all() for r in rows)
+    assign = {m: {r.t_id: r.cid for r in S._assign(
+        t, *_centroid_pair(c), "t_id", "tvec").collect()}
+        for m, c in fits.items()}
+    assert assign[True] == assign[False]
+    for fast in (True, False):
+        per_q = {}
+        for r in S.ivf_topk(q, t, 3, k_clusters=4, probe=2,
+                            fast=fast).collect():
+            per_q.setdefault(r.q_id, []).append(r.rank)
+        assert sorted(per_q) == list(range(0, 40, 5))
+        assert all(sorted(v) == [1, 2, 3] for v in per_q.values())
 
 
 def _tie_vectors(spark):
@@ -307,10 +375,14 @@ def _assert_vector_error(exc, col):
 @pytest.mark.parametrize("bad", sorted(_BAD_VECS))
 def test_assign_rejects_null_or_ragged_vectors(spark, bad):
     t = _vecs_df(spark, "t_id", "tvec", bad)
-    c = spark.createDataFrame([(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])],
-                              "cid long, cvec array<double>")
+    cids = np.array([0, 1], dtype=np.int64)
+    cmat = np.array([[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]])
     with pytest.raises(PythonException) as ei:
-        S._assign(t, c, "t_id", "tvec").collect()
+        S._assign(t, cids, cmat, "t_id", "tvec").collect()
+    _assert_vector_error(ei.value, "tvec")
+    # the fast Lloyd pass reads through the same checked matrix reader
+    with pytest.raises(PythonException) as ei:
+        S.ivf_fit(t, 2, fast=True)
     _assert_vector_error(ei.value, "tvec")
 
 
