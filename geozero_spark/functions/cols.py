@@ -71,6 +71,8 @@ def with_cell_col(df: DataFrame, lon: Column | str, lat: Column | str,
     so codegen sees every intermediate exactly once. Keep the sqlgen
     text form for DuckDB oracles and parquet-pushdown predicates
     (Project-into-Filter pushdown WOULD re-inline; see PLANS.md).
+    The clamped grid coords go through with_cell_from_ixiy, the one
+    staged spread/assemble sequence.
     """
     n = 1 << res
     lonc = F.col(lon) if isinstance(lon, str) else lon
@@ -81,21 +83,17 @@ def with_cell_col(df: DataFrame, lon: Column | str, lat: Column | str,
     iy = F.least(F.greatest(
         F.floor((latc + F.lit(90.0)) / F.lit(180.0) * F.lit(n))
         .cast("bigint"), F.lit(0)), F.lit(n - 1))
-    df = df.withColumn("__gz_ix", ix).withColumn("__gz_iy", iy)
-    df = _spread_staged(df, F.col("__gz_ix"), "__gz_sx")
-    df = _spread_staged(df, F.col("__gz_iy"), "__gz_sy")
-    df = df.withColumn(out, F.lit(res << _RES_SHIFT).bitwiseOR(
-        F.col("__gz_sx").bitwiseOR(F.shiftleft(F.col("__gz_sy"), 1))))
-    return df.drop("__gz_ix", "__gz_iy", "__gz_sx", "__gz_sy")
+    return with_cell_from_ixiy(df, ix, iy, res, out=out)
 
 
 def with_cell_from_ixiy(df: DataFrame, ix: Column | str,
                         iy: Column | str, res: int,
                         out: str = "cell") -> DataFrame:
-    """Morton cell id from ALREADY-COMPUTED integer grid coords, staged
-    like with_cell_col (kernel.cells.make_cell / sqlgen.make_cell
-    parity). For cover/disk explodes whose ix/iy come from their own
-    expressions (e.g. pmod-wrapped offsets)."""
+    """Morton cell id from ALREADY-COMPUTED integer grid coords, one
+    projected column per spread step (kernel.cells.make_cell /
+    sqlgen.make_cell parity). with_cell_col feeds it clamped lon/lat
+    coords; cover/disk explodes feed their own expressions (e.g.
+    pmod-wrapped offsets)."""
     ixc = F.col(ix) if isinstance(ix, str) else ix
     iyc = F.col(iy) if isinstance(iy, str) else iy
     df = (df.withColumn("__gz_ix", ixc.cast("bigint"))

@@ -51,11 +51,6 @@ def _iter_coords(g: Geom):
             yield from _iter_coords(m)
 
 
-def iter_coords(g: Geom):
-    """All coordinate tuples of a geometry, depth-first."""
-    return _iter_coords(g)
-
-
 def bounds(g: Geom):
     """(xmin, ymin, xmax, ymax) or None if the geometry has no coords."""
     xmin = ymin = float("inf")

@@ -163,14 +163,3 @@ def cover_bbox(xmin: float, ymin: float, xmax: float, ymax: float,
             f"use a coarser resolution")
     return [make_cell(ix, iy, res)
             for iy in range(iy0, iy1 + 1) for ix in range(ix0, ix1 + 1)]
-
-
-def cell_bounds(cell: int):
-    """(xmin, ymin, xmax, ymax) in lon/lat of a cell."""
-    res = cell_res(cell)
-    n = 1 << res
-    ix, iy = cell_to_ixiy(cell)
-    w = 360.0 / n
-    h = 180.0 / n
-    return (-180.0 + ix * w, -90.0 + iy * h,
-            -180.0 + (ix + 1) * w, -90.0 + (iy + 1) * h)

@@ -25,8 +25,7 @@ from __future__ import annotations
 
 import struct
 
-from .model import (LINESTRING, MULTILINESTRING, MULTIPOINT, MULTIPOLYGON,
-                    POINT, POLYGON, Geom)
+from .model import MULTILINESTRING, MULTIPOINT, MULTIPOLYGON, POINT, Geom
 
 FILE_CODE = 9994
 HEADER_SIZE = 100
@@ -228,14 +227,6 @@ def decode_records(buf: bytes) -> list[tuple[int, Geom | None]]:
 # ---------------------------------------------------------------------------
 # minimal writer (fixture generation / roundtrip only)
 # ---------------------------------------------------------------------------
-
-def _xy_of(g: Geom):
-    if g.kind == POINT:
-        return [g.data]
-    if g.kind in (LINESTRING, MULTIPOINT):
-        return list(g.data)
-    raise ShpError(f"shp.encode supports Point runs, got kind {g.kind}")
-
 
 def encode(geoms: list[Geom]) -> bytes:
     """Encode XY Points as a Point shapefile (fixtures/roundtrips)."""

@@ -21,7 +21,6 @@ import math
 import numpy as np
 
 from .model import Geom
-from . import bounds as _bounds
 
 
 # ---------------------------------------------------------------------------
@@ -60,18 +59,6 @@ def tile_bounds_eq(z: int, x: int, y: int):
     return left, top - h, left + w, top
 
 
-def tile_bounds_wm(z: int, x: int, y: int):
-    """(left, bottom, right, top) in lon/lat of a WebMercator tile."""
-    n = 1 << z
-
-    def lat_of(yy):
-        return math.degrees(math.atan(math.sinh(math.pi * (1 - 2 * yy / n))))
-
-    left = x / n * 360.0 - 180.0
-    right = (x + 1) / n * 360.0 - 180.0
-    return left, lat_of(y + 1), right, lat_of(y)
-
-
 def quadkey(z: int, x: int, y: int) -> str:
     """Bing-style quadkey: interleaved base-4 digits, one per zoom level."""
     digits = []
@@ -94,13 +81,6 @@ def tiles_covering_bbox_eq(xmin, ymin, xmax, ymax, z, limit: int = 4096):
     if count > limit:
         raise ValueError(f"tile cover {count} exceeds limit {limit}")
     return [(x, y) for y in range(y0, y1 + 1) for x in range(x0, x1 + 1)]
-
-
-def tiles_covering_geom_eq(geom: Geom, z: int, limit: int = 4096):
-    bb = _bounds.bounds(geom)
-    if bb is None:
-        return []
-    return tiles_covering_bbox_eq(bb[0], bb[1], bb[2], bb[3], z, limit)
 
 
 # ---------------------------------------------------------------------------

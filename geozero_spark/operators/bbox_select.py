@@ -22,17 +22,12 @@ from ..functions import sqlgen as sg
 from ..kernel import cells as kcells
 
 
-def with_cell(df: DataFrame, lon: str, lat: str, res: int,
-              out: str = "cell") -> DataFrame:
-    return cols.with_cell_col(df, lon, lat, res, out=out)
-
-
 def write_cell_indexed(df: DataFrame, path: str, res: int,
                        lon: str = "lon", lat: str = "lat",
                        partitions: int = 32) -> None:
     """Range-partition + sort by cell id and write parquet. Row-group
     min/max stats on ``cell`` become the pruning index."""
-    (with_cell(df, lon, lat, res)
+    (cols.with_cell_col(df, lon, lat, res)
      .repartitionByRange(partitions, "cell")
      .sortWithinPartitions("cell")
      .write.mode("overwrite").parquet(path))
@@ -107,7 +102,7 @@ def write_cell_partitioned(df: DataFrame, path: str, res: int,
     row groups via the sorted fine-cell min/max stats — two pruning
     levels, the same shape an Iceberg partition spec + sort order gives
     at 10^12 rows."""
-    out = with_cell(df, lon, lat, res)
+    out = cols.with_cell_col(df, lon, lat, res)
     out = out.withColumn(
         "cell_prefix",
         F.expr(sg.cell_parent("cell", res, res - prefix_res, sg.SPARK)))

@@ -42,13 +42,6 @@ from ..functions import sqlgen as sg
 from ..functions import udfs
 
 
-def with_cell(df: DataFrame, lon: str, lat: str, res: int,
-              out: str = "cell") -> DataFrame:
-    """Attach the Morton cell id (JVM-side bit math, staged columns —
-    see cols.with_cell_col for why not one sqlgen.cell_id expression)."""
-    return cols.with_cell_col(df, lon, lat, res, out=out)
-
-
 def explode_bbox_cover(df: DataFrame, res: int, bbox_col: str = "bbox",
                        out: str = "cell") -> DataFrame:
     """One row per (row, covering cell) for the row's bbox — JVM-side.
@@ -56,18 +49,10 @@ def explode_bbox_cover(df: DataFrame, res: int, bbox_col: str = "bbox",
     The columnar analogue of walking the R-tree: a conservative grid
     cover of the geometry envelope at resolution ``res``.
     """
-    n = 1 << res
-    d = sg.SPARK
-
-    def gi(expr: str, scale: float, off: float) -> str:
-        return sg.clamp(sg.ibigint(f"(({expr}) + {sg.f64(off)}) / "
-                                   f"{sg.f64(scale)} * {n}"),
-                        "0", str(n - 1))
-
-    ix0 = gi(f"element_at({bbox_col}, 1)", 360.0, 180.0)
-    ix1 = gi(f"element_at({bbox_col}, 3)", 360.0, 180.0)
-    iy0 = gi(f"element_at({bbox_col}, 2)", 180.0, 90.0)
-    iy1 = gi(f"element_at({bbox_col}, 4)", 180.0, 90.0)
+    ix0, iy0 = sg.grid_ixy(f"element_at({bbox_col}, 1)",
+                           f"element_at({bbox_col}, 2)", res)
+    ix1, iy1 = sg.grid_ixy(f"element_at({bbox_col}, 3)",
+                           f"element_at({bbox_col}, 4)", res)
     out_df = (df
               # empty geometries carry bbox=[]; under ANSI element_at
               # would fail the whole job instead of skipping the feature
@@ -80,6 +65,16 @@ def explode_bbox_cover(df: DataFrame, res: int, bbox_col: str = "bbox",
     # make_cell form costs seconds of cold parse+codegen per plan
     return (cols.with_cell_from_ixiy(out_df, "ix", "iy", res, out=out)
             .drop("ix", "iy"))
+
+
+def _point_salt(lon: str, lat: str, n: int):
+    """Deterministic salt lane of a point, in [0, n). Cast to int: the
+    cogrouped refine hash-partitions each side on its own key type,
+    and murmur3(long 3) != murmur3(int 3) — a bigint salt against the
+    int sequence side silently strands groups in mismatched
+    partitions."""
+    return F.pmod(F.xxhash64(F.col(lon), F.col(lat)),
+                  F.lit(n)).cast("int")
 
 
 _BROADCAST_POLY_LIMIT = 100_000
@@ -217,15 +212,9 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 6,
     10^12-row regime gets the prune without a caller decision. Pass
     True/False to pin it.
     """
-    pts = with_cell(points, lon, lat, res)
+    pts = cols.with_cell_col(points, lon, lat, res)
     if salt > 0:
-        # cast to int: the cogrouped refine hash-partitions each side
-        # on its own key type, and murmur3(long 3) != murmur3(int 3) —
-        # a bigint salt against the int sequence side silently strands
-        # groups in mismatched partitions
-        pts = pts.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(lon), F.col(lat)),
-                            F.lit(salt)).cast("int"))
+        pts = pts.withColumn("_salt", _point_salt(lon, lat, salt))
         keys = ["cell", "_salt"]
     else:
         keys = ["cell"]
@@ -334,9 +323,8 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 6,
 
     refine_salt = salt if salt > 0 else 16
     if salt == 0:
-        cand = cand.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(lon), F.col(lat)),
-                            F.lit(refine_salt)).cast("int"))
+        cand = cand.withColumn("_salt",
+                               _point_salt(lon, lat, refine_salt))
     gkeys = [poly_key, "_salt"]
     # rename the dimension side's columns: cand and polys share
     # lineage (the cover came from polys), and same-attribute grouping

@@ -1,3 +1,3 @@
-"""Physical-plan helpers: session config, skew handling, lineage/metrics."""
+"""Physical-plan helpers: session config, resumable stages."""
 
 from . import session  # noqa: F401

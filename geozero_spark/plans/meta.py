@@ -54,21 +54,32 @@ def completed_buckets(spark: SparkSession, base: str, stage: str,
 
 def run_stage(spark: SparkSession, df: DataFrame, base: str, stage: str,
               bucket_col: str, n_buckets: int, fingerprint: str) -> list:
-    """Write df bucketed by pmod(hash(bucket_col), n_buckets); skip
-    buckets already recorded for this fingerprint. Returns metric rows
-    [(bucket, rows, wall_s)]. Output: ``base/stage/bucket=i`` parquet.
+    """Write df bucketed by pmod(xxhash64(bucket_col), n_buckets);
+    skip buckets already recorded for this fingerprint. Returns metric
+    rows [(bucket, rows, wall_s)]. Output: ``base/stage/bucket=i``
+    parquet.
 
     ONE pass over the input: the write consumes df directly (no
     persist, no separate count job — round 5 cached the whole input
-    and ran a groupBy-count first), pre-partitioned by bucket so each
-    write task emits ONE file per bucket it owns instead of every task
-    opening every bucket (tasks x buckets small files — 512 at the
-    bench shape, the guide §6 small-files trap; now n_buckets x
-    fanout, with fanout sized so write parallelism still matches the
-    cluster). Metric counts come from the written parquet footers —
-    a partition-pruned count(*) touches metadata only. wall_s is the
-    shared wall of the combined write, recorded on every bucket row
-    it covered."""
+    and ran a groupBy-count first), placed by id (``repartitionById``)
+    into n_buckets x fanout slots, one per task, so each task writes
+    ONE file of one bucket instead of every task opening every bucket
+    (tasks x buckets small files — 512 at the bench shape, the guide
+    §6 small-files trap). fanout is sized so write parallelism still
+    matches the cluster. Metric counts come from the written parquet
+    footers — a partition-pruned count(*) touches metadata only.
+    wall_s is the shared wall of the combined write, recorded on every
+    bucket row it covered.
+
+    When every bucket is pending there is no filter. A partial resume
+    drops the done buckets after the exchange, on the slot's partition
+    id (``spark_partition_id() div fanout``), never on the bucket
+    expression before it: a deterministic bucket predicate is pushed
+    below the exchange and re-inlines the key's derived tree (a Morton
+    cell is a deep staged projection) into the Filter until the
+    optimizer runs out of heap. Trade-off: on a partial resume the
+    done buckets' rows still cross the shuffle; the input is
+    recomputed in full either way, since nothing is persisted."""
     if "bucket" in df.columns:
         raise ValueError(
             "run_stage derives its own 'bucket' partition column; the "
@@ -89,27 +100,25 @@ def run_stage(spark: SparkSession, df: DataFrame, base: str, stage: str,
     for b in todo:
         p = jpath(f"{base}/{stage}/bucket={b}")
         p.getFileSystem(hconf).delete(p, True)
-    bdf = (df.withColumn(
+    bdf = df.withColumn(
         "bucket", F.pmod(F.xxhash64(F.col(bucket_col)),
                          F.lit(n_buckets)).cast("int"))
-        .where(F.col("bucket").isin(todo)))
     # fanout keeps the write as wide as the cluster when n_buckets is
-    # small: n_buckets * fanout partitions, each holding one (bucket,
-    # sub-file) slot -> one output file per task. The sub-key hash is
+    # small: n_buckets * fanout slots, each placed by id in its own
+    # partition -> one output file per task. The sub-key hash is
     # seeded apart from the bucket's (unseeded, it is a function of
-    # the bucket whenever fanout and n_buckets share a factor), and
-    # each slot is routed through a key that hashes to its own
-    # partition (hashing the (bucket, sub) pair directly lets two
-    # slots collide in one task while another idles)
+    # the bucket whenever fanout and n_buckets share a factor)
     par = spark.sparkContext.defaultParallelism
     fanout = max(1, -(-par // n_buckets))
-    n_slots = n_buckets * fanout
     slot = (F.col("bucket") * fanout
             + F.pmod(F.xxhash64(F.col(bucket_col), F.lit(1)),
                      F.lit(fanout))).cast("int")
-    route = F.element_at(
-        F.array(*[F.lit(k) for k in _slot_keys(n_slots)]), slot + 1)
-    out = bdf.repartition(n_slots, route)
+    out = bdf.repartitionById(n_buckets * fanout, slot)
+    if len(todo) < n_buckets:
+        # nondeterministic, so never pushed below the exchange (see
+        # the docstring)
+        out = out.where(F.expr(f"spark_partition_id() div {fanout}")
+                        .isin(todo))
     (out.write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy("bucket").parquet(f"{base}/{stage}"))
@@ -134,35 +143,6 @@ def bucket_counts(spark: SparkSession, path: str, buckets: list) -> dict:
     return {r.bucket: r.cnt for r in
             out.where(F.col("bucket").isin(buckets))
             .groupBy("bucket").agg(F.count("*").alias("cnt")).collect()}
-
-
-def _murmur3_int(v: int, seed: int = 42) -> int:
-    """Spark's Murmur3Hash of one int value: the hash that hash
-    partitioning takes modulo the partition count."""
-    m = 0xFFFFFFFF
-
-    def rotl(x: int, r: int) -> int:
-        return ((x << r) | (x >> (32 - r))) & m
-
-    k = rotl((v * 0xCC9E2D51) & m, 15) * 0x1B873593 & m
-    h = (rotl(seed ^ k, 13) * 5 + 0xE6546B64) & m
-    h ^= 4
-    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & m
-    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & m
-    h ^= h >> 16
-    return h - (1 << 32) if h >> 31 else h
-
-
-def _slot_keys(n: int) -> list[int]:
-    """keys[p] is an int that hash partitioning into ``n`` partitions
-    sends to partition p, so repartitioning on keys[slot] puts each
-    slot in its own task."""
-    keys: dict[int, int] = {}
-    v = 0
-    while len(keys) < n:
-        keys.setdefault(_murmur3_int(v) % n, v)
-        v += 1
-    return [keys[p] for p in range(n)]
 
 
 def stage_metrics(spark: SparkSession, base: str, stage: str) -> DataFrame:

@@ -648,8 +648,8 @@ def q_bounds_agg(spark, sf_dir):
 
 
 def q_bbox_select(spark, sf_dir):
-    pts = bbox_select.with_cell(points_df(spark, sf_dir), "lon", "lat",
-                                CELL_RES)
+    pts = cols.with_cell_col(points_df(spark, sf_dir), "lon", "lat",
+                             CELL_RES)
     # on-the-fly cell expression -> compact predicate form (see
     # bbox_filter docstring); the pushdown OR form is exercised against
     # stored cell columns by test_partitioned_bbox_pruning / PLANS.md

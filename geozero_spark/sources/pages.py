@@ -278,11 +278,6 @@ def zones_df(spark, sf_dir: str):
     return spark.sql(zones_sql(sg.SPARK))
 
 
-def duckdb_ctes() -> dict[str, str]:
-    """CTE bodies for oracle SQL: WITH pages AS (...), zones AS (...)."""
-    return {"pages": pages_sql(sg.DUCKDB), "zones": zones_sql(sg.DUCKDB)}
-
-
 def donut_zones_sql(d: str, nation: str = "nation") -> str:
     """SELECT producing zones with an interior ring (zone_id, donut_wkt)."""
     return (f"SELECT CAST(n_nationkey AS BIGINT) AS zone_id, "

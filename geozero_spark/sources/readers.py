@@ -268,9 +268,11 @@ def read_shp_indexed(spark: SparkSession, shp_path: str,
     reader.rs:209-221 + shx_reader.rs:17-31): the driver reads only the
     tiny index (8 bytes per record), packs contiguous record runs into
     ~equal-byte splits, and every task range-reads just its slice of
-    the .shp — a 100 GB shapefile scans as wide as the cluster instead
-    of serializing through one whole-file task (read_shp's documented
-    limit; directories of small files keep using read_shp).
+    the .shp (one split per task: ``repartitionById`` places each
+    split by its ordinal) — a 100 GB shapefile scans as wide as the
+    cluster instead of serializing through one whole-file task
+    (read_shp's documented limit; directories of small files keep
+    using read_shp).
 
     Output rows match read_shp: (path, record_idx, geom), record_idx
     0-based in file order."""
@@ -301,10 +303,12 @@ def read_shp_indexed(spark: SparkSession, shp_path: str,
             cur_start = None
     if cur_start is not None:
         splits.append((cur_start, cur_len, cur_first))
+    # one task per split, placed by its ordinal (a round-robin or hash
+    # repartition lets two splits share a task while another idles)
     sdf = spark.createDataFrame(
-        [(shp_path, s, ln, f) for s, ln, f in splits],
-        "path string, start long, nbytes long, first_idx long")
-    sdf = sdf.repartition(max(1, len(splits)))
+        [(i, shp_path, s, ln, f) for i, (s, ln, f) in enumerate(splits)],
+        "split int, path string, start long, nbytes long, first_idx long")
+    sdf = sdf.repartitionById(max(1, len(splits)), "split")
 
     def records(row):
         recs = kshp.decode_record_run(
@@ -372,9 +376,10 @@ def read_fgb_ranged(spark: SparkSession, url: str,
     nodes (for a bbox: plus the index walk, one range request per
     visited node run); executors then fetch DISJOINT byte ranges —
     contiguous feature spans for a full scan, contiguous hit runs for
-    a bbox — so one giant remote file scans in parallel without any
-    task reading it whole (the .fgb dual of read_shp_indexed's
-    .shx-based split scan). ``url``: http(s):// or a local path.
+    a bbox, each split in its own task (placed by ``split_id``) — so
+    one giant remote file scans in parallel without any task reading
+    it whole (the .fgb dual of read_shp_indexed's .shx-based split
+    scan). ``url``: http(s):// or a local path.
     Unindexed files degrade to a single sequential task. Output schema
     matches read_fgb: (split_id, feature_idx, geom, props)."""
     from ..kernel import bounds as kbounds
@@ -417,8 +422,10 @@ def read_fgb_ranged(spark: SparkSession, url: str,
                       and kbounds.intersects_bbox(g, *bbox))
         return _feature_rows(row["split_id"], it)
 
+    # one task per split, placed by id (hash partitioning on split_id
+    # lets splits collide in one task while others idle)
     tdf = spark.createDataFrame(tasks, "split_id int, payload string") \
-        .repartition(len(tasks), "split_id")
+        .repartitionById(len(tasks), "split_id")
     return _scan(tdf, _scan_schema("split_id", IntegerType(),
                                    "feature_idx", IntegerType()), fetch)
 

@@ -123,15 +123,20 @@ def test_http_range_source_bbox(http_url):
 
 
 def test_spark_ranged_scan_local_and_http(spark, http_url):
+    from pyspark.sql import functions as F
+
     from geozero_spark.sources import readers
 
     exp = {p["id"]: kwkt.encode(g)
            for g, p in fgb.iter_features(_buf())}
     # local file, full scan, 4 splits
     df = readers.read_fgb_ranged(spark, FIX, n_splits=4)
-    rows = df.collect()
+    rows = df.withColumn("pid", F.spark_partition_id()).collect()
     assert len(rows) == 179
-    assert len({r.split_id for r in rows}) == 4  # actually parallel
+    # actually parallel: each of the 4 splits runs in its own task
+    owner = {(r.split_id, r.pid) for r in rows}
+    assert len({s for s, _ in owner}) == 4
+    assert len({p for _, p in owner}) == len(owner) == 4
     # bbox over HTTP
     hits = readers.read_fgb_ranged(spark, http_url, bbox=BBOX,
                                    n_splits=3).collect()

@@ -1,5 +1,5 @@
-"""Spark-layer integration: format scans/sinks, skew salting, resumable
-stages (uses the shared session fixture)."""
+"""Spark-layer integration: format scans/sinks, resumable stages (uses
+the shared session fixture)."""
 
 import json
 import os
@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from geozero_spark.operators import dedup
-from geozero_spark.plans import meta, skew
+from geozero_spark.plans import meta
 from geozero_spark.sources import readers
 
 
@@ -73,19 +73,6 @@ def test_geojson_fc(spark, tmpdir_path):
     df = readers.read_geojson_fc(spark, src)
     r = df.first()
     assert r.geom.kind == 3 and r.props["id"] == "NZL"
-
-
-def test_salted_count_matches_plain(spark):
-    df = (spark.range(10000)
-          .withColumn("cell", F.when(F.col("id") % 10 < 8, F.lit(1))
-                      .otherwise(F.col("id") % 7))
-          .withColumn("url", F.col("id").cast("string")))
-    plain = {r.cell: r["count"] for r in
-             df.groupBy("cell").count().collect()}
-    salted = {r.cell: r.n_rows for r in
-              skew.salted_count(df, "cell", threshold_rows=100,
-                                n_salt=8).collect()}
-    assert salted == plain
 
 
 def test_run_stage_resume(spark, tmpdir_path):
@@ -241,14 +228,6 @@ def test_run_stage_read_errors_raise(spark, tmpdir_path):
         meta.bucket_counts(spark, os.path.join(base, "s1"), [0])
 
 
-def test_run_stage_slot_keys_match_spark_hash(spark):
-    vals = list(range(-50, 200))
-    rows = spark.createDataFrame([(v,) for v in vals], "v int").select(
-        "v", F.hash("v").alias("h")).collect()
-    assert {r.v: r.h for r in rows} == {v: meta._murmur3_int(v)
-                                        for v in vals}
-
-
 def test_run_stage_fanout_fills_every_slot(spark, tmpdir_path):
     """n_buckets sharing a factor with the parallelism: every bucket
     still spreads over ``fanout`` tasks, one non-empty file each."""
@@ -266,6 +245,87 @@ def test_run_stage_fanout_fills_every_slot(spark, tmpdir_path):
         assert len(files) == fanout, (b, files)
         assert all(os.path.getsize(os.path.join(d, f)) > 0
                    for f in files)
+
+
+def _plan_nodes(node):
+    """Every node of a logical plan, depth-first, with the names of
+    the nodes above it."""
+    todo = [(node, ())]
+    while todo:
+        n, above = todo.pop()
+        yield n, above
+        kids = n.children()
+        todo.extend((kids.apply(i), above + (n.nodeName(),))
+                    for i in range(kids.size()))
+
+
+def test_run_stage_cell_bucketed_resume(spark, tmpdir_path, monkeypatch):
+    """Bucketing on a derived Morton cell: the full write and a partial
+    resume both finish (with codegen fallback off, so a compile failure
+    raises), the resume writes exactly the full run's counts for its
+    buckets, and no Filter below the exchange carries the bucket hash
+    (a pushed-down bucket predicate re-inlines the staged cell tree
+    until the optimizer runs out of heap)."""
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from conftest import SF_DIR
+    from geozero_spark import queries as Q
+    from geozero_spark.functions import cols
+
+    writes = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **kw):
+        writes.append((path, self._df))
+        return parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        df = cols.with_cell_col(Q.points_df(spark, SF_DIR),
+                                "lon", "lat", 12)
+        n_rows = df.count()
+        base = os.path.join(tmpdir_path, "stages_cell")
+        full = meta.run_stage(spark, df, base, "s1", bucket_col="cell",
+                              n_buckets=4, fingerprint="v1")
+        per_bucket = {b: r for b, r, _ in full}
+        assert sum(per_bucket.values()) == n_rows > 0
+        assert len(per_bucket) == 4
+        shutil.rmtree(os.path.join(base, "_meta"))
+        spark.createDataFrame(
+            [("s1", b, per_bucket[b], 0.0, "v1", 0.0) for b in (0, 1)],
+            "stage string, bucket int, rows long, wall_s double, "
+            "fingerprint string, ts double",
+        ).write.mode("overwrite").parquet(meta.meta_path(base, "s1"))
+        done_files = {b: sorted(os.listdir(
+            os.path.join(base, "s1", f"bucket={b}"))) for b in (0, 1)}
+        writes.clear()
+        resumed = meta.run_stage(spark, df, base, "s1",
+                                 bucket_col="cell", n_buckets=4,
+                                 fingerprint="v1")
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
+    assert {b: r for b, r, _ in resumed} == {
+        2: per_bucket[2], 3: per_bucket[3]}
+    # the done buckets' files are untouched, not rewritten
+    assert done_files == {b: sorted(os.listdir(
+        os.path.join(base, "s1", f"bucket={b}"))) for b in (0, 1)}
+    out = spark.read.parquet(os.path.join(base, "s1"))
+    assert out.count() == n_rows
+    staged = [d for path, d in writes if path == f"{base}/s1"]
+    assert len(staged) == 1
+    nodes = list(_plan_nodes(
+        staged[0]._jdf.queryExecution().optimizedPlan()))
+    assert any(n.nodeName() == "RepartitionByExpression"
+               for n, _ in nodes)
+    for n, above in nodes:
+        if n.nodeName() == "Filter" and \
+                "RepartitionByExpression" in above:
+            assert "xxhash64" not in n.condition().toString(), \
+                n.condition().toString()
 
 
 def test_read_gpx_scan(spark, tmpdir_path):
@@ -609,6 +669,9 @@ def test_read_shp_indexed_matches_whole_file(spark, tmpdir_path):
 
     idf = readers.read_shp_indexed(spark, path, n_splits=8)
     assert idf.rdd.getNumPartitions() == 8
+    # one task per split: the 8 record runs fill all 8 partitions
+    pids = idf.select(F.spark_partition_id()).distinct().collect()
+    assert len(pids) == 8
     got = {r.record_idx: (r.geom.coords[0], r.geom.coords[1])
            for r in idf.collect()}
     assert len(got) == 2000
