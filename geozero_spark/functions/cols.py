@@ -74,6 +74,14 @@ def with_cell_col(df: DataFrame, lon: Column | str, lat: Column | str,
     The clamped grid coords go through with_cell_from_ixiy, the one
     staged spread/assemble sequence.
     """
+    ix, iy = grid_ixy(lon, lat, res)
+    return with_cell_from_ixiy(df, ix, iy, res, out=out)
+
+
+def grid_ixy(lon: Column | str, lat: Column | str,
+             res: int) -> tuple[Column, Column]:
+    """Clamped integer grid coords at ``res`` (sqlgen.grid_ixy parity);
+    the exact 2^res scale makes them a finer level's coords >> the gap."""
     n = 1 << res
     lonc = F.col(lon) if isinstance(lon, str) else lon
     latc = F.col(lat) if isinstance(lat, str) else lat
@@ -83,7 +91,7 @@ def with_cell_col(df: DataFrame, lon: Column | str, lat: Column | str,
     iy = F.least(F.greatest(
         F.floor((latc + F.lit(90.0)) / F.lit(180.0) * F.lit(n))
         .cast("bigint"), F.lit(0)), F.lit(n - 1))
-    return with_cell_from_ixiy(df, ix, iy, res, out=out)
+    return ix, iy
 
 
 def with_cell_from_ixiy(df: DataFrame, ix: Column | str,

@@ -23,7 +23,7 @@ downstream (WKB/WKT/GeoJSON writers, the Spark struct) is shared.
 from __future__ import annotations
 
 import struct
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from .model import (GEOMETRYCOLLECTION, LINESTRING, MULTILINESTRING,
                     MULTIPOINT, MULTIPOLYGON, POINT, POLYGON, Geom)

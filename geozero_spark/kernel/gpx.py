@@ -14,8 +14,7 @@ from __future__ import annotations
 
 import xml.etree.ElementTree as ET
 
-from .model import (GEOMETRYCOLLECTION, LINESTRING, MULTILINESTRING,
-                    POINT, Geom)
+from .model import GEOMETRYCOLLECTION, MULTILINESTRING, POINT, Geom
 
 
 class GpxError(ValueError):

@@ -38,8 +38,8 @@ import numpy as np
 
 from . import bounds as _bounds
 from . import wkb as _wkb
-from .model import (GEOMETRYCOLLECTION, LINESTRING, MULTILINESTRING,
-                    MULTIPOINT, MULTIPOLYGON, POINT, POLYGON, Geom)
+from .model import (LINESTRING, MULTILINESTRING, MULTIPOINT,
+                    MULTIPOLYGON, POINT, POLYGON, Geom)
 
 FLAT_KINDS = {POINT, LINESTRING, POLYGON, MULTIPOINT, MULTILINESTRING,
               MULTIPOLYGON}

@@ -1,19 +1,32 @@
-"""Grid kNN via cell-ring (disk) expansion.
+"""Grid kNN as one count-bounded cell-disk join.
 
 The reference's spatial-index exemplar is a KD-bush radius query
 (geozero/tests/kdbush.rs:8-35, ``within(x, y, r)``); the distributed
-re-expression is: index both sides on Morton cells, join queries'
-k-ring disk against target cells, take the top-k by distance with a
-window, and EXPAND the disk for queries whose k-th hit is not yet
-provably correct.
+re-expression joins each query's Chebyshev disk of Morton cells against
+the target cells and ranks the top-k by distance with a window. Each
+disk's radius is chosen up front, so the join is one lazy plan:
 
-Correctness bound: at resolution ``res`` the cell height is 180/2^res
-degrees (<= cell width), so every point outside the Chebyshev ``r``-disk
-of the query's cell is at least ``r * 180/2^res`` degrees away. A
-query is settled once it has k candidates with
-``sqrt(kth_dist) <= r * cell_h`` — otherwise it re-joins at radius 2r.
-The driver-side loop runs O(log) distributed jobs, each only over the
-still-unsettled queries (usually none after the first round).
+1. ``_count_grid`` counts the targets per fine cell at level
+   FINE_LEVEL (res=None) or f: one groupBy-count merges the cells
+   before the driver, so the collect holds at most 4^FINE_LEVEL + 1
+   rows whatever |T| or the partition count. It is the only eager
+   action; its sum is |T| for auto_res.
+2. ``_search_radius`` (a mapInArrow over the queries) finds, in the
+   broadcast summed-area table of those counts at f = min(res + 3,
+   FINE_LEVEL), the smallest (2r'+1)^2 fine box around the query
+   holding >= k + 1 targets (>= k without exclude_self; clamped at the
+   grid edges, no longitude wrap: the metric is planar). All lie within
+   U = sqrt(((r'+1) w_f + 1)^2 + ((r'+1) h_f + 1)^2) centi-degrees
+   (+1 per axis for float cell edges), so the k-th distance is <= U.
+   A point outside the Chebyshev R-disk of the query's cell is
+   >= R * cell_h away (cell_h = 180/2^res degrees <= cell width), so
+   R = floor(U / cell_h) + 1 holds the exact top-k at any f (above
+   res 10, f < res: still exact, the radius is just looser). An
+   undercount only loosens U; an overcount breaks exactness, so
+   targets outside the lon/lat envelope are not counted, and a query
+   outside it (or whose box never fills) searches max_radius.
+3. One ``_disk_cells`` explosion at the per-row radius, one cell
+   cogroup (``_cell_local_topk``) and one rank window.
 
 Distances are computed in INTEGER centi-degree space (dx*dx + dy*dy as
 exact int64) with a (dist, target_key) tie-break, so verdicts are
@@ -23,15 +36,17 @@ bit-identical to any other engine evaluating the same arithmetic.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..functions import cols
-from ..functions import sqlgen as sg
 
 
-def _disk_cells(df: DataFrame, xc: str, yc: str, res: int, radius: int,
+def _disk_cells(df: DataFrame, ix: str, iy: str, res: int, radius: str,
                 out: str = "cell") -> DataFrame:
-    """Explode each query row into its (2r+1)^2 Chebyshev disk of cells.
-    Longitude wraps, latitude clamps (kernel/cells.neighbors parity).
+    """Explode each query row into the (2r+1)^2 Chebyshev disk of cells
+    around its grid cell (``ix``, ``iy``), r = the row's ``radius``
+    column. Longitude wraps, latitude clamps (kernel/cells.neighbors
+    parity).
 
     The dx span is clamped to at most n consecutive offsets so
     ``pmod(ix+dx, n)`` stays BIJECTIVE: with 2*radius+1 > n an unclamped
@@ -39,45 +54,39 @@ def _disk_cells(df: DataFrame, xc: str, yc: str, res: int, radius: int,
     rows and hence (query, target) candidates — row_number would then rank
     the same neighbor twice and drop a true one (round-1 advisory)."""
     n = 1 << res
-    d = sg.SPARK
-    lon = f"(({xc}) / 100.0e0)"
-    lat = f"(({yc}) / 100.0e0)"
-    ix, iy = sg.grid_ixy(lon, lat, res)
-    x_span = min(2 * radius + 1, n)
-    x_lo = -(x_span // 2)
-    x_hi = x_lo + x_span - 1
-    jx = f"pmod(ix + dx, {n})"
-    jy = "(iy + dy)"
+    span = f"least(2 * {radius} + 1, {n})"
     out_df = (df
-              .withColumn("ix", F.expr(ix)).withColumn("iy", F.expr(iy))
               .withColumn("dx", F.expr(
-                  f"explode(sequence({x_lo}, {x_hi}))"))
+                  f"explode(sequence(-({span} div 2), "
+                  f"{span} - 1 - ({span} div 2)))"))
               .withColumn("dy", F.expr(
-                  f"explode(sequence({-radius}, {radius}))"))
-              .where(F.expr(f"{jy} >= 0 AND {jy} < {n}")))
+                  f"explode(sequence(greatest(-{radius}, -{iy}), "
+                  f"least({radius}, {n - 1} - {iy})))")))
     # staged Morton assembly over the wrapped grid coords (the textual
     # make_cell form costs seconds of cold parse+codegen per plan)
-    out_df = cols.with_cell_from_ixiy(out_df, F.expr(jx), F.expr(jy),
-                                      res, out=out)
-    return out_df.drop("ix", "iy", "dx", "dy")
+    out_df = cols.with_cell_from_ixiy(
+        out_df, F.expr(f"pmod({ix} + dx, {n})"), F.expr(f"{iy} + dy"),
+        res, out=out)
+    return out_df.drop(ix, iy, radius, "dx", "dy")
 
 
 def auto_res(n_targets: int, per_cell: int = 2000,
              min_cells: int = 1) -> int:
     """Resolution balancing per-cell matrix work against per-group
-    cogroup overhead. Cell count = max(n_targets / per_cell,
-    min_cells): at least ``min_cells`` groups (knn_join wires 32x
-    defaultParallelism through — granularity scales with the cluster,
-    not a local constant), at most ~``per_cell`` targets per cell so
-    the 9-cell disk join's pair work stays bounded once data outgrows
-    the parallelism floor. per_cell=2000 re-measured for the packed
-    uint32 kernel (r6 res sweep: res 5 fastest at BOTH 200k and 2M
-    targets on 32 cores — 7.5s vs 13.2s at the old res 7 for 2M; the
-    cogrouped UDF's per-group cost dominates long before the disk's
-    extra pairs do)."""
+    cogroup overhead: cell count = max(n_targets / per_cell,
+    min_cells), at least ``min_cells`` groups (knn_join passes 32x
+    defaultParallelism) and at most ~``per_cell`` targets per cell.
+    per_cell=2000 is measured for the packed uint32 kernel (res 5 beat
+    res 7 at 200k and 2M targets: per-group cost dominates pair work)."""
     import math
     cells = max(n_targets / per_cell, float(min_cells), 1.0)
     return max(2, min(12, round(math.log2(cells) / 2)))
+
+
+def _check_bound(what: str, n: int, bound: int) -> None:
+    if n > bound:  # a driver collect over its declared bound: fail
+        raise RuntimeError(f"{what}: driver collected {n} rows, over "
+                           f"its declared bound of {bound}")
 
 
 def _select_topk(d2, kk: int, big):
@@ -238,15 +247,55 @@ def _cell_local_topk(disks: DataFrame, tgt: DataFrame, k: int,
             .applyInArrow(local, out_schema))
 
 
+def _count_grid(targets: DataFrame, tx: str, ty: str, level: int):
+    """(total, key, n): the target row count, and the targets per cell
+    key = ix << level | iy, merged across partitions by one groupBy
+    count, so the driver gets one row per occupied cell (at most
+    4^level + 1). A target outside the lon/lat envelope (its clamped
+    cell does not hold it) or with a NULL coordinate gets key -1:
+    counted in the total, never in a cell."""
+    ix, iy = cols.grid_ixy(F.col(tx) / 100.0, F.col(ty) / 100.0, level)
+    inside = (F.abs(tx) <= 18000) & (F.abs(ty) <= 9000)
+    key = F.when(inside, F.shiftleft(ix, level) + iy).otherwise(-1)
+    tbl = targets.select(key.alias("key")).groupBy("key").count().toArrow()
+    key, n = _ints(tbl, "key"), _ints(tbl, "count")
+    return int(n.sum()), key[key >= 0], n[key >= 0]
+
+
+def _search_radius(sat, fx, fy, qx, qy, need: int, res: int,
+                   max_radius: int):
+    """Per-query disk radius at ``res`` (module docstring, step 2): binary
+    search for the smallest fine box whose ``sat`` count is >= need."""
+    import numpy as np
+
+    m = sat.shape[0] - 1
+
+    def box(r):
+        x0, x1 = np.maximum(fx - r, 0), np.minimum(fx + r + 1, m)
+        y0, y1 = np.maximum(fy - r, 0), np.minimum(fy + r + 1, m)
+        return sat[x1, y1] - sat[x0, y1] - sat[x1, y0] + sat[x0, y0]
+
+    lo, hi = np.zeros_like(fx), np.full_like(fx, m - 1)
+    while (lo < hi).any():
+        mid = (lo + hi) // 2
+        ok = box(mid) >= need
+        lo, hi = np.where(ok, lo, mid + 1), np.where(ok, mid, hi)
+    u = np.hypot((lo + 1) * 36000.0 / m + 1, (lo + 1) * 18000.0 / m + 1)
+    r = np.floor(u / (18000.0 / (1 << res))).astype(np.int64) + 1
+    found = (box(lo) >= need) & (np.abs(qx) <= 18000) & (np.abs(qy) <= 9000)
+    return np.minimum(np.where(found, r, max_radius), max_radius)
+
+
 def knn_join_broadcast(queries: DataFrame, targets: DataFrame, k: int,
                        query_key: str = "q_id", target_key: str = "t_id",
                        qx: str = "qx", qy: str = "qy",
                        tx: str = "tx", ty: str = "ty",
                        exclude_self: bool = True) -> DataFrame:
-    """Exact kNN for SMALL query sets: broadcast the queries, compute a
-    partition-local top-k over the targets with numpy (NO target
-    shuffle, one Arrow batch per scan partition), then merge the
-    per-partition partials with one tiny window.
+    """Exact kNN for SMALL query sets: collect the queries (at most
+    BROADCAST_QUERY_LIMIT rows; a larger query side raises), broadcast
+    them, compute a partition-local top-k over the targets with numpy
+    (NO target shuffle, one Arrow batch per scan partition), then merge
+    the per-partition partials with one tiny window.
 
     This is the broadcast twin of the grid path: at 10^12 targets the
     scan stays a scan — each executor reduces its slice to k rows per
@@ -256,15 +305,16 @@ def knn_join_broadcast(queries: DataFrame, targets: DataFrame, k: int,
     import numpy as np
     import pyarrow as pa
 
-    qrows = queries.select(query_key, qx, qy).collect()
-    if not qrows:
+    qt = queries.select(query_key, qx, qy).limit(
+        BROADCAST_QUERY_LIMIT + 1).toArrow()
+    _check_bound("knn_join_broadcast queries (use method='grid')",
+                 qt.num_rows, BROADCAST_QUERY_LIMIT)
+    if not qt.num_rows:
         return queries.sparkSession.createDataFrame(
             [], f"{query_key} long, {target_key} long, dist2 long, "
                 f"rank int")
-    qid = np.array([r[0] for r in qrows], dtype=np.int64)
-    qxv = np.array([r[1] for r in qrows], dtype=np.int64)
-    qyv = np.array([r[2] for r in qrows], dtype=np.int64)
-    bc = queries.sparkSession.sparkContext.broadcast((qid, qxv, qyv))
+    bc = queries.sparkSession.sparkContext.broadcast(
+        (_ints(qt, query_key), _ints(qt, qx), _ints(qt, qy)))
 
     out_schema = f"{query_key} long, {target_key} long, dist2 long"
 
@@ -291,6 +341,9 @@ def knn_join_broadcast(queries: DataFrame, targets: DataFrame, k: int,
 
 
 BROADCAST_QUERY_LIMIT = 100_000
+# finest count-grid level: bounds the count collect at 4^10 + 1 rows and
+# the broadcast summed-area table at (2^10 + 1)^2 int64 (8.4 MB)
+FINE_LEVEL = 10
 # |Q| * |T| distance evaluations above which the grid index beats the
 # broadcast scan: the broadcast path's work is exactly the pair count
 # (measured ~1e-9..3e-9 s/pair/core on the uint32 kernel), while the
@@ -319,26 +372,39 @@ def knn_join(queries: DataFrame, targets: DataFrame, k: int,
     NOTE: the planar metric does not wrap the dateline; candidate
     generation wraps cells, the final metric is planar centi-degrees.
 
-    method: "grid" (cell-cogrouped disk expansion — the index path for
-    large query sets), "broadcast" (broadcast-queries partition-local
-    top-k — fastest when |Q| is small), or "auto" (broadcast when BOTH
-    the query side is under BROADCAST_QUERY_LIMIT rows and the total
+    method: "grid" (cell-cogrouped disk join — the index path for large
+    query sets), "broadcast" (broadcast-queries partition-local top-k —
+    fastest when |Q| is small), or "auto" (broadcast when BOTH the
+    query side is under BROADCAST_QUERY_LIMIT rows and the total
     |Q| * |T| distance work is under BROADCAST_WORK_LIMIT — a small
     query set over a huge target table is exactly where the scan's
     quadratic work loses to the grid index). Both are exact and
     bit-identical.
+
+    The grid path is one lazy plan, no persist or checkpoint, and no
+    driver loop; its only eager action is the count-grid collect
+    (module docstring), whose total feeds auto_res when ``res`` is
+    None and the work probe of method="auto" (one target scan either
+    way). ``max_radius`` (default 2^res, a full sweep) caps the disk
+    radius exactly: a capped query gets the nearest targets inside its
+    disk. ``exclude_self`` drops targets keyed like the query and
+    assumes target keys are unique (every caller passes doc ids). A
+    query with a NULL coordinate is dropped.
     """
-    n_t_known = None
+    import numpy as np
+    import pyarrow as pa
+
+    queries = queries.where(F.col(qx).isNotNull() & F.col(qy).isNotNull())
+    level = FINE_LEVEL if res is None else min(res + 3, FINE_LEVEL)
+    grid = None
     if method == "auto":
         n_q = queries.select(query_key).limit(
             BROADCAST_QUERY_LIMIT + 1).count()
-        if n_q > BROADCAST_QUERY_LIMIT:
-            method = "grid"
-        else:
-            n_t_known = targets.count()
-            method = ("broadcast"
-                      if n_q * n_t_known <= BROADCAST_WORK_LIMIT
-                      else "grid")
+        method = "grid"
+        if n_q <= BROADCAST_QUERY_LIMIT:
+            grid = _count_grid(targets, tx, ty, level)
+            if n_q * grid[0] <= BROADCAST_WORK_LIMIT:
+                method = "broadcast"
     if method == "broadcast":
         return knn_join_broadcast(
             queries, targets, k, query_key=query_key,
@@ -346,80 +412,44 @@ def knn_join(queries: DataFrame, targets: DataFrame, k: int,
             exclude_self=exclude_self)
     if method != "grid":
         raise ValueError(f"unknown kNN method {method!r}")
+    total, key, cn = grid or _count_grid(targets, tx, ty, level)
     if res is None:
         par = targets.sparkSession.sparkContext.defaultParallelism
-        res = auto_res(n_t_known if n_t_known is not None
-                       else targets.count(), min_cells=par * 32)
-    n = 1 << res
-    cell_h = 18000.0 / n  # centi-degrees per cell (latitude pitch)
+        res = auto_res(total, min_cells=par * 32)
     if max_radius is None:
-        max_radius = n  # full sweep fallback
-    tgt = cols.with_cell_col(
-        targets, F.col(tx) / F.lit(100.0), F.col(ty) / F.lit(100.0),
-        res, out="cell")
-    tgt = tgt.persist()
-    # materialize the query side once: upstream pipelines (Arrow-UDF
-    # decode etc.) must not re-run every expansion round
-    remaining = queries.persist()
-    n_remaining = remaining.count()
-    settled_parts = []
-    radius = 1
-    to_unpersist = [remaining, tgt]
-    keep_cached = []
-    while True:
-        # cell-cogrouped local top-k: instead of materializing the full
-        # (query x cell-targets) pair set through a shuffle+sort (hot
-        # cells make that millions of rows), cogroup the exploded query
-        # disks with the targets BY CELL and compute each cell's
-        # per-query top-k in numpy. Shuffle volume = |queries|*disk +
-        # |targets|, never the pair count.
-        disks = _disk_cells(remaining, qx, qy, res, radius)
-        cand = _cell_local_topk(disks, tgt, k, query_key, target_key,
-                                qx, qy, tx, ty, exclude_self)
-        # the settle check rides the SAME window partitioning as the
-        # rank (one shuffle, no separate agg+semijoin jobs): a query is
-        # settled when it has k hits and its k-th distance beats the
-        # disk guarantee (strict <: a point just outside the disk can
-        # sit at exactly the guarantee distance and deserves a
-        # tie-break comparison)
-        w = Window.partitionBy(query_key).orderBy("dist2", target_key)
-        wq = Window.partitionBy(query_key)
-        guarantee = (radius * cell_h) ** 2
-        topk = (cand
-                .withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k))
-        if radius >= max_radius:
-            topk = topk.withColumn("_settled", F.lit(True))
-        else:
-            topk = topk.withColumn(
-                "_settled",
-                (F.count("*").over(wq) >= k) &
-                (F.max("dist2").over(wq) < F.lit(guarantee)))
-        topk = topk.persist()
-        keep_cached.append(topk)
-        # ONE job per round: materialize + count settled queries
-        n_settled = (topk.where("_settled").select(query_key)
-                     .distinct().count())
-        settled_parts.append(
-            topk.where("_settled")
-            .select(query_key, target_key, "dist2", "rank"))
-        n_remaining -= n_settled
-        if radius >= max_radius or n_remaining <= 0:
-            break
-        settled_keys = topk.where("_settled").select(query_key).distinct()
-        remaining = remaining.join(F.broadcast(settled_keys),
-                                   on=query_key, how="left_anti").persist()
-        to_unpersist.append(remaining)
-        radius *= 2
-    out = settled_parts[0]
-    for p in settled_parts[1:]:
-        out = out.unionByName(p)
-    # materialize the result before releasing intermediate caches, as
-    # a local checkpoint: returning a filter over a still-cached round
-    # frame, or a persisted union, leaked one cached DataFrame per call
-    # (the caller has no handle to release it, and a second identical
-    # call was served from it)
-    out = out.localCheckpoint()
-    for df in to_unpersist + keep_cached:
-        df.unpersist()
-    return out
+        max_radius = 1 << res  # full sweep fallback
+    if max_radius < 0:
+        raise ValueError(f"max_radius must be >= 0, got {max_radius}")
+    f = min(res + 3, level)  # roll the counts up from level to f
+    sat = np.zeros(((1 << f) + 1,) * 2, np.int64)
+    np.add.at(sat, ((key >> level >> (level - f)) + 1,
+                    ((key & ((1 << level) - 1)) >> (level - f)) + 1), cn)
+    bc = targets.sparkSession.sparkContext.broadcast(
+        sat.cumsum(axis=0).cumsum(axis=1))
+
+    def radius(it):
+        for b in it:
+            r = _search_radius(
+                bc.value, *(b.column(c).to_numpy() for c in
+                            ("_fx", "_fy", qx, qy)),
+                k + int(exclude_self), res, max_radius)
+            yield b.append_column("_r", pa.array(r, pa.int32()))
+
+    lon, lat = F.col(qx) / 100.0, F.col(qy) / 100.0
+    fx, fy = cols.grid_ixy(lon, lat, f)
+    ix, iy = cols.grid_ixy(lon, lat, res)
+    q = queries.select(query_key, qx, qy, fx.alias("_fx"), fy.alias("_fy"))
+    q = q.mapInArrow(radius, StructType(
+        q.schema.fields + [StructField("_r", IntegerType())])).select(
+        query_key, qx, qy, "_r", ix.alias("_ix"), iy.alias("_iy"))
+    tgt = cols.with_cell_col(targets, F.col(tx) / 100.0,
+                             F.col(ty) / 100.0, res, out="cell")
+    # cogroup the query disks with the targets BY CELL for a numpy
+    # top-k per cell: shuffle volume is |queries| * disk + |targets|,
+    # never the (query x cell-targets) pair count
+    cand = _cell_local_topk(_disk_cells(q, "_ix", "_iy", res, "_r"), tgt,
+                            k, query_key, target_key, qx, qy, tx, ty,
+                            exclude_self)
+    w = Window.partitionBy(query_key).orderBy("dist2", target_key)
+    return (cand.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k))

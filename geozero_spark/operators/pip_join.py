@@ -39,7 +39,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions import cols
 from ..functions import sqlgen as sg
-from ..functions import udfs
 
 
 def explode_bbox_cover(df: DataFrame, res: int, bbox_col: str = "bbox",

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, LongType
 
-from .knn import _select_topk
+from .knn import _check_bound, _select_topk
 
 
 def _vec_matrix(col: pa.ListArray, name: str,
@@ -417,12 +417,6 @@ def _rerank(cand: DataFrame, qk: DataFrame, tk: DataFrame, k: int,
 #   float addition order is bit-identical;
 # - assignment, probe and rerank all score with ``_fold_dot``; the
 #   rerank is ann_topk's keys-first tail (``_rerank``).
-
-
-def _check_bound(what: str, n: int, bound: int) -> None:
-    if n > bound:  # a plan or emitter bug: fail, never truncate
-        raise RuntimeError(f"{what}: driver collected {n} rows, over "
-                           f"its declared bound of {bound}")
 
 
 def _nearest_fn(cmat: np.ndarray, nsel: int):

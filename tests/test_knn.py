@@ -27,11 +27,11 @@ def brute_topk(qrows, trows, k, exclude_self=True):
 
 
 def run_knn(spark, qrows, trows, k, res, exclude_self=True,
-            method="grid"):
+            method="grid", max_radius=None):
     q = spark.createDataFrame(qrows, "q_id long, qx long, qy long")
     t = spark.createDataFrame(trows, "t_id long, tx long, ty long")
     got = knn_join(q, t, k=k, res=res, exclude_self=exclude_self,
-                   method=method)
+                   method=method, max_radius=max_radius)
     rows = sorted((r.q_id, r.t_id, r.dist2, r.rank) for r in got.collect())
     got.unpersist()
     return rows
@@ -50,9 +50,36 @@ def test_wrap_no_duplicate_neighbors(spark):
     assert len(seen) == len(got)
 
 
+def _stress_rows(rng):
+    """Targets and queries that stress the count-bounded radius: dense
+    clusters beside sparse space, points ON the +/-90 and +/-180 edges,
+    exact cell-edge coordinates (multiples of 1125 centi-degrees are
+    cell edges at every res <= 4 and longitude edges up to res 5),
+    grid-quantized exact distance ties, and 5-way clones (one position,
+    five keys). Queries are a slice of the targets (self-exclusion
+    applies) plus foreign points, corners included."""
+    pts = [(int(x), int(y)) for x, y in zip(
+        rng.normal(4000, 150, 40).round(), rng.normal(-2000, 150, 40)
+        .round())]
+    pts += [(int(x), int(y)) for x, y in zip(
+        rng.integers(-18000, 18001, 25), rng.integers(-9000, 9001, 25))]
+    pts += [(-18000, -9000), (18000, 9000), (18000, -9000), (-18000, 0),
+            (0, 9000), (17999, 8999), (-17999, -9000)]
+    pts += [(1125 * int(a), 1125 * int(b)) for a, b in zip(
+        rng.integers(-16, 17, 12), rng.integers(-8, 9, 12))]
+    pts += [(100 * int(a), 100 * int(b)) for a, b in zip(
+        rng.integers(-3, 4, 15), rng.integers(-3, 4, 15))]
+    pts += [(-7000, 3000)] * 5
+    trows = [(i, x, y) for i, (x, y) in enumerate(pts)]
+    qrows = trows[::4] + [(1000 + i, x, y) for i, (x, y) in enumerate(
+        [(-18000, 9000), (18000, 0), (4000, -2000), (0, 0),
+         (-7000, 3000), (1125, -1125), (9000, -8999)])]
+    return qrows, trows
+
+
 def test_knn_matches_brute_force_random(spark):
     rng = np.random.default_rng(7)
-    # clustered + sparse mix forces several expansion rounds
+    # uniform queries and targets: search radii differ per query
     tx = rng.integers(-18000, 18000, size=60)
     ty = rng.integers(-9000, 9000, size=60)
     trows = [(int(i), int(x), int(y)) for i, (x, y) in
@@ -69,6 +96,18 @@ def test_knn_matches_brute_force_random(spark):
     got_bc = run_knn(spark, qrows, trows, k=3, res=None,
                      method="broadcast")
     assert got_bc == want
+    # stress inputs at every res auto_res or a caller picks, k 1/3/6,
+    # self-exclusion both ways
+    qrows, trows = _stress_rows(np.random.default_rng(31))
+    for res, k, excl in ((None, 3, True), (2, 6, False), (3, 1, True),
+                         (5, 6, True), (7, 1, False)):
+        got = run_knn(spark, qrows, trows, k=k, res=res, exclude_self=excl)
+        assert got == brute_topk(qrows, trows, k, excl), (res, k, excl)
+    # k > |T|: every query gets all the targets there are
+    few = trows[:4]
+    for excl in (True, False):
+        got = run_knn(spark, qrows[:3], few, k=6, res=3, exclude_self=excl)
+        assert got == brute_topk(qrows[:3], few, 6, excl), excl
 
 
 def test_knn_exclude_self_and_ties(spark):
@@ -220,10 +259,10 @@ def test_select_topk_matches_stable_argsort(dtype, big):
 
 
 def test_knn_join_output_not_left_cached(spark):
-    """knn_join materializes its settled union as a local checkpoint:
-    the caller gets no cached DataFrame it never asked for, the
-    CacheManager holds no new entry, and a second identical call runs
-    its own jobs instead of being served from the first call's cache."""
+    """knn_join returns a lazy plan that caches nothing: the caller gets
+    no cached DataFrame it never asked for, the CacheManager holds no
+    new entry, and a second identical call runs its own jobs instead of
+    being served from the first call's cache."""
     rng = np.random.default_rng(11)
     trows = [(int(i), int(x), int(y)) for i, (x, y) in enumerate(zip(
         rng.integers(-18000, 18000, 300), rng.integers(-9000, 9000, 300)))]
@@ -246,3 +285,108 @@ def test_knn_join_output_not_left_cached(spark):
     plan = second._jdf.queryExecution().withCachedData().toString()
     assert "InMemoryRelation" not in plan
     assert sorted(first.collect()) == sorted(second.collect())
+
+
+def _grid_fixture(spark):
+    rng = np.random.default_rng(3)
+    trows = [(int(i), int(x), int(y)) for i, (x, y) in enumerate(zip(
+        rng.integers(-18000, 18000, 400), rng.integers(-9000, 9000, 400)))]
+    q = spark.createDataFrame(trows[::8], "q_id long, qx long, qy long")
+    t = spark.createDataFrame(trows, "t_id long, tx long, ty long")
+    return q, t
+
+
+# jobs of one grid knn_join(res=None) plus one collect in the test
+# session (local[8], 8 shuffle partitions, AQE): the count grid's
+# exchange and collect, the disk, target and rank-window exchanges, and
+# the result stage. A per-radius driver loop costs several times more.
+GRID_JOB_BUDGET = 6
+
+
+def test_knn_grid_job_budget(spark):
+    q, t = _grid_fixture(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("knn_grid_budget", "grid knn_join plus one collect")
+    try:
+        n = len(knn_join(q, t, k=3, res=None, method="grid").collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == 3 * 50
+    jobs = sc.statusTracker().getJobIdsForGroup("knn_grid_budget")
+    assert len(jobs) <= GRID_JOB_BUDGET, sorted(jobs)
+
+
+def test_knn_grid_plan_is_one_lazy_join(spark):
+    """No persist or checkpoint anywhere in the grid plan, and exactly
+    one cell cogroup: the whole search is a single disk join."""
+    q, t = _grid_fixture(spark)
+    out = knn_join(q, t, k=3, res=4, method="grid")
+    plan = out._jdf.queryExecution().withCachedData().toString()
+    assert "InMemoryRelation" not in plan
+    assert plan.count("FlatMapCoGroupsInArrow") == 1, plan
+
+
+def test_knn_max_radius_is_an_exact_cap(spark):
+    """The only target sits 4 cell rows above the query's cell at res 4
+    (Chebyshev radius 4): a cap of 3 searches radius 3 exactly and does
+    not reach it; the default cap (a full sweep) does."""
+    # res 4: cell pitch 2250 x 1125 centi-degrees; query in cell
+    # (8, 8), target in cell (8, 12)
+    qrows = [(1, 1125, 562)]
+    trows = [(7, 1125, 562 + 4 * 1125)]
+    assert run_knn(spark, qrows, trows, k=1, res=4, exclude_self=False,
+                   max_radius=3) == []
+    assert run_knn(spark, qrows, trows, k=1, res=4, exclude_self=False) \
+        == [(1, 7, (4 * 1125) ** 2, 1)]
+
+
+def test_knn_broadcast_query_side_is_bounded(spark, monkeypatch):
+    """The broadcast path collects at most BROADCAST_QUERY_LIMIT query
+    rows to the driver; an explicit method="broadcast" over a larger
+    query side fails loudly instead of collecting it."""
+    from geozero_spark.operators import knn
+
+    q, t = _grid_fixture(spark)
+    monkeypatch.setattr(knn, "BROADCAST_QUERY_LIMIT", 20)
+    with pytest.raises(RuntimeError, match="declared bound of 20"):
+        knn_join(q, t, k=3, method="broadcast")
+    assert knn_join(q.limit(20), t, k=3, method="broadcast").count() == 60
+
+
+def test_knn_null_query_coordinate_is_dropped(spark):
+    """A query with a NULL coordinate (points_df emits one for a page
+    without a loc) gets no rows on either path; the others are exact."""
+    trows = [(i, 300 * i, -200 * i) for i in range(12)]
+    qrows = [(100, 50, 40), (101, None, 10), (102, 10, None),
+             (103, -900, 700)]
+    want = brute_topk([qrows[0], qrows[3]], trows, k=2)
+    assert run_knn(spark, qrows, trows, k=2, res=3) == want
+    assert run_knn(spark, qrows, trows, k=2, res=None,
+                   method="broadcast") == want
+
+
+def test_count_grid_merges_partitions_before_the_driver(spark):
+    """The count-grid collect holds one row per occupied cell, however
+    many partitions share that cell: eight copies of the targets in
+    eight partitions collect as many rows as one copy, with 8x counts.
+    Off-envelope and NULL targets count in the total only."""
+    from geozero_spark.operators.knn import _count_grid
+
+    rng = np.random.default_rng(5)
+    pts = [(int(x), int(y)) for x, y in zip(
+        rng.integers(-18000, 18001, 300), rng.integers(-9000, 9001, 300))]
+    rows = [(i, x, y) for i, (x, y) in enumerate(pts)]
+    rows += [(900, 18001, 0), (901, None, 5)]
+    one = spark.createDataFrame(rows, "t_id long, tx long, ty long")
+    total, key, n = _count_grid(one, "tx", "ty", 5)
+    assert total == 302 and n.sum() == 300
+    cells = {(int(np.clip(np.floor((x / 100 + 180) / 360 * 32), 0, 31)),
+              int(np.clip(np.floor((y / 100 + 90) / 180 * 32), 0, 31)))
+             for x, y in pts}
+    assert sorted(zip(key >> 5, key & 31)) == sorted(cells)
+    eight = one.crossJoin(spark.range(8).withColumnRenamed("id", "c")) \
+        .repartition(8, "c")
+    total8, key8, n8 = _count_grid(eight, "tx", "ty", 5)
+    assert total8 == 8 * 302
+    assert sorted(key8) == sorted(key)
+    assert dict(zip(key8, n8)) == {kk: 8 * v for kk, v in zip(key, n)}
