@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import udfs as _udfs
+
 
 def scale_flat(geom: Column, factor: float) -> Column:
     """Uniformly scale a FLAT geometry struct (coords + bbox); exotic
@@ -121,31 +123,6 @@ def point_y(geom: Column) -> Column:
     return F.element_at(geom["coords"], 2)
 
 
-def bbox_xmin(geom: Column) -> Column:
-    return F.element_at(geom["bbox"], 1)
-
-
-def bbox_ymin(geom: Column) -> Column:
-    return F.element_at(geom["bbox"], 2)
-
-
-def bbox_xmax(geom: Column) -> Column:
-    return F.element_at(geom["bbox"], 3)
-
-
-def bbox_ymax(geom: Column) -> Column:
-    return F.element_at(geom["bbox"], 4)
-
-
-def bbox_intersects(geom: Column, xmin: float, ymin: float, xmax: float,
-                    ymax: float) -> Column:
-    """PostGIS `&&` equivalent (geozero-bench/benches/geobench.rs:84-90)."""
-    return (bbox_xmin(geom) <= F.lit(xmax)) & \
-           (bbox_xmax(geom) >= F.lit(xmin)) & \
-           (bbox_ymin(geom) <= F.lit(ymax)) & \
-           (bbox_ymax(geom) >= F.lit(ymin))
-
-
 def point_struct_from_xy(x: Column, y: Column) -> Column:
     """Geometry struct for a 2D point from already-parsed numeric
     columns (NULL when either is NULL) — same struct, bit-identical
@@ -183,26 +160,12 @@ def point_struct_from_wkt_jvm(wkt: Column) -> Column:
     """
     # strict numerals: [-0-9.]+ would accept 'POINT(1.2.3 4)' and emit
     # a non-NULL struct with NULL coords (CAST -> NULL) instead of
-    # taking the documented NULL fallback path
+    # taking the documented NULL fallback path; a non-match extracts ''
     num = r"(-?[0-9]+(?:\.[0-9]+)?)"
-    x = F.regexp_extract(wkt, rf"^POINT\({num} {num}\)$", 1)
-    y = F.regexp_extract(wkt, rf"^POINT\({num} {num}\)$", 2)
-    xd = x.cast("double")
-    yd = y.cast("double")
-    st = F.struct(
-        F.lit(1).cast("tinyint").alias("kind"),
-        F.lit(None).cast("int").alias("srid"),
-        F.lit(False).alias("has_z"),
-        F.lit(False).alias("has_m"),
-        F.array(xd, yd, xd, yd).alias("bbox"),
-        F.array(xd, yd).alias("coords"),
-        F.lit(None).cast("array<int>").alias("offs1"),
-        F.lit(None).cast("array<int>").alias("offs2"),
-        F.lit(None).cast("binary").alias("wkb"),
-        F.lit(None).cast("array<double>").alias("tvals"),
-        F.lit(None).cast("array<bigint>").alias("tmvals"),
-    )
-    return F.when((x != "") & (y != ""), st).otherwise(F.lit(None))
+    pat = rf"^POINT\({num} {num}\)$"
+    x, y = (F.nullif(F.regexp_extract(wkt, pat, i), F.lit(""))
+            for i in (1, 2))
+    return point_struct_from_xy(x, y)
 
 
 def _pairs_sql(inner: str) -> str:
@@ -243,11 +206,7 @@ def _let_sql(value_sql: str, var: str, body_sql: str) -> str:
 
 
 _NUM_RE = "(-?[0-9]+(?:\\\\.[0-9]+)?)"
-_GEOM_STRUCT_DDL = (
-    "STRUCT<kind: TINYINT, srid: INT, has_z: BOOLEAN, has_m: BOOLEAN, "
-    "bbox: ARRAY<DOUBLE>, coords: ARRAY<DOUBLE>, offs1: ARRAY<INT>, "
-    "offs2: ARRAY<INT>, wkb: BINARY, tvals: ARRAY<DOUBLE>, "
-    "tmvals: ARRAY<BIGINT>>")
+_GEOM_STRUCT_DDL = _udfs.GEOMETRY_TYPE.simpleString()
 
 
 def simple_geom_from_wkt_jvm(wkt: Column) -> Column:

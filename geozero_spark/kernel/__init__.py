@@ -6,7 +6,7 @@ Modules:
 - wkb      WKB codec, 5 dialects (wkb/ewkb/gpkg/spatialite/mysql)
 - wkt      WKT/EWKT codec
 - geojson  GeoJSON codec
-- bounds   bbox / npoints / max_z streaming aggregates
+- bounds   bbox / npoints streaming aggregates
 - cells    Morton z-order cell index (S2/H3-style)
 - tiles    z/x/y tile math + MVT map->tile transform
 - pip      even-odd ray-cast point-in-polygon

@@ -83,12 +83,3 @@ def intersects_bbox(g: Geom, minx: float, miny: float, maxx: float,
 def npoints(g: Geom) -> int:
     """Coordinate count (VertexCounter exemplar, tests/geozero-api.rs:5-27)."""
     return sum(1 for _ in _iter_coords(g))
-
-
-def max_z(g: Geom):
-    """Max z over coords (MaxHeightFinder exemplar, geozero-api.rs:29-67)."""
-    mz = None
-    for c in _iter_coords(g):
-        if len(c) > 2 and c[2] is not None:
-            mz = c[2] if mz is None else max(mz, c[2])
-    return mz

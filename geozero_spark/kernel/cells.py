@@ -34,7 +34,6 @@ _M1 = 0x00FF00FF00FF00FF
 _M2 = 0x0F0F0F0F0F0F0F0F
 _M3 = 0x3333333333333333
 _M4 = 0x5555555555555555
-_U64 = 0xFFFFFFFFFFFFFFFF
 
 
 def _spread(v):
@@ -45,17 +44,6 @@ def _spread(v):
     v = (v | (v << 4)) & _M2
     v = (v | (v << 2)) & _M3
     v = (v | (v << 1)) & _M4
-    return v
-
-
-def _compact(v):
-    """Inverse of _spread: extract even bits."""
-    v = v & _M4
-    v = (v | (v >> 1)) & _M3
-    v = (v | (v >> 2)) & _M2
-    v = (v | (v >> 4)) & _M1
-    v = (v | (v >> 8)) & _M0
-    v = (v | (v >> 16)) & 0xFFFFFFFF
     return v
 
 
@@ -87,11 +75,6 @@ def cell_id_np(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
     return (m | np.uint64(res << _RES_SHIFT)).astype(np.int64)
 
 
-def cell_to_ixiy(cell: int):
-    morton = cell & ((1 << _RES_SHIFT) - 1)
-    return _compact(morton), _compact(morton >> 1)
-
-
 def cell_res(cell: int) -> int:
     return (cell >> _RES_SHIFT) & 0x1F
 
@@ -119,34 +102,6 @@ def cell_range(cell: int, at_res: int):
     lo = (at_res << _RES_SHIFT) | (morton << shift)
     hi = (at_res << _RES_SHIFT) | (((morton + 1) << shift) - 1)
     return lo, hi
-
-
-def neighbors(cell: int, ring: int = 1) -> list[int]:
-    """All cells whose Chebyshev distance from ``cell`` is exactly ``ring``
-    (ring=0 -> the cell itself). Longitude wraps; latitude clamps."""
-    res = cell_res(cell)
-    n = 1 << res
-    ix, iy = cell_to_ixiy(cell)
-    if ring == 0:
-        return [cell]
-    out = []
-    for dx in range(-ring, ring + 1):
-        for dy in range(-ring, ring + 1):
-            if max(abs(dx), abs(dy)) != ring:
-                continue
-            jx = (ix + dx) % n
-            jy = iy + dy
-            if 0 <= jy < n:
-                out.append(make_cell(jx, jy, res))
-    return out
-
-
-def disk(cell: int, k: int) -> list[int]:
-    """All cells within Chebyshev distance k (the (2k+1)^2 block)."""
-    out = []
-    for r in range(k + 1):
-        out.extend(neighbors(cell, r))
-    return out
 
 
 def cover_bbox(xmin: float, ymin: float, xmax: float, ymax: float,

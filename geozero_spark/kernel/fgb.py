@@ -17,7 +17,9 @@ File layout:
     per feature: u32 len, FlatBuffers Feature table
 
 Decoding targets the kernel geometry model (model.Geom), so everything
-downstream (WKB/WKT/GeoJSON writers, the Spark struct) is shared.
+downstream (WKB/WKT/GeoJSON writers, the Spark struct) is shared. The
+R-tree walk and the feature loop live in fgbremote, over a
+``read(offset, size)`` source; ``iter_features`` runs them over a buffer.
 """
 
 from __future__ import annotations
@@ -212,53 +214,6 @@ def _rtree_num_nodes(num_items: int, node_size: int) -> int:
     return sum(_rtree_level_sizes(num_items, node_size))
 
 
-def search_index(buf: bytes, info: FgbInfo,
-                 minx: float, miny: float, maxx: float,
-                 maxy: float) -> list[int]:
-    """Packed-Hilbert-R-tree bbox search: returns SORTED byte offsets
-    (relative to info.feature_pos) of candidate features — the
-    streaming-read order the reference's select_bbox uses."""
-    if info.index_node_size <= 0 or info.features_count == 0:
-        raise FgbError("file has no spatial index")
-    num_items = info.features_count
-    node_size = info.index_node_size
-    sizes = _rtree_level_sizes(num_items, node_size)
-    num_nodes = sum(sizes)
-    # level bounds as [start, end) node indices; nodes are stored root
-    # level first, leaves last
-    bounds = []
-    acc = num_nodes
-    for s in sizes:                # bottom-up
-        bounds.append((acc - s, acc))
-        acc -= s
-    bounds.reverse()               # bounds[0] = root level
-    leaf_start = num_nodes - num_items
-    base = info.index_pos
-
-    results = []
-    # (node index, level index into bounds; 0 = root level)
-    queue = [(0, 0)]
-    while queue:
-        node_index, level = queue.pop()
-        is_leaf = node_index >= leaf_start
-        level_end = bounds[level][1]
-        end = min(node_index + node_size, level_end)
-        for pos in range(node_index, end):
-            off = base + pos * 40
-            nminx, nminy, nmaxx, nmaxy = struct.unpack_from(
-                "<4d", buf, off)
-            if nmaxx < minx or nmaxy < miny or nminx > maxx \
-                    or nminy > maxy:
-                continue
-            child = struct.unpack_from("<Q", buf, off + 32)[0]
-            if is_leaf:
-                results.append(child)
-            else:
-                queue.append((child, level + 1))
-    results.sort()
-    return results
-
-
 # --------------------------------------------------------------------------
 # feature decode
 # --------------------------------------------------------------------------
@@ -363,41 +318,12 @@ def decode_feature(buf: bytes, pos: int, info: FgbInfo):
 
 
 def iter_features(buf: bytes, bbox: tuple | None = None):
-    """Yield (Geom | None, props) — full sequential scan, or an
-    index-pruned scan when ``bbox=(minx,miny,maxx,maxy)`` is given
-    (the reference's select_bbox / select_all split)."""
-    info = read_info(buf)
-    if info.has_z or info.has_m:
-        # the xy vector is all this decoder reads; dropping the z/m
-        # vectors silently would corrupt 3D/4D data — refuse loudly
-        # (the reference fixture set is 2D; extend _decode_geometry
-        # with vector_f64(2)/(3) interleave if a 3D source appears)
-        raise FgbError("FlatGeobuf Z/M dimensions not supported")
-    if bbox is not None:
-        if info.index_node_size > 0 and info.features_count > 0:
-            for rel in search_index(buf, info, *bbox):
-                _, geom, props = decode_feature(
-                    buf, info.feature_pos + rel, info)
-                yield geom, props
-            return
-        # no spatial index in this file: sequential scan with an
-        # envelope filter (same result set, no hard failure — one
-        # unindexed file must not abort a whole directory scan)
-        from . import bounds as _bounds
-        for geom, props in iter_features(buf):
-            if geom is not None and _bounds.intersects_bbox(geom, *bbox):
-                yield geom, props
-        return
-    pos = info.feature_pos
-    n = 0
-    while pos + 4 <= len(buf) and (info.features_count == 0
-                                   or n < info.features_count):
-        pos, geom, props = decode_feature(buf, pos, info)
-        n += 1
-        yield geom, props
-    if info.features_count and n < info.features_count:
-        # a buffer cut between the index and feature records would
-        # otherwise read as a VALID empty/short file — fail loudly
-        raise FgbError(
-            f"truncated FlatGeobuf: {n} of "
-            f"{info.features_count} features present")
+    """Yield (Geom | None, props) from an in-memory file — full scan, or
+    an index-pruned scan when ``bbox=(minx,miny,maxx,maxy)`` is given
+    (the reference's select_bbox / select_all split). The buffer is one
+    more ``read(offset, size)`` source of the range scan
+    (fgbremote.iter_features_ranged), so buffers, local files and HTTP
+    share one R-tree walk and one feature loop."""
+    from . import fgbremote
+    return fgbremote.iter_features_ranged(
+        lambda off, n: buf[off:off + n], bbox)

@@ -17,14 +17,20 @@ Scale shape: the driver touches only the header plus ~N leaf nodes
 executor range-reads its own feature span in bounded chunks. A bbox
 query walks the R-tree with one range request per visited node run
 (node_size * 40 bytes), then fetches only hit features.
+
+This is the only FlatGeobuf reader: fgb.iter_features runs it over an
+in-memory buffer, so every source shares one R-tree walk
+(``search_index_ranged``) and one sequential feature loop
+(``iter_span``), and a scan that finds fewer records than the header
+declares raises FgbError.
 """
 
 from __future__ import annotations
 
 import struct
 
-from .fgb import (FgbError, FgbInfo, _rtree_level_sizes, decode_feature,
-                  read_info)
+from . import fgb
+from .fgb import FgbError, FgbInfo, _rtree_level_sizes, decode_feature
 
 _CHUNK = 1 << 20  # sequential-scan fetch granularity
 
@@ -82,24 +88,43 @@ def http_range_source(url: str, timeout: float = 30.0):
     return read
 
 
+def _read_exact(read, offset: int, size: int, what: str) -> bytes:
+    """``read`` that raises FgbError when the source ends early — a cut
+    file fails loudly, never with a bare struct.error."""
+    data = read(offset, size)
+    if len(data) < size:
+        raise FgbError(f"truncated FlatGeobuf: {what} ends at byte "
+                       f"{offset + len(data)}")
+    return data
+
+
 # --------------------------------------------------------------------------
 # header / index over ranges
 # --------------------------------------------------------------------------
 
 def read_info_ranged(read) -> FgbInfo:
+    """The header of a file this reader can decode: Z/M files are
+    refused (the xy vector is all the decoder reads; dropping the z/m
+    vectors silently would corrupt 3D/4D data)."""
     head = read(0, 12)
     if len(head) < 12:
         raise FgbError("not a FlatGeobuf file (too short)")
     hlen = struct.unpack_from("<I", head, 8)[0]
     if hlen > (1 << 26):
         raise FgbError(f"implausible header length {hlen}")
-    return read_info(head + read(12, hlen))
+    # through the module: a patched fgb.read_info reaches every scan
+    info = fgb.read_info(head + read(12, hlen))
+    if info.has_z or info.has_m:
+        raise FgbError("FlatGeobuf Z/M dimensions not supported")
+    return info
 
 
 def search_index_ranged(read, info: FgbInfo, minx: float, miny: float,
                         maxx: float, maxy: float) -> list[int]:
-    """fgb.search_index with one range request per visited node run.
-    Returns sorted feature byte offsets relative to info.feature_pos."""
+    """Packed-Hilbert-R-tree bbox search with one range request per
+    visited node run. Returns SORTED feature byte offsets relative to
+    info.feature_pos — the streaming-read order the reference's
+    select_bbox uses."""
     if info.index_node_size <= 0 or info.features_count == 0:
         raise FgbError("file has no spatial index")
     node_size = info.index_node_size
@@ -117,8 +142,8 @@ def search_index_ranged(read, info: FgbInfo, minx: float, miny: float,
     while queue:
         node_index, level = queue.pop()
         end = min(node_index + node_size, bounds[level][1])
-        blob = read(info.index_pos + node_index * 40,
-                    (end - node_index) * 40)
+        blob = _read_exact(read, info.index_pos + node_index * 40,
+                           (end - node_index) * 40, "R-tree")
         for i in range(end - node_index):
             nminx, nminy, nmaxx, nmaxy = struct.unpack_from(
                 "<4d", blob, i * 40)
@@ -144,38 +169,29 @@ def leaf_feature_offset(read, info: FgbInfo, item: int) -> int:
         raise FgbError("file has no spatial index")
     num_nodes = sum(_rtree_level_sizes(info.features_count, node_size))
     leaf_start = num_nodes - info.features_count
-    blob = read(info.index_pos + (leaf_start + item) * 40 + 32, 8)
+    blob = _read_exact(read, info.index_pos + (leaf_start + item) * 40
+                       + 32, 8, "R-tree")
     return struct.unpack_from("<Q", blob, 0)[0]
 
 
-def split_offsets(read, info: FgbInfo, n_splits: int) -> list[int]:
-    """n_splits+1 ascending ABSOLUTE byte boundaries partitioning the
-    feature section into contiguous spans of ~equal feature counts —
-    O(n_splits) leaf reads, independent of file or index size. Spans
-    are [b[i], b[i+1]); the last boundary is None (read to EOF)."""
+def split_spans(read, info: FgbInfo, n_splits: int) -> list[tuple]:
+    """(start, count) spans partitioning the feature section into
+    contiguous runs of ~equal feature counts: ``start`` is an ABSOLUTE
+    byte offset, ``count`` the records from there — O(n_splits) leaf
+    reads, independent of file or index size. An unindexed file is one
+    span, read to EOF when its header declares no count (count None)."""
     n = info.features_count
+    if info.index_node_size <= 0 or n == 0:
+        return [(info.feature_pos, n or None)]
     n_splits = max(1, min(n_splits, n))
-    outs = []
-    for k in range(n_splits):
-        item = (k * n) // n_splits
-        outs.append(info.feature_pos
-                    + leaf_feature_offset(read, info, item))
-    return outs + [None]
+    items = [(k * n) // n_splits for k in range(n_splits)] + [n]
+    return [(info.feature_pos + leaf_feature_offset(read, info, a), b - a)
+            for a, b in zip(items, items[1:])]
 
 
 # --------------------------------------------------------------------------
 # feature iteration over ranges
 # --------------------------------------------------------------------------
-
-def fetch_feature(read, info: FgbInfo, rel_offset: int):
-    """Decode one feature at a relative offset: fetch its u32 length,
-    then exactly the record bytes."""
-    pos = info.feature_pos + rel_offset
-    flen = struct.unpack_from("<I", read(pos, 4), 0)[0]
-    body = read(pos, 4 + flen)
-    _, geom, props = decode_feature(body, 0, info)
-    return geom, props
-
 
 def iter_hits(read, info: FgbInfo, rels: list, max_gap: int = 65536):
     """Decode SORTED hit offsets with contiguous-run coalescing:
@@ -185,7 +201,7 @@ def iter_hits(read, info: FgbInfo, rels: list, max_gap: int = 65536):
     O(runs) requests instead of 2 per feature. Records between two
     hits of a run always END before the next hit's start (features
     are sequential), so the run bytes cover every hit but the last's
-    tail."""
+    tail. A source that ends inside a run raises FgbError."""
     i, n = 0, len(rels)
     while i < n:
         j = i
@@ -193,7 +209,7 @@ def iter_hits(read, info: FgbInfo, rels: list, max_gap: int = 65536):
             j += 1
         start = info.feature_pos + rels[i]
         last = info.feature_pos + rels[j]
-        head = read(start, last - start + 4)
+        head = _read_exact(read, start, last - start + 4, "feature")
         flen = struct.unpack_from("<I", head, last - start)[0]
         need = last - start + 4 + flen
         buf = head if len(head) >= need else \
@@ -205,21 +221,19 @@ def iter_hits(read, info: FgbInfo, rels: list, max_gap: int = 65536):
         i = j + 1
 
 
-def iter_span(read, info: FgbInfo, start: int, end, max_features=None):
-    """Yield features whose records START in [start, end) (absolute
-    byte offsets; end=None -> EOF), fetching ``_CHUNK``-sized ranges
-    and carrying partial records across chunk boundaries."""
+def iter_span(read, info: FgbInfo, start: int, count=None):
+    """Yield ``count`` consecutive features from the record at absolute
+    byte offset ``start`` (count None: to EOF), fetching ``_CHUNK``-sized
+    ranges and carrying partial records across chunk boundaries. A
+    source that ends before ``count`` records raises FgbError: a cut
+    file never reads as a valid short one."""
     pos = start
     buf = b""
     buf_base = start
     n = 0
-    while end is None or pos < end:
-        have = buf_base + len(buf) - pos
-        if have < 4:
-            more = read(buf_base + len(buf), _CHUNK)
-            if not more:
-                break
-            buf = buf[pos - buf_base:] + more
+    while count is None or n < count:
+        if buf_base + len(buf) - pos < 4:
+            buf = buf[pos - buf_base:] + read(buf_base + len(buf), _CHUNK)
             buf_base = pos
             if len(buf) < 4:
                 break
@@ -230,35 +244,35 @@ def iter_span(read, info: FgbInfo, start: int, end, max_features=None):
             if not more:
                 raise FgbError("truncated feature body")
             buf += more
-        _, geom, props = decode_feature(buf, pos - buf_base, info)
+        _, geom, props = decode_feature(buf, off, info)
         yield geom, props
         pos += 4 + flen
         n += 1
-        if max_features is not None and n >= max_features:
-            break
         if pos - buf_base > 4 * _CHUNK:  # drop consumed prefix
             buf = buf[pos - buf_base:]
             buf_base = pos
+    if count is not None and n < count:
+        raise FgbError(f"truncated FlatGeobuf: {n} of {count} features "
+                       f"present from byte {start}")
 
 
-def iter_features_ranged(read, bbox: tuple | None = None,
-                         info: FgbInfo | None = None):
-    """Remote analogue of fgb.iter_features: bbox -> R-tree walk +
-    per-hit fetches; full scan -> chunked sequential read."""
-    if info is None:
-        info = read_info_ranged(read)
-    if info.has_z or info.has_m:
-        raise FgbError("FlatGeobuf Z/M dimensions not supported")
-    if bbox is not None:
-        if info.index_node_size <= 0 or info.features_count == 0:
-            from . import bounds as _bounds
-            for geom, props in iter_features_ranged(read, info=info):
-                if geom is not None and _bounds.intersects_bbox(
-                        geom, *bbox):
-                    yield geom, props
-            return
+def iter_features_ranged(read, bbox: tuple | None = None):
+    """Yield (Geom | None, props): bbox -> R-tree walk + per-hit-run
+    fetches; full scan -> chunked sequential read of every record the
+    header declares. A bbox over an unindexed file is a sequential scan
+    with an envelope filter (same result set, no hard failure — one
+    unindexed file must not abort a whole directory scan)."""
+    info = read_info_ranged(read)
+    if bbox is not None and info.index_node_size > 0 \
+            and info.features_count > 0:
         yield from iter_hits(read, info,
                              search_index_ranged(read, info, *bbox))
         return
-    yield from iter_span(read, info, info.feature_pos, None,
-                         max_features=info.features_count or None)
+    feats = iter_span(read, info, info.feature_pos,
+                      info.features_count or None)
+    if bbox is None:
+        yield from feats
+        return
+    from . import bounds as _bounds
+    yield from ((g, p) for g, p in feats
+                if g is not None and _bounds.intersects_bbox(g, *bbox))

@@ -315,7 +315,7 @@ def encode_header(name, geometry_type: int, envelope, columns,
 def _build_rtree(items, node_size: int) -> bytes:
     """items: [(minx, miny, maxx, maxy, feature_byte_offset)] in FILE
     (Hilbert) order. Returns the node bytes, root level first — the
-    exact layout fgb.search_index walks."""
+    exact layout fgbremote.search_index_ranged walks."""
     num_items = len(items)
     sizes = _rtree_level_sizes(num_items, node_size)  # leaves first
     num_nodes = sum(sizes)

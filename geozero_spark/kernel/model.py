@@ -67,10 +67,9 @@ WKT_TAGS = {
     TRIANGLE: "TRIANGLE",
 }
 
-# Coordinate tuple layout: (x, y) or (x, y, z) or (x, y, z, m) or
-# (x, y, None, m); z/m presence is tracked on the Geom, not per-coord.
-
-Coord = tuple  # (x, y[, z[, m]])
+# Coordinate tuple layout (``Coord`` below): (x, y) or (x, y, z) or
+# (x, y, z, m) or (x, y, None, m); z/m presence is tracked on the Geom,
+# not per-coord.
 
 
 @dataclass
@@ -134,15 +133,3 @@ def point(x: float, y: float, z: float | None = None, m: float | None = None,
     else:
         c = (x, y)
     return Geom(POINT, c, has_z=z is not None, has_m=m is not None, srid=srid)
-
-
-def linestring(coords, srid: int | None = None, has_z: bool = False,
-               has_m: bool = False) -> Geom:
-    return Geom(LINESTRING, [tuple(c) for c in coords], has_z=has_z,
-                has_m=has_m, srid=srid)
-
-
-def polygon(rings, srid: int | None = None, has_z: bool = False,
-            has_m: bool = False) -> Geom:
-    return Geom(POLYGON, [[tuple(c) for c in r] for r in rings],
-                has_z=has_z, has_m=has_m, srid=srid)

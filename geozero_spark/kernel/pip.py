@@ -21,37 +21,6 @@ import numpy as np
 from .model import MULTIPOLYGON, POLYGON, TRIANGLE, Geom
 
 
-def point_in_ring(px: float, py: float, ring) -> bool:
-    inside = False
-    n = len(ring)
-    j = n - 1
-    for i in range(n):
-        x1, y1 = ring[i][0], ring[i][1]
-        x2, y2 = ring[j][0], ring[j][1]
-        if (y1 > py) != (y2 > py):
-            if px < (x2 - x1) * (py - y1) / (y2 - y1) + x1:
-                inside = not inside
-        j = i
-    return inside
-
-
-def point_in_polygon(px: float, py: float, geom: Geom) -> bool:
-    """Even-odd containment for Polygon/Triangle/MultiPolygon geometry."""
-    t = geom.kind
-    if t in (POLYGON, TRIANGLE):
-        ring_sets = [geom.data]
-    elif t == MULTIPOLYGON:
-        ring_sets = geom.data
-    else:
-        raise ValueError(f"point_in_polygon expects a polygonal geometry, got {t}")
-    inside = False
-    for rings in ring_sets:
-        for ring in rings:
-            if point_in_ring(px, py, ring):
-                inside = not inside
-    return inside
-
-
 def points_in_ring_np(px: np.ndarray, py: np.ndarray, ring: np.ndarray
                       ) -> np.ndarray:
     """Vectorized even-odd test of many points against one ring.

@@ -204,24 +204,13 @@ def _read_shape(body: bytes) -> Geom | None:
 
 
 def decode_records(buf: bytes) -> list[tuple[int, Geom | None]]:
-    """Whole .shp file -> [(record_number, Geom|None), ...]."""
-    hdr = read_header(buf)
-    end = hdr["file_length"] * 2
+    """Whole .shp file -> [(record_number, Geom|None), ...]: the header,
+    then the record run it declares (the one record walker,
+    ``decode_record_run``, shared with the .shx split scan)."""
+    end = read_header(buf)["file_length"] * 2
     if end > len(buf):
         raise ShpError("file length beyond buffer")
-    out = []
-    pos = HEADER_SIZE
-    while pos < end:
-        if pos + 8 > len(buf):
-            raise ShpError("truncated record header")
-        recno, rsize = struct.unpack_from(">ii", buf, pos)
-        pos += 8
-        body = buf[pos:pos + rsize * 2]
-        if len(body) != rsize * 2:
-            raise ShpError("truncated record body")
-        out.append((recno, _read_shape(body)))
-        pos += rsize * 2
-    return out
+    return decode_record_run(buf[HEADER_SIZE:end])
 
 
 # ---------------------------------------------------------------------------

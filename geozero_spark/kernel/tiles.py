@@ -73,16 +73,6 @@ def quadkey(z: int, x: int, y: int) -> str:
     return "".join(digits)
 
 
-def tiles_covering_bbox_eq(xmin, ymin, xmax, ymax, z, limit: int = 4096):
-    """(x, y) tiles of the equirect grid intersecting a lon/lat bbox."""
-    x0, y0 = tile_xy_eq(xmin, ymax, z)  # top-left
-    x1, y1 = tile_xy_eq(xmax, ymin, z)  # bottom-right
-    count = (x1 - x0 + 1) * (y1 - y0 + 1)
-    if count > limit:
-        raise ValueError(f"tile cover {count} exceeds limit {limit}")
-    return [(x, y) for y in range(y0, y1 + 1) for x in range(x0, x1 + 1)]
-
-
 # ---------------------------------------------------------------------------
 # MVT map->tile transform (mvt_writer.rs:157-173)
 # ---------------------------------------------------------------------------

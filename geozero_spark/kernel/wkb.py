@@ -44,9 +44,6 @@ DIALECT_GPKG = "gpkg"
 DIALECT_SPATIALITE = "spatialite"
 DIALECT_MYSQL = "mysql"
 
-DIALECTS = (DIALECT_WKB, DIALECT_EWKB, DIALECT_GPKG, DIALECT_SPATIALITE,
-            DIALECT_MYSQL)
-
 _VALID_BASE_TYPES = frozenset([1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 15, 16, 17])
 
 

@@ -3,14 +3,16 @@ surfaces (§2.4: FlatGeobuf select_bbox, GPKG r-tree join, PostGIS &&,
 GeoParquet row filter) as Spark scan pruning.
 
 Two layers:
-- ``write_cell_indexed``: persist a dataset range-partitioned AND
-  sorted by its Morton cell id. Parquet then stores tight min/max
-  cell stats per row group; a later bbox query prunes files/row groups
-  via the cell-interval predicate (Catalyst pushes the BETWEEN to the
-  scan) — the columnar analogue of the packed-Hilbert R-tree.
-- ``bbox_filter`` / ``read_bbox``: the conservative cell-interval
-  predicate (few Morton ranges covering the bbox) plus the exact
-  lon/lat bbox refine.
+- ``write_cell_partitioned``: persist a dataset directory-partitioned
+  by its coarse Morton cell and sorted by the fine cell inside each
+  partition. Parquet then stores tight min/max cell stats per row
+  group; a later bbox query prunes directories via the coarse-cell
+  IN-list and row groups via the cell-interval predicate (Catalyst
+  pushes the BETWEEN to the scan) — the columnar analogue of the
+  packed-Hilbert R-tree.
+- ``bbox_filter`` / ``read_bbox_partitioned``: the conservative
+  cell-interval predicate (few Morton ranges covering the bbox) plus
+  the exact lon/lat bbox refine.
 """
 
 from __future__ import annotations
@@ -20,17 +22,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions import cols
 from ..functions import sqlgen as sg
 from ..kernel import cells as kcells
-
-
-def write_cell_indexed(df: DataFrame, path: str, res: int,
-                       lon: str = "lon", lat: str = "lat",
-                       partitions: int = 32) -> None:
-    """Range-partition + sort by cell id and write parquet. Row-group
-    min/max stats on ``cell`` become the pruning index."""
-    (cols.with_cell_col(df, lon, lat, res)
-     .repartitionByRange(partitions, "cell")
-     .sortWithinPartitions("cell")
-     .write.mode("overwrite").parquet(path))
 
 
 def bbox_cell_intervals(xmin: float, ymin: float, xmax: float,
@@ -60,8 +51,8 @@ def bbox_filter(df: DataFrame, xmin: float, ymin: float, xmax: float,
 
     pushdown_form=True emits plain OR-of-BETWEENs — required for
     parquet row-group/file pruning, and safe when ``cell`` is a STORED
-    column (read_bbox*). For an on-the-fly cell expression pass
-    pushdown_form=False: filter pushdown substitutes the full Morton
+    column (read_bbox_partitioned). For an on-the-fly cell expression
+    pass pushdown_form=False: filter pushdown substitutes the full Morton
     expression at every reference, and the repeated deep tree sends the
     optimizer/codegen into minutes of plan compilation (or heap OOM);
     the ``exists()`` lambda form references ``cell`` exactly once."""
@@ -78,15 +69,6 @@ def bbox_filter(df: DataFrame, xmin: float, ymin: float, xmax: float,
     exact = (F.col(lon) >= xmin) & (F.col(lon) <= xmax) & \
             (F.col(lat) >= ymin) & (F.col(lat) <= ymax)
     return df.where(F.expr(pred)).where(exact)
-
-
-def read_bbox(spark: SparkSession, path: str, xmin: float, ymin: float,
-              xmax: float, ymax: float, res: int,
-              lon: str = "lon", lat: str = "lat") -> DataFrame:
-    """Scan a cell-indexed dataset with the pruning predicate pushed to
-    the parquet reader (check .explain() for PushedFilters on cell)."""
-    return bbox_filter(spark.read.parquet(path), xmin, ymin, xmax, ymax,
-                       res, lon, lat)
 
 
 # ---------------------------------------------------------------------------

@@ -45,8 +45,7 @@ def _disk_cells(df: DataFrame, ix: str, iy: str, res: int, radius: str,
                 out: str = "cell") -> DataFrame:
     """Explode each query row into the (2r+1)^2 Chebyshev disk of cells
     around its grid cell (``ix``, ``iy``), r = the row's ``radius``
-    column. Longitude wraps, latitude clamps (kernel/cells.neighbors
-    parity).
+    column. Longitude wraps, latitude clamps.
 
     The dx span is clamped to at most n consecutive offsets so
     ``pmod(ix+dx, n)`` stays BIJECTIVE: with 2*radius+1 > n an unclamped

@@ -173,8 +173,9 @@ def encode_tile_cols(layer_name: str, extent: int, keys: list,
     lens = np.diff(cstart) >> 1
     o1_vals, o1_start = _list_lane(offs1)
     o2_vals, o2_start = _list_lane(offs2)
+    # ring offsets per row: a single-ring polygon has exactly two; a
+    # NULL or [0] offs1 has no ring, and the python builder skips it
     n1 = np.diff(o1_start)
-    nrings = np.where(n1 > 1, n1 - 1, 1)
     arr = flat.reshape(-1, 2)
     tx, ty = ktiles.mvt_transform_np(arr[:, 0], arr[:, 1], extent,
                                      left, bottom, right, top)
@@ -217,7 +218,7 @@ def encode_tile_cols(layer_name: str, extent: int, keys: list,
     live = present & ~empty
     is_p = live & (kinds == POINT) & (lens == 1)
     is_l = live & (kinds == LINESTRING)
-    is_g = live & (kinds == POLYGON) & (nrings == 1)
+    is_g = live & (kinds == POLYGON) & (n1 == 2)
     is_py = live & ~(is_p | is_l | is_g)
 
     bad_l = is_l & (lens < 2)

@@ -28,6 +28,9 @@ from pyspark.sql.types import ArrayType, LongType
 
 from .knn import _check_bound, _select_topk
 
+# most query rows cosine_topk collects to the driver and broadcasts
+COSINE_QUERY_LIMIT = 100_000
+
 
 def _vec_matrix(col: pa.ListArray, name: str,
                 dim: int | None = None) -> np.ndarray:
@@ -105,16 +108,18 @@ def cosine_topk(queries: DataFrame, targets: DataFrame, k: int,
     follow the same op order as ``dot / (sqrt(qn) * sqrt(tn))``. The
     interpreted fold the old SQL form paid (higher-order functions run
     outside codegen) made its |Q| x |T| crossJoin the suite's slowest
-    non-kNN query."""
-    qrows = queries.select(query_key, qvec).collect()
+    non-kNN query. At most ``COSINE_QUERY_LIMIT`` query rows are
+    collected; a larger query side raises instead."""
+    qt = queries.select(query_key, qvec).limit(
+        COSINE_QUERY_LIMIT + 1).toArrow()
+    _check_bound("cosine_topk queries", qt.num_rows, COSINE_QUERY_LIMIT)
     spark = queries.sparkSession
-    if not qrows:
+    if not qt.num_rows:
         return spark.createDataFrame(
             [], f"{query_key} long, {target_key} long, cosine double, "
                 f"rank int")
-    qid = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = _vec_matrix(pa.array([r[1] for r in qrows],
-                                pa.list_(pa.float64())), qvec)
+    qid = np.asarray(qt.column(0), dtype=np.int64)
+    qmat = _vec_matrix(qt.column(1).combine_chunks(), qvec)
     sqq = np.sqrt(_fold_dot(qmat, qmat))
     bc = spark.sparkContext.broadcast((qid, qmat, sqq))
 

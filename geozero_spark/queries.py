@@ -22,7 +22,6 @@ from .sources import pages as P
 
 LOC_RE = r"loc:(POINT\([0-9 -]+\));"
 GEO_RE = r"geo:([A-Z]+\([0-9 ,()-]+\));"
-DOCID_RE = r"/page/([0-9]+)$"
 
 # fixed parameters shared with oracles.py
 CELL_RES = 8
@@ -96,7 +95,8 @@ def points_from_pages(pages: DataFrame) -> DataFrame:
             # the one regex left in the hot decode (13% on the 10M-row
             # stage, values bit_xor-parity-checked vs the regex form;
             # try_cast: a non-numeric tail yields NULL, not an ANSI
-            # abort). DOCID_RE remains the documented contract form.
+            # abort). The documented contract form is the regex
+            # r"/page/([0-9]+)$".
             .withColumn("doc_id", F.expr(
                 "try_cast(substring_index(url, '/', -1) AS LONG)"))
             .withColumn("lon", F.col("xc") / F.lit(100.0))

@@ -351,11 +351,13 @@ def read_fgb(spark: SparkSession, path: str,
     feature with (path, feature_idx, geom struct, props map).
 
     ``bbox=(minx,miny,maxx,maxy)`` pushes the packed-Hilbert-R-tree
-    search INTO the scan (kernel/fgb.search_index): each file prunes to
-    index hits before decoding — the distributed analogue of the
-    reference's select_bbox streaming read (an unindexed file falls
-    back to a filtered sequential scan). feature_idx numbers the
-    EMITTED rows per file (hit order == ascending file offset).
+    search INTO the scan (kernel/fgbremote.search_index_ranged): each
+    file prunes to index hits before decoding — the distributed
+    analogue of the reference's select_bbox streaming read (an
+    unindexed file falls back to a filtered sequential scan). A file
+    holding fewer records than its header declares fails the scan with
+    FgbError. feature_idx numbers the EMITTED rows per file (hit order
+    == ascending file offset).
     Directories of .fgb files parallelize by file; for one giant file
     the index makes SINGLE-RANGE reads possible, but a finer split
     needs a range-aware source (documented limit, as with read_shp)."""
@@ -383,15 +385,12 @@ def read_fgb_ranged(spark: SparkSession, url: str,
     Unindexed files degrade to a single sequential task. Output schema
     matches read_fgb: (split_id, feature_idx, geom, props)."""
     from ..kernel import bounds as kbounds
-    from ..kernel import fgb as kfgb
     from ..kernel import fgbremote as kr
 
     remote = url.startswith("http://") or url.startswith("https://")
     read = (kr.http_range_source(url) if remote
             else kr.file_range_source(url))
     info = kr.read_info_ranged(read)
-    if info.has_z or info.has_m:
-        raise kfgb.FgbError("FlatGeobuf Z/M dimensions not supported")
     indexed = info.index_node_size > 0 and info.features_count > 0
     if bbox is not None and indexed:
         hits = kr.search_index_ranged(read, info, *bbox)
@@ -400,11 +399,11 @@ def read_fgb_ranged(spark: SparkSession, url: str,
                  for i in range(max(1, -(-len(hits) // k)))]
         mode = "hits"
     else:
-        # bbox without an index: executor-side envelope filter below
-        bounds_ = (kr.split_offsets(read, info, n_splits) if indexed
-                   else [info.feature_pos, None])
-        tasks = [(i, json.dumps([bounds_[i], bounds_[i + 1]]))
-                 for i in range(len(bounds_) - 1)]
+        # (start, count) spans; each task checks its count, so a cut
+        # file fails its split instead of returning a short one. bbox
+        # without an index: executor-side envelope filter below
+        tasks = [(i, json.dumps(sp)) for i, sp in
+                 enumerate(kr.split_spans(read, info, n_splits))]
         mode = "spans"
 
     def fetch(row):
@@ -415,7 +414,7 @@ def read_fgb_ranged(spark: SparkSession, url: str,
             # contiguous hit runs fetch as single ranges
             it = kr.iter_hits(src, info, spec)
         else:
-            it = kr.iter_span(src, info, spec[0], spec[1])
+            it = kr.iter_span(src, info, *spec)
             if bbox is not None:  # unindexed file: filter inline
                 it = ((g, pr) for g, pr in it
                       if g is not None

@@ -292,21 +292,45 @@ def test_spark_write_fgb_roundtrip(spark, tmpdir_path):
     assert got == [(i, float(i), float(i * 2)) for i in range(20)]
 
 
-def test_truncation_never_silent_or_hanging():
+def test_truncation_never_silent_or_hanging(spark, tmp_path):
     """Any truncation of a written file must either raise FgbError (or
     a decode error) or yield the complete feature set — never a silent
-    short read, never a hang."""
+    short read, never a hang — whatever the source: an in-memory
+    buffer, a local range source, or the split Spark scan, whose every
+    split checks the feature count it was given. Each Spark scan is a
+    job (~1 s here), so it runs on every 8th cut: 104 bytes apart, about
+    one cut per feature record."""
+    from pyspark.errors import PythonException
+
+    from geozero_spark.kernel import fgbremote as kr
     from geozero_spark.kernel.model import Geom, POINT
+    from geozero_spark.sources import readers
 
     feats = [(Geom(POINT, (float(i), float(i * 2))), {"i": i})
              for i in range(30)]
     out = fgbwrite.encode(feats)
-    for cut in range(0, len(out), 13):
-        try:
-            got = list(fgb.iter_features(out[:cut]))
-        except (fgb.FgbError, ValueError):
-            continue
-        assert len(got) == 30, f"silent short read at cut={cut}"
+    path = str(tmp_path / "cut.fgb")
+    for j, cut in enumerate(range(0, len(out), 13)):
+        with open(path, "wb") as f:
+            f.write(out[:cut])
+        scans = {
+            "buffer": lambda: list(fgb.iter_features(out[:cut])),
+            "file": lambda: list(kr.iter_features_ranged(
+                kr.file_range_source(path))),
+            "spark": lambda: readers.read_fgb_ranged(
+                spark, path, n_splits=3).collect(),
+        }
+        if j % 8:
+            del scans["spark"]
+        for name, scan in scans.items():
+            try:
+                got = scan()
+            except (fgb.FgbError, ValueError):
+                continue
+            except PythonException as e:  # raised inside a split's task
+                assert "FgbError" in str(e), (name, cut, e)
+                continue
+            assert len(got) == 30, f"{name}: silent short read at cut={cut}"
 
 
 def test_spark_write_fgb_dir_parallel_roundtrip(spark, tmpdir_path):

@@ -64,13 +64,14 @@ def test_split_offsets_partition_exactly():
     read, _ = _counting_source(FIX)
     info = kr.read_info_ranged(read)
     for n in (1, 3, 8, 179, 500):
-        bounds = kr.split_offsets(read, info, n)
-        assert bounds[0] == info.feature_pos
-        assert bounds[-1] is None
-        assert bounds[:-1] == sorted(bounds[:-1])
+        spans = kr.split_spans(read, info, n)
+        starts = [a for a, _ in spans]
+        assert starts[0] == info.feature_pos
+        assert starts == sorted(starts) and len(spans) == min(n, 179)
+        assert sum(c for _, c in spans) == 179
         feats = []
-        for a, b in zip(bounds, bounds[1:]):
-            feats += list(kr.iter_span(read, info, a, b))
+        for a, c in spans:
+            feats += list(kr.iter_span(read, info, a, c))
         assert len(feats) == 179
         assert _ids(feats) == _ids(list(fgb.iter_features(_buf())))
 
@@ -154,7 +155,7 @@ def test_iter_hits_matches_per_feature_fetch():
     info = kr.read_info_ranged(read)
     rels = kr.search_index_ranged(read, info, *BBOX)
     runs = list(kr.iter_hits(read, info, rels))
-    one = [kr.fetch_feature(read, info, r) for r in rels]
+    one = list(kr.iter_hits(read, info, rels, max_gap=0))  # per hit
     assert [(kwkt.encode(g), p) for g, p in runs] == \
         [(kwkt.encode(g), p) for g, p in one]
     # coalescing degenerates correctly for single/empty inputs

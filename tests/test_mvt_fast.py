@@ -110,11 +110,16 @@ def test_varints_np_matches_kernel():
 def test_validity_skips_match(monkeypatch):
     # a ring that collapses onto one tile pixel is emitted, and a ring
     # with < 3 distinct coords is skipped, on both branches exactly as
-    # the kernel does
+    # the kernel does; so is a POLYGON whose offs1 (NULL or [0]) holds
+    # no ring
     items = _items(["POINT(1 1)", "POLYGON((0 0,0.0001 0,0 0.0001,0 0))",
                     "POLYGON((0 0,1 1,0 0))", "POINT(2 2)"])
+    for offs1 in (None, [0]):
+        ringless = sr.to_struct(wkt.decode("POLYGON((0 0,4 0,4 4,0 0))"))
+        ringless["offs1"] = offs1
+        items.append((str(len(items)), ringless))
     want = _kernel(items)
-    assert want[1:] == (3, 1)
+    assert want[1:] == (3, 3)
     for vector_min in (0, 10 ** 9):  # columnar, then python branch
         monkeypatch.setattr(mvt_fast, "_VECTOR_MIN", vector_min)
         assert _cols(items) == want

@@ -408,6 +408,17 @@ def test_signature_rejects_null_or_ragged_vectors(spark, bad):
     _assert_vector_error(ei.value, "tvec")
 
 
+def test_cosine_topk_query_side_is_bounded(spark, monkeypatch):
+    """cosine_topk collects at most COSINE_QUERY_LIMIT query rows to
+    the driver; a larger query side fails loudly instead of collecting
+    it."""
+    monkeypatch.setattr(S, "COSINE_QUERY_LIMIT", 5)
+    q, t = _vecs_df(spark, "q_id", "qvec"), _vecs_df(spark, "t_id", "tvec")
+    with pytest.raises(RuntimeError, match="declared bound of 5"):
+        S.cosine_topk(q, t, k=2)
+    assert S.cosine_topk(q.limit(5), t, k=2).count() == 10
+
+
 @pytest.mark.parametrize("bad", sorted(_BAD_VECS))
 def test_cosine_topk_rejects_null_or_ragged_vectors(spark, bad):
     # targets are checked in the Arrow scorer on the executors

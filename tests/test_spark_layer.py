@@ -429,16 +429,29 @@ def test_read_shp_scan_mixed(spark):
 def test_jvm_point_parse_matches_kernel(spark):
     """cols.point_struct_from_wkt_jvm must produce the same struct
     values as the kernel codec (st_geomfromwkt) for simple 2D POINTs,
-    and NULL for anything else."""
+    and NULL for anything else. The GeoJSON decode (st_geomfromgeojson)
+    of the same geometry is one more input: it must equal the WKT
+    decode struct for struct."""
     from geozero_spark.functions import cols, udfs
+    from geozero_spark.kernel import geojson as kgeojson, wkt as kwkt
     texts = ["POINT(1300 6700)", "POINT(-17999 -8999)", "POINT(0 0)",
              "LINESTRING(0 0,1 1)", "", "POINT(1 2 3)"]
-    df = spark.createDataFrame([(t,) for t in texts], "wkt string")
+
+    def as_geojson(t):
+        try:
+            return kgeojson.encode(kwkt.decode(t))
+        except ValueError:
+            return t  # undecodable stays undecodable: NULL both ways
+
+    df = spark.createDataFrame([(t, as_geojson(t)) for t in texts],
+                               "wkt string, gj string")
     dec = udfs.st_geomfromwkt()
     out = df.select(
         "wkt",
         cols.point_struct_from_wkt_jvm(F.col("wkt")).alias("jvm"),
-        dec("wkt").alias("kern")).collect()
+        dec("wkt").alias("kern"),
+        udfs.st_geomfromgeojson()("gj").alias("gj")).collect()
+    assert all(r.gj == r.kern for r in out)
     for r in out:
         if r.wkt.startswith("POINT(") and r.wkt.count(" ") == 1:
             assert r.jvm is not None, r.wkt
