@@ -38,9 +38,13 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions import udfs
+from .operators.knn import _check_bound
 from .sources import readers
 
 _REMOTE = ("http://", "https://")
+# distinct property keys the column-expanding sinks collect: keys are
+# schema, so more than this many is a bad input, not a wide table
+PROP_KEY_LIMIT = 10_000
 
 
 def _ext(path: str) -> str:
@@ -144,9 +148,12 @@ def _read_source(spark: SparkSession, src: str, bbox: Optional[tuple],
 
 def _prop_keys(df: DataFrame) -> list:
     """Sorted union of property keys — a tiny distinct-keys aggregate
-    (map_keys explode), collected driver-side as SCHEMA, not data."""
+    (map_keys explode), collected driver-side as SCHEMA, not data: at
+    most ``PROP_KEY_LIMIT`` keys, more raises."""
     rows = (df.select(F.explode_outer(F.map_keys("props")).alias("k"))
-            .where(F.col("k").isNotNull()).distinct().collect())
+            .where(F.col("k").isNotNull()).distinct()
+            .limit(PROP_KEY_LIMIT + 1).collect())
+    _check_bound("convert property keys", len(rows), PROP_KEY_LIMIT)
     return sorted(r["k"] for r in rows)
 
 

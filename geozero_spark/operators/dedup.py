@@ -2,7 +2,8 @@
 
 All candidate generation is JVM-side (built-in array/hash expressions —
 no Python workers); only the final pair verification math is plain
-column arithmetic. Two hash modes:
+column arithmetic. The one Python pass is a small graph's
+connected-components union-find (one task). Two hash modes:
 
 - ``fast=True``  : xxhash64 (JVM intrinsic) — the 100 TB path.
 - ``fast=False`` : portable polynomial hash (functions/texthash.py) —
@@ -16,12 +17,20 @@ length bucket so the pair join never goes quadratic globally.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from ..functions import sqlgen as sg
 from ..functions import texthash as th
 
 _D = sg.SPARK
+
+# connected_components runs in ONE task up to this many canonical
+# edges (about 64 MB of int64 pairs); above it, star rounds
+SMALL_GRAPH_EDGES = 4_000_000
+# union-find output rows per Arrow batch: bounds the JVM's batch buffer
+_UF_BATCH = 1 << 20
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -292,29 +301,83 @@ def _star_round(e: DataFrame) -> DataFrame:
             .distinct())
 
 
+def _union_find(batches):
+    """Union-find over every (u, v) edge of the partition, in numpy:
+    emits (node, comp) once per node, comp = the component's minimum
+    node id. Hooks ROOTS, never nodes: each pass drops the edges whose
+    endpoints share a root, links every larger root to the smallest
+    root it meets (``np.minimum.at``), then pointer-jumps to a
+    fixpoint, so every pass at least halves a chain's root count
+    (per-node label propagation needs O(diameter) passes)."""
+    us, vs = [], []
+    for bt in batches:
+        us.append(bt.column(0).to_numpy(zero_copy_only=False))
+        vs.append(bt.column(1).to_numpy(zero_copy_only=False))
+    m = sum(map(len, us))
+    if not m:
+        return
+    nodes, ids = np.unique(np.concatenate(us + vs), return_inverse=True)
+    del us, vs
+    # ids are ranks of the sorted node ids: the min rank is the min id
+    a, b = ids[:m], ids[m:]
+    lab = np.arange(len(nodes), dtype=ids.dtype)
+    while True:
+        ra, rb = lab[a], lab[b]
+        live = ra != rb
+        if not live.any():
+            break
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        np.minimum.at(lab, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            nxt = lab[lab]
+            if np.array_equal(nxt, lab):
+                break
+            lab = nxt
+    comp = nodes[lab]
+    for i in range(0, len(nodes), _UF_BATCH):
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(nodes[i:i + _UF_BATCH]),
+             pa.array(comp[i:i + _UF_BATCH])], names=["node", "comp"])
+
+
 def connected_components(pairs: DataFrame, a_col: str, b_col: str,
                          max_rounds: int = 25) -> DataFrame:
-    """Connected components over undirected pairs via alternating
-    large-star / small-star (Kiveris et al., "Connected Components in
-    MapReduce and Beyond") — the pairs->clusters step of a dedup
-    pipeline. Returns (node, comp) for every node that appears in a
-    non-loop pair, comp = MIN node id of its component; duplicate and
-    reversed pairs are fine. Raises RuntimeError if not converged
-    within ``max_rounds``.
+    """Connected components over undirected pairs — the pairs->clusters
+    step of a dedup pipeline. Returns (node, comp) for every node that
+    appears in a non-loop pair, comp = MIN node id of its component;
+    duplicate and reversed pairs are fine.
 
-    Scale shape: each star is one window min (``_star_round``). The
-    adjacency is never a list (collect_set on a hot node would put a
-    whole component in one row), but a hot node's neighbourhood is one
-    window partition (no skew split; scripts/cc_scaling.py --graph hub).
-    Rounds are O(log n); the driver loop is over ROUNDS, never rows —
-    the only driver-side values are the per-round fingerprints.
+    The canonical (u > v) edges are checkpointed once, counting them on
+    the way (observe(): no extra job). Two paths:
+
+    - at most ``SMALL_GRAPH_EDGES`` edges: one executor task runs a
+      numpy union-find over all of them (``_union_find``) — no
+      driver collect, no further checkpoint, no round barriers;
+    - above it: alternating large-star / small-star rounds (Kiveris et
+      al., "Connected Components in MapReduce and Beyond") from the
+      checkpointed edges, raising RuntimeError if not converged within
+      ``max_rounds``. ``max_rounds`` applies only to this path.
+
+    Star-path scale shape: each star is one window min
+    (``_star_round``). The adjacency is never a list (collect_set on a
+    hot node would put a whole component in one row), but a hot node's
+    neighbourhood is one window partition (no skew split;
+    scripts/cc_scaling.py --graph hub). Rounds are O(log n); the driver
+    loop is over ROUNDS, never rows — the only driver-side values are
+    the edge count and the per-round fingerprints.
     """
     u, v = "u", "v"
-    # no distinct: the star mins ignore multiplicity
+    # no distinct: the star mins and the union-find ignore multiplicity
+    obs = Observation()
     e = (pairs.select(F.col(a_col).cast("long").alias(u),
                       F.col(b_col).cast("long").alias(v))
          .where(F.col(u) != F.col(v))
-         .select(F.greatest(u, v).alias(u), F.least(u, v).alias(v)))
+         .select(F.greatest(u, v).alias(u), F.least(u, v).alias(v))
+         .observe(obs, F.count(F.lit(1)).alias("n"))
+         .localCheckpoint(eager=True))
+    if obs.get["n"] <= SMALL_GRAPH_EDGES:
+        return e.repartition(1).mapInArrow(_union_find,
+                                           "node long, comp long")
     prev_fp = None
     for _ in range(max_rounds):
         # truncate lineage EVERY round: a round reads e twice (sym), so
@@ -347,7 +410,10 @@ def dup_clusters(docs: DataFrame, pairs: DataFrame,
     """Per-document cluster assignment + keep/drop decision from
     near-dup pairs: cluster_id = min key of the connected component
     (itself for unpaired docs), keep = (key == cluster_id) — the
-    canonical-survivor policy of a training-data dedup."""
+    canonical-survivor policy of a training-data dedup. The components
+    come from ``connected_components``: one union-find task up to
+    ``SMALL_GRAPH_EDGES`` canonical pair edges, star rounds above it
+    (its default ``max_rounds`` bounds only the star path)."""
     assign = connected_components(pairs, key + "_a", key + "_b")
     return (docs.select(F.col(key).cast("long").alias(key))
             .join(assign.withColumnRenamed("node", key),

@@ -110,6 +110,19 @@ def test_jsonl_wkt_parquet_hops(spark, tmp_path):
     assert convert(spark, pq, cs, bbox=BBOX) == 6
 
 
+def test_prop_keys_collect_is_bounded(spark, tmp_path, monkeypatch):
+    """The column-expanding sinks collect at most PROP_KEY_LIMIT
+    distinct property keys; more fails loudly instead of collecting
+    them (countries.fgb carries two keys)."""
+    from geozero_spark import convert as conv
+    out = os.path.join(str(tmp_path), "c.csv")
+    monkeypatch.setattr(conv, "PROP_KEY_LIMIT", 1)
+    with pytest.raises(RuntimeError, match="declared bound of 1"):
+        convert(spark, FIX, out, bbox=BBOX)
+    monkeypatch.setattr(conv, "PROP_KEY_LIMIT", 2)
+    assert convert(spark, FIX, out, bbox=BBOX) == 6
+
+
 def test_shp_source_and_errors(spark, tmp_path):
     """shp (+.dbf attrs) flows through convert; unknown extensions and
     the remote-fgb-only / csv-column contracts fail loudly

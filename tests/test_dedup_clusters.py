@@ -24,13 +24,33 @@ def _uf_components(edges):
     return {n: find(n) for n in parent}
 
 
+# the two connected_components paths: the one-task union-find under
+# the default bound, the star rounds with the bound at 0 (an empty edge
+# set takes the one-task path under both)
+_PATHS = {"one-task": dedup.SMALL_GRAPH_EDGES, "star": 0}
+
+
+def _on_both_paths(run):
+    """``{path: run()}`` with SMALL_GRAPH_EDGES set for each path."""
+    out = {}
+    for path, bound in _PATHS.items():
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup, "SMALL_GRAPH_EDGES", bound)
+            out[path] = run()
+    return out
+
+
+def _components(df):
+    return {r["node"]: r["comp"]
+            for r in dedup.connected_components(
+                df, "doc_id_a", "doc_id_b").collect()}
+
+
 def _check(spark, edges):
     df = spark.createDataFrame(edges, "doc_id_a long, doc_id_b long")
-    got = {r["node"]: r["comp"]
-           for r in dedup.connected_components(
-               df, "doc_id_a", "doc_id_b").collect()}
     want = _uf_components(edges)
-    assert got == want
+    for path, got in _on_both_paths(lambda: _components(df)).items():
+        assert got == want, path
 
 
 def test_cc_chain(spark):
@@ -73,10 +93,9 @@ def test_cc_self_loops(spark):
     # a self-loop adds no edge: a node seen only in loops has no pair
     df = spark.createDataFrame([(1, 2), (2, 2), (5, 5), (3, 2), (3, 3)],
                                "doc_id_a long, doc_id_b long")
-    got = {r["node"]: r["comp"]
-           for r in dedup.connected_components(
-               df, "doc_id_a", "doc_id_b").collect()}
-    assert got == _uf_components([(1, 2), (3, 2)])
+    want = _uf_components([(1, 2), (3, 2)])
+    for path, got in _on_both_paths(lambda: _components(df)).items():
+        assert got == want, path
 
 
 def test_cc_hub_with_chain_tail(spark):
@@ -117,7 +136,10 @@ def test_star_round_plan_shape(spark):
     assert nodes.count("ShuffleExchangeExec") <= 3, nodes
 
 
-def test_cc_not_converged_raises(spark):
+def test_cc_not_converged_raises(spark, monkeypatch):
+    # max_rounds bounds only the star path: a 40-edge chain is under
+    # the default bound and would take the one-task union-find
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", 0)
     df = spark.createDataFrame([(i, i + 1) for i in range(1, 41)],
                                "doc_id_a long, doc_id_b long")
     with pytest.raises(RuntimeError, match="max_rounds=1"):
@@ -125,16 +147,68 @@ def test_cc_not_converged_raises(spark):
                                    max_rounds=1)
 
 
+def test_cc_one_task_path_matches_union_find(spark):
+    """Under the default bound the components come from ONE union-find
+    task (a single-partition MapInArrow over the checkpointed edges),
+    exact on self-loops, duplicate and reversed pairs, an empty edge
+    set and a long chain whose ids are shuffled along it."""
+    rng = random.Random(11)
+    ids = list(range(1, 20_001))
+    rng.shuffle(ids)
+    chain = list(zip(ids, ids[1:]))
+    graphs = {
+        "loops": [(4, 4), (1, 2), (2, 2), (9, 9), (3, 2), (3, 3)],
+        "dup_rev": [(5, 1), (1, 5), (1, 5), (8, 5), (7, 6), (6, 7)],
+        "empty": [],
+        "chain": chain,
+    }
+    for name, edges in graphs.items():
+        df = spark.createDataFrame(edges, "doc_id_a long, doc_id_b long")
+        out = dedup.connected_components(df, "doc_id_a", "doc_id_b")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan, (name, plan)
+        assert out.rdd.getNumPartitions() == 1, name
+        got = {r["node"]: r["comp"] for r in out.collect()}
+        assert got == _uf_components(
+            [(a, b) for a, b in edges if a != b]), name
+    assert set(got.values()) == {1}
+
+
+# jobs of one dup_clusters plus one collect in the test session
+# (local[8], 8 shuffle partitions, AQE) on the one-task path: the edge
+# checkpoint, the union-find and join exchanges and the result stage
+# (5 measured). The star path schedules 4 more per round (21 here).
+DUP_CLUSTERS_JOB_BUDGET = 6
+
+
+def test_dup_clusters_job_budget(spark):
+    docs = spark.range(1, 601).withColumnRenamed("id", "doc_id")
+    # 100 chains of 6: several star rounds, one union-find task
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 601) if i % 6],
+        "doc_id_a long, doc_id_b long")
+    sc = spark.sparkContext
+    sc.setJobGroup("dup_clusters_budget", "dup_clusters plus one collect")
+    try:
+        rows = dedup.dup_clusters(docs, pairs).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sum(r["keep"] for r in rows) == 100
+    jobs = sc.statusTracker().getJobIdsForGroup("dup_clusters_budget")
+    assert len(jobs) <= DUP_CLUSTERS_JOB_BUDGET, sorted(jobs)
+
+
 def test_dup_clusters_keep_policy(spark):
     docs = spark.createDataFrame([(i,) for i in range(1, 9)],
                                  "doc_id long")
     pairs = spark.createDataFrame([(2, 5), (5, 7), (3, 4)],
                                   "doc_id_a long, doc_id_b long")
-    rows = {r["doc_id"]: (r["cluster_id"], r["keep"])
-            for r in dedup.dup_clusters(docs, pairs).collect()}
-    assert rows == {1: (1, True), 2: (2, True), 3: (3, True),
-                    4: (3, False), 5: (2, False), 6: (6, True),
-                    7: (2, False), 8: (8, True)}
+    want = {1: (1, True), 2: (2, True), 3: (3, True), 4: (3, False),
+            5: (2, False), 6: (6, True), 7: (2, False), 8: (8, True)}
+    for path, rows in _on_both_paths(lambda: {
+            r["doc_id"]: (r["cluster_id"], r["keep"])
+            for r in dedup.dup_clusters(docs, pairs).collect()}).items():
+        assert rows == want, path
 
 
 def test_cc_empty_pairs(spark):
