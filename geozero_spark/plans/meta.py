@@ -7,8 +7,9 @@ Pattern (no reference analogue — geozero is single-pass/single-process):
 
 - A *stage* writes its output partitioned by a deterministic bucket of
   the stage key (e.g. cell prefix). Each completed bucket directory is
-  recorded in ``_meta/<stage>.parquet`` with its row count, bucket id
-  and input fingerprint.
+  recorded as a row of the ``_meta/<stage>`` parquet (``META_SCHEMA``)
+  with its row count, bucket id and input fingerprint, appended only
+  after its files are written and counted.
 - ``run_stage`` skips buckets already recorded with the same
   fingerprint — idempotent resume at bucket granularity; a killed run
   redoes only in-flight buckets.
@@ -16,40 +17,61 @@ Pattern (no reference analogue — geozero is single-pass/single-process):
 
 from __future__ import annotations
 
+import contextlib
 import time
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-# the two ways a path holds no output: never written, or written by a
-# job with no rows (a directory without data files)
-_NO_OUTPUT = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+# the ``_meta`` rows, declared so no read infers what the writer just
+# wrote. A DDL string, not a StructType: parsing DDL needs a live
+# SparkContext, and this module is imported before any session exists
+META_SCHEMA = ("stage string, bucket int, rows long, wall_s double, "
+               "fingerprint string, ts double")
 
 
 def meta_path(base: str, stage: str) -> str:
     return f"{base}/_meta/{stage}"
 
 
-def _read_output(spark: SparkSession, path: str) -> DataFrame | None:
-    """``path`` as parquet, or None when it holds no output. Every
-    other read error raises: resume accounting must not turn an I/O
-    failure into 'nothing written'."""
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if e.getCondition() in _NO_OUTPUT:
-            return None
-        raise
-
-
 def completed_buckets(spark: SparkSession, base: str, stage: str,
                       fingerprint: str) -> set[int]:
-    m = _read_output(spark, meta_path(base, stage))
-    if m is None:
-        return set()
+    """Buckets recorded for ``fingerprint``, or none when ``_meta`` was
+    never written; every other read error raises (resume accounting
+    must not turn an I/O failure into 'nothing written'). One job: a
+    plain collect deduplicated here, not by a distinct (whose exchange
+    AQE splits into two more jobs)."""
+    try:
+        m = stage_metrics(spark, base, stage)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return set()
+        raise
     return {r.bucket for r in
             m.where(F.col("fingerprint") == fingerprint)
-            .select("bucket").distinct().collect()}
+            .select("bucket").collect()}
+
+
+@contextlib.contextmanager
+def _described(spark: SparkSession, text: str):
+    """The body's jobs run as ``text``; the caller's description
+    (setJobGroup sets one) comes back after. The job group is kept."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
+def _bucket_dirs(spark: SparkSession, path: str, buckets: list):
+    """(bucket, FileSystem, Path) of each ``path/bucket=b`` directory."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    hconf = spark._jsc.hadoopConfiguration()
+    for b in buckets:
+        p = jpath(f"{path}/bucket={b}")
+        yield b, p.getFileSystem(hconf), p
 
 
 def run_stage(spark: SparkSession, df: DataFrame, base: str, stage: str,
@@ -67,9 +89,16 @@ def run_stage(spark: SparkSession, df: DataFrame, base: str, stage: str,
     (tasks x buckets small files — 512 at the bench shape, the guide
     §6 small-files trap). fanout is sized so write parallelism still
     matches the cluster. Metric counts come from the written parquet
-    footers — a partition-pruned count(*) touches metadata only.
-    wall_s is the shared wall of the combined write, recorded on every
-    bucket row it covered.
+    footers with no Spark job: one list per pending bucket plus one
+    footer open per file (n_buckets x fanout files), serially on the
+    driver. The ``_meta`` rows are appended after the counts, so a run
+    killed before the append leaves its buckets pending. wall_s is the
+    shared wall of the combined write, recorded on every bucket row.
+
+    Jobs: a first write 3 (the write's exchange and files, the
+    append), a full resume 1 (the ``_meta`` read), a partial resume 4.
+    The write and the append run as ``run_stage <stage>: write`` and
+    ``run_stage <stage>: _meta`` (job descriptions).
 
     When every bucket is pending there is no filter. A partial resume
     drops the done buckets after the exchange, on the slot's partition
@@ -95,11 +124,8 @@ def run_stage(spark: SparkSession, df: DataFrame, base: str, stage: str,
     # replaces partitions that receive rows THIS run, so a stale dir
     # from a previous fingerprint whose bucket is now empty would
     # survive (and poison the footer counts below)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    hconf = spark._jsc.hadoopConfiguration()
-    for b in todo:
-        p = jpath(f"{base}/{stage}/bucket={b}")
-        p.getFileSystem(hconf).delete(p, True)
+    for _, fs, p in _bucket_dirs(spark, f"{base}/{stage}", todo):
+        fs.delete(p, True)
     bdf = df.withColumn(
         "bucket", F.pmod(F.xxhash64(F.col(bucket_col)),
                          F.lit(n_buckets)).cast("int"))
@@ -119,31 +145,48 @@ def run_stage(spark: SparkSession, df: DataFrame, base: str, stage: str,
         # the docstring)
         out = out.where(F.expr(f"spark_partition_id() div {fanout}")
                         .isin(todo))
-    (out.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("bucket").parquet(f"{base}/{stage}"))
+    with _described(spark, f"run_stage {stage}: write"):
+        (out.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("bucket").parquet(f"{base}/{stage}"))
     counts = bucket_counts(spark, f"{base}/{stage}", todo)
     wall = round(time.perf_counter() - t0, 3)
     now = time.time()
     rec = spark.createDataFrame(
         [(stage, b, counts.get(b, 0), wall, fingerprint, now)
-         for b in todo],
-        "stage string, bucket int, rows long, wall_s double, "
-        "fingerprint string, ts double")
-    rec.write.mode("append").parquet(meta_path(base, stage))
+         for b in todo], META_SCHEMA)
+    with _described(spark, f"run_stage {stage}: _meta"):
+        rec.write.mode("append").parquet(meta_path(base, stage))
     return [(b, counts.get(b, 0), wall) for b in todo]
 
 
 def bucket_counts(spark: SparkSession, path: str, buckets: list) -> dict:
-    """{bucket: rows} written under ``path`` for ``buckets``, from the
-    parquet footers; {} when nothing was written there."""
-    out = _read_output(spark, path)
-    if out is None:
-        return {}
-    return {r.bucket: r.cnt for r in
-            out.where(F.col("bucket").isin(buckets))
-            .groupBy("bucket").agg(F.count("*").alias("cnt")).collect()}
+    """{bucket: rows} on disk under ``path/bucket=b``, summed from the
+    parquet footers with no Spark job: one list per pending bucket plus
+    one footer open per file (n_buckets x fanout files), serially on
+    the driver. Names starting with ``_`` or ``.`` are skipped, as
+    Spark's file index skips them. A bucket with no directory is absent
+    (0 rows); a footer that cannot be read raises."""
+    jvm = spark._jvm
+    hconf = spark._jsc.hadoopConfiguration()
+    open_file = jvm.org.apache.parquet.hadoop.ParquetFileReader.open
+    input_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile
+    counts = {}
+    for b, fs, p in _bucket_dirs(spark, path, buckets):
+        if not fs.exists(p):
+            continue
+        n = 0
+        for st in fs.listStatus(p):
+            if st.getPath().getName().startswith(("_", ".")):
+                continue
+            r = open_file(input_file.fromStatus(st, hconf))
+            try:
+                n += r.getRecordCount()
+            finally:
+                r.close()
+        counts[b] = n
+    return counts
 
 
 def stage_metrics(spark: SparkSession, base: str, stage: str) -> DataFrame:
-    return spark.read.parquet(meta_path(base, stage))
+    return spark.read.schema(META_SCHEMA).parquet(meta_path(base, stage))

@@ -185,8 +185,7 @@ def test_run_stage_partial_resume(spark, tmpdir_path):
     shutil.rmtree(os.path.join(base, "_meta"))
     rec = spark.createDataFrame(
         [("s1", b, per_bucket[b], 0.0, "v1", 0.0) for b in (0, 1)],
-        "stage string, bucket int, rows long, wall_s double, "
-        "fingerprint string, ts double")
+        meta.META_SCHEMA)
     rec.write.mode("overwrite").parquet(meta.meta_path(base, "s1"))
     resumed = meta.run_stage(spark, df, base, "s1", bucket_col="k",
                              n_buckets=4, fingerprint="v1")
@@ -297,8 +296,7 @@ def test_run_stage_cell_bucketed_resume(spark, tmpdir_path, monkeypatch):
         shutil.rmtree(os.path.join(base, "_meta"))
         spark.createDataFrame(
             [("s1", b, per_bucket[b], 0.0, "v1", 0.0) for b in (0, 1)],
-            "stage string, bucket int, rows long, wall_s double, "
-            "fingerprint string, ts double",
+            meta.META_SCHEMA,
         ).write.mode("overwrite").parquet(meta.meta_path(base, "s1"))
         done_files = {b: sorted(os.listdir(
             os.path.join(base, "s1", f"bucket={b}"))) for b in (0, 1)}
@@ -326,6 +324,171 @@ def test_run_stage_cell_bucketed_resume(spark, tmpdir_path, monkeypatch):
                 "RepartitionByExpression" in above:
             assert "xxhash64" not in n.condition().toString(), \
                 n.condition().toString()
+
+
+def _keyed(spark, n=1000):
+    return spark.range(n).withColumn("k", F.col("id").cast("string"))
+
+
+def _stage_state(spark, base):
+    """What a run leaves behind: the data-file count and the ids of each
+    bucket directory, and the ``_meta`` rows without walls and times."""
+    root = os.path.join(base, "s1")
+    files = {d: sum(not f.startswith(("_", "."))
+                    for f in os.listdir(os.path.join(root, d)))
+             for d in os.listdir(root) if d.startswith("bucket=")}
+    ids = sorted((r.bucket, r.id) for r in
+                 spark.read.parquet(root).select("bucket", "id").collect())
+    recs = sorted((r.stage, r.bucket, r.rows, r.fingerprint) for r in
+                  meta.stage_metrics(spark, base, "s1").collect())
+    return files, ids, recs
+
+
+def test_run_stage_meta_append_failure_reruns_clean(
+        spark, tmpdir_path, monkeypatch):
+    """A run killed between its data write and its ``_meta`` append
+    records nothing, so the rerun redoes every bucket and leaves the same
+    files, counts and ``_meta`` rows as a clean run."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    df = _keyed(spark)
+    clean = os.path.join(tmpdir_path, "clean")
+    want = meta.run_stage(spark, df, clean, "s1", bucket_col="k",
+                          n_buckets=4, fingerprint="v1")
+    base = os.path.join(tmpdir_path, "killed")
+    parquet = DataFrameWriter.parquet
+    calls = []
+
+    def second_write_fails(self, path, *a, **kw):
+        calls.append(path)
+        if len(calls) == 2:
+            raise RuntimeError("killed after the stage's first write")
+        return parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", second_write_fails)
+    with pytest.raises(RuntimeError, match="killed"):
+        meta.run_stage(spark, df, base, "s1", bucket_col="k",
+                       n_buckets=4, fingerprint="v1")
+    monkeypatch.undo()
+    assert calls == [f"{base}/s1", meta.meta_path(base, "s1")]
+    assert meta.completed_buckets(spark, base, "s1", "v1") == set()
+    got = meta.run_stage(spark, df, base, "s1", bucket_col="k",
+                         n_buckets=4, fingerprint="v1")
+    assert [(b, r) for b, r, _ in got] == [(b, r) for b, r, _ in want]
+    assert _stage_state(spark, base) == _stage_state(spark, clean)
+
+
+def test_run_stage_corrupt_footer_records_nothing(
+        spark, tmpdir_path, monkeypatch):
+    """A data file whose footer cannot be read fails the run before its
+    ``_meta`` append: no bucket is recorded, and the rerun's pre-delete
+    clears the bad file."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    df = _keyed(spark)
+    base = os.path.join(tmpdir_path, "stages_corrupt")
+    parquet = DataFrameWriter.parquet
+
+    def corrupt_after_write(self, path, *a, **kw):
+        parquet(self, path, *a, **kw)
+        if path == f"{base}/s1":
+            with open(os.path.join(path, "bucket=0", "part-bad.parquet"),
+                      "wb") as f:
+                f.write(b"not a parquet file" * 8)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", corrupt_after_write)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        meta.run_stage(spark, df, base, "s1", bucket_col="k",
+                       n_buckets=4, fingerprint="v1")
+    monkeypatch.undo()
+    assert meta.completed_buckets(spark, base, "s1", "v1") == set()
+    got = meta.run_stage(spark, df, base, "s1", bucket_col="k",
+                         n_buckets=4, fingerprint="v1")
+    assert sum(r for _, r, _ in got) == 1000
+    assert "part-bad.parquet" not in os.listdir(
+        os.path.join(base, "s1", "bucket=0"))
+
+
+def test_run_stage_stale_bucket_counts_zero(spark, tmpdir_path):
+    """A bucket dir left by an older fingerprint, for a bucket that gets
+    no rows this run, counts 0 rows, not the stale ones."""
+    df = _keyed(spark)
+    base = os.path.join(tmpdir_path, "stages_stale")
+    old = meta.run_stage(spark, df, base, "s1", bucket_col="k",
+                         n_buckets=4, fingerprint="v1")
+    assert all(r > 0 for _, r, _ in old)
+    bucket = F.pmod(F.xxhash64("k"), F.lit(4))
+    df2 = df.where(bucket != 3)
+    want = {r.b: r["count"] for r in
+            df2.groupBy(bucket.alias("b")).count().collect()}
+    got = meta.run_stage(spark, df2, base, "s1", bucket_col="k",
+                         n_buckets=4, fingerprint="v2")
+    assert {b: r for b, r, _ in got} == {**want, 3: 0}
+    assert not os.path.exists(os.path.join(base, "s1", "bucket=3"))
+    assert {(r.bucket, r.rows) for r in meta.stage_metrics(
+        spark, base, "s1").where("fingerprint = 'v2'").collect()} == \
+        set(want.items()) | {(3, 0)}
+
+
+# Spark jobs per run_stage call on a spark.range input (4 buckets, test
+# session with AQE): the write is its exchange plus the file write, the
+# _meta append one more, the _meta read one collect; footer counts run
+# on the driver with no job
+FIRST_WRITE_JOBS = 3
+PARTIAL_RESUME_JOBS = 4
+
+
+def _group_jobs(spark, group, fn):
+    """fn() under its own job group: (result, the group's job ids)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_stage_job_cost(spark, tmpdir_path):
+    """Each call's Spark jobs, read from its own job group; the write and
+    the ``_meta`` append are named by their job descriptions, and the
+    caller's description is back in place after the call."""
+    import shutil
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    df = _keyed(spark)
+    base = os.path.join(tmpdir_path, "stages_cost")
+    path = os.path.join(base, "s1")
+
+    def stage():
+        got = meta.run_stage(spark, df, base, "s1", bucket_col="k",
+                             n_buckets=4, fingerprint="v1")
+        return got, sc.getLocalProperty("spark.job.description")
+
+    (first, desc), jobs = _group_jobs(spark, "run_stage_cost_first", stage)
+    assert desc == "run_stage_cost_first"
+    assert sum(r for _, r, _ in first) == 1000
+    assert len(jobs) <= FIRST_WRITE_JOBS, jobs
+    assert {store.job(j).description().get() for j in jobs} == {
+        "run_stage s1: write", "run_stage s1: _meta"}
+    (got, _), jobs = _group_jobs(spark, "run_stage_cost_resume", stage)
+    assert got == [] and len(jobs) == 1
+    done, jobs = _group_jobs(spark, "run_stage_cost_completed", lambda:
+                             meta.completed_buckets(spark, base, "s1", "v1"))
+    assert done == {0, 1, 2, 3} and len(jobs) == 1
+    counts, jobs = _group_jobs(spark, "run_stage_cost_counts", lambda:
+                               meta.bucket_counts(spark, path, [0, 1, 2, 3]))
+    assert counts == {b: r for b, r, _ in first} and jobs == []
+    shutil.rmtree(os.path.join(base, "_meta"))
+    spark.createDataFrame(
+        [("s1", b, r, 0.0, "v1", 0.0) for b, r, _ in first[:2]],
+        meta.META_SCHEMA).write.parquet(meta.meta_path(base, "s1"))
+    (got, _), jobs = _group_jobs(spark, "run_stage_cost_partial", stage)
+    assert [(b, r) for b, r, _ in got] == [(b, r) for b, r, _ in first[2:]]
+    assert len(jobs) <= PARTIAL_RESUME_JOBS, jobs
 
 
 def test_read_gpx_scan(spark, tmpdir_path):
