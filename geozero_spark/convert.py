@@ -38,7 +38,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions import udfs
-from .operators.knn import _check_bound
+from .plans import strategy
 from .sources import readers
 
 _REMOTE = ("http://", "https://")
@@ -150,11 +150,11 @@ def _prop_keys(df: DataFrame) -> list:
     """Sorted union of property keys — a tiny distinct-keys aggregate
     (map_keys explode), collected driver-side as SCHEMA, not data: at
     most ``PROP_KEY_LIMIT`` keys, more raises."""
-    rows = (df.select(F.explode_outer(F.map_keys("props")).alias("k"))
-            .where(F.col("k").isNotNull()).distinct()
-            .limit(PROP_KEY_LIMIT + 1).collect())
-    _check_bound("convert property keys", len(rows), PROP_KEY_LIMIT)
-    return sorted(r["k"] for r in rows)
+    keys = (df.select(F.explode_outer(F.map_keys("props")).alias("k"))
+            .where(F.col("k").isNotNull()).distinct())
+    tbl = strategy.collect_bounded(keys, PROP_KEY_LIMIT,
+                                   "convert property keys")
+    return sorted(tbl.column("k").to_pylist())
 
 
 def _expand_props(df: DataFrame, keys: list) -> DataFrame:

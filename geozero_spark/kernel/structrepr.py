@@ -34,8 +34,6 @@ from __future__ import annotations
 
 from typing import Any, Optional
 
-import numpy as np
-
 from . import bounds as _bounds
 from . import wkb as _wkb
 from .model import (LINESTRING, MULTILINESTRING, MULTIPOINT,
@@ -179,17 +177,3 @@ def from_struct(d: Optional[Any]) -> Optional[Geom]:
                 t=None if tv is None else list(tv),
                 tm=None if tmv is None else [int(v) for v in tmv])
 
-
-def xy_np(d: Any) -> tuple[np.ndarray, np.ndarray]:
-    """All (x, y) pairs of a flat struct as numpy arrays (zero per-coord
-    Python for the hot PIP/tile paths)."""
-    get = d.get if isinstance(d, dict) else (lambda k: getattr(d, k, None))
-    has_z = bool(get("has_z"))
-    has_m = bool(get("has_m"))
-    w = 2 + (1 if has_z else 0) + (1 if has_m else 0)
-    _c = get("coords")
-    arr = np.asarray([] if _c is None else list(_c), dtype=np.float64)
-    if arr.size == 0:
-        return np.empty(0), np.empty(0)
-    arr = arr.reshape(-1, w)
-    return arr[:, 0], arr[:, 1]

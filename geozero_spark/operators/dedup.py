@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from ..functions import sqlgen as sg
 from ..functions import texthash as th
+from ..plans import strategy
 
 _D = sg.SPARK
 
@@ -373,8 +374,10 @@ def connected_components(pairs: DataFrame, a_col: str, b_col: str,
                       F.col(b_col).cast("long").alias(v))
          .where(F.col(u) != F.col(v))
          .select(F.greatest(u, v).alias(u), F.least(u, v).alias(v))
-         .observe(obs, F.count(F.lit(1)).alias("n"))
-         .localCheckpoint(eager=True))
+         .observe(obs, F.count(F.lit(1)).alias("n")))
+    with strategy.described(pairs.sparkSession,
+                            "connected_components edge checkpoint"):
+        e = e.localCheckpoint(eager=True)
     if obs.get["n"] <= SMALL_GRAPH_EDGES:
         return e.repartition(1).mapInArrow(_union_find,
                                            "node long, comp long")

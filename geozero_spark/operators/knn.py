@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..functions import cols
+from ..plans import strategy
 
 
 def _disk_cells(df: DataFrame, ix: str, iy: str, res: int, radius: str,
@@ -80,12 +81,6 @@ def auto_res(n_targets: int, per_cell: int = 2000,
     import math
     cells = max(n_targets / per_cell, float(min_cells), 1.0)
     return max(2, min(12, round(math.log2(cells) / 2)))
-
-
-def _check_bound(what: str, n: int, bound: int) -> None:
-    if n > bound:  # a driver collect over its declared bound: fail
-        raise RuntimeError(f"{what}: driver collected {n} rows, over "
-                           f"its declared bound of {bound}")
 
 
 def _select_topk(d2, kk: int, big):
@@ -256,7 +251,9 @@ def _count_grid(targets: DataFrame, tx: str, ty: str, level: int):
     ix, iy = cols.grid_ixy(F.col(tx) / 100.0, F.col(ty) / 100.0, level)
     inside = (F.abs(tx) <= 18000) & (F.abs(ty) <= 9000)
     key = F.when(inside, F.shiftleft(ix, level) + iy).otherwise(-1)
-    tbl = targets.select(key.alias("key")).groupBy("key").count().toArrow()
+    with strategy.described(targets.sparkSession, "knn_join count grid"):
+        tbl = (targets.select(key.alias("key")).groupBy("key").count()
+               .toArrow())
     key, n = _ints(tbl, "key"), _ints(tbl, "count")
     return int(n.sum()), key[key >= 0], n[key >= 0]
 
@@ -285,34 +282,28 @@ def _search_radius(sat, fx, fy, qx, qy, need: int, res: int,
     return np.minimum(np.where(found, r, max_radius), max_radius)
 
 
-def knn_join_broadcast(queries: DataFrame, targets: DataFrame, k: int,
-                       query_key: str = "q_id", target_key: str = "t_id",
-                       qx: str = "qx", qy: str = "qy",
-                       tx: str = "tx", ty: str = "ty",
-                       exclude_self: bool = True) -> DataFrame:
-    """Exact kNN for SMALL query sets: collect the queries (at most
-    BROADCAST_QUERY_LIMIT rows; a larger query side raises), broadcast
-    them, compute a partition-local top-k over the targets with numpy
-    (NO target shuffle, one Arrow batch per scan partition), then merge
-    the per-partition partials with one tiny window.
+def _broadcast_topk(qt, targets: DataFrame, k: int, query_key: str,
+                    target_key: str, qx: str, qy: str, tx: str, ty: str,
+                    exclude_self: bool) -> DataFrame:
+    """Exact kNN for SMALL query sets, from the collected query table
+    ``qt`` (query_key, qx, qy): broadcast the queries, compute a
+    partition-local top-k over the targets with numpy (NO target
+    shuffle, one Arrow batch per scan partition), then merge the
+    per-partition partials with one tiny window.
 
     This is the broadcast twin of the grid path: at 10^12 targets the
     scan stays a scan — each executor reduces its slice to k rows per
     query — and the only shuffle is |partitions| * |Q| * k partial
-    rows. Same (dist2, target_key) tie-breaking as knn_join, so both
-    paths return bit-identical results."""
-    import numpy as np
+    rows. Same (dist2, target_key) tie-breaking as the grid path, so
+    both return bit-identical results."""
     import pyarrow as pa
 
-    qt = queries.select(query_key, qx, qy).limit(
-        BROADCAST_QUERY_LIMIT + 1).toArrow()
-    _check_bound("knn_join_broadcast queries (use method='grid')",
-                 qt.num_rows, BROADCAST_QUERY_LIMIT)
+    spark = targets.sparkSession
     if not qt.num_rows:
-        return queries.sparkSession.createDataFrame(
+        return spark.createDataFrame(
             [], f"{query_key} long, {target_key} long, dist2 long, "
                 f"rank int")
-    bc = queries.sparkSession.sparkContext.broadcast(
+    bc = spark.sparkContext.broadcast(
         (_ints(qt, query_key), _ints(qt, qx), _ints(qt, qy)))
 
     out_schema = f"{query_key} long, {target_key} long, dist2 long"
@@ -339,7 +330,6 @@ def knn_join_broadcast(queries: DataFrame, targets: DataFrame, k: int,
             .where(F.col("rank") <= k))
 
 
-BROADCAST_QUERY_LIMIT = 100_000
 # finest count-grid level: bounds the count collect at 4^10 + 1 rows and
 # the broadcast summed-area table at (2^10 + 1)^2 int64 (8.4 MB)
 FINE_LEVEL = 10
@@ -373,18 +363,20 @@ def knn_join(queries: DataFrame, targets: DataFrame, k: int,
 
     method: "grid" (cell-cogrouped disk join — the index path for large
     query sets), "broadcast" (broadcast-queries partition-local top-k —
-    fastest when |Q| is small), or "auto" (broadcast when BOTH the
-    query side is under BROADCAST_QUERY_LIMIT rows and the total
-    |Q| * |T| distance work is under BROADCAST_WORK_LIMIT — a small
-    query set over a huge target table is exactly where the scan's
-    quadratic work loses to the grid index). Both are exact and
-    bit-identical.
+    fastest when |Q| is small; at most ``strategy.BROADCAST_ROWS``
+    queries, more raises), or "auto" (broadcast when BOTH the query
+    side is within strategy.BROADCAST_ROWS rows and the total |Q| * |T|
+    distance work is under BROADCAST_WORK_LIMIT — a small query set
+    over a huge target table is exactly where the scan's quadratic
+    work loses to the grid index). Both are exact and bit-identical.
+    "auto" collects the queries once: that bounded collect decides the
+    path (over the bound: grid) and feeds the broadcast path, and the
+    count grid's total decides the work test.
 
     The grid path is one lazy plan, no persist or checkpoint, and no
     driver loop; its only eager action is the count-grid collect
     (module docstring), whose total feeds auto_res when ``res`` is
-    None and the work probe of method="auto" (one target scan either
-    way). ``max_radius`` (default 2^res, a full sweep) caps the disk
+    None. ``max_radius`` (default 2^res, a full sweep) caps the disk
     radius exactly: a capped query gets the nearest targets inside its
     disk. ``exclude_self`` drops targets keyed like the query and
     assumes target keys are unique (every caller passes doc ids). A
@@ -395,20 +387,24 @@ def knn_join(queries: DataFrame, targets: DataFrame, k: int,
 
     queries = queries.where(F.col(qx).isNotNull() & F.col(qy).isNotNull())
     level = FINE_LEVEL if res is None else min(res + 3, FINE_LEVEL)
-    grid = None
+    grid = qt = None
+    if method in ("auto", "broadcast"):
+        try:
+            qt = strategy.collect_bounded(
+                queries.select(query_key, qx, qy), strategy.BROADCAST_ROWS,
+                "knn_join broadcast queries (use method='grid')")
+        except strategy.BoundExceeded:
+            if method == "broadcast":
+                raise
     if method == "auto":
-        n_q = queries.select(query_key).limit(
-            BROADCAST_QUERY_LIMIT + 1).count()
         method = "grid"
-        if n_q <= BROADCAST_QUERY_LIMIT:
+        if qt is not None:
             grid = _count_grid(targets, tx, ty, level)
-            if n_q * grid[0] <= BROADCAST_WORK_LIMIT:
+            if qt.num_rows * grid[0] <= BROADCAST_WORK_LIMIT:
                 method = "broadcast"
     if method == "broadcast":
-        return knn_join_broadcast(
-            queries, targets, k, query_key=query_key,
-            target_key=target_key, qx=qx, qy=qy, tx=tx, ty=ty,
-            exclude_self=exclude_self)
+        return _broadcast_topk(qt, targets, k, query_key, target_key,
+                               qx, qy, tx, ty, exclude_self)
     if method != "grid":
         raise ValueError(f"unknown kNN method {method!r}")
     total, key, cn = grid or _count_grid(targets, tx, ty, level)

@@ -37,8 +37,9 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import cols
+from ..functions import cols, udfs
 from ..functions import sqlgen as sg
+from ..plans import strategy
 
 
 def explode_bbox_cover(df: DataFrame, res: int, bbox_col: str = "bbox",
@@ -76,8 +77,6 @@ def _point_salt(lon: str, lat: str, n: int):
                   F.lit(n)).cast("int")
 
 
-_BROADCAST_POLY_LIMIT = 100_000
-
 # prefilter=None (auto) flips the points-side cover-cell semi-join on
 # when the estimated points bytes reaching the big exchange exceed
 # this. The prefilter's cost is ~fixed (one cover-distinct + broadcast
@@ -105,7 +104,7 @@ def _plan_size_bytes(df: DataFrame) -> int:
 # (weakly): the collected rows, decoded poly map (already broadcast)
 # and the kernel cell cover. A dimension table joined repeatedly (the
 # common pattern: one admin/zone dim object, many point queries) pays
-# the take-job + decode + cover exactly once. Object identity — not a
+# the collect job + decode + cover exactly once. Object identity — not a
 # plan hash — so a fresh read of an overwritten path can never be
 # served stale polygons, and two different dims can never collide;
 # the cache empties itself when the caller drops the DataFrame.
@@ -125,24 +124,18 @@ def _prepare_broadcast_polys(polys: DataFrame, res: int, poly_key: str,
     if cached is not None and subkey in cached:
         return cached[subkey]
 
-    # ONE job for guard + collect: take(limit+1) both bounds the
-    # driver memory and fetches the rows (a separate count job was
-    # measurable fixed cost on every pip_join call)
-    rows = polys.select(poly_key, poly_geom).take(
-        _BROADCAST_POLY_LIMIT + 1)
-    if len(rows) > _BROADCAST_POLY_LIMIT:
-        raise ValueError(
-            f"pip_join broadcast path collects the polygon side to "
-            f"the driver and it exceeds {_BROADCAST_POLY_LIMIT} "
-            f"rows; use broadcast_polys=False (shuffle path, "
-            f"optionally salt=N) for big-big joins")
+    tbl = strategy.collect_bounded(
+        polys.select(poly_key, poly_geom), strategy.BROADCAST_ROWS,
+        "pip_join broadcast polygons (use broadcast_polys=False, the "
+        "shuffle path, optionally salt=N, for big-big joins)")
+    rows = list(zip(*(udfs.pylist(c.combine_chunks()) for c in
+                      tbl.columns)))
     # key -> LIST of geometries: a zone stored as several polygon rows
     # is legal (unique_polys=False) — a plain dict would silently keep
     # only the last row's geometry
     poly_map: dict = {}
     for r in rows:
-        poly_map.setdefault(r[0], []).append(
-            sr.from_struct(r[1].asDict(recursive=False)))
+        poly_map.setdefault(r[0], []).append(sr.from_struct(r[1]))
     bc = spark.sparkContext.broadcast(poly_map)
     # the cover comes from the SAME collected rows, computed with
     # the kernel driver-side and broadcast as a literal frame: a

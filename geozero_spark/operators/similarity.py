@@ -26,10 +26,8 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, LongType
 
-from .knn import _check_bound, _select_topk
-
-# most query rows cosine_topk collects to the driver and broadcasts
-COSINE_QUERY_LIMIT = 100_000
+from ..plans import strategy
+from .knn import _select_topk
 
 
 def _vec_matrix(col: pa.ListArray, name: str,
@@ -108,11 +106,11 @@ def cosine_topk(queries: DataFrame, targets: DataFrame, k: int,
     follow the same op order as ``dot / (sqrt(qn) * sqrt(tn))``. The
     interpreted fold the old SQL form paid (higher-order functions run
     outside codegen) made its |Q| x |T| crossJoin the suite's slowest
-    non-kNN query. At most ``COSINE_QUERY_LIMIT`` query rows are
+    non-kNN query. At most ``strategy.BROADCAST_ROWS`` query rows are
     collected; a larger query side raises instead."""
-    qt = queries.select(query_key, qvec).limit(
-        COSINE_QUERY_LIMIT + 1).toArrow()
-    _check_bound("cosine_topk queries", qt.num_rows, COSINE_QUERY_LIMIT)
+    qt = strategy.collect_bounded(queries.select(query_key, qvec),
+                                  strategy.BROADCAST_ROWS,
+                                  "cosine_topk queries")
     spark = queries.sparkSession
     if not qt.num_rows:
         return spark.createDataFrame(
@@ -513,7 +511,6 @@ def _ivf_centroids(targets: DataFrame, k_clusters: int, iters: int,
     seed = (targets
             .select(F.col(target_key).cast("long").alias("cid"), tvec)
             .orderBy("cid").limit(k_clusters).collect())
-    _check_bound("ivf_fit seed", len(seed), k_clusters)
     if len(seed) < k_clusters:
         raise ValueError(
             f"ivf_fit: need >= {k_clusters} target vectors to seed "
@@ -524,8 +521,8 @@ def _ivf_centroids(targets: DataFrame, k_clusters: int, iters: int,
     for _ in range(iters):
         if fast:  # merge the partials in collect (= partition) order
             rows = _lloyd_partials(targets, cmat, tvec).collect()
-            _check_bound("ivf_fit Lloyd partials", len(rows),
-                         len({r.part for r in rows}) * len(cids))
+            strategy.check_bound("ivf_fit Lloyd partials", len(rows),
+                                 len({r.part for r in rows}) * len(cids))
             cnt, tot = np.zeros(len(cids)), np.zeros(cmat.shape)
             for r in rows:
                 cnt[r.ci] += r.n
@@ -536,8 +533,8 @@ def _ivf_centroids(targets: DataFrame, k_clusters: int, iters: int,
             means = sorted(_centroid_means(
                 _assign(targets, cids, cmat, target_key, tvec), targets,
                 target_key, tvec).collect())
-            _check_bound("ivf_fit portable means", len(means),
-                         cmat.size)
+            strategy.check_bound("ivf_fit portable means", len(means),
+                                 cmat.size)
             cids = np.unique([r.cid for r in means])
             cmat = np.array([r.m for r in means]).reshape(len(cids), -1)
     return cids, cmat

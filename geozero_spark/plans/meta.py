@@ -17,11 +17,12 @@ Pattern (no reference analogue — geozero is single-pass/single-process):
 
 from __future__ import annotations
 
-import contextlib
 import time
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from .strategy import described
 
 # the ``_meta`` rows, declared so no read infers what the writer just
 # wrote. A DDL string, not a StructType: parsing DDL needs a live
@@ -50,19 +51,6 @@ def completed_buckets(spark: SparkSession, base: str, stage: str,
     return {r.bucket for r in
             m.where(F.col("fingerprint") == fingerprint)
             .select("bucket").collect()}
-
-
-@contextlib.contextmanager
-def _described(spark: SparkSession, text: str):
-    """The body's jobs run as ``text``; the caller's description
-    (setJobGroup sets one) comes back after. The job group is kept."""
-    sc = spark.sparkContext
-    prev = sc.getLocalProperty("spark.job.description")
-    sc.setLocalProperty("spark.job.description", text)
-    try:
-        yield
-    finally:
-        sc.setLocalProperty("spark.job.description", prev)
 
 
 def _bucket_dirs(spark: SparkSession, path: str, buckets: list):
@@ -145,7 +133,7 @@ def run_stage(spark: SparkSession, df: DataFrame, base: str, stage: str,
         # the docstring)
         out = out.where(F.expr(f"spark_partition_id() div {fanout}")
                         .isin(todo))
-    with _described(spark, f"run_stage {stage}: write"):
+    with described(spark, f"run_stage {stage}: write"):
         (out.write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("bucket").parquet(f"{base}/{stage}"))
@@ -155,7 +143,7 @@ def run_stage(spark: SparkSession, df: DataFrame, base: str, stage: str,
     rec = spark.createDataFrame(
         [(stage, b, counts.get(b, 0), wall, fingerprint, now)
          for b in todo], META_SCHEMA)
-    with _described(spark, f"run_stage {stage}: _meta"):
+    with described(spark, f"run_stage {stage}: _meta"):
         rec.write.mode("append").parquet(meta_path(base, stage))
     return [(b, counts.get(b, 0), wall) for b in todo]
 

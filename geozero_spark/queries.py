@@ -452,35 +452,75 @@ def _point_shp_encoder(rows):
                         for r in rows]), len(rows)
 
 
-def q_shp_decode(spark, sf_dir):
-    """Shapefile reader through the Spark layer: a Point shapefile is
-    materialized deterministically from the synthetic points (kernel
-    writer), then scanned via read_shp (binaryFile -> kernel record
-    decode -> struct). Output is (recno, x_c, y_c) with recno
-    the 1-based shapefile record number in doc_id order."""
+def _point_fixture(spark, sf_dir: str, fmt: str) -> str:
+    """Directory of the ``fmt`` container fixture ("shp", "fgb",
+    "gpkgw" one file, "gpkgd" one file per partition) over the first
+    SHP_FIXTURE_CAP synthetic points in doc_id order, written once.
+
+    The writes stay OFF the driver: each container is written by
+    executor tasks over the deterministically capped slice, never an
+    O(table) driver collect (on a real cluster the directory must be
+    shared storage). A fixture is complete only when its ``_COMPLETE``
+    marker exists, written after the writer returns: a directory
+    without one (a run killed after some of its tasks) is cleared and
+    written again, never read as the whole fixture. The cap is part of
+    the directory name, so a fixture written under a different cap
+    never aliases this one (the oracles have LIMIT cap)."""
     import hashlib
     import os
+    import shutil
 
     from .sources import readers
 
     P.register_views(spark, sf_dir)
     tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
-    # cap is part of the fixture tag: a stale fixture written under a
-    # different cap must never alias this one (oracle has LIMIT cap)
-    d = f"/tmp/gz_shp_{tag}_cap{SHP_FIXTURE_CAP}"
-    os.makedirs(d, exist_ok=True)
-    path = os.path.join(d, "points.shp")
-    if not os.path.exists(path):
-        # fixture write stays OFF the driver: a shapefile is a single
-        # sequential container, so it is written by ONE executor task
-        # over a deterministically capped slice (first SHP_FIXTURE_CAP
-        # doc_ids) — never an O(table) driver collect. On a real
-        # cluster the target path must be shared storage.
-        src = spark.sql(
-            f"SELECT doc_id, {P.LON_C} AS xc, {P.LAT_C} AS yc "
-            f"FROM documents ORDER BY doc_id LIMIT {SHP_FIXTURE_CAP}")
-        readers.write_container(src, path, _point_shp_encoder)
-    out = readers.read_shp(spark, d)
+    d = f"/tmp/gz_{fmt}_{tag}_cap{SHP_FIXTURE_CAP}"
+    marker = os.path.join(d, "_COMPLETE")
+    if os.path.exists(marker):
+        return d
+    shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(d)
+    src = spark.sql(
+        f"SELECT doc_id, {P.LON_C} AS xc, {P.LAT_C} AS yc, "
+        f"{P.LOC_WKT} AS wkt FROM documents "
+        f"ORDER BY doc_id LIMIT {SHP_FIXTURE_CAP}")
+    pts = src.select(
+        "doc_id", cols.point_struct_from_wkt_jvm(F.col("wkt")).alias("geom"))
+    if fmt == "shp":
+        readers.write_container(src.select("doc_id", "xc", "yc"),
+                                os.path.join(d, "points.shp"),
+                                _point_shp_encoder)
+    elif fmt == "fgb":
+        readers.write_fgb(pts, os.path.join(d, "points.fgb"), name="points")
+    elif fmt == "gpkgw":
+        readers.write_gpkg(pts, os.path.join(d, "points.gpkg"),
+                           table="points")
+    else:
+        readers.write_gpkg_dir(pts.repartition(4, "doc_id"), d,
+                               table="points")
+    open(marker, "w").close()
+    return d
+
+
+def _doc_xy(df: DataFrame) -> DataFrame:
+    """(doc_id, x_c, y_c) of a point-feature scan whose doc_id rides as
+    a feature property."""
+    return df.select(
+        F.col("props")["doc_id"].cast("long").alias("doc_id"),
+        cols.point_x(F.col("geom")).cast("long").alias("x_c"),
+        cols.point_y(F.col("geom")).cast("long").alias("y_c"))
+
+
+def q_shp_decode(spark, sf_dir):
+    """Shapefile reader through the Spark layer: a Point shapefile is
+    materialized deterministically from the synthetic points (kernel
+    writer, ONE executor task: a shapefile is a single sequential
+    container), then scanned via read_shp (binaryFile -> kernel record
+    decode -> struct). Output is (recno, x_c, y_c) with recno
+    the 1-based shapefile record number in doc_id order."""
+    from .sources import readers
+
+    out = readers.read_shp(spark, _point_fixture(spark, sf_dir, "shp"))
     return out.select(
         (F.col("record_idx") + 1).cast("int").alias("recno"),
         cols.point_x(F.col("geom")).cast("long").alias("x_c"),
@@ -495,29 +535,10 @@ def q_fgb_decode(spark, sf_dir):
     .fgb (geozero-cli/src/main.rs:161-166 FgbWriter); doc_id rides as a
     feature property so the file's Hilbert reorder is invisible to the
     order-insensitive oracle."""
-    import hashlib
-    import os
-
     from .sources import readers
 
-    P.register_views(spark, sf_dir)
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
-    d = f"/tmp/gz_fgb_{tag}_cap{SHP_FIXTURE_CAP}"
-    os.makedirs(d, exist_ok=True)
-    path = os.path.join(d, "points.fgb")
-    if not os.path.exists(path):
-        src = spark.sql(
-            f"SELECT doc_id, {P.LOC_WKT} AS wkt FROM documents "
-            f"ORDER BY doc_id LIMIT {SHP_FIXTURE_CAP}")
-        src = src.select(
-            "doc_id",
-            cols.point_struct_from_wkt_jvm(F.col("wkt")).alias("geom"))
-        readers.write_fgb(src, path, name="points")
-    out = readers.read_fgb(spark, d)
-    return out.select(
-        F.col("props")["doc_id"].cast("long").alias("doc_id"),
-        cols.point_x(F.col("geom")).cast("long").alias("x_c"),
-        cols.point_y(F.col("geom")).cast("long").alias("y_c"))
+    return _doc_xy(readers.read_fgb(
+        spark, _point_fixture(spark, sf_dir, "fgb")))
 
 
 def q_fgb_ranged_decode(spark, sf_dir):
@@ -526,20 +547,12 @@ def q_fgb_ranged_decode(spark, sf_dir):
     writer-materialized fixture as q_fgb_decode, scanned via
     read_fgb_ranged in 4 executor byte-range splits instead of a
     whole-file read. Shares fgb_decode's oracle semantics."""
-    import hashlib
     import os
 
     from .sources import readers
 
-    q_fgb_decode(spark, sf_dir)  # ensure the fixture exists
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
-    path = os.path.join(f"/tmp/gz_fgb_{tag}_cap{SHP_FIXTURE_CAP}",
-                        "points.fgb")
-    out = readers.read_fgb_ranged(spark, path, n_splits=4)
-    return out.select(
-        F.col("props")["doc_id"].cast("long").alias("doc_id"),
-        cols.point_x(F.col("geom")).cast("long").alias("x_c"),
-        cols.point_y(F.col("geom")).cast("long").alias("y_c"))
+    path = os.path.join(_point_fixture(spark, sf_dir, "fgb"), "points.fgb")
+    return _doc_xy(readers.read_fgb_ranged(spark, path, n_splits=4))
 
 
 def q_gpkg_decode(spark, sf_dir):
@@ -548,29 +561,10 @@ def q_gpkg_decode(spark, sf_dir):
     core profile, kernel/sqlitewrite.py B-trees) -> read_gpkg scan
     (kernel/sqlitefile.py walker). doc_id rides as a feature property;
     fids enumerate input order so the oracle is order-insensitive."""
-    import hashlib
-    import os
-
     from .sources import readers
 
-    P.register_views(spark, sf_dir)
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
-    d = f"/tmp/gz_gpkgw_{tag}_cap{SHP_FIXTURE_CAP}"
-    os.makedirs(d, exist_ok=True)
-    path = os.path.join(d, "points.gpkg")
-    if not os.path.exists(path):
-        src = spark.sql(
-            f"SELECT doc_id, {P.LOC_WKT} AS wkt FROM documents "
-            f"ORDER BY doc_id LIMIT {SHP_FIXTURE_CAP}")
-        src = src.select(
-            "doc_id",
-            cols.point_struct_from_wkt_jvm(F.col("wkt")).alias("geom"))
-        readers.write_gpkg(src, path, table="points")
-    out = readers.read_gpkg(spark, d, table="points")
-    return out.select(
-        F.col("props")["doc_id"].cast("long").alias("doc_id"),
-        cols.point_x(F.col("geom")).cast("long").alias("x_c"),
-        cols.point_y(F.col("geom")).cast("long").alias("y_c"))
+    return _doc_xy(readers.read_gpkg(
+        spark, _point_fixture(spark, sf_dir, "gpkgw"), table="points"))
 
 
 def q_gpkg_dir_decode(spark, sf_dir):
@@ -581,28 +575,10 @@ def q_gpkg_dir_decode(spark, sf_dir):
     order-insensitive compare absorbs the partition split; green here
     means every per-partition container is independently valid AND
     the directory scan reassembles exactly the input rows."""
-    import hashlib
-    import os
-
     from .sources import readers
 
-    P.register_views(spark, sf_dir)
-    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
-    d = f"/tmp/gz_gpkgd_{tag}_cap{SHP_FIXTURE_CAP}"
-    if not os.path.exists(os.path.join(d, "part-00000.gpkg")):
-        src = spark.sql(
-            f"SELECT doc_id, {P.LOC_WKT} AS wkt FROM documents "
-            f"ORDER BY doc_id LIMIT {SHP_FIXTURE_CAP}")
-        src = src.select(
-            "doc_id",
-            cols.point_struct_from_wkt_jvm(F.col("wkt")).alias("geom"))
-        readers.write_gpkg_dir(src.repartition(4, "doc_id"), d,
-                               table="points")
-    out = readers.read_gpkg(spark, d, table="points")
-    return out.select(
-        F.col("props")["doc_id"].cast("long").alias("doc_id"),
-        cols.point_x(F.col("geom")).cast("long").alias("x_c"),
-        cols.point_y(F.col("geom")).cast("long").alias("y_c"))
+    return _doc_xy(readers.read_gpkg(
+        spark, _point_fixture(spark, sf_dir, "gpkgd"), table="points"))
 
 
 def q_gpx_decode(spark, sf_dir):
@@ -848,17 +824,13 @@ def q_fingerprint(spark, sf_dir):
 # streaming
 # --------------------------------------------------------------------------
 
-def q_streaming_cell_counts(spark, sf_dir):
-    """Structured Streaming ingest of the documents feed -> pages
-    synthesis -> decode -> cell aggregation, run to completion with an
-    availableNow trigger into a memory sink. Deterministic, so it shares
-    the batch oracle."""
+def _documents_stream(spark, sf_dir):
+    """The documents parquet as a file stream. A file-stream source
+    needs a directory, so the parquet is exposed through a stable
+    symlink directory (read-only testdata stays untouched)."""
     import hashlib
     import os
-    import uuid
     src = f"{sf_dir}/documents.parquet"
-    # file-stream sources need a directory; expose the parquet via a
-    # stable symlink dir (read-only testdata stays untouched)
     tag = hashlib.sha1(src.encode()).hexdigest()[:12]
     sdir = f"/tmp/gz_stream_{tag}"
     os.makedirs(sdir, exist_ok=True)
@@ -866,8 +838,16 @@ def q_streaming_cell_counts(spark, sf_dir):
     if not os.path.exists(link):
         os.symlink(os.path.realpath(src), link)
     schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(sdir)
-    pts = (stream
+    return spark.readStream.schema(schema).parquet(sdir)
+
+
+def q_streaming_cell_counts(spark, sf_dir):
+    """Structured Streaming ingest of the documents feed -> pages
+    synthesis -> decode -> cell aggregation, run to completion with an
+    availableNow trigger into a memory sink. Deterministic, so it shares
+    the batch oracle."""
+    import uuid
+    pts = (_documents_stream(spark, sf_dir)
            .selectExpr(f"{P.URL} AS url", f"{P.TEXT} AS text")
            .withColumn("geom", cols.point_struct_from_wkt_jvm(
                F.regexp_extract("text", LOC_RE, 1)))
@@ -890,19 +870,8 @@ def q_streaming_windowed(spark, sf_dir):
     window truncation is SQL-reproducible; the watermark DROP semantics
     are exercised with genuinely late micro-batches in
     tests/test_spark_layer.py::test_streaming_watermark_drops_late."""
-    import hashlib
-    import os
     import uuid
-    src = f"{sf_dir}/documents.parquet"
-    tag = hashlib.sha1(src.encode()).hexdigest()[:12]
-    sdir = f"/tmp/gz_stream_{tag}"
-    os.makedirs(sdir, exist_ok=True)
-    link = f"{sdir}/documents.parquet"
-    if not os.path.exists(link):
-        os.symlink(os.path.realpath(src), link)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(sdir)
-    pages = stream.selectExpr(
+    pages = _documents_stream(spark, sf_dir).selectExpr(
         f"{P.URL} AS url", P._warc_ts(sg.SPARK) + " AS warc_ts", "lang")
     agg = (pages
            .withWatermark("warc_ts", "1 hour")

@@ -13,8 +13,7 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)),
 
 
 def test_no_pandas_udf_sites_in_package():
-    # applyInPandasWithState (streaming state) has no Arrow twin yet
-    banned = re.compile(r"pandas_udf|mapInPandas|applyInPandas\(")
+    banned = re.compile(r"pandas_udf|mapInPandas|applyInPandas")
     hits = []
     for d, _, files in os.walk(PKG):
         for f in files:

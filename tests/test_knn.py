@@ -341,16 +341,58 @@ def test_knn_max_radius_is_an_exact_cap(spark):
 
 
 def test_knn_broadcast_query_side_is_bounded(spark, monkeypatch):
-    """The broadcast path collects at most BROADCAST_QUERY_LIMIT query
+    """The broadcast path collects at most strategy.BROADCAST_ROWS query
     rows to the driver; an explicit method="broadcast" over a larger
     query side fails loudly instead of collecting it."""
-    from geozero_spark.operators import knn
+    from geozero_spark.plans import strategy
 
     q, t = _grid_fixture(spark)
-    monkeypatch.setattr(knn, "BROADCAST_QUERY_LIMIT", 20)
+    monkeypatch.setattr(strategy, "BROADCAST_ROWS", 20)
     with pytest.raises(RuntimeError, match="declared bound of 20"):
         knn_join(q, t, k=3, method="broadcast")
     assert knn_join(q.limit(20), t, k=3, method="broadcast").count() == 60
+
+
+def test_knn_auto_collects_queries_once(spark, monkeypatch):
+    """method="auto" with a query side within the bound runs exactly the
+    jobs of method="broadcast" plus those of the count grid: its one
+    query collect picks the path and feeds the broadcast. Over the
+    bound it takes the grid path with the grid's exact output. The
+    caller's job description is back in place after each call."""
+    from test_spark_layer import _group_jobs
+
+    from geozero_spark.operators import knn
+    from geozero_spark.plans import strategy
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    q, t = _grid_fixture(spark)
+
+    def call(method):
+        out = knn_join(q, t, k=3, res=None, method=method)
+        return out, sc.getLocalProperty("spark.job.description")
+
+    (bc, _), bc_jobs = _group_jobs(spark, "knn_cost_broadcast",
+                                   lambda: call("broadcast"))
+    _, grid_jobs = _group_jobs(spark, "knn_cost_count_grid", lambda:
+                               knn._count_grid(t, "tx", "ty", knn.FINE_LEVEL))
+    (auto, desc), auto_jobs = _group_jobs(spark, "knn_cost_auto",
+                                          lambda: call("auto"))
+    assert desc == "knn_cost_auto"
+    assert len(auto_jobs) == len(bc_jobs) + len(grid_jobs), auto_jobs
+    descs = [store.job(j).description().get() for j in auto_jobs]
+    assert descs.count(
+        "knn_join broadcast queries (use method='grid')") == 1, descs
+    assert sorted(auto.collect()) == sorted(bc.collect())
+
+    monkeypatch.setattr(strategy, "BROADCAST_ROWS", 20)
+    (over, desc), _ = _group_jobs(spark, "knn_cost_over", lambda:
+                                  call("auto"))
+    assert desc == "knn_cost_over"
+    plan = over._jdf.queryExecution().withCachedData().toString()
+    assert plan.count("FlatMapCoGroupsInArrow") == 1, plan
+    grid = knn_join(q, t, k=3, res=None, method="grid")
+    assert sorted(over.collect()) == sorted(grid.collect())
 
 
 def test_knn_null_query_coordinate_is_dropped(spark):

@@ -409,10 +409,12 @@ def test_signature_rejects_null_or_ragged_vectors(spark, bad):
 
 
 def test_cosine_topk_query_side_is_bounded(spark, monkeypatch):
-    """cosine_topk collects at most COSINE_QUERY_LIMIT query rows to
-    the driver; a larger query side fails loudly instead of collecting
-    it."""
-    monkeypatch.setattr(S, "COSINE_QUERY_LIMIT", 5)
+    """cosine_topk collects at most strategy.BROADCAST_ROWS query rows
+    to the driver; a larger query side fails loudly instead of
+    collecting it."""
+    from geozero_spark.plans import strategy
+
+    monkeypatch.setattr(strategy, "BROADCAST_ROWS", 5)
     q, t = _vecs_df(spark, "q_id", "qvec"), _vecs_df(spark, "t_id", "tvec")
     with pytest.raises(RuntimeError, match="declared bound of 5"):
         S.cosine_topk(q, t, k=2)

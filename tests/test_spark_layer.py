@@ -137,41 +137,6 @@ def test_partitioned_bbox_pruning(spark, tmpdir_path):
     assert rd.count() == exp
 
 
-def test_stateful_streaming_dedup(spark, tmpdir_path):
-    """applyInPandasWithState across multiple micro-batches must equal
-    the batch aggregation (state is order-independent)."""
-    import uuid
-
-    from geozero_spark.streaming import stateful
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    src = os.path.join(tmpdir_path, "stream_src")
-    # 4 files -> maxFilesPerTrigger=1 forces 4 micro-batches
-    (docs.repartition(4).selectExpr(
-        "substring(text, 1, 8) AS key", "doc_id")
-     .write.parquet(src))
-    schema = spark.read.parquet(src).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    out = stateful.dedup_state_stream(stream)
-    name = "state_" + uuid.uuid4().hex[:8]
-    q = (out.writeStream.format("memory").queryName(name)
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
-    got_all = spark.table(name).toPandas()
-    # latest emit per key = max n_docs (monotone counts)
-    got = (got_all.sort_values("n_docs").groupby("key").last()
-           .reset_index())
-    exp = (docs.selectExpr("substring(text, 1, 8) AS key", "doc_id")
-           .groupBy("key")
-           .agg(F.count("*").alias("n_docs"),
-                F.min("doc_id").alias("min_doc_id"))
-           .toPandas())
-    g = {(r.key, r.n_docs, r.min_doc_id) for r in got.itertuples()}
-    e = {(r.key, r.n_docs, r.min_doc_id) for r in exp.itertuples()}
-    assert g == e
-
-
 def test_run_stage_partial_resume(spark, tmpdir_path):
     """Pre-record two buckets as done: a resumed run must write ONLY the
     pending ones (and count them correctly) in its single-write pass."""
@@ -563,17 +528,47 @@ def test_bounds_counts_wkb_fallback_coords(spark):
     assert row.n_coords == 6
 
 
+def test_partial_gpkg_dir_fixture_is_rewritten(spark, tmp_path):
+    """A run killed after partition 0's write task leaves only
+    part-00000.gpkg in the gpkg_dir_decode fixture directory; the next
+    run writes the fixture again instead of reading that one part as
+    all of it."""
+    import glob
+    import hashlib
+    import shutil
+
+    from conftest import SF_DIR
+    from geozero_spark import queries as Q
+
+    # a second spelling of the data dir gets its own fixture directory
+    sf = os.path.join(str(tmp_path), "sf")
+    os.symlink(SF_DIR, sf)
+    tag = hashlib.sha1(sf.encode()).hexdigest()[:12]
+    try:
+        full = Q.q_gpkg_dir_decode(spark, sf).count()
+        (d,) = glob.glob(f"/tmp/gz_gpkgd_{tag}_cap*")
+        for f in os.listdir(d):
+            if f != "part-00000.gpkg":
+                os.remove(os.path.join(d, f))
+        assert os.listdir(d) == ["part-00000.gpkg"]
+        assert Q.q_gpkg_dir_decode(spark, sf).count() == full
+    finally:
+        for d in glob.glob(f"/tmp/gz_gpkgd_{tag}_cap*"):
+            shutil.rmtree(d)
+
+
 def test_pip_broadcast_guard(spark, monkeypatch):
     from geozero_spark.kernel import structrepr as sr, wkt as kwkt
     from geozero_spark.operators import pip_join as pj
+    from geozero_spark.plans import strategy
 
     poly = sr.to_struct(kwkt.decode("POLYGON((0 0,4 0,4 4,0 4,0 0))"))
     polys = spark.createDataFrame(
         [(i, poly) for i in range(5)],
         f"zone_id long, poly struct<{sr.GEOMETRY_DDL}>")
     pts = spark.createDataFrame([(1.0, 1.0)], "lon double, lat double")
-    monkeypatch.setattr(pj, "_BROADCAST_POLY_LIMIT", 3)
-    with pytest.raises(ValueError, match="broadcast_polys=False"):
+    monkeypatch.setattr(strategy, "BROADCAST_ROWS", 3)
+    with pytest.raises(RuntimeError, match="broadcast_polys=False"):
         pj.pip_join(pts, polys, res=4)
 
 
@@ -763,67 +758,6 @@ def test_staged_cell_col_column_inputs(spark):
         5, out="c").collect()
     for r in got:
         assert r["c"] == kc.cell_id(r["xc"] / 100.0, r["yc"] / 100.0, 5)
-
-
-def test_streaming_append_restart_exactly_once(spark, tmpdir_path):
-    """Kill-and-restart over a checkpoint: the append-mode windowed
-    file sink must (a) only emit windows finalized by the watermark,
-    (b) emit nothing on an empty restart, and (c) after new data
-    arrives, emit newly finalized windows WITHOUT re-emitting earlier
-    ones — exactly-once across restarts."""
-    import os
-
-    from pyspark.sql import functions as F
-    from geozero_spark.streaming.windowed import windowed_counts_file_sink
-
-    base = 1_700_000_000  # aligned enough: windows are 1h tumbling
-    base -= base % 3600
-    in_dir = os.path.join(tmpdir_path, "in")
-    out_dir = os.path.join(tmpdir_path, "out")
-    ckpt = os.path.join(tmpdir_path, "ckpt")
-    os.makedirs(in_dir, exist_ok=True)
-
-    def write_batch(rows, name):
-        df = spark.createDataFrame(rows, "ts_s long, lang string")
-        (df.select(F.col("ts_s").cast("timestamp").alias("ts"), "lang")
-           .coalesce(1).write.mode("append").parquet(in_dir))
-
-    def run_once():
-        schema = spark.read.parquet(in_dir).schema
-        stream = spark.readStream.schema(schema).parquet(in_dir)
-        q = windowed_counts_file_sink(stream, "ts", ["lang"], out_dir,
-                                      ckpt)
-        q.awaitTermination()
-
-    def read_out():
-        try:
-            return sorted(
-                (r["win_start"], r["lang"], r["n_rows"])
-                for r in spark.read.parquet(out_dir).collect())
-        except Exception:
-            return []
-
-    # batch 1: events in hours 0, 1, 2; max event = 2h05 -> watermark
-    # 1h05 -> only window [0h,1h) is finalized
-    write_batch([(base + 10, "en"), (base + 20, "en"),
-                 (base + 3600 + 5, "de"),
-                 (base + 7200 + 300, "en")], "b1")
-    run_once()
-    assert read_out() == [(base, "en", 2)]
-
-    # restart with NO new input: exactly-once means zero new rows
-    run_once()
-    assert read_out() == [(base, "en", 2)]
-
-    # batch 2: an event at hour 5 pushes the watermark to 4h ->
-    # windows [1h,2h) and [2h,3h) finalize now, ONCE; [5h,6h) pends
-    write_batch([(base + 5 * 3600 + 1, "fr")], "b2")
-    run_once()
-    assert read_out() == [
-        (base, "en", 2),
-        (base + 3600, "de", 1),
-        (base + 7200, "en", 1),
-    ]
 
 
 def test_read_shp_indexed_matches_whole_file(spark, tmpdir_path):

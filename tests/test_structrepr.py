@@ -40,11 +40,9 @@ def test_m_only_survives_wkt_and_wkb():
     assert "4" in wkt.encode(g)  # M actually printed
 
 
-def test_bbox_and_xy_np():
+def test_bbox():
     d = sr.to_struct(wkt.decode("POLYGON((0 0,4 0,4 4,0 4,0 0))"))
     assert d["bbox"] == [0.0, 0.0, 4.0, 4.0]
-    xs, ys = sr.xy_np(d)
-    assert xs.min() == 0.0 and xs.max() == 4.0 and len(ys) == 5
 
 
 def test_empty_point_struct():
