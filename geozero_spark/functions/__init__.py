@@ -11,7 +11,7 @@
 from . import sqlgen  # noqa: F401
 
 
-def ensure_width(df, min_parts: int | None = None):
+def ensure_width(df):
     """Match a NARROW scan to cluster width before compute-heavy
     per-row work. A small single-row-group parquet yields ONE input
     split regardless of split-size configs (splits are assigned per
@@ -22,8 +22,7 @@ def ensure_width(df, min_parts: int | None = None):
     unblocks; already-wide inputs (the 100 TB case: thousands of
     splits) pass through untouched, so no exchange is added where the
     data is already parallel (guide §2.4 / §6.1)."""
-    sc = df.sparkSession.sparkContext
-    par = min_parts or sc.defaultParallelism
+    par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() * 2 <= par:
         return df.repartition(par)
     return df

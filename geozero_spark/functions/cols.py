@@ -18,23 +18,31 @@ from . import udfs as _udfs
 def scale_flat(geom: Column, factor: float) -> Column:
     """Uniformly scale a FLAT geometry struct (coords + bbox); exotic
     kinds carrying a wkb fallback are not supported on this JVM path —
-    route those through a UDF if ever needed."""
+    route those through a UDF if ever needed. Every other field, the
+    T/TM side lanes included, passes through untouched —
+    pre_process_xy parity (wrap.rs:5-54 forwards t/tm verbatim) — and
+    a NULL struct stays NULL."""
     f = F.lit(float(factor))
-    return F.when(geom.isNull(), F.lit(None)).otherwise(F.struct(
-        geom["kind"].alias("kind"),
-        geom["srid"].alias("srid"),
-        geom["has_z"].alias("has_z"),
-        geom["has_m"].alias("has_m"),
-        F.transform(geom["bbox"], lambda v: v * f).alias("bbox"),
-        F.transform(geom["coords"], lambda v: v * f).alias("coords"),
-        geom["offs1"].alias("offs1"),
-        geom["offs2"].alias("offs2"),
-        geom["wkb"].alias("wkb"),
-        # T/TM side lanes pass through untouched — pre_process_xy
-        # parity (wrap.rs:5-54 forwards t/tm verbatim)
-        geom["tvals"].alias("tvals"),
-        geom["tmvals"].alias("tmvals"),
-    ))
+    return (geom.withField("bbox", F.transform(geom["bbox"], lambda v: v * f))
+            .withField("coords",
+                       F.transform(geom["coords"], lambda v: v * f)))
+
+
+def _geom_struct(**fields: Column) -> Column:
+    """The geometry struct with ``fields`` set and every other field
+    NULL (the field list is udfs.GEOMETRY_TYPE's)."""
+    return F.struct(*(
+        fields.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name)
+        for f in _udfs.GEOMETRY_TYPE.fields))
+
+
+def _geom_sql(**fields: str) -> str:
+    """SQL text of ``_geom_struct``: a named_struct with ``fields`` set
+    and every other field a typed NULL."""
+    return "named_struct(" + ", ".join(
+        f"'{f.name}', "
+        + fields.get(f.name, f"CAST(NULL AS {f.dataType.simpleString()})")
+        for f in _udfs.GEOMETRY_TYPE.fields) + ")"
 
 
 # spread-bits masks: the single source of truth is sqlgen (which pins
@@ -129,19 +137,9 @@ def point_struct_from_xy(x: Column, y: Column) -> Column:
     doubles, as point_struct_from_wkt_jvm on the equivalent text."""
     xd = x.cast("double")
     yd = y.cast("double")
-    st = F.struct(
-        F.lit(1).cast("tinyint").alias("kind"),
-        F.lit(None).cast("int").alias("srid"),
-        F.lit(False).alias("has_z"),
-        F.lit(False).alias("has_m"),
-        F.array(xd, yd, xd, yd).alias("bbox"),
-        F.array(xd, yd).alias("coords"),
-        F.lit(None).cast("array<int>").alias("offs1"),
-        F.lit(None).cast("array<int>").alias("offs2"),
-        F.lit(None).cast("binary").alias("wkb"),
-        F.lit(None).cast("array<double>").alias("tvals"),
-        F.lit(None).cast("array<bigint>").alias("tmvals"),
-    )
+    st = _geom_struct(kind=F.lit(1).cast("tinyint"), has_z=F.lit(False),
+                      has_m=F.lit(False), bbox=F.array(xd, yd, xd, yd),
+                      coords=F.array(xd, yd))
     return F.when(x.isNotNull() & y.isNotNull(), st) \
         .otherwise(F.lit(None))
 
@@ -181,17 +179,11 @@ def _geom_sql_from_pairs(kind: int, pairs: str, with_offs: bool) -> str:
             f"array_max(transform({pairs}, r -> r.y)))")
     offs1 = (f"array(0, CAST(size({pairs}) AS INT))" if with_offs
              else "CAST(NULL AS ARRAY<INT>)")
-    return (f"named_struct("
-            f"'kind', CAST({kind} AS TINYINT), "
-            f"'srid', CAST(NULL AS INT), "
-            f"'has_z', false, 'has_m', false, "
-            f"'bbox', {bbox}, "
-            f"'coords', flatten(transform({pairs}, r -> array(r.x, r.y))), "
-            f"'offs1', {offs1}, "
-            f"'offs2', CAST(NULL AS ARRAY<INT>), "
-            f"'wkb', CAST(NULL AS BINARY), "
-            f"'tvals', CAST(NULL AS ARRAY<DOUBLE>), "
-            f"'tmvals', CAST(NULL AS ARRAY<BIGINT>))")
+    return _geom_sql(
+        kind=f"CAST({kind} AS TINYINT)", has_z="false", has_m="false",
+        bbox=bbox,
+        coords=f"flatten(transform({pairs}, r -> array(r.x, r.y)))",
+        offs1=offs1)
 
 
 def _let_sql(value_sql: str, var: str, body_sql: str) -> str:
@@ -231,19 +223,10 @@ def simple_geom_from_wkt_jvm(wkt: Column) -> Column:
                        _geom_sql_from_pairs(2, "_ps", False))
     pg_body = _let_sql(_pairs_sql("_g.pg"), "_ps",
                        _geom_sql_from_pairs(3, "_ps", True))
-    pt_body = (
-        "named_struct("
-        "'kind', CAST(1 AS TINYINT), "
-        "'srid', CAST(NULL AS INT), "
-        "'has_z', false, 'has_m', false, "
-        "'bbox', array(CAST(_g.px AS DOUBLE), CAST(_g.py AS DOUBLE), "
-        "CAST(_g.px AS DOUBLE), CAST(_g.py AS DOUBLE)), "
-        "'coords', array(CAST(_g.px AS DOUBLE), CAST(_g.py AS DOUBLE)), "
-        "'offs1', CAST(NULL AS ARRAY<INT>), "
-        "'offs2', CAST(NULL AS ARRAY<INT>), "
-        "'wkb', CAST(NULL AS BINARY), "
-        "'tvals', CAST(NULL AS ARRAY<DOUBLE>), "
-        "'tmvals', CAST(NULL AS ARRAY<BIGINT>))")
+    xy = "CAST(_g.px AS DOUBLE), CAST(_g.py AS DOUBLE)"
+    pt_body = _geom_sql(kind="CAST(1 AS TINYINT)", has_z="false",
+                        has_m="false", bbox=f"array({xy}, {xy})",
+                        coords=f"array({xy})")
     groups = (
         "named_struct("
         "'ls', regexp_extract(_w, '^LINESTRING\\\\(([-0-9. ,]+)\\\\)$', 1), "

@@ -25,14 +25,11 @@ from ..kernel import cells as kcells
 
 
 def bbox_cell_intervals(xmin: float, ymin: float, xmax: float,
-                        ymax: float, res: int,
-                        coarse_res: int | None = None):
+                        ymax: float, res: int):
     """Few [lo, hi] cell-id intervals at ``res`` covering the bbox:
-    cover at a coarse resolution, then widen each coarse cell to its
-    descendant range (kernel.cells.cell_range)."""
-    if coarse_res is None:
-        coarse_res = max(res - 4, 0)
-    cover = kcells.cover_bbox(xmin, ymin, xmax, ymax, coarse_res)
+    cover at resolution ``res - 4``, then widen each coarse cell to
+    its descendant range (kernel.cells.cell_range)."""
+    cover = kcells.cover_bbox(xmin, ymin, xmax, ymax, max(res - 4, 0))
     ivals = sorted(kcells.cell_range(c, res) for c in cover)
     merged = [list(ivals[0])]
     for lo, hi in ivals[1:]:

@@ -70,16 +70,15 @@ def _disk_cells(df: DataFrame, ix: str, iy: str, res: int, radius: str,
     return out_df.drop(ix, iy, radius, "dx", "dy")
 
 
-def auto_res(n_targets: int, per_cell: int = 2000,
-             min_cells: int = 1) -> int:
+def auto_res(n_targets: int, min_cells: int = 1) -> int:
     """Resolution balancing per-cell matrix work against per-group
-    cogroup overhead: cell count = max(n_targets / per_cell,
-    min_cells), at least ``min_cells`` groups (knn_join passes 32x
-    defaultParallelism) and at most ~``per_cell`` targets per cell.
-    per_cell=2000 is measured for the packed uint32 kernel (res 5 beat
-    res 7 at 200k and 2M targets: per-group cost dominates pair work)."""
+    cogroup overhead: cell count = max(n_targets / 2000, min_cells),
+    at least ``min_cells`` groups (knn_join passes 32x
+    defaultParallelism) and at most ~2000 targets per cell. 2000 is
+    measured for the packed uint32 kernel (res 5 beat res 7 at 200k
+    and 2M targets: per-group cost dominates pair work)."""
     import math
-    cells = max(n_targets / per_cell, float(min_cells), 1.0)
+    cells = max(n_targets / 2000, float(min_cells), 1.0)
     return max(2, min(12, round(math.log2(cells) / 2)))
 
 

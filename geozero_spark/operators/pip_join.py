@@ -77,9 +77,9 @@ def _point_salt(lon: str, lat: str, n: int):
                   F.lit(n)).cast("int")
 
 
-# prefilter=None (auto) flips the points-side cover-cell semi-join on
-# when the estimated points bytes reaching the big exchange exceed
-# this. The prefilter's cost is ~fixed (one cover-distinct + broadcast
+# the shuffle path semi-joins the points against the cover cells when
+# the estimated points bytes reaching the big exchange reach this.
+# The prefilter's cost is ~fixed (one cover-distinct + broadcast
 # job, ~1s); its saving scales with points bytes x uncovered-grid
 # fraction — measured crossover on this box is ~100-200 MB of points
 # exchange (PLANS.md §5 round-4 table), threshold set at the low end
@@ -109,6 +109,10 @@ def _plan_size_bytes(df: DataFrame) -> int:
 # served stale polygons, and two different dims can never collide;
 # the cache empties itself when the caller drops the DataFrame.
 _PREPARED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+# most (key, cell) rows the broadcast cover holds on the driver and in
+# the broadcast
+_BROADCAST_COVER_CELLS = 4_000_000
 
 
 def _prepare_broadcast_polys(polys: DataFrame, res: int, poly_key: str,
@@ -159,10 +163,9 @@ def _prepare_broadcast_polys(polys: DataFrame, res: int, poly_key: str,
             if (r[0], cell) not in seen:
                 seen.add((r[0], cell))
                 cover_rows.append((r[0], cell))
-    if len(cover_rows) > 4_000_000:
-        raise ValueError(
-            f"pip_join broadcast cover has {len(cover_rows)} cells at "
-            f"res={res}; use a coarser res or broadcast_polys=False")
+    strategy.check_bound(
+        f"pip_join broadcast cover at res={res} (use a coarser res or "
+        f"broadcast_polys=False)", len(cover_rows), _BROADCAST_COVER_CELLS)
     prepared = (bc, cover_rows)
     try:
         _PREPARED.setdefault(polys, {})[subkey] = prepared
@@ -175,7 +178,6 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 6,
              lon: str = "lon", lat: str = "lat",
              poly_geom: str = "poly", poly_key: str = "zone_id",
              broadcast_polys: bool = True, salt: int = 0,
-             prefilter: bool | None = None,
              unique_polys: bool = True) -> DataFrame:
     """Exact point-in-polygon join.
 
@@ -191,25 +193,20 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 6,
     row per (point row, zone) — the shuffle path pays one extra
     distinct of the (zone, cell) cover for that.
 
-    ``prefilter`` (shuffle path only): semi-join the points against
-    the DISTINCT cover cells — bounded by the 4^res grid, so always
-    broadcastable at sane res — BEFORE the big exchange, so points
-    outside every polygon's bbox never shuffle. The prune factor is
-    the fraction of the grid the polygons do NOT cover; the cost is
-    one extra pass over the polygon side plus a small
-    distinct+broadcast job (~1s fixed). Default ``None`` = AUTO: on
-    when Catalyst's size estimate for the points side reaches
+    ``salt`` applies to the shuffle path only (the broadcast path
+    never shuffles the points): each cell of the candidate join and
+    each zone of the refine spread over ``salt`` lanes.
+
+    When Catalyst's size estimate for the points side reaches
     ``_PREFILTER_AUTO_BYTES`` (measured crossover, PLANS.md §5 round-4
-    table) — small bench inputs keep the cheap plain exchange, the
-    10^12-row regime gets the prune without a caller decision. Pass
-    True/False to pin it.
+    table), the shuffle path semi-joins the points against the
+    DISTINCT cover cells — bounded by the 4^res grid, so always
+    broadcastable at sane res — BEFORE the big exchange, so points
+    outside every polygon's bbox never shuffle. The cost is one extra
+    pass over the polygon side plus a small distinct+broadcast job
+    (~1s fixed), so small inputs keep the cheap plain exchange.
     """
     pts = cols.with_cell_col(points, lon, lat, res)
-    if salt > 0:
-        pts = pts.withColumn("_salt", _point_salt(lon, lat, salt))
-        keys = ["cell", "_salt"]
-    else:
-        keys = ["cell"]
     if broadcast_polys:
         # broadcast path: candidates carry ONLY the polygon key — the
         # decoded polygons ride a TorrentBroadcast to the Python
@@ -233,11 +230,7 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 6,
         key_type = dict(polys.dtypes)[poly_key]
         cover = spark.createDataFrame(
             cover_rows, f"{poly_key} {key_type}, cell bigint")
-        if salt > 0:
-            cover = cover.withColumn(
-                "_salt", F.explode(F.sequence(F.lit(0),
-                                              F.lit(salt - 1))))
-        cand = pts.join(F.broadcast(cover), on=keys, how="inner")
+        cand = pts.join(F.broadcast(cover), on="cell", how="inner")
 
         @arrow_udf(BooleanType())
         def refine(zone: pa.Array, px: pa.Array,
@@ -266,9 +259,12 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 6,
 
         refined = cand.withColumn(
             "_inside", refine(F.col(poly_key), F.col(lon), F.col(lat)))
-        drop = ["_inside", "cell"] + (["_salt"] if salt else [])
-        return refined.where(F.col("_inside")).drop(*drop)
+        return refined.where(F.col("_inside")).drop("_inside", "cell")
 
+    keys = ["cell"]
+    if salt > 0:
+        pts = pts.withColumn("_salt", _point_salt(lon, lat, salt))
+        keys.append("_salt")
     cover = explode_bbox_cover(
         polys.select(poly_key, poly_geom),
         res, bbox_col=f"{poly_geom}.bbox")
@@ -283,9 +279,7 @@ def pip_join(points: DataFrame, polys: DataFrame, res: int = 6,
         # yield ONE candidate row per (point, zone) — distinct on the
         # small (dimension) side before the big exchange
         cover = cover.distinct()
-    if prefilter is None:
-        prefilter = _plan_size_bytes(pts) >= _PREFILTER_AUTO_BYTES
-    if prefilter:
+    if _plan_size_bytes(pts) >= _PREFILTER_AUTO_BYTES:
         pts = pts.join(F.broadcast(cover.select("cell").distinct()),
                        on="cell", how="leftsemi")
     if salt > 0:

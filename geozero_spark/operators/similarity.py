@@ -176,7 +176,7 @@ def cosine_topk(queries: DataFrame, targets: DataFrame, k: int,
 
 
 def _pair_cosine_fn(qkey: str, tkey: str, qvec: str, tvec: str,
-                    local_k: int | None = None):
+                    local_k: int):
     """mapInArrow scorer for candidate pairs: emits (qkey, tkey,
     cosine) where cosine is BIT-IDENTICAL to the oracle's
     ``dot / (sqrt(qn) * sqrt(tn))``: dot and both norms are
@@ -190,7 +190,7 @@ def _pair_cosine_fn(qkey: str, tkey: str, qvec: str, tvec: str,
     the downstream window ranks by, so the global top-k is a subset of
     the union of task-local top-ks and the window's result is
     unchanged, while its input shrinks from |candidates| to
-    |tasks| * |Q| * k rows (None keeps every pair)."""
+    |tasks| * |Q| * k rows."""
     def f(it):
         acc_q, acc_t, acc_c = [], [], []
         for b in it:
@@ -207,12 +207,13 @@ def _pair_cosine_fn(qkey: str, tkey: str, qvec: str, tvec: str,
             ta = np.concatenate(acc_t)
             ca = np.concatenate(acc_c)
             order = np.lexsort((ta, _cos_key(ca), qa))
-            qs_sorted = qa[order]
-            starts = np.nonzero(np.r_[True, qs_sorted[1:]
-                                      != qs_sorted[:-1]])[0]
-            ends = np.r_[starts[1:], len(qs_sorted)]
-            take = np.concatenate([order[s:e][:local_k]
-                                   for s, e in zip(starts, ends)])
+            qs = qa[order]
+            pos = np.arange(len(qs))
+            head = np.ones(len(qs), dtype=bool)
+            head[1:] = qs[1:] != qs[:-1]
+            # each pair's rank within its query's run of sorted pairs
+            rank = pos - np.maximum.accumulate(np.where(head, pos, 0))
+            take = order[rank < local_k]
             yield pa.record_batch(
                 [pa.array(qa[take], type=pa.int64()),
                  pa.array(ta[take], type=pa.int64()),
@@ -508,9 +509,11 @@ def _ivf_centroids(targets: DataFrame, k_clusters: int, iters: int,
                    target_key: str, tvec: str, fast: bool):
     """ivf_fit as the driver-side (cids, cmat) pair, cid-ascending; a
     cluster that wins no member is dropped, as a groupBy drops it."""
-    seed = (targets
-            .select(F.col(target_key).cast("long").alias("cid"), tvec)
-            .orderBy("cid").limit(k_clusters).collect())
+    spark = targets.sparkSession
+    with strategy.described(spark, "ivf_fit seed centroids"):
+        seed = (targets
+                .select(F.col(target_key).cast("long").alias("cid"), tvec)
+                .orderBy("cid").limit(k_clusters).collect())
     if len(seed) < k_clusters:
         raise ValueError(
             f"ivf_fit: need >= {k_clusters} target vectors to seed "
@@ -520,7 +523,8 @@ def _ivf_centroids(targets: DataFrame, k_clusters: int, iters: int,
                                 pa.list_(pa.float64())), tvec)
     for _ in range(iters):
         if fast:  # merge the partials in collect (= partition) order
-            rows = _lloyd_partials(targets, cmat, tvec).collect()
+            with strategy.described(spark, "ivf_fit Lloyd partials"):
+                rows = _lloyd_partials(targets, cmat, tvec).collect()
             strategy.check_bound("ivf_fit Lloyd partials", len(rows),
                                  len({r.part for r in rows}) * len(cids))
             cnt, tot = np.zeros(len(cids)), np.zeros(cmat.shape)
@@ -530,9 +534,10 @@ def _ivf_centroids(targets: DataFrame, k_clusters: int, iters: int,
             keep = cnt > 0
             cids, cmat = cids[keep], tot[keep] / cnt[keep, None]
         else:
-            means = sorted(_centroid_means(
-                _assign(targets, cids, cmat, target_key, tvec), targets,
-                target_key, tvec).collect())
+            with strategy.described(spark, "ivf_fit portable means"):
+                means = sorted(_centroid_means(
+                    _assign(targets, cids, cmat, target_key, tvec),
+                    targets, target_key, tvec).collect())
             strategy.check_bound("ivf_fit portable means", len(means),
                                  cmat.size)
             cids = np.unique([r.cid for r in means])

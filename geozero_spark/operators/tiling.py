@@ -46,16 +46,11 @@ def with_tile_eq(df: DataFrame, lon: str, lat: str, z: int,
     return out
 
 
-def with_tile_wm(df: DataFrame, lon: str, lat: str, z: int,
-                 quadkey: bool = False) -> DataFrame:
+def with_tile_wm(df: DataFrame, lon: str, lat: str, z: int) -> DataFrame:
     """WebMercator (OSM slippy) tile assignment."""
     x, y = sg.tile_xy_wm(lon, lat, z)
-    out = (df.withColumn("z", F.lit(z))
-             .withColumn("x", F.expr(x)).withColumn("y", F.expr(y)))
-    if quadkey:
-        out = out.withColumn(
-            "quadkey", F.expr(sg.quadkey("x", "y", z, sg.SPARK)))
-    return out
+    return (df.withColumn("z", F.lit(z))
+            .withColumn("x", F.expr(x)).withColumn("y", F.expr(y)))
 
 
 def explode_tiles_eq(df: DataFrame, z: int, bbox_col: str = "geom.bbox"

@@ -48,9 +48,10 @@ def completed_buckets(spark: SparkSession, base: str, stage: str,
         if e.getCondition() == "PATH_NOT_FOUND":
             return set()
         raise
-    return {r.bucket for r in
-            m.where(F.col("fingerprint") == fingerprint)
-            .select("bucket").collect()}
+    with described(spark, f"run_stage {stage}: completed buckets"):
+        rows = (m.where(F.col("fingerprint") == fingerprint)
+                .select("bucket").collect())
+    return {r.bucket for r in rows}
 
 
 def _bucket_dirs(spark: SparkSession, path: str, buckets: list):

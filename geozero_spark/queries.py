@@ -716,13 +716,32 @@ def q_dup_clusters(spark, sf_dir):
     return dedup.dup_clusters(d, pairs)
 
 
-def q_ann_cosine(spark, sf_dir):
+def _ann_inputs(spark, sf_dir):
+    """(q_id, qvec) queries — every QUERY_MOD-th vector — and
+    (t_id, tvec) targets from embeddings.parquet."""
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = (e.where(F.col("vec_id") % QUERY_MOD == 0)
          .select(F.col("vec_id").alias("q_id"),
                  F.col("embedding").alias("qvec")))
     t = e.select(F.col("vec_id").alias("t_id"),
                  F.col("embedding").alias("tvec"))
+    return q, t
+
+
+def _recall(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """Per query: how many of the exact top-k pairs the approximate
+    top-k found (n_hit), and n_hit / ANN_K."""
+    hits = approx.select("q_id", "t_id").withColumn("_hit", F.lit(1))
+    joined = exact.select("q_id", "t_id").join(
+        hits, on=["q_id", "t_id"], how="left")
+    return (joined.groupBy("q_id")
+            .agg(F.count("_hit").cast("long").alias("n_hit"))
+            .withColumn("recall",
+                        F.col("n_hit").cast("double") / F.lit(float(ANN_K))))
+
+
+def q_ann_cosine(spark, sf_dir):
+    q, t = _ann_inputs(spark, sf_dir)
     return similarity.cosine_topk(q, t, k=ANN_K)
 
 
@@ -734,12 +753,7 @@ def q_ann_lsh(spark, sf_dir):
     geometry (LSH_BITS/LSH_BANDS) is tuned for measured recall ~0.92 on
     the synthetic embeddings; at scale you widen bands for selectivity
     (the numpy fast path in signature_udf takes the same knobs)."""
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = (e.where(F.col("vec_id") % QUERY_MOD == 0)
-         .select(F.col("vec_id").alias("q_id"),
-                 F.col("embedding").alias("qvec")))
-    t = e.select(F.col("vec_id").alias("t_id"),
-                 F.col("embedding").alias("tvec"))
+    q, t = _ann_inputs(spark, sf_dir)
     return similarity.ann_topk(q, t, k=ANN_K, dim=EMB_DIM,
                                bits=LSH_BITS, bands=LSH_BANDS,
                                portable=True,
@@ -750,14 +764,7 @@ def q_ann_recall(spark, sf_dir):
     """recall@k of the LSH ANN against the exact cosine top-k — the
     quality number the approximate path is graded on. Deterministic
     (hash planes + deterministic embeddings), hence fully oracled."""
-    exact = q_ann_cosine(spark, sf_dir).select("q_id", "t_id")
-    approx = (q_ann_lsh(spark, sf_dir)
-              .select("q_id", "t_id").withColumn("_hit", F.lit(1)))
-    joined = exact.join(approx, on=["q_id", "t_id"], how="left")
-    return (joined.groupBy("q_id")
-            .agg(F.count("_hit").cast("long").alias("n_hit"))
-            .withColumn("recall",
-                        F.col("n_hit").cast("double") / F.lit(float(ANN_K))))
+    return _recall(q_ann_cosine(spark, sf_dir), q_ann_lsh(spark, sf_dir))
 
 
 def q_ann_ivf(spark, sf_dir):
@@ -767,26 +774,14 @@ def q_ann_ivf(spark, sf_dir):
     exact-cosine rerank. Every float op is mirrored op-for-op by the
     DuckDB oracle, so the approximate operator is fully content-
     oracled (similarity.ivf_topk docstring has the parity contract)."""
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = (e.where(F.col("vec_id") % QUERY_MOD == 0)
-         .select(F.col("vec_id").alias("q_id"),
-                 F.col("embedding").alias("qvec")))
-    t = e.select(F.col("vec_id").alias("t_id"),
-                 F.col("embedding").alias("tvec"))
+    q, t = _ann_inputs(spark, sf_dir)
     return similarity.ivf_topk(q, t, k=ANN_K, k_clusters=IVF_K,
                                probe=IVF_PROBE, iters=IVF_ITERS)
 
 
 def q_ann_ivf_recall(spark, sf_dir):
     """recall@k of the IVF probe search vs the exact cosine top-k."""
-    exact = q_ann_cosine(spark, sf_dir).select("q_id", "t_id")
-    approx = (q_ann_ivf(spark, sf_dir)
-              .select("q_id", "t_id").withColumn("_hit", F.lit(1)))
-    joined = exact.join(approx, on=["q_id", "t_id"], how="left")
-    return (joined.groupBy("q_id")
-            .agg(F.count("_hit").cast("long").alias("n_hit"))
-            .withColumn("recall",
-                        F.col("n_hit").cast("double") / F.lit(float(ANN_K))))
+    return _recall(q_ann_cosine(spark, sf_dir), q_ann_ivf(spark, sf_dir))
 
 
 def q_media_meta(spark, sf_dir):

@@ -142,20 +142,24 @@ def test_pip_duplicate_poly_key_raises_by_default(spark):
                     broadcast_polys=False).collect()
 
 
-def test_pip_multirow_zone_any_semantics(spark):
+def test_pip_multirow_zone_any_semantics(spark, monkeypatch):
     """unique_polys=False: containment in ANY of the zone's polygon
-    rows, exactly one output row per (point, zone)."""
+    rows, exactly one output row per (point, zone); the last case
+    forces the shuffle path's cover-cell prefilter."""
     pts, polys = _dup_zone_fixture(spark)
     from geozero_spark.operators import pip_join as pj
 
     exp = [("in_a", 7), ("in_a", 8), ("in_b", 7)]
-    for kw in (dict(), dict(broadcast_polys=False),
-               dict(broadcast_polys=False, salt=2),
-               dict(broadcast_polys=False, prefilter=True)):
+    default = pj._PREFILTER_AUTO_BYTES
+    for auto_bytes, kw in ((default, dict()),
+                           (default, dict(broadcast_polys=False)),
+                           (default, dict(broadcast_polys=False, salt=2)),
+                           (0, dict(broadcast_polys=False))):
+        monkeypatch.setattr(pj, "_PREFILTER_AUTO_BYTES", auto_bytes)
         got = sorted((r.url, r.zone_id) for r in
                      pj.pip_join(pts, polys, res=4, unique_polys=False,
                                  **kw).collect())
-        assert got == exp, kw
+        assert got == exp, (auto_bytes, kw)
 
 
 # --------------------------------------------------------------------------

@@ -210,7 +210,9 @@ def test_ivf_fast_plan_has_no_collect_list(spark):
 def test_ivf_topk_fast_job_budget(spark):
     """ivf_topk(fast=True) plus one action runs at most 9 Spark jobs:
     the seed collect, one Arrow pass per Lloyd round (the centroids stay
-    on the driver, so nothing re-collects them), and the rerank tail."""
+    on the driver, so nothing re-collects them), and the rerank tail.
+    The driver collects are named after ivf_fit; the rest keep the
+    caller's description."""
     e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = (e.where(F.col("vec_id") % Q.QUERY_MOD == 0)
          .select(F.col("vec_id").alias("q_id"),
@@ -229,6 +231,12 @@ def test_ivf_topk_fast_job_budget(spark):
     assert rows
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) <= 9, f"{len(jobs)} jobs"
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    descs = [store.job(j).description().get() for j in jobs]
+    assert descs.count("ivf_fit Lloyd partials") == Q.IVF_ITERS, descs
+    assert set(descs) == {"ivf_fit seed centroids",
+                          "ivf_fit Lloyd partials", "ivf_topk fast=True"}
 
 
 def test_ivf_empty_cluster_is_dropped(spark):
@@ -394,7 +402,7 @@ def test_pair_cosine_rejects_null_or_ragged_vectors(bad):
          pa.array([good, good], pa.list_(pa.float32())),
          pa.array([good, _BAD_VECS[bad]], pa.list_(pa.float32()))],
         names=["q_id", "t_id", "qvec", "tvec"])
-    f = S._pair_cosine_fn("q_id", "t_id", "qvec", "tvec")
+    f = S._pair_cosine_fn("q_id", "t_id", "qvec", "tvec", local_k=1)
     with pytest.raises(ValueError) as ei:
         list(f(iter([batch])))
     _assert_vector_error(ei.value, "tvec")

@@ -439,11 +439,14 @@ def test_run_stage_job_cost(spark, tmpdir_path):
     assert len(jobs) <= FIRST_WRITE_JOBS, jobs
     assert {store.job(j).description().get() for j in jobs} == {
         "run_stage s1: write", "run_stage s1: _meta"}
+    read = "run_stage s1: completed buckets"
     (got, _), jobs = _group_jobs(spark, "run_stage_cost_resume", stage)
     assert got == [] and len(jobs) == 1
+    assert store.job(jobs[0]).description().get() == read
     done, jobs = _group_jobs(spark, "run_stage_cost_completed", lambda:
                              meta.completed_buckets(spark, base, "s1", "v1"))
     assert done == {0, 1, 2, 3} and len(jobs) == 1
+    assert store.job(jobs[0]).description().get() == read
     counts, jobs = _group_jobs(spark, "run_stage_cost_counts", lambda:
                                meta.bucket_counts(spark, path, [0, 1, 2, 3]))
     assert counts == {b: r for b, r, _ in first} and jobs == []
@@ -454,6 +457,8 @@ def test_run_stage_job_cost(spark, tmpdir_path):
     (got, _), jobs = _group_jobs(spark, "run_stage_cost_partial", stage)
     assert [(b, r) for b, r, _ in got] == [(b, r) for b, r, _ in first[2:]]
     assert len(jobs) <= PARTIAL_RESUME_JOBS, jobs
+    assert {store.job(j).description().get() for j in jobs} == {
+        read, "run_stage s1: write", "run_stage s1: _meta"}
 
 
 def test_read_gpx_scan(spark, tmpdir_path):
@@ -569,6 +574,25 @@ def test_pip_broadcast_guard(spark, monkeypatch):
     pts = spark.createDataFrame([(1.0, 1.0)], "lon double, lat double")
     monkeypatch.setattr(strategy, "BROADCAST_ROWS", 3)
     with pytest.raises(RuntimeError, match="broadcast_polys=False"):
+        pj.pip_join(pts, polys, res=4)
+
+
+def test_pip_broadcast_cover_guard(spark, monkeypatch):
+    """The driver-side broadcast cover goes through the one bound guard:
+    over ``_BROADCAST_COVER_CELLS`` (key, cell) rows it raises
+    BoundExceeded with the way out in the message."""
+    from geozero_spark.kernel import structrepr as sr, wkt as kwkt
+    from geozero_spark.operators import pip_join as pj
+    from geozero_spark.plans import strategy
+
+    poly = sr.to_struct(kwkt.decode("POLYGON((0 0,4 0,4 4,0 4,0 0))"))
+    polys = spark.createDataFrame(
+        [(i, poly) for i in range(2)],
+        f"zone_id long, poly struct<{sr.GEOMETRY_DDL}>")
+    pts = spark.createDataFrame([(1.0, 1.0)], "lon double, lat double")
+    monkeypatch.setattr(pj, "_BROADCAST_COVER_CELLS", 1)
+    with pytest.raises(strategy.BoundExceeded,
+                       match="coarser res or broadcast_polys=False"):
         pj.pip_join(pts, polys, res=4)
 
 
@@ -791,25 +815,76 @@ def test_read_shp_indexed_matches_whole_file(spark, tmpdir_path):
     assert got == whole
 
 
-def test_pip_paths_identical_rows(spark):
-    """Broadcast, shuffle+salt, and shuffle+prefilter PIP paths must
-    return the same (doc, zone) pairs; prefilter only prunes points
-    that cannot match (bbox-cover semi-join is conservative)."""
+def _pip_inputs(spark):
+    from geozero_spark import queries as Q
+
+    sf = "/root/testdata/sf0.001"
+    return (Q.points_df(spark, sf).select("url", "lon", "lat"),
+            Q.zones_decoded(spark, sf).select("zone_id", "poly"))
+
+
+def _plan_text(df):
+    """The optimized logical plan with expression ids dropped, so two
+    calls that build the same plan compare equal."""
+    import re
+
+    return re.sub(r"#\d+L?", "",
+                  df._jdf.queryExecution().optimizedPlan().toString())
+
+
+def test_pip_paths_identical_rows(spark, monkeypatch):
+    """Broadcast, shuffle+salt, and shuffle with the cover-cell
+    prefilter (forced by a zero size threshold) must return the same
+    (doc, zone) pairs; the prefilter only prunes points that cannot
+    match (bbox-cover semi-join is conservative)."""
     from geozero_spark import queries as Q
     from geozero_spark.operators import pip_join as pj
 
-    sf = "/root/testdata/sf0.001"
-    pts = Q.points_df(spark, sf).select("url", "lon", "lat")
-    polys = Q.zones_decoded(spark, sf).select("zone_id", "poly")
+    pts, polys = _pip_inputs(spark)
     base = {(r.url, r.zone_id) for r in
             pj.pip_join(pts, polys, res=Q.PIP_RES).collect()}
     assert base
-    for kw in (dict(broadcast_polys=False, salt=4),
-               dict(broadcast_polys=False, salt=4, prefilter=True),
-               dict(broadcast_polys=False, prefilter=True)):
+    default = pj._PREFILTER_AUTO_BYTES
+    for auto_bytes, salt in ((default, 4), (0, 4), (0, 0)):
+        monkeypatch.setattr(pj, "_PREFILTER_AUTO_BYTES", auto_bytes)
         got = {(r.url, r.zone_id) for r in
-               pj.pip_join(pts, polys, res=Q.PIP_RES, **kw).collect()}
-        assert got == base, kw
+               pj.pip_join(pts, polys, res=Q.PIP_RES,
+                           broadcast_polys=False, salt=salt).collect()}
+        assert got == base, (auto_bytes, salt)
+
+
+def test_pip_broadcast_plan_ignores_salt(spark):
+    """The broadcast path never shuffles the points, so ``salt`` leaves
+    its plan alone: no ``_salt`` column and no cover explode."""
+    from geozero_spark import queries as Q
+    from geozero_spark.operators import pip_join as pj
+
+    pts, polys = _pip_inputs(spark)
+    plain, salted = (_plan_text(pj.pip_join(pts, polys, res=Q.PIP_RES,
+                                            salt=s)) for s in (0, 4))
+    assert "_salt" not in salted and "Generate" not in salted
+    assert salted == plain
+
+
+def test_pip_prefilter_follows_size_rule(spark, monkeypatch):
+    """The shuffle path's cover-cell semi-join is decided by the points
+    side's size estimate alone: none at the default threshold on
+    sf0.001, one when the threshold is 0, and no caller switch."""
+    import inspect
+
+    from geozero_spark import queries as Q
+    from geozero_spark.operators import pip_join as pj
+
+    assert "prefilter" not in inspect.signature(pj.pip_join).parameters
+    pts, polys = _pip_inputs(spark)
+
+    def plan():
+        return _plan_text(pj.pip_join(pts, polys, res=Q.PIP_RES,
+                                      broadcast_polys=False))
+
+    assert "LeftSemi" not in plan()
+    monkeypatch.setattr(pj, "_PREFILTER_AUTO_BYTES", 0)
+    assert "LeftSemi" in plan()
 
 
 def test_pip_shuffle_passes_point_columns_through(spark):
